@@ -4,6 +4,7 @@ rows, both storage layers converge."""
 
 from __future__ import annotations
 
+import sys
 import threading
 
 import pytest
@@ -73,3 +74,81 @@ def test_two_stores_two_runs(spark, tmp_path):
     assert s2.duck.execute("SELECT value FROM metrics").fetchone()[0] == 2.0
     s1.close()
     s2.close()
+
+
+def test_concurrent_finish_on_shared_store(spark, tmp_path):
+    """More threads than cores run init → log → finish on one store at the
+    same time: every final status row lands in DuckDB and in the Parquet
+    view."""
+    from waddleml_spark.run import Run
+
+    store = WaddleStore(str(tmp_path / "shared"), spark=spark)
+    ids = [f"{c}" * 32 for c in "abcdefgh"]
+    errors: list[BaseException] = []
+    barrier = threading.Barrier(len(ids), timeout=60)
+
+    def worker(run_id: str):
+        try:
+            run = Run(store=store, run_id=run_id, project="race", system_metrics=False)
+            for i in range(50):
+                run.log({"m": float(i)})
+            barrier.wait()
+            run.finish()
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(rid,)) for rid in ids]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    duck = dict(store.duck.execute("SELECT id, status FROM runs").fetchall())
+    assert duck == {rid: "completed" for rid in ids}
+    parquet = {r.id: r.status for r in store.df("runs").collect()}
+    assert parquet == {rid: "completed" for rid in ids}
+    assert store.df("metrics").count() == 50 * len(ids)
+    store.close()
+
+
+def test_concurrent_update_run_loses_no_field(spark, tmp_path):
+    """Two threads update disjoint fields of one run: each update_run's
+    read-merge-upsert is atomic, so the last value of both fields survives
+    in DuckDB and in the Parquet view."""
+    from waddleml_spark.run import Run
+
+    store = WaddleStore(str(tmp_path / "upd"), spark=spark)
+    run = Run(store=store, run_id="u" * 32, project="upd", system_metrics=False)
+    n = 40
+
+    def set_notes():
+        for i in range(n):
+            store.update_run(run.id, notes=f"n{i}")
+
+    def set_ended():
+        for i in range(n):
+            store.update_run(run.id, ended_at=float(i))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=f) for f in (set_notes, set_ended)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    duck = store._duck_row("runs", "id", run.id)
+    assert (duck["notes"], duck["ended_at"]) == (f"n{n - 1}", float(n - 1))
+    [row] = store.df("runs").collect()
+    assert row.asDict() == duck
+    run._finished = True
+    store.close()

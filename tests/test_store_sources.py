@@ -125,21 +125,6 @@ def test_run_serve_dashboard(spark, tmp_path, monkeypatch):
     run.finish()
 
 
-def test_write_batches_fill_ingest_observations(spark, tmp_path, monkeypatch):
-    """df.observe() on the write path: every micro-batch records its row
-    count from JVM-side accumulators (no second pass over the data)."""
-    import waddleml_spark as w
-
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="obs", system_metrics=False, spark=spark)
-    run.log({"loss": 1.0, "acc": 0.5})
-    run.flush()
-    stats = run._store.ingest_stats
-    assert stats["metrics"]["rows"] == 2  # one row per metric key
-    assert stats["runs"]["rows"] == 1
-    run.finish()
-
-
 def test_store_bucket_table_publishes_zero_exchange_layout(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     run = w.init(project="bkt", system_metrics=False, spark=spark)

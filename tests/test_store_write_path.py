@@ -1,0 +1,156 @@
+"""The store's single row-level write path: a write-only run never starts
+Spark, part files appear atomically, finish() leaves both layers holding
+the same row, and delete_run's DuckDB side is one transaction."""
+
+from __future__ import annotations
+
+import glob
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+import waddleml_spark as w
+from waddleml_spark import state
+from waddleml_spark.store import WaddleStore
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(autouse=True)
+def reset_state():
+    state.set_active_run(None)
+    yield
+    run = state.get_active_run()
+    if run is not None:
+        run._finished = True
+    state.set_active_run(None)
+
+
+def test_write_only_run_never_starts_spark(tmp_path):
+    """init → 200 log → log_artifact → finish in a fresh interpreter: no
+    SparkContext (no JVM) is ever created, and the run ends completed."""
+    art = tmp_path / "model.bin"
+    art.write_bytes(b"weights")
+    script = textwrap.dedent(
+        f"""
+        import json, sys
+        sys.path.insert(0, {REPO!r})
+        import pyspark
+        import waddleml_spark as w
+
+        run = w.init(project="wo", config={{"lr": 0.1}}, tags={{"team": "a"}},
+                     store_path={str(tmp_path / "store")!r})
+        for i in range(200):
+            w.log({{"loss": 1.0 / (i + 1)}})
+        w.log_artifact("model", path={str(art)!r})
+        w.finish()
+        status, ended = run._store.duck.execute(
+            "SELECT status, ended_at FROM runs WHERE id = ?", [run.id]
+        ).fetchone()
+        print(json.dumps({{
+            "spark": pyspark.SparkContext._active_spark_context is not None,
+            "gateway": pyspark.SparkContext._gateway is not None,
+            "status": status,
+            "ended_at": ended,
+        }}))
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=120,
+        check=True,
+    )
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["spark"] is False and res["gateway"] is False
+    assert res["status"] == "completed"
+    assert res["ended_at"] is not None
+
+
+def test_finished_run_parquet_row_equals_duckdb_row(spark, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="eq", config={"lr": 0.1}, system_metrics=False, spark=spark)
+    run.log({"m": 1.0})
+    run.finish()
+    store = run._store
+    duck_row = store._duck_row("runs", "id", run.id)
+    spark_rows = [r.asDict() for r in store.df("runs").filter(f"id = '{run.id}'").collect()]
+    assert spark_rows == [duck_row]
+    assert duck_row["status"] == "completed" and duck_row["ended_at"] is not None
+
+
+def test_torn_part_write_is_invisible(spark, tmp_path, monkeypatch):
+    """A Parquet write that dies after writing some bytes leaves no visible
+    part file, no temp file, a readable table and no DuckDB row."""
+    import pyarrow.parquet as pq
+
+    store = WaddleStore(str(tmp_path / "store"), spark=spark)
+    row = {"run_id": "r", "key": "k", "step": 0, "ts": 1.0, "value": 1.0}
+    store.append("metrics", [row])
+    d = store._dir("metrics")
+    before = sorted(os.listdir(d))
+
+    def torn_write(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 truncated")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        store.append("metrics", [{**row, "step": 1, "value": 2.0}])
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(d)) == before
+    assert store.df("metrics").count() == 1
+    assert store.duck.execute("SELECT count(*) FROM metrics").fetchone()[0] == 1
+    store.close()
+
+
+class _FailOn:
+    """DuckDB connection proxy that raises on one statement prefix."""
+
+    def __init__(self, con, prefix: str):
+        self._con, self._prefix = con, prefix
+
+    def execute(self, sql, *args):
+        if sql.startswith(self._prefix):
+            raise RuntimeError("injected failure")
+        return self._con.execute(sql, *args)
+
+    def __getattr__(self, name):
+        return getattr(self._con, name)
+
+
+def test_delete_run_failure_rolls_back_every_table(spark, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="tx", system_metrics=False, spark=spark)
+    run.log({"m": 1.0})
+    run.log_param("p", 1)
+    run.log_tag("t", "x")
+    run.log_artifact("a")
+    run.finish()
+    store = run._store
+    tables = ("metrics", "artifacts", "tags", "params", "runs")
+
+    def counts():
+        return {t: store.duck.execute(f"SELECT count(*) FROM {t}").fetchone()[0] for t in tables}
+
+    before = counts()
+    assert all(before.values())
+    parquet_before = {t: sorted(glob.glob(store._dir(t) + "/*.parquet")) for t in tables}
+    real = store.duck
+    monkeypatch.setattr(store, "duck", _FailOn(real, "DELETE FROM runs"))
+    with pytest.raises(RuntimeError, match="injected"):
+        store.delete_run(run.id)
+    monkeypatch.setattr(store, "duck", real)
+
+    assert counts() == before
+    # nothing past the failed transaction ran: no tombstone, no rewrite
+    assert not os.path.exists(store._dir("_cdc_deletes"))
+    assert {t: sorted(glob.glob(store._dir(t) + "/*.parquet")) for t in tables} == parquet_before

@@ -33,10 +33,10 @@ from typing import Any
 from waddleml_spark import state
 from waddleml_spark.store import WaddleStore
 
-# Micro-batch sizing: each flush is a Spark job (~0.3-1 s locally), so the
-# row threshold dominates sustained-throughput logging while the time
-# threshold bounds live-update latency (the reference UI debounces at
-# 500 ms and the sampler ticks at 5 s — 2 s latency is inside the contract).
+# Micro-batch sizing: each flush is one driver-local part file + DuckDB
+# insert (a few ms), so the row threshold bounds the part-file count under
+# sustained logging while the time threshold bounds live-update latency (the
+# reference UI debounces at 500 ms, the sampler ticks at 5 s — 2 s is within contract).
 FLUSH_ROWS = 5000
 FLUSH_SECONDS = 2.0
 

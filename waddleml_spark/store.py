@@ -6,16 +6,20 @@ Reference storage is one DuckDB file with row-at-a-time autocommit INSERTs
 (waddle/_db.py:27-68, waddle/_run.py:122-125).  Spark translation
 (SURVEY.md §1.3, §4.3):
 
-- every write lands as a micro-batch: rows → Spark DataFrame →
-  (a) Parquet append into the table's directory,
-  (b) Arrow handoff → DuckDB INSERT (the "DataFrame writes to DuckDB" path);
+- every row-level write lands as a micro-batch: rows → one driver-local
+  Arrow table →
+  (a) one Parquet part file in the table's directory (written under a
+      hidden temp name, then renamed into place),
+  (b) the same Arrow table → DuckDB INSERT / ON CONFLICT;
 - mutable semantics (upsert D3, update D5, delete D6) on immutable Parquet
   use an event-log discipline: versioned tables carry a monotonic `_seq`;
   the read view is last-writer-wins per primary key (window dedupe).
-  DuckDB gets real ON CONFLICT/UPDATE/DELETE, so both layers converge to
+  DuckDB gets real ON CONFLICT/DELETE, so both layers converge to
   identical logical state;
-- deletes rewrite Parquet with an anti-filter (at scale: partition drop by
-  run_id) and cascade in FK order, mirroring waddle/_dashboard_api.py:237-249.
+- deletes cascade in FK order, mirroring waddle/_dashboard_api.py:237-249:
+  one DuckDB transaction, then a Spark anti-filter rewrite per Parquet
+  table (at scale: partition drop by run_id).  Spark only runs for these
+  whole-table rewrites (and compaction), never for a row-level write.
 
 Scale posture: metrics is the tall fact table — at 100 TB it is written
 partitioned by run_id bucket and sorted within partitions by (key, step) so
@@ -28,8 +32,10 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import threading
 import time
+import uuid
 
 import duckdb
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from waddleml_spark import schemas
+from waddleml_spark.session import get_spark, reset_fan_out_memo
 
 # tables whose reads are last-writer-wins per PK (the event-log tables)
 _VERSIONED: dict[str, list[str]] = {
@@ -47,6 +54,14 @@ _VERSIONED: dict[str, list[str]] = {
     "commits": ["repo_id", "commit_sha"],  # idempotent: first writer wins
 }
 _APPEND_ONLY = ("metrics", "artifacts")
+# delete_run's cascade in FK order: (table, column holding the run id)
+_CASCADE = (
+    ("metrics", "run_id"),
+    ("artifacts", "run_id"),
+    ("tags", "run_id"),
+    ("params", "run_id"),
+    ("runs", "id"),
+)
 
 _seq_lock = threading.Lock()
 _seq_counter = itertools.count()
@@ -81,10 +96,8 @@ class WaddleStore:
         self._spark = spark
         self.duck_path = os.path.join(self.root, "waddle.duckdb")
         self.duck = duckdb.connect(self.duck_path)
-        self._duck_lock = threading.Lock()  # single-writer (ref S5)
-        # last observed write-batch metrics per table ({"rows": n}) —
-        # filled by _write_batch via df.observe()
-        self.ingest_stats: dict[str, dict] = {}
+        # single-writer (ref S5); re-entrant so update_run's read-merge-upsert is one step
+        self._duck_lock = threading.RLock()
         for stmt in schemas.DUCKDB_DDL.split(";"):
             if stmt.strip():
                 self.duck.execute(stmt)
@@ -105,8 +118,6 @@ class WaddleStore:
     @property
     def spark(self) -> SparkSession:
         if self._spark is None:
-            from waddleml_spark.session import get_spark
-
             self._spark = get_spark(app_name="waddleml-store")
         return self._spark
 
@@ -129,60 +140,65 @@ class WaddleStore:
         "binary": "binary",
     }
 
-    def _arrow_schema(self, table: str, versioned: bool):
-        import pyarrow as pa
+    def _write_part(self, table: str, schema: T.StructType, data: dict[str, list]):
+        """Write `data` (column → values, in `schema` order) as ONE part
+        file of `table`; returns the Arrow table written.
 
-        fields = [
-            pa.field(f.name, getattr(pa, self._ARROW_TYPES[f.dataType.simpleString()])())
-            for f in schemas.WADDLE_TABLES[table].fields
-        ]
-        if versioned:
-            fields.append(pa.field("_seq", pa.int64()))
-        return pa.schema(fields)
+        The file is written under a hidden temp name and renamed into
+        place, so a crash mid-write never leaves a torn file where Spark's
+        readers (batch and file-stream, which both skip dot-files) look."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        arrow_schema = pa.schema(
+            [
+                pa.field(f.name, getattr(pa, self._ARROW_TYPES[f.dataType.simpleString()])())
+                for f in schema.fields
+            ]
+        )
+        arrow_tbl = pa.table(data, schema=arrow_schema)
+        d = self._dir(table)
+        os.makedirs(d, exist_ok=True)
+        name = uuid.uuid4().hex
+        tmp = os.path.join(d, f".part-{name}.tmp")
+        try:
+            pq.write_table(arrow_tbl, tmp, compression="snappy")
+            os.replace(tmp, os.path.join(d, f"part-{name}.snappy.parquet"))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+        # the parquet dir just gained a file: drop fan_out's stale
+        # partition-count memo so same-shape re-reads re-probe
+        reset_fan_out_memo()
+        return arrow_tbl
 
     def _write_batch(self, table: str, rows: list[dict], duck_sql: str | None) -> None:
-        """One micro-batch: rows → ONE Arrow table → parquet file append +
+        """One micro-batch: rows → ONE Arrow table → parquet part file +
         DuckDB SQL, all driver-local.
 
-        No Spark job on the write path: a 5 k-row batch is driver-scale
-        data, and the createDataFrame → coalesce(1).write job costs
-        ~150 ms of scheduling for ~10 ms of IO (measured: the swap took
-        the hot logging path from ~18 k to >40 k rows/s).  The Arrow
-        schema mirrors schemas.WADDLE_TABLES exactly, so Spark's
-        analytical readers (and the streaming parquet tail, which
-        declares the same schema) see files identical to what a Spark
-        write would produce.  Spark remains the ANALYTICS engine; using
-        it as a row-batch writer was overhead, not parallelism.
+        Every row-level write (append, upsert, update_run, delete
+        tombstones) avoids Spark: a 5 k-row batch is driver-scale data,
+        and a createDataFrame → coalesce(1).write job costs ~150 ms of
+        scheduling for ~10 ms of IO (measured: the swap took the hot
+        logging path from ~18 k to >40 k rows/s) and a JVM start in a
+        process that only logs.  The Arrow schema mirrors schemas.WADDLE_TABLES
+        exactly, so Spark's analytical readers (and the streaming parquet
+        tail, which declares the same schema) see files identical to what
+        a Spark write would produce.  Spark remains the ANALYTICS engine.
         """
         if not rows:
             return
         versioned = table in _VERSIONED
-        seq = _next_seq() if versioned else None
-        cols = [f.name for f in schemas.WADDLE_TABLES[table].fields]
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        data = {c: [r.get(c) for r in rows] for c in cols}
+        data = {f.name: [r.get(f.name) for r in rows] for f in schemas.WADDLE_TABLES[table].fields}
         if versioned:
-            data["_seq"] = [seq] * len(rows)
-        arrow_full = pa.table(data, schema=self._arrow_schema(table, versioned))
-        d = self._dir(table)
-        os.makedirs(d, exist_ok=True)  # Spark's writer created dirs; pyarrow doesn't
-        path = os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet")
-        pq.write_table(arrow_full, path, compression="snappy")
-        self.ingest_stats[table] = {"rows": len(rows)}
+            data["_seq"] = [_next_seq()] * len(rows)
+        arrow_full = self._write_part(table, self._spark_schema(table, versioned), data)
         arrow_tbl = arrow_full.drop_columns(["_seq"]) if versioned else arrow_full
         with self._duck_lock:
             self.duck.register("_batch", arrow_tbl)
             self.duck.execute(duck_sql or f"INSERT INTO {table} SELECT * FROM _batch")
             self.duck.unregister("_batch")
-        # the parquet dir just gained a file: drop fan_out's stale
-        # partition-count memo so same-shape re-reads re-probe
-        from waddleml_spark.session import reset_fan_out_memo
-
-        reset_fan_out_memo()
 
     def append(self, table: str, rows: list[dict]) -> None:
         """Plain append (D1/D2: metrics, artifacts, new runs/commits...)."""
@@ -210,56 +226,58 @@ class WaddleStore:
         )
 
     def update_run(self, run_id: str, **fields) -> None:
-        """D5: UPDATE runs SET ... WHERE id (ref waddle/_run.py:198-201).
-        Parquet side: append a full new row version (last-writer-wins)."""
-        current = self._duck_row("runs", "id", run_id)
-        if current is None:
-            raise KeyError(f"run {run_id} not found")
-        current.update(fields)
-        sets = ", ".join(f"{k} = ?" for k in fields)
+        """D5: UPDATE runs SET ... WHERE id (ref waddle/_run.py:198-201),
+        as an upsert of the merged row — the Parquet version row and the
+        DuckDB row come from the same dict."""
         with self._duck_lock:
-            self.duck.execute(
-                f"UPDATE runs SET {sets} WHERE id = ?",
-                [*fields.values(), run_id],
-            )
-        # parquet version row (skip duck insert — already updated)
-        versioned_schema = self._spark_schema("runs", True)
-        cols = [f.name for f in schemas.WADDLE_TABLES["runs"].fields]
-        row = tuple([current.get(c) for c in cols] + [_next_seq()])
-        df = self.spark.createDataFrame([row], versioned_schema)
-        df.coalesce(1).write.mode("append").parquet(self._dir("runs"))
+            current = self._duck_row("runs", "id", run_id)
+            if current is None:
+                raise KeyError(f"run {run_id} not found")
+            self.upsert("runs", [{**current, **fields}])
 
     def delete_run(self, run_id: str) -> None:
         """D6: cascading delete in FK order (ref _dashboard_api.py:237-249).
-        DuckDB: real DELETEs.  Parquet: anti-filter rewrite per table (at
-        scale this is a partition drop when tables partition by run_id).
+        DuckDB: the five DELETEs in one transaction.  Parquet: anti-filter
+        rewrite per table (at scale this is a partition drop when tables
+        partition by run_id).
 
-        A tombstone per (table, run_id) lands in the _cdc_deletes log FIRST
-        so the change feed (changes()) can report the delete even though the
-        data files are physically rewritten."""
-        self._append_tombstones(run_id)
+        A tombstone per (table, run_id) lands in the _cdc_deletes log
+        before the data files are rewritten, so the change feed (changes())
+        can report the delete even though the history is physically gone."""
         with self._duck_lock:
-            for tbl in ("metrics", "artifacts", "tags", "params"):
-                self.duck.execute(f"DELETE FROM {tbl} WHERE run_id = ?", [run_id])
-            self.duck.execute("DELETE FROM runs WHERE id = ?", [run_id])
-        import shutil
-
-        for tbl, key in (
-            ("metrics", "run_id"),
-            ("artifacts", "run_id"),
-            ("tags", "run_id"),
-            ("params", "run_id"),
-            ("runs", "id"),
-        ):
+            self.duck.execute("BEGIN TRANSACTION")
+            try:
+                for tbl, key in _CASCADE:
+                    self.duck.execute(f"DELETE FROM {tbl} WHERE {key} = ?", [run_id])
+                self.duck.execute("COMMIT")
+            except BaseException:
+                self.duck.execute("ROLLBACK")
+                raise
+        tables, n = [tbl for tbl, _ in _CASCADE], len(_CASCADE)
+        self._write_part(  # tombstones: no DuckDB side
+            "_cdc_deletes",
+            self._CDC_SCHEMA,
+            {"table": tables, "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
+        )
+        for tbl, key in _CASCADE:
             d = self._dir(tbl)
             if os.path.exists(d):
-                versioned = tbl in _VERSIONED
-                df = self.spark.read.schema(self._spark_schema(tbl, versioned)).parquet(d)
-                kept = df.filter(F.col(key) != run_id)
-                tmp = d + ".rewrite"
-                kept.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(d)
-                os.rename(tmp, d)
+                df = self.spark.read.schema(self._spark_schema(tbl, tbl in _VERSIONED)).parquet(d)
+                self._rewrite(tbl, df.filter(F.col(key) != run_id))
+
+    def _rewrite(self, table: str, df: DataFrame) -> None:
+        """Replace a table's parquet dir with `df` (a Spark job: bulk
+        rewrites scan the whole table).  The new dir is written beside the
+        live one and swapped in by two renames, so the table is missing
+        for one rename, not for a whole rmtree."""
+        d = self._dir(table)
+        tmp, old = d + ".rewrite", d + ".old"
+        df.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(d, old)
+        os.rename(tmp, d)
+        shutil.rmtree(old)
+        reset_fan_out_memo()
 
     # --- change data capture ---------------------------------------------
 
@@ -270,18 +288,6 @@ class WaddleStore:
             T.StructField("_seq", T.LongType(), False),
         ]
     )
-
-    def _append_tombstones(self, run_id: str) -> None:
-        seq = _next_seq()
-        rows = [
-            ("metrics", run_id, seq),
-            ("artifacts", run_id, seq),
-            ("tags", run_id, seq),
-            ("params", run_id, seq),
-            ("runs", run_id, seq),
-        ]
-        df = self.spark.createDataFrame(rows, self._CDC_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._dir("_cdc_deletes"))
 
     def changes(self, table: str, since_seq: int = 0) -> DataFrame:
         """Change-data feed for a versioned table: every version row with
@@ -400,35 +406,23 @@ class WaddleStore:
         of metrics/ — stop streams before compacting that table (rewritten
         files would be re-delivered or missed by the file-source log)."""
         tables = [table] if table else list(_VERSIONED) + list(_APPEND_ONLY)
-        import shutil
-
         for tbl in tables:
-            d = self._dir(tbl)
-            if not os.path.exists(d):
+            if not os.path.exists(self._dir(tbl)):
                 continue
+            n = max(1, _parallelism(self.spark) // 4)
             cur = self.df(tbl)
             if tbl in _VERSIONED:
                 cur = cur.withColumn("_seq", F.lit(_next_seq()))
-            tmp = d + ".compact"
             if tbl == "metrics":
                 # the 100 TB layout: cluster by run_id, sort by (key, step)
                 # within partitions — parquet min/max stats then serve the
                 # role of the reference's (run_id,key,step) index
                 # (waddle/_schema.py:59): per-run/per-key scans prune files
                 # and row groups instead of walking a B-tree.
-                n = max(1, _parallelism(self.spark) // 4)
-                (
-                    cur.repartition(n, "run_id")
-                    .sortWithinPartitions("run_id", "key", "step")
-                    .write.mode("overwrite")
-                    .parquet(tmp)
-                )
+                cur = cur.repartition(n, "run_id").sortWithinPartitions("run_id", "key", "step")
             else:
-                cur.coalesce(
-                    max(1, _parallelism(self.spark) // 4)
-                ).write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(d)
-            os.rename(tmp, d)
+                cur = cur.coalesce(n)
+            self._rewrite(tbl, cur)
 
     def bucket_table(
         self,

@@ -1,18 +1,30 @@
-"""SparkDashboard: the reference DashboardAPI's full query repertoire
-(ref: waddle/_dashboard_api.py:22-249) as composed Catalyst plans over a
-WaddleStore, returning the same wire-shape dicts so the reference's
-dashboard/HTTP layer runs unchanged on top.
+"""The dashboard's query repertoire (ref: waddle/_dashboard_api.py:22-249)
+in two backends with the same method names, arguments and wire-shape dicts:
 
-Key plan upgrades over the reference (SURVEY.md §3.2/§3.3):
+- MirrorDashboard serves HTTP (`server.make_http_server`).  Every route
+  is a parameterised SQL query on a per-request cursor of the store's
+  DuckDB mirror, the same single-file layout the reference dashboard
+  reads, so serving starts no JVM and runs no Spark job.
+- SparkDashboard is the Spark-side analytics API: the same routes as
+  composed Catalyst plans over the store's Parquet event log.  It is the
+  reference that tests/test_dashboard_parity.py pins MirrorDashboard to,
+  route by route.
+
+Only the fetch differs between the two; the rules both apply (sort
+allowlist, stale → aborted reclassification, tolerant JSON decoding,
+the compare regroup) are module functions both call.
+
+Key plan upgrades of the Spark side over the reference (SURVEY.md §3.2/§3.3):
 - list_runs: the per-row correlated MAX(ts) re-query (an N+1 loop,
-  ref :56-69) folds into ONE aggregate + broadcast left join + CASE;
+  ref :56-69) folds into ONE bounded IN-list aggregate over the page;
 - compare_runs: the per-metric-key series loop (another N+1, ref :190-198)
   collapses into one scan ordered by (key, step), grouped driver-side;
 - metric_summary: the correlated scalar subquery (ref :227) becomes a
   window rank (ties kept — rank(), exact parity with equality-on-MAX).
 
-Scale: every shape partitions on run_id (or key) — with metrics bucketed
-by run_id these are shuffle-free; limits ride TakeOrderedAndProject.
+Scale: every Spark shape partitions on run_id (or key) — with metrics
+bucketed by run_id these are shuffle-free; limits ride
+TakeOrderedAndProject.
 """
 
 from __future__ import annotations
@@ -29,6 +41,14 @@ from waddleml_spark.operators import core as ops
 from waddleml_spark.store import WaddleStore
 
 _RUN_COLS = ["id", "project", "name", "status", "started_at", "ended_at", "commit_sha"]
+_ARTIFACT_COLS = ["id", "name", "kind", "created_at", "uri", "sha256", "size_bytes"]
+# list_runs' sortable columns; anything else falls back to the first (ref O1)
+_SORTABLE = ("started_at", "ended_at", "name", "status", "project")
+# a running run with no metric for this long displays as aborted (ref P9)
+_STALE_AFTER_S = 300
+
+
+# --- rules both backends apply --------------------------------------------
 
 
 def _loads_tolerant(v):
@@ -39,6 +59,69 @@ def _loads_tolerant(v):
         return json.loads(v)
     except (json.JSONDecodeError, TypeError):
         return v
+
+
+def _sort_spec(sort: str, order: str) -> tuple[str, str]:
+    """(column, direction) for list_runs: allowlisted column, 'desc' only
+    when asked for (case-insensitively), else 'asc'."""
+    col = sort if sort in _SORTABLE else _SORTABLE[0]
+    return col, "desc" if order.lower() == "desc" else "asc"
+
+
+def _reclassify_stale(page: list[dict], last_ts_of, now: float | None) -> list[dict]:
+    """Display stale running runs as aborted, on the fetched page only.
+
+    Reference order (ref :45-69): sort/LIMIT on the STORED status, THEN
+    reclassify — reclassifying before the sort changed PAGE MEMBERSHIP
+    under sort='status' (round-6 review find).  `last_ts_of(ids)` returns
+    {run_id: last metric ts} for the page's running runs in ONE bounded
+    IN-list aggregate, not the reference's per-row N+1 re-query."""
+    running = [d["id"] for d in page if d["status"] == "running"]
+    if not running:
+        return page
+    now_ts = now if now is not None else time.time()
+    last = last_ts_of(running)
+    for d in page:
+        if d["status"] != "running":
+            continue
+        last_ts = last.get(d["id"])
+        if last_ts is not None and (now_ts - last_ts) > _STALE_AFTER_S:
+            d["status"] = "aborted"
+        elif (
+            last_ts is None
+            and d["started_at"]
+            and (now_ts - d["started_at"]) > _STALE_AFTER_S
+        ):
+            d["status"] = "aborted"
+    return page
+
+
+def _decode_run(run: dict) -> dict:
+    for field in ("env", "config"):
+        run[field] = _loads_tolerant(run[field])
+    return run
+
+
+def _decode_kv(rows) -> dict[str, Any]:
+    """(key, json value) rows → {key: decoded value} (params, tags)."""
+    return {k: _loads_tolerant(v) for k, v in rows}
+
+
+def _group_params(rows) -> dict[str, dict[str, Any]]:
+    """(run_id, key, json value) rows → {run_id: {key: decoded value}}."""
+    out: dict[str, dict[str, Any]] = {}
+    for run_id, k, v in rows:
+        out.setdefault(run_id, {})[k] = _loads_tolerant(v)
+    return out
+
+
+def _group_series(rows) -> dict[str, list[dict[str, Any]]]:
+    """(key, run_id, step, value) rows in (key, step) order → compare's
+    {key: [{run_id, step, value}, ...]}."""
+    out: dict[str, list[dict[str, Any]]] = {}
+    for k, run_id, step, value in rows:
+        out.setdefault(k, []).append({"run_id": run_id, "step": step, "value": value})
+    return out
 
 
 class SparkDashboard:
@@ -59,39 +142,19 @@ class SparkDashboard:
     ) -> list[dict[str, Any]]:
         runs = self.store.df("runs").select(*_RUN_COLS)
         runs = ops.equality_filter(runs, {"project": project, "status": status})
-        runs = ops.allowlist_sort(runs, sort, order, tiebreak="id")
+        col, direction = _sort_spec(sort, order)
+        runs = ops.allowlist_sort(runs, col, direction, allowed=_SORTABLE, tiebreak="id")
         runs = ops.paginate(runs, limit=limit, offset=offset)
         page = [r.asDict() for r in runs.collect()]
-        # reference order (ref :45-69): sort/LIMIT on the STORED status,
-        # THEN reclassify stale runs on the fetched page only —
-        # reclassifying before the sort changed PAGE MEMBERSHIP under
-        # sort='status' (round-6 review find).  Unlike the reference's
-        # per-row N+1 re-query, the page's last-metric timestamps come
-        # from ONE bounded IN-list aggregate (page size ≤ limit).
-        now_ts = now if now is not None else time.time()
-        running = [d["id"] for d in page if d["status"] == "running"]
-        if running:
-            last = {
+
+        def last_ts_of(ids):
+            m = self.store.df("metrics").filter(F.col("run_id").isin(ids))
+            return {
                 r.run_id: r.last_ts
-                for r in self.store.df("metrics")
-                .filter(F.col("run_id").isin(running))
-                .groupBy("run_id")
-                .agg(F.max("ts").alias("last_ts"))
-                .collect()
+                for r in m.groupBy("run_id").agg(F.max("ts").alias("last_ts")).collect()
             }
-            for d in page:
-                if d["status"] != "running":
-                    continue
-                last_ts = last.get(d["id"])
-                if last_ts is not None and (now_ts - last_ts) > 300:
-                    d["status"] = "aborted"
-                elif (
-                    last_ts is None
-                    and d["started_at"]
-                    and (now_ts - d["started_at"]) > 300
-                ):
-                    d["status"] = "aborted"
-        return page
+
+        return _reclassify_stale(page, last_ts_of, now)
 
     # --- get_run (P3 P4 A3) ----------------------------------------------
 
@@ -100,23 +163,16 @@ class SparkDashboard:
         row = runs.filter(F.col("id") == run_id).head()
         if row is None:
             return {}
-        run = row.asDict()
-        for field in ("env", "config"):
-            run[field] = _loads_tolerant(run[field])
 
-        params = {
-            r.key: _loads_tolerant(r.value)
-            for r in self.store.df("params").filter(F.col("run_id") == run_id).collect()
-        }
-        tags = {
-            r.key: _loads_tolerant(r.value)
-            for r in self.store.df("tags").filter(F.col("run_id") == run_id).collect()
-        }
+        def kv(table):
+            t = self.store.df(table).filter(F.col("run_id") == run_id)
+            return _decode_kv(t.select("key", "value").collect())
+
         artifacts = [
             r.asDict()
             for r in self.store.df("artifacts")
             .filter(F.col("run_id") == run_id)
-            .select("id", "name", "kind", "created_at", "uri", "sha256", "size_bytes")
+            .select(*_ARTIFACT_COLS)
             .collect()
         ]
         metric_keys = [
@@ -126,9 +182,9 @@ class SparkDashboard:
             ).collect()
         ]
         return {
-            "run": run,
-            "params": params,
-            "tags": tags,
+            "run": _decode_run(row.asDict()),
+            "params": kv("params"),
+            "tags": kv("tags"),
             "artifacts": artifacts,
             "metric_keys": metric_keys,
         }
@@ -182,28 +238,25 @@ class SparkDashboard:
             .select(*_RUN_COLS)
             .collect()
         ]
-        all_params: dict[str, dict[str, Any]] = {}
-        for r in (
+        params = (
             ops.in_list_filter(self.store.df("params"), "run_id", run_ids)
+            .select("run_id", "key", "value")
             .orderBy("key")
             .collect()
-        ):
-            all_params.setdefault(r.run_id, {})[r.key] = _loads_tolerant(r.value)
-
+        )
         # ONE scan for every series, ordered (key, step); the reference
         # issues one query per key (N+1, ref :190-198)
-        metrics: dict[str, list[dict[str, Any]]] = {}
         series = (
             ops.in_list_filter(self.store.df("metrics"), "run_id", run_ids)
             .select("key", "run_id", "step", "value")
             .orderBy("key", "step")
             .collect()
         )
-        for r in series:
-            metrics.setdefault(r.key, []).append(
-                {"run_id": r.run_id, "step": r.step, "value": r.value}
-            )
-        return {"runs": runs, "params": all_params, "metrics": metrics}
+        return {
+            "runs": runs,
+            "params": _group_params(params),
+            "metrics": _group_series(series),
+        }
 
     # --- metric keys (A3 P6) ---------------------------------------------
 
@@ -242,6 +295,186 @@ class SparkDashboard:
             return True
         except Exception:
             return False
+
+
+def _marks(values: Sequence) -> str:
+    """Placeholders for a bound IN-list of len(values)."""
+    return ", ".join("?" * len(values))
+
+
+def _dicts(cur, sql: str, params: list) -> list[dict[str, Any]]:
+    cur.execute(sql, params)
+    cols = [d[0] for d in cur.description]
+    return [dict(zip(cols, r)) for r in cur.fetchall()]
+
+
+class MirrorDashboard:
+    """SparkDashboard's routes answered from the store's DuckDB mirror.
+
+    Each call runs its queries on a cursor of its own, opened on
+    `store.duck` and closed before returning: handler threads never use
+    the shared connection, which belongs to the writer (its `_batch`
+    registration; `_duck_lock` serialises writes there).  Readers see
+    each committed write batch whole (DuckDB MVCC).  Every value reaches
+    DuckDB as a bound parameter; the only spliced identifiers are the
+    allowlisted sort column and direction."""
+
+    def __init__(self, store: WaddleStore):
+        self.store = store
+
+    # --- list_runs --------------------------------------------------------
+
+    def list_runs(
+        self,
+        project: str | None = None,
+        status: str | None = None,
+        sort: str = "started_at",
+        order: str = "desc",
+        limit: int = 200,
+        offset: int = 0,
+        now: float | None = None,
+    ) -> list[dict[str, Any]]:
+        conds = {c: v for c, v in (("project", project), ("status", status)) if v is not None}
+        where = " WHERE " + " AND ".join(f"{c} = ?" for c in conds) if conds else ""
+        col, direction = _sort_spec(sort, order)
+        with self.store.duck.cursor() as cur:
+            page = _dicts(
+                cur,
+                f"SELECT {', '.join(_RUN_COLS)} FROM runs{where}"
+                f" ORDER BY {col} {direction} NULLS LAST, id LIMIT ? OFFSET ?",
+                [*conds.values(), limit, offset],
+            )
+
+            def last_ts_of(ids):
+                return dict(cur.execute(
+                    f"SELECT run_id, max(ts) FROM metrics WHERE run_id IN ({_marks(ids)})"
+                    " GROUP BY run_id",
+                    ids,
+                ).fetchall())
+
+            return _reclassify_stale(page, last_ts_of, now)
+
+    # --- get_run ----------------------------------------------------------
+
+    def get_run(self, run_id: str) -> dict[str, Any]:
+        with self.store.duck.cursor() as cur:
+            run = _dicts(cur, "SELECT * FROM runs WHERE id = ?", [run_id])
+            if not run:
+                return {}
+
+            def rows(sql):
+                return cur.execute(sql, [run_id]).fetchall()
+
+            return {
+                "run": _decode_run(run[0]),
+                "params": _decode_kv(rows("SELECT key, value FROM params WHERE run_id = ?")),
+                "tags": _decode_kv(rows("SELECT key, value FROM tags WHERE run_id = ?")),
+                "artifacts": _dicts(
+                    cur,
+                    f"SELECT {', '.join(_ARTIFACT_COLS)} FROM artifacts WHERE run_id = ?",
+                    [run_id],
+                ),
+                "metric_keys": [
+                    k for (k,) in rows(
+                        "SELECT DISTINCT key FROM metrics WHERE run_id = ? ORDER BY key"
+                    )
+                ],
+            }
+
+    # --- get_metrics ------------------------------------------------------
+
+    def get_metrics(
+        self, run_id: str, key: str | None = None, limit: int = 5000
+    ) -> list[dict[str, Any]]:
+        sql = "SELECT key, step, ts, value FROM metrics WHERE run_id = ?"
+        if key:
+            sql, params = sql + " AND key = ? ORDER BY step LIMIT ?", [run_id, key, limit]
+        else:
+            # ref quirk preserved: the limit truncates ACROSS keys (:140-149)
+            sql, params = sql + " ORDER BY key, step LIMIT ?", [run_id, limit]
+        with self.store.duck.cursor() as cur:
+            return _dicts(cur, sql, params)
+
+    def get_metrics_downsampled(
+        self, run_id: str, key: str, points: int = 200
+    ) -> list[dict[str, Any]]:
+        """series_downsample's buckets for one (run, key) stream, in SQL."""
+        with self.store.duck.cursor() as cur:
+            return _dicts(
+                cur,
+                """
+                WITH m AS (
+                    SELECT CAST(step AS DOUBLE) AS x, value FROM metrics
+                    WHERE run_id = ? AND key = ? AND step IS NOT NULL),
+                e AS (SELECT min(x) AS lo, max(x) AS hi FROM m),
+                b AS (
+                    SELECT CASE WHEN hi - lo <= 0 THEN 0 ELSE least(
+                        CAST(floor((x - lo) / (hi - lo) * ?) AS INTEGER), ? - 1) END AS bucket,
+                        x, value
+                    FROM m, e)
+                SELECT bucket, avg(x) AS step, avg(value) AS value,
+                       min(value) AS value_min, max(value) AS value_max, count(*) AS n
+                FROM b GROUP BY bucket ORDER BY bucket
+                """,
+                [run_id, key, points, points],
+            )
+
+    # --- compare_runs -----------------------------------------------------
+
+    def compare_runs(self, run_ids: list[str]) -> dict[str, Any]:
+        if not run_ids:
+            return {"runs": [], "param_diff": {}, "metrics": {}}
+        marks = _marks(run_ids)
+        with self.store.duck.cursor() as cur:
+            runs = _dicts(
+                cur, f"SELECT {', '.join(_RUN_COLS)} FROM runs WHERE id IN ({marks})", run_ids
+            )
+            params = cur.execute(
+                f"SELECT run_id, key, value FROM params WHERE run_id IN ({marks}) ORDER BY key",
+                run_ids,
+            ).fetchall()
+            series = cur.execute(
+                "SELECT key, run_id, step, value FROM metrics"
+                f" WHERE run_id IN ({marks}) ORDER BY key, step, run_id",
+                run_ids,
+            ).fetchall()
+        return {
+            "runs": runs,
+            "params": _group_params(params),
+            "metrics": _group_series(series),
+        }
+
+    # --- metric keys / summary -------------------------------------------
+
+    def metric_keys_global(self) -> list[str]:
+        with self.store.duck.cursor() as cur:
+            rows = cur.execute(
+                "SELECT DISTINCT key FROM metrics WHERE NOT starts_with(key, ?) ORDER BY key",
+                ["system/"],
+            ).fetchall()
+        return [k for (k,) in rows]
+
+    def metric_summary(self, key: str, limit: int = 20) -> list[dict[str, Any]]:
+        # rank(), not row_number(): ties on a run's last step all stay
+        # (the reference's equality-on-MAX(step) subquery, ref :227)
+        with self.store.duck.cursor() as cur:
+            return _dicts(
+                cur,
+                """
+                WITH last AS (
+                    SELECT run_id, value FROM metrics WHERE key = ?
+                    QUALIFY rank() OVER (PARTITION BY run_id ORDER BY step DESC) = 1)
+                SELECT l.run_id, r.name, l.value
+                FROM last l JOIN runs r ON r.id = l.run_id
+                ORDER BY r.started_at DESC, l.run_id LIMIT ?
+                """,
+                [key, limit],
+            )
+
+    # --- delete -----------------------------------------------------------
+
+    # the same write as SparkDashboard's: store.delete_run
+    delete_run = SparkDashboard.delete_run
 
 
 def series_downsample(

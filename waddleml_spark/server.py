@@ -2,12 +2,18 @@
 (ref: waddle/_server.py:99-110 route table and response shapes).
 
 Framework-free core: `Routes` maps (method, path) → JSON-ready payloads by
-delegating to SparkDashboard — so any HTTP adapter can host it.  The
-bundled (and only) adapter is the stdlib ThreadingHTTPServer: an earlier
-import-gated Starlette twin was removed in round 7 because its
-dependencies aren't installable here, making it permanently untestable
-surface — wrapping `Routes` in any ASGI framework remains a
-straightforward exercise for deployments that want one.
+delegating to a dashboard backend — so any HTTP adapter can host it.
+`make_http_server` always backs it with MirrorDashboard, which answers
+every route from the store's DuckDB mirror: serving starts no JVM and
+runs no Spark job (SparkDashboard, the same routes as Spark plans, stays
+the analytics API).  Malformed input (a non-integer or negative
+limit/offset/points, a non-JSON compare body, a `run_ids` that is not a
+list of strings) gets `400 {"error": ...}`.  The bundled (and only)
+adapter is the stdlib ThreadingHTTPServer: an earlier import-gated
+Starlette twin was removed in round 7 because its dependencies aren't
+installable here, making it permanently untestable surface — wrapping
+`Routes` in any ASGI framework remains a straightforward exercise for
+deployments that want one.
 
 Live updates: the reference pushes per-insert WebSocket messages
 {"type":"metric",...} (ref :115-124).  The stdlib adapter speaks that
@@ -26,15 +32,35 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from waddleml_spark.operators.dashboard import SparkDashboard
+from waddleml_spark.operators.dashboard import MirrorDashboard, SparkDashboard
 from waddleml_spark.store import WaddleStore
 from waddleml_spark.streaming.live import LiveBus
 
 
-class Routes:
-    """Framework-agnostic route layer, one method per reference route."""
+class BadRequest(ValueError):
+    """Malformed request input; the HTTP adapter answers 400."""
 
-    def __init__(self, dash: SparkDashboard, bus: LiveBus | None = None):
+
+def _count(q: dict, name: str, default: int) -> int:
+    """A non-negative integer query parameter."""
+    raw = q.get(name)
+    if raw is None:
+        return default
+    try:
+        n = int(raw)
+    except ValueError:
+        raise BadRequest(f"{name} must be an integer, got {raw!r}") from None
+    if not 0 <= n < 1 << 63:  # DuckDB binds LIMIT/OFFSET as BIGINT
+        raise BadRequest(f"{name} must be in [0, 2**63), got {n}")
+    return n
+
+
+class Routes:
+    """Framework-agnostic route layer, one method per reference route,
+    delegating to a MirrorDashboard or SparkDashboard (same methods and
+    wire shapes).  Raises BadRequest on malformed input."""
+
+    def __init__(self, dash: MirrorDashboard | SparkDashboard, bus: LiveBus | None = None):
         self.dash = dash
         self.bus = bus or LiveBus()
 
@@ -45,8 +71,8 @@ class Routes:
             status=q.get("status"),
             sort=q.get("sort", "started_at"),
             order=q.get("order", "desc"),
-            limit=int(q.get("limit", "200")),
-            offset=int(q.get("offset", "0")),
+            limit=_count(q, "limit", 200),
+            offset=_count(q, "offset", 0),
         )
 
     # GET /api/runs/{run_id}  (404 when missing, ref :45-50)
@@ -57,18 +83,24 @@ class Routes:
     # GET /api/runs/{run_id}/metrics
     def get_metrics(self, run_id: str, q: dict) -> list:
         return self.dash.get_metrics(
-            run_id, key=q.get("key"), limit=int(q.get("limit", "5000"))
+            run_id, key=q.get("key"), limit=_count(q, "limit", 5000)
         )
 
     # GET /api/runs/{run_id}/metrics/downsampled  (extension route)
     def get_metrics_downsampled(self, run_id: str, q: dict) -> list:
         return self.dash.get_metrics_downsampled(
-            run_id, q.get("key", ""), points=int(q.get("points", "200"))
+            run_id, q.get("key", ""), points=_count(q, "points", 200)
         )
 
     # POST /api/compare
     def compare(self, body: dict) -> dict:
-        return self.dash.compare_runs(body.get("run_ids", []))
+        if not isinstance(body, dict):
+            raise BadRequest("body must be a JSON object")
+        run_ids = body.get("run_ids", [])
+        # a bare string would reach the IN-list one character at a time
+        if not isinstance(run_ids, list) or not all(isinstance(i, str) for i in run_ids):
+            raise BadRequest("run_ids must be a list of strings")
+        return self.dash.compare_runs(run_ids)
 
     # DELETE /api/runs/{run_id}
     def delete_run(self, run_id: str) -> tuple[int, dict]:
@@ -81,7 +113,7 @@ class Routes:
 
     # GET /api/metric-summary
     def metric_summary(self, q: dict) -> list:
-        return self.dash.metric_summary(q.get("key", ""), limit=int(q.get("limit", "20")))
+        return self.dash.metric_summary(q.get("key", ""), limit=_count(q, "limit", 20))
 
 
 def _metric_messages(rows: list[dict]) -> list[dict]:
@@ -256,7 +288,7 @@ def make_http_server(
 ) -> ThreadingHTTPServer:
     """stdlib adapter: same routes, JSON responses, plus SSE /events.
     static_dir overrides the bundled assets (ref cli.py:146 parity)."""
-    routes = Routes(SparkDashboard(store), bus=bus)
+    routes = Routes(MirrorDashboard(store), bus=bus)
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -278,6 +310,18 @@ def make_http_server(
             self.wfile.write(body)
 
         def do_GET(self):
+            try:
+                self._get()
+            except BadRequest as e:
+                self._json({"error": str(e)}, 400)
+
+        def do_POST(self):
+            try:
+                self._post()
+            except BadRequest as e:
+                self._json({"error": str(e)}, 400)
+
+        def _get(self):
             u = urlparse(self.path)
             q = {k: v[0] for k, v in parse_qs(u.query).items()}
             if u.path == "/":
@@ -336,13 +380,20 @@ def make_http_server(
                 return self._ws()
             self._json({"error": "not found"}, 404)
 
-        def do_POST(self):
+        def _post(self):
             u = urlparse(self.path)
             if u.path == "/api/compare":
-                n = int(self.headers.get("Content-Length", "0"))
-                body = json.loads(self.rfile.read(n) or b"{}")
-                return self._json(routes.compare(body))
+                return self._json(routes.compare(self._json_body()))
             self._json({"error": "not found"}, 404)
+
+        def _json_body(self):
+            try:
+                n = int(self.headers.get("Content-Length", "0"))
+                if n < 0:
+                    raise ValueError(f"negative Content-Length {n}")
+                return json.loads(self.rfile.read(n) or b"{}")
+            except ValueError as e:  # incl. JSONDecodeError, UnicodeDecodeError
+                raise BadRequest(f"malformed request body: {e}") from None
 
         def do_DELETE(self):
             m = re.fullmatch(r"/api/runs/([^/]+)", urlparse(self.path).path)

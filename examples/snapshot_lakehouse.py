@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from waddleml_spark.llmops import dedup
 from waddleml_spark.session import get_spark, read_table
-from waddleml_spark.sources import deltalog, pyds, snaptable, zorder
+from waddleml_spark.sources import pyds, snaptable, zorder
 from waddleml_spark.streaming import snapsink
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -74,12 +74,6 @@ def main() -> None:
     pyds.register(spark)
     native = spark.read.format("snaptable").load(table)
     print("format('snaptable'):", native.filter(F.col("n_chars") <= 120).count())
-
-    # -- export the current snapshot as a Delta table (pure-Python log;
-    # readable by delta-spark or any Delta client)
-    delta_dir = tempfile.mkdtemp(prefix="corpus_delta_")
-    deltalog.write_delta(snaptable.read(spark, table), delta_dir)
-    print("delta export v0:", deltalog.read_delta(spark, delta_dir).count())
 
     # -- streaming near-dup ingest: each batch is exact- AND LSH-deduped
     # against the stored corpus before committing (foreachBatch shape;

@@ -1,8 +1,10 @@
-"""Model-based randomized walks over the two table formats.
+"""Model-based randomized walks over the snaptable format, through both
+of its front ends.
 
 A seeded random sequence of append / overwrite / checkpoint / read /
-vacuum ops runs against the real implementation (snaptable, deltalog)
-and an in-memory model (version -> expected row multiset); after every
+vacuum ops runs against the real implementation — the snaptable module
+API, and the Spark data source ``format("snaptable")`` from pyds — and
+an in-memory model (version -> expected row multiset); after every
 op the latest snapshot — and a randomly chosen still-readable
 historical version — must match the model exactly.  The walk shape is
 what unit tests miss: interleavings like append→overwrite→checkpoint→
@@ -14,9 +16,8 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from waddleml_spark.sources import deltalog as dl
+from waddleml_spark.sources import pyds
 from waddleml_spark.sources import snaptable as st
 
 SCHEMA = "id long, tag string"
@@ -52,30 +53,27 @@ class _SnapAdapter:
         st.vacuum(self.tbl, keep_versions=1, retain_minutes=0)
 
 
-class _DeltaAdapter:
-    first_version = 0
-
-    def __init__(self, tbl):
-        self.tbl = tbl
+class _PydsAdapter(_SnapAdapter):
+    """The same table through Spark's DataFrameReader/Writer surface."""
 
     def write(self, df, mode):
-        return dl.write_delta(df, self.tbl, mode=mode)
+        df.write.format("snaptable").mode(mode).save(self.tbl)
+        return st.current_version(self.tbl)
 
     def read(self, spark, version=None):
-        return dl.read_delta(spark, self.tbl, version=version)
-
-    def checkpoint(self):
-        return dl.create_checkpoint(self.tbl)
-
-    def vacuum(self):
-        dl.vacuum(self.tbl, retain_minutes=0)
+        reader = spark.read.format("snaptable")
+        if version is not None:
+            reader = reader.option("version", version)
+        return reader.load(self.tbl)
 
 
-@pytest.mark.parametrize("fmt", ["snaptable", "delta"])
+@pytest.mark.parametrize("fmt", ["snaptable", "pyds"])
 @pytest.mark.parametrize("seed", [11, 23])
 def test_random_walk_matches_model(spark, tmp_path, fmt, seed):
     rng = random.Random(seed)
-    adapter = (_SnapAdapter if fmt == "snaptable" else _DeltaAdapter)(
+    if fmt == "pyds":
+        pyds.register(spark)
+    adapter = (_SnapAdapter if fmt == "snaptable" else _PydsAdapter)(
         str(tmp_path / f"{fmt}-{seed}")
     )
     model: dict[int, set] = {}  # version -> expected rows

@@ -157,9 +157,14 @@ def test_decontamination_bench_scan_pushes_predicate(spark):
     the source equality so a future edit cannot silently regress it."""
     import re
 
+    # the split literal comes from the query's oracle twin, so the pin
+    # follows the catalog's spelling instead of a copy kept here
+    m = re.search(r"source\s*=\s*'([^']+)'", catalog.ORACLE["decontamination_rewrite_report"])
+    assert m, "decontamination_rewrite_report oracle has no source = '...' split"
+    src = m.group(1)
     df = catalog.QUERIES["decontamination_rewrite_report"](spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(source,src0\)", plan), (
-        "bench-side scan no longer pushes EqualTo(source,src0); "
-        + plan[:2000]
+    pushed = rf"PushedFilters: \[[^\]]*EqualTo\(source,{re.escape(src)}\)"
+    assert re.search(pushed, plan), (
+        f"bench-side scan no longer pushes EqualTo(source,{src}); " + plan[:2000]
     )

@@ -61,6 +61,8 @@ BAD_GETS = {
     "metrics_limit_negative": "/api/runs/{id}/metrics?key=loss&limit=-1",
     "points_negative": "/api/runs/{id}/metrics/downsampled?key=loss&points=-2",
     "points_not_int": "/api/runs/{id}/metrics/downsampled?key=loss&points=ten",
+    "points_zero": "/api/runs/{id}/metrics/downsampled?key=loss&points=0",
+    "points_beyond_int32": "/api/runs/{id}/metrics/downsampled?key=loss&points=4294967296",
     "summary_limit_negative": "/api/metric-summary?key=loss&limit=-5",
 }
 

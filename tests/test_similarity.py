@@ -1,5 +1,5 @@
 """Similarity-search operators: brute-force ground truth, LSH and IVF
-recall, lakehouse stubs."""
+recall."""
 
 from __future__ import annotations
 
@@ -109,18 +109,6 @@ def test_lsh_bucket_determinism(spark, emb, qvec):
     assert sorted(map(tuple, b1)) == sorted(map(tuple, b2))
     n_buckets = len({r.lsh_bucket for r in b1})
     assert 2 <= n_buckets <= 16
-
-
-def test_lakehouse_gates_raise_actionable(spark):
-    # delta no longer raises (pure-Python log fallback, test_deltalog.py);
-    # a missing table surfaces as file-not-found, and the genuinely
-    # jar-bound formats keep the actionable gate
-    from waddleml_spark.sources.lakehouse import read_delta, read_iceberg
-
-    with pytest.raises(FileNotFoundError, match="no delta table"):
-        read_delta(spark, "/tmp/nonexistent-delta")
-    with pytest.raises(NotImplementedError, match="iceberg"):
-        read_iceberg(spark, "/tmp/nonexistent-iceberg")
 
 
 def test_distributed_covariance_matches_local_numpy(spark):

@@ -7,13 +7,12 @@ delegating to a dashboard backend — so any HTTP adapter can host it.
 every route from the store's DuckDB mirror: serving starts no JVM and
 runs no Spark job (SparkDashboard, the same routes as Spark plans, stays
 the analytics API).  Malformed input (a non-integer or negative
-limit/offset/points, a non-JSON compare body, a `run_ids` that is not a
-list of strings) gets `400 {"error": ...}`.  The bundled (and only)
-adapter is the stdlib ThreadingHTTPServer: an earlier import-gated
-Starlette twin was removed in round 7 because its dependencies aren't
-installable here, making it permanently untestable surface — wrapping
-`Routes` in any ASGI framework remains a straightforward exercise for
-deployments that want one.
+limit/offset, a `points` outside [1, 2**31), a non-JSON compare body, a
+`run_ids` that is not a list of strings) gets `400 {"error": ...}`.  The
+bundled (and only) adapter is the stdlib ThreadingHTTPServer: an earlier
+import-gated Starlette twin was removed because no test could run it —
+wrapping `Routes` in any ASGI framework remains a straightforward
+exercise for deployments that want one.
 
 Live updates: the reference pushes per-insert WebSocket messages
 {"type":"metric",...} (ref :115-124).  The stdlib adapter speaks that
@@ -41,8 +40,9 @@ class BadRequest(ValueError):
     """Malformed request input; the HTTP adapter answers 400."""
 
 
-def _count(q: dict, name: str, default: int) -> int:
-    """A non-negative integer query parameter."""
+def _count(q: dict, name: str, default: int, lo: int = 0, bits: int = 63) -> int:
+    """An integer query parameter in [lo, 2**bits); the default bound is
+    DuckDB's BIGINT, which LIMIT/OFFSET bind as."""
     raw = q.get(name)
     if raw is None:
         return default
@@ -50,8 +50,8 @@ def _count(q: dict, name: str, default: int) -> int:
         n = int(raw)
     except ValueError:
         raise BadRequest(f"{name} must be an integer, got {raw!r}") from None
-    if not 0 <= n < 1 << 63:  # DuckDB binds LIMIT/OFFSET as BIGINT
-        raise BadRequest(f"{name} must be in [0, 2**63), got {n}")
+    if not lo <= n < 1 << bits:
+        raise BadRequest(f"{name} must be in [{lo}, 2**{bits}), got {n}")
     return n
 
 
@@ -88,9 +88,9 @@ class Routes:
 
     # GET /api/runs/{run_id}/metrics/downsampled  (extension route)
     def get_metrics_downsampled(self, run_id: str, q: dict) -> list:
-        return self.dash.get_metrics_downsampled(
-            run_id, q.get("key", ""), points=_count(q, "points", 200)
-        )
+        # at least one bucket; bucket numbers are CAST to INTEGER
+        points = _count(q, "points", 200, lo=1, bits=31)
+        return self.dash.get_metrics_downsampled(run_id, q.get("key", ""), points=points)
 
     # POST /api/compare
     def compare(self, body: dict) -> dict:

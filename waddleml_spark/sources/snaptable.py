@@ -1,11 +1,10 @@
 """SnapTable — a minimal self-contained snapshot table format.
 
-The lakehouse connectors in this package (sources/lakehouse.py) feature-
-probe for Delta/Iceberg/Hudi and step aside when their jars are absent.
-SnapTable is the built-in fallback: the same core capabilities — ACID-ish
-versioned commits, time travel, and manifest-level file pruning — built
-from nothing but parquet data files plus JSON manifests, the public
-design shared by Delta Lake's transaction log and Iceberg's manifests.
+The package's one table format: ACID-ish versioned commits, time travel
+and manifest-level file pruning, built from nothing but parquet data
+files plus JSON manifests, the public design shared by Delta Lake's
+transaction log and Iceberg's manifests.  ``sources/pyds.py`` exposes it
+to Spark as ``format("snaptable")``.
 
 Layout::
 

@@ -152,3 +152,40 @@ def test_concurrent_update_run_loses_no_field(spark, tmp_path):
     assert row.asDict() == duck
     run._finished = True
     store.close()
+
+
+def test_concurrent_open_of_one_store(tmp_path):
+    """Threads that each open the same fresh store root at once all
+    succeed (the DDL bootstrap would otherwise hit DuckDB's catalog
+    write-write conflict) and every thread's row lands."""
+    n = 8
+    for rnd in range(5):
+        root = str(tmp_path / f"open{rnd}")
+        stores: list[WaddleStore] = []
+        errors: list[BaseException] = []
+        barrier = threading.Barrier(n, timeout=60)
+
+        def worker(i: int):
+            try:
+                barrier.wait()
+                store = WaddleStore(root)
+                stores.append(store)
+                store.append("runs", [{
+                    "id": f"{rnd}-{i}", "project": "open", "repo_id": None,
+                    "commit_sha": None, "name": None, "status": "running",
+                    "started_at": float(i), "ended_at": None, "env": None,
+                    "config": None, "notes": None,
+                }])
+            except BaseException as e:  # surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert stores[0].duck.execute("SELECT count(*) FROM runs").fetchone()[0] == n
+        for store in stores:
+            store.close()

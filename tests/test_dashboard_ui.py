@@ -53,7 +53,6 @@ global.document = {
 };
 global.location = {protocol: 'http:', host: BASE.replace('http://', '')};
 global.WebSocket = function() { setTimeout(() => this.onclose && this.onclose(), 5); };
-global.EventSource = function() {};
 global.confirm = () => false;
 const realFetch = global.fetch;
 global.fetch = (url, opts) =>

@@ -46,6 +46,25 @@ def test_jaccard_threshold_and_candidates(spark, docs):
     all_j = {(r.id_a, r.id_b): r.jaccard for r in dedup.jaccard_pairs(docs).collect()}
     assert all_j[(0, 3)] == pytest.approx(0.4)
     assert all_j[(4, 5)] < 0.999  # same words, different order → shingles differ
+    # edge docs: the clamp and NULL semantics jaccard_pairs' shingle sets
+    # (and the DuckDB twins in catalog_llm) rely on
+    edge = spark.createDataFrame(
+        [(10, None), (11, ""), (12, "   "), (13, "one"), (14, "one two"),
+         (15, "A  b\tc d a b c")],
+        "doc_id long, text string",
+    )
+    sets = {}
+    for r in dedup.shingle_rows(edge).collect():
+        sets.setdefault(r["id"], set()).add(r["__s"])
+    assert sets == {
+        10: {""}, 11: {""}, 12: {""},
+        13: {"one"},
+        14: {"one two"},
+        15: {"a b c", "b c d", "c d a", "d a b"},
+    }
+    edge_j = {(r.id_a, r.id_b): r.jaccard
+              for r in dedup.jaccard_pairs(edge).collect()}
+    assert edge_j[(10, 11)] == 1.0
 
 
 def test_minhash_block_candidates_semantics(spark, docs):

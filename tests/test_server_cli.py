@@ -51,6 +51,10 @@ def test_http_runs_and_run(served):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(f"{base}/api/runs/nope")
     assert e.value.code == 404
+    # /ws is the one live channel
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(f"{base}/events")
+    assert e.value.code == 404
 
 
 def test_http_metrics_keys_summary_compare(served):
@@ -103,7 +107,7 @@ def test_dashboard_ui_references_parity_endpoints(served):
     """Reference-parity front-end (waddle/static/index.html behaviors:
     per-metric charts :301-414, param-diff :373-389, client search
     :184-213, live socket :443-481): the served page must wire every
-    backing endpoint and the live channels."""
+    backing endpoint and the live channel."""
     base, run = served
     with urllib.request.urlopen(f"{base}/", timeout=30) as r:
         body = r.read().decode()
@@ -114,7 +118,6 @@ def test_dashboard_ui_references_parity_endpoints(served):
         "/api/metric-keys",     # overview selector
         "/api/metric-summary",  # final-value-per-run bar chart
         "/ws",                  # true WebSocket live path
-        "/events",              # SSE fallback
         "DELETE",               # delete-run action
     ):
         assert needle in body, f"dashboard UI missing {needle}"

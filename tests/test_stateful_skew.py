@@ -165,58 +165,6 @@ def test_sliced_running_sum_matches_naive_window(spark):
     assert r(naive).exceptAll(r(fast)).count() == 0
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState's worker protocol needs the protobuf package "
-    "(absent in this container); the operator is environment-gated",
-)
-def test_running_metric_summary_transform_with_state(spark, tmp_path, monkeypatch):
-    """Spark 4 transformWithStateInPandas twin of the running summary:
-    same incremental semantics, RocksDB-backed typed state."""
-    import waddleml_spark as w
-    from waddleml_spark.streaming.stateful import running_metric_summary_tws
-
-    monkeypatch.chdir(tmp_path)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        run = w.init(project="tws", system_metrics=False, spark=spark)
-        for i in range(5):
-            run.log_metric("loss", i, float(10 - i))
-        run.flush()
-        agg = running_metric_summary_tws(run._store)
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .start()
-        )
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT n, sum_v, min_v, max_v, last_step, last_value FROM tws_out"
-        ).collect()
-        q.stop()
-        run.finish()
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r.n, r.sum_v, r.min_v, r.max_v) == (5, 40.0, 6.0, 10.0)
-        assert (r.last_step, r.last_value) == (4, 6.0)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_asof_join_null_right_value_is_the_match_not_stale(spark):
     # round-6 review find: per-column ignorenulls fill replaced a
     # genuinely-NULL matched value with a STALE earlier row's value

@@ -10,9 +10,7 @@ tested UNCONDITIONALLY below with a raw-socket client, so the true wire
 protocol is exercised with zero optional dependencies.  (A formerly
 import-gated Starlette twin was removed in round 7: its deps are not
 installable in this container, so the gated path could never run.)
-
-The always-on SSE `/events` twin carries the same JSON and is covered
-in test_server_cli.py.
+/ws is the server's one live channel.
 """
 
 from __future__ import annotations

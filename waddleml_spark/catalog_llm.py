@@ -48,10 +48,10 @@ def _word_pos_sql(cols: str = "") -> str:
 
     NULL text coalesces to '' BECAUSE SPARK DOES: every Spark tokenizer
     here coerces a NULL body to the ['']-token shape (probed:
-    dedup.shingles(NULL) == shingles('') == ['']), while unnesting a
-    NULL list would emit zero rows and silently drop the document from
-    passage/signature grains (test_wide_row.py pins a NULL-text doc
-    through every text pairing)."""
+    dedup.shingle_rows yields the one gram '' for NULL and for ''),
+    while unnesting a NULL list would emit zero rows and silently drop
+    the document from passage/signature grains (test_wide_row.py pins a
+    NULL-text doc through every text pairing)."""
     return rf"""SELECT doc_id{cols}, unnest(ws) AS wd,
                unnest(range(1, len(ws) + 1)) AS i
         FROM (SELECT doc_id{cols},
@@ -72,7 +72,7 @@ def _trigram_rows_sql(cols: str = "") -> str:
 
 def _trigram_rows_clamped_sql(cols: str = "") -> str:
     """(doc_id[, cols], i, g): the slice-CLAMPED shingle semantics of
-    dedup.shingles — docs under 3 tokens shingle to their whole text
+    dedup.shingle_rows — docs under 3 tokens shingle to their whole text
     (position 1 emits the 1- or 2-token join).  Linear."""
     return rf"""SELECT doc_id{cols}, i,
            CASE WHEN w2 IS NOT NULL THEN wd || ' ' || w1 || ' ' || w2
@@ -2586,8 +2586,9 @@ def simhash32_band_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_cte_sql() -> str:
-    """DuckDB twin of dedup.shingles(k=3): distinct word 3-grams with the
-    short-doc slice clamp (docs under 3 words shingle to the whole text)."""
+    """DuckDB twin of dedup.shingle_rows(k=3) + collect_set: distinct
+    word 3-grams with the short-doc slice clamp (docs under 3 words
+    shingle to the whole text)."""
     return rf"""
         SELECT doc_id, list(DISTINCT g) AS sh
         FROM ({_trigram_rows_clamped_sql()}) WHERE g IS NOT NULL

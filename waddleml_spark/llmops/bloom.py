@@ -157,8 +157,8 @@ def bloom_decontamination_report(
     # the 100x harness; eviction worst-case re-runs the tokenize pass.
     # (b) explode ONCE before the persist so build/probe/audit all read
     # the same materialized rows.  (c) r10 rebuild (the trigram_novelty
-    # / contamination lesson): the interpreted-HOF
-    # shingles_from_tokens + explode was the cold-pass cost center —
+    # / contamination lesson): the interpreted-HOF shingle array
+    # (transform over slices) + explode was the cold-pass cost center —
     # the codegen'd generator explode + concat_ws + an explicit
     # distinct (restoring the per-doc-distinct grain the HOF's
     # array_distinct provided, so the persisted frame and the probe

@@ -57,24 +57,6 @@ def exact_dedup_keep(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def shingles(text_col: str, k: int = 3) -> F.Column:
-    """Word k-gram shingle array (distinct), via JVM-side higher-order fns.
-
-    NOTE the HOF lambda evaluates INTERPRETED (outside whole-stage
-    codegen) — fine when the array rides along a projection, but for
-    row-per-shingle consumers use shingle_rows(), whose generator +
-    element-access shape is fully codegen'd (measured 6x faster on the
-    same corpus).  Both produce the identical distinct shingle SET.
-    """
-    toks = F.split(lower_trim(F.col(text_col)), WS_RE)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    return F.array_distinct(grams)
-
-
 def shingle_rows(
     df: DataFrame,
     text_col: str = "text",
@@ -83,15 +65,15 @@ def shingle_rows(
     distinct: bool = True,
     with_pos: bool = False,
 ) -> DataFrame:
-    """(id, __s) rows: one distinct word-k-gram shingle per row —
-    codegen-friendly twin of exploding shingles().
+    """(id, __s) rows: one distinct word-k-gram shingle per row.
 
     Shape: explode a position sequence (generator — codegen'd) and build
     each gram with F.get element access + concat_ws (plain expressions),
     instead of a higher-order transform lambda (interpreted; measured
     3.5 s vs 0.6 s for 260k shingles at sf0.1).  concat_ws skips the
-    nulls F.get yields past the end, which reproduces shingles()'s
-    short-doc clamp (docs under k words shingle to the whole text);
+    nulls F.get yields past the end, which gives the short-doc clamp
+    (docs under k words shingle to the whole text; NULL text shingles
+    to the one gram '');
     distinct=True mirrors array_distinct (one shuffle).  Pass
     distinct=False for duplicate-insensitive consumers (MIN/MAX
     aggregates) — then nothing shuffles and the token array never
@@ -372,13 +354,13 @@ def jaccard_pairs(
     construction), so each pair pays ONE hash-set pass (the intersect)
     instead of two; the sizes ride in from the per-doc projection.
 
-    Candidate-fed hydration builds each doc's shingle set on the codegen
-    path (shingle_rows + collect_set) instead of the interpreted HOF
-    array projection, and the two hydration joins are INNER — docs with
-    no candidate pair drop at the join.  Their shingle sets are still
-    computed map-side first (cheap, codegen); deriving the participant
-    id set from `candidates` instead would re-evaluate the entire
-    candidate pipeline per branch (measured: 19 exchanges vs 7).  At
+    Both branches build each doc's shingle set on the codegen path
+    (shingle_rows + collect_set).  Candidate-fed, the two hydration
+    joins are INNER — docs with no candidate pair drop at the join.
+    Their shingle sets are still computed map-side first (cheap,
+    codegen); deriving the participant id set from `candidates` instead
+    would re-evaluate the entire candidate pipeline per branch
+    (measured: 19 exchanges vs 7).  At
     corpus scale, persist the small candidates frame and semi-filter
     `df` on it BEFORE calling this if shingling cost ever dominates —
     measured at sf0.1 BOTH the semi-filter and a participant-grain
@@ -388,21 +370,16 @@ def jaccard_pairs(
     levenshtein_pairs makes the opposite call (small text payloads,
     measured win) — the trade is payload-size-dependent, not universal.
     """
+    sh = (
+        shingle_rows(df, text_col, id_col, k, distinct=False)
+        .groupBy("id")
+        .agg(F.collect_set("__s").alias("sh"))
+        .withColumn("n", F.size("sh"))
+    )
+    a, b = sh.alias("a"), sh.alias("b")
     if candidates is None:
-        sh = df.select(
-            F.col(id_col).alias("id"),
-            shingles(text_col, k).alias("sh"),
-        ).withColumn("n", F.size("sh"))
-        a, b = sh.alias("a"), sh.alias("b")
         pairs = a.join(b, F.col("a.id") < F.col("b.id"))
     else:
-        sh = (
-            shingle_rows(df, text_col, id_col, k, distinct=False)
-            .groupBy("id")
-            .agg(F.collect_set("__s").alias("sh"))
-            .withColumn("n", F.size("sh"))
-        )
-        a, b = sh.alias("a"), sh.alias("b")
         pairs = (
             candidates.join(a, candidates.id_a == F.col("a.id"))
             .join(b, candidates.id_b == F.col("b.id"))

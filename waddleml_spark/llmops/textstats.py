@@ -159,8 +159,8 @@ def winnowing_fingerprints(
 def nopartial_gram_exprs(
     k: int, tok_col: str = "__t", n_col: str = "__n", i_col: str = "__i"
 ) -> tuple[Column, Column]:
-    """(starts, gram) for the CODEGEN'D generator twin of
-    shingles_from_tokens' NO-PARTIALS semantics: ``starts`` is the
+    """(starts, gram) for the CODEGEN'D generator form of the word
+    k-gram NO-PARTIALS semantics: ``starts`` is the
     0-based gram-position array (EMPTY for docs under k tokens — never
     shingle_rows' clamp), ``gram`` rebuilds the k-gram from a
     materialized token array + exploded index via plain F.get/concat_ws
@@ -190,33 +190,6 @@ def word_tokens(text: Column) -> Column:
     every tokenizing query (minhash gram stage 0.36 → 0.30 s at sf0.1).
     The DuckDB oracles already split directly (str_split_regex)."""
     return F.split(lower_trim(text), WS_RE)
-
-
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Distinct word k-gram strings from a token-array COLUMN, empty for
-    docs with < k tokens.  Semantics pinned for cross-engine parity:
-    starts 1..len-k+1 only when len >= k (no partial shingles).
-
-    `toks` must be a materialized column reference, not a nested
-    expression: HOF lambdas are interpreted without common-subexpression
-    elimination, so a nested split(...) would re-tokenize the document
-    once PER SHINGLE (~9x slower measured).  Materialize tokens behind a
-    shuffle or in a separate non-collapsible projection first.
-    """
-    n = F.size(toks)
-    starts = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    return F.array_distinct(grams)
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-gram strings straight from text — convenience for
-    small inputs/tests.  String form (not hashes) so a SQL oracle can
-    reproduce it exactly.  Hot paths must use shingles_from_tokens over
-    a materialized token column instead (see its perf note)."""
-    return shingles_from_tokens(word_tokens(text), k)
 
 
 def ngram_collision_report(
@@ -251,8 +224,8 @@ def ngram_collision_report(
     from waddleml_spark.session import fan_out
 
     # r10 rebuild (the trigram_novelty lesson, measured there first):
-    # the HOF shape — shingles_from_tokens + transform(xxhash64), both
-    # interpreted per element — dominated the 100× wall; the generator
+    # the HOF shape — transform(slice) shingle arrays + transform(xxhash64),
+    # both interpreted per element — dominated the 100× wall; the generator
     # explode over start indices + plain concat_ws/xxhash64 expressions
     # stays whole-stage-codegen'd and shuffles nothing extra (the probe
     # is per-OCCURRENCE instead of per-doc-distinct, but hits collapse
@@ -568,7 +541,7 @@ def shingle_novelty_report(
     same two BIGINTs on any engine), so it oracle-pairs exactly.
 
     Scale shape: codegen'd generator explode over start indices (empty
-    for docs under k tokens — shingles_from_tokens' pinned no-partials
+    for docs under k tokens — nopartial_gram_exprs' pinned no-partials
     semantics, NOT shingle_rows' clamp), per-occurrence rows into a
     (shingle, group) aggregate whose single countDistinct rewrites to a
     two-phase plan with map-side partial distinct; the corpus-wide

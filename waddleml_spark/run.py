@@ -218,7 +218,7 @@ class Run:
     def serve_dashboard(self, host: str = "127.0.0.1", port: int = 8000):
         """Start the dashboard HTTP server on a background thread, sharing
         this process's store (ref: waddle/_run.py:86-109 — same shared-
-        connection model) and wiring live metric delivery to /events."""
+        connection model) and wiring live metric delivery to /ws."""
         from waddleml_spark.server import serve_in_thread
         from waddleml_spark.streaming.live import LiveBus
 

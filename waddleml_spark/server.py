@@ -18,8 +18,7 @@ Live updates: the reference pushes per-insert WebSocket messages
 {"type":"metric",...} (ref :115-124).  The stdlib adapter speaks that
 exact wire protocol at GET /ws via a vendored minimal RFC 6455 server
 (handshake + text frames + close/ping — the whole surface the reference
-client uses), and ALSO exposes Server-Sent Events at GET /events with
-the identical JSON payloads.
+client uses).
 """
 
 from __future__ import annotations
@@ -286,7 +285,7 @@ def make_http_server(
     bus: LiveBus | None = None,
     static_dir: str | None = None,
 ) -> ThreadingHTTPServer:
-    """stdlib adapter: same routes, JSON responses, plus SSE /events.
+    """stdlib adapter: same routes, JSON responses, plus WebSocket /ws.
     static_dir overrides the bundled assets (ref cli.py:146 parity)."""
     routes = Routes(MirrorDashboard(store), bus=bus)
 
@@ -374,8 +373,6 @@ def make_http_server(
                 return self._json(routes.metric_keys())
             if u.path == "/api/metric-summary":
                 return self._json(routes.metric_summary(q))
-            if u.path == "/events":
-                return self._sse()
             if u.path == "/ws":
                 return self._ws()
             self._json({"error": "not found"}, 404)
@@ -473,32 +470,6 @@ def make_http_server(
                         self.wfile.flush()
             except (BrokenPipeError, ConnectionResetError, OSError):
                 pass
-            finally:
-                sub.dead = True  # LiveBus prunes on its next publish
-
-        def _sse(self):
-            """SSE stream of live metric messages (WS-equivalent payloads)."""
-            sub = _QueueSub()
-            routes.bus.subscribe(sub)
-            try:
-                self.send_response(200)
-                self.send_header("Content-Type", "text/event-stream")
-                self.send_header("Cache-Control", "no-cache")
-                self.end_headers()
-                while True:
-                    try:
-                        rows = sub.q.get(timeout=300)
-                    except queue.Empty:
-                        # SSE comment line = keep-alive (same contract as
-                        # the WS ping): quiet streams stay connected
-                        self.wfile.write(b": keep-alive\n\n")
-                        self.wfile.flush()
-                        continue
-                    for msg in _metric_messages(rows):
-                        self.wfile.write(f"data: {json.dumps(msg)}\n\n".encode())
-                    self.wfile.flush()
-            except (BrokenPipeError, ConnectionResetError, OSError):
-                return
             finally:
                 sub.dead = True  # LiveBus prunes on its next publish
 

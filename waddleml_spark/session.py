@@ -270,31 +270,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     memo[key] = df
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver parquet tables under ``sf_dir`` and register temp views.
-
-    Returns {name: DataFrame}.  Views let every operator also be phrased as
-    spark.sql over the same names DuckDB pre-registers (TESTDATA.md).
-    """
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

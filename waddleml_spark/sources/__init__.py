@@ -1,6 +1,8 @@
-"""Source connectors (SURVEY.md §2.1 S6-S8).
+"""Source connectors and table layouts (SURVEY.md §2.1 S6).
 
-    binary.py   bulk artifact ingest via the binaryFile source (S6)
-    sampler.py  rate-source-driven system-metrics stream (S8)
-    readers.py  schema-pinned batch readers (parquet/csv/json/jdbc)
+    binary.py     bulk artifact ingest via the binaryFile source (S6)
+    bucketed.py   bucketed-table layout for shuffle-free co-located joins
+    zorder.py     Z-order (Morton-curve) multi-column layout
+    snaptable.py  the one table format: versioned snapshot commits
+    pyds.py       snaptable as a native Spark format (Python Data Source API)
 """

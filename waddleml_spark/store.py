@@ -65,6 +65,10 @@ _CASCADE = (
 
 _seq_lock = threading.Lock()
 _seq_counter = itertools.count()
+# DuckDB shares one database per file within a process; concurrent
+# CREATE TABLE IF NOT EXISTS from several connections to it raises
+# "Catalog write-write conflict", so store opens run their DDL one at a time
+_open_lock = threading.Lock()
 
 
 def _parallelism(spark: SparkSession) -> int:
@@ -95,12 +99,13 @@ class WaddleStore:
         os.makedirs(self.root, exist_ok=True)
         self._spark = spark
         self.duck_path = os.path.join(self.root, "waddle.duckdb")
-        self.duck = duckdb.connect(self.duck_path)
         # single-writer (ref S5); re-entrant so update_run's read-merge-upsert is one step
         self._duck_lock = threading.RLock()
-        for stmt in schemas.DUCKDB_DDL.split(";"):
-            if stmt.strip():
-                self.duck.execute(stmt)
+        with _open_lock:
+            self.duck = duckdb.connect(self.duck_path)
+            for stmt in schemas.DUCKDB_DDL.split(";"):
+                if stmt.strip():
+                    self.duck.execute(stmt)
         WaddleStore._registry[self.root] = self
 
     @classmethod

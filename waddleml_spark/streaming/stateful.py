@@ -153,99 +153,3 @@ def running_metric_summary(store: WaddleStore) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_metric_summary_tws(store: WaddleStore) -> DataFrame:
-    """The running per-(run,key) summary on Spark 4's transformWithState
-    API — the successor of applyInPandasWithState used by
-    running_metric_summary.  Differences that matter at scale: named,
-    TYPED state slots (ValueState here; List/MapState available for
-    richer operators), per-key timers, and the RocksDB state store —
-    state no longer lives on the JVM heap, so a million live (run, key)
-    groups is a disk/block-cache problem, not a GC problem.
-
-    Same semantics as the applyInPandasWithState twin:
-    state O(groups), updates O(batch), one refreshed row per touched
-    group per micro-batch.
-
-    Environment gate: the TWS worker protocol imports google.protobuf at
-    runtime; containers without it fail at stream start (the test skips
-    there).  running_metric_summary (applyInPandasWithState) is the
-    dependency-free fallback with identical output.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    # The TWS driver worker is a separate long-lived Python process that
-    # does NOT see sys.path additions or addPyFile archives — the
-    # processor must pickle BY VALUE: class defined in this closure, no
-    # references to module globals (schema rebuilt locally, pandas
-    # imported inside the method).
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("sum_v", T.DoubleType()),
-            T.StructField("min_v", T.DoubleType()),
-            T.StructField("max_v", T.DoubleType()),
-            T.StructField("last_step", T.IntegerType()),
-            T.StructField("last_value", T.DoubleType()),
-        ]
-    )
-
-    class RunningSummary(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # worker-local import (see pickling note)
-
-            if self._agg.exists():
-                n, sum_v, min_v, max_v, last_step, last_value = self._agg.get()
-            else:
-                n, sum_v, min_v, max_v, last_step, last_value = (
-                    0, 0.0, None, None, -1, None,
-                )
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                # NaN handling mirrors _update (see comment there)
-                vals = pdf["value"].astype(float)
-                vals = vals[vals.notna()]
-                n += int(vals.size)
-                if vals.size:
-                    sum_v += float(vals.sum())
-                    bmin, bmax = float(vals.min()), float(vals.max())
-                    min_v = bmin if min_v is None else min(min_v, bmin)
-                    max_v = bmax if max_v is None else max(max_v, bmax)
-                top = pdf.loc[pdf["step"].astype(int).idxmax()]
-                if int(top["step"]) >= last_step:
-                    last_step = int(top["step"])
-                    last_value = float(top["value"])
-            self._agg.update((n, sum_v, min_v, max_v, last_step, last_value))
-            run_id, metric_key = key
-            yield pd.DataFrame(
-                {
-                    "run_id": [run_id],
-                    "key": [metric_key],
-                    "n": [n],
-                    "sum_v": [sum_v],
-                    "min_v": [min_v],
-                    "max_v": [max_v],
-                    "last_step": [last_step],
-                    "last_value": [last_value],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark = store.spark
-    src = spark.readStream.schema(schemas.METRICS).parquet(store._dir("metrics"))
-    return (
-        src.select("run_id", "key", "step", "value")
-        .groupBy("run_id", "key")
-        .transformWithStateInPandas(
-            RunningSummary(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

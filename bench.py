@@ -111,11 +111,9 @@ def main() -> None:
     # overhead, and the skew its skew-join would fix is already handled
     # explicitly via salting + bucket-grouping).  The shipped session
     # default keeps AQE ON for real scale; SPARK_GRAFT_AQE=1 restores it
-    # for the bench.  NOTE the two benches deliberately differ when the
-    # env is UNSET (here: off, the measured headline optimum;
-    # bench_vs_oracle.py: on, the shipped-session default a user gets) —
-    # explicit SPARK_GRAFT_AQE=0/1 means off/on in BOTH tools, so set it
-    # when comparing their numbers.
+    # for the bench.  NOTE this differs from the shipped-session default
+    # a user gets (AQE on) when the env is UNSET, so set SPARK_GRAFT_AQE
+    # explicitly when comparing bench numbers with any other harness.
     spark = get_spark(
         app_name="waddleml-bench",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),

@@ -3,13 +3,13 @@ catalog's revenue join (lineitem ⋈ orders on orderkey) plans with ZERO
 exchange below the join — the co-located layout a 100 TB deployment pays
 for once at ingest and amortizes over every subsequent same-key query.
 
-At the 100x replica, tools/bucketed_study.py measured the plain join at
-5.34 s vs 0.90 s bucketed (5.93x, quiet-window interleaved min-of-5,
-plan-asserted exchange-free); DEPLOY.md maps the same layout onto a real
-cluster (persistent metastore + object-store paths).  This example shows
-the user-facing flow at smoke scale and verifies the plan property +
-value parity rather than re-measuring (timing at sf0.001 measures the
-scheduling floor, not the layout).
+At the 100x replica, the r8 history row in SCALING.md's 100× section
+records the plain join at 5.34 s vs 0.90 s bucketed (5.93x, quiet-window
+interleaved min-of-5, plan-asserted exchange-free); DEPLOY.md maps the
+same layout onto a real cluster (persistent metastore + object-store
+paths).  This example shows the user-facing flow at smoke scale and
+verifies the plan property + value parity rather than re-measuring
+(timing at sf0.001 measures the scheduling floor, not the layout).
 
 Run: PYTHONPATH=. python examples/bucketed_layout.py
 """

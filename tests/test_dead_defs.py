@@ -1,10 +1,16 @@
-"""Dead-definition guard: every module-level ``def``/``class`` in the
-package must be named somewhere in the repo's Python files besides its
-own definition line — in code, a test, an example, a tool or a comment.
+"""Dead-code guards, pure ``ast`` and text scans; no Spark.
 
-Pure ``ast`` plus a word-boundary text scan; no Spark.  Exempt: dunder
-names, and catalog queries registered with ``@_register(...)`` (they are
+Every module-level ``def``/``class`` in the package must be named
+somewhere in the repo's Python files besides its own definition line —
+in code, a test, an example, a tool or a comment.  Exempt: dunder names,
+and catalog queries registered with ``@_register(...)`` (they are
 reached by key through ``catalog.QUERIES``).
+
+Every top-level script and every file under ``tools/`` must be named by
+file name in a live document or runner: the README, CLAUDE.md, DEPLOY.md,
+a file under ``tests/`` or ``perfbench/``, or the examples runner.
+History documents (SCALING.md, ROADMAP.md, CHANGES.md, ...) do not count:
+a script only they mention is one nothing runs.
 """
 
 from __future__ import annotations
@@ -64,3 +70,33 @@ def test_no_dead_module_level_definitions():
             if uses[name] <= own:
                 dead.append(f"{path.relative_to(REPO)}:{node.lineno} {name}")
     assert dead == [], "module-level definitions nothing names:\n" + "\n".join(dead)
+
+
+def _live_documents() -> dict[Path, str]:
+    docs = [REPO / n for n in ("README.md", "CLAUDE.md", "DEPLOY.md")]
+    docs.append(REPO / "tools" / "run_examples.sh")
+    for d in ("tests", "perfbench"):
+        docs += [
+            p for p in (REPO / d).rglob("*")
+            if p.is_file() and "__pycache__" not in p.parts
+        ]
+    # this guard names no script; a script naming itself does not count
+    this = Path(__file__).resolve()
+    return {
+        p: p.read_text(encoding="utf-8", errors="replace")
+        for p in docs
+        if p.resolve() != this
+    }
+
+
+def test_every_script_is_named_by_a_live_document():
+    docs = _live_documents()
+    scripts = list(REPO.glob("*.py")) + [
+        p for p in (REPO / "tools").iterdir() if p.is_file()
+    ]
+    unnamed = []
+    for script in sorted(scripts):
+        named = re.compile(rf"(?<![\w.]){re.escape(script.name)}(?!\w)")
+        if not any(named.search(t) for d, t in docs.items() if d != script):
+            unnamed.append(str(script.relative_to(REPO)))
+    assert unnamed == [], "scripts no live document names:\n" + "\n".join(unnamed)

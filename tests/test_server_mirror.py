@@ -93,7 +93,7 @@ def test_malformed_compare_body_is_400(server, case):
     assert status == 200 and len(cmp["metrics"]["loss"]) == 10
 
 
-@pytest.mark.parametrize("length", ["-1", "ten"])
+@pytest.mark.parametrize("length", ["-1", "ten", str(2**40), str((4 << 20) + 1)])
 def test_bad_content_length_is_400(server, length):
     base, _ = server
     conn = http.client.HTTPConnection(base.removeprefix("http://"), timeout=30)

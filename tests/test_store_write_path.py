@@ -1,6 +1,8 @@
 """The store's single row-level write path: a write-only run never starts
 Spark, part files appear atomically, finish() leaves both layers holding
-the same row, and delete_run's DuckDB side is one transaction."""
+the same row, delete_run's DuckDB side is one transaction, write sequence
+numbers strictly increase, and closing one store leaves another on the
+same root readable."""
 
 from __future__ import annotations
 
@@ -10,11 +12,14 @@ import os
 import subprocess
 import sys
 import textwrap
+import time
+from types import SimpleNamespace
 
 import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
+from waddleml_spark import store as store_mod
 from waddleml_spark.store import WaddleStore
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -154,3 +159,28 @@ def test_delete_run_failure_rolls_back_every_table(spark, tmp_path, monkeypatch)
     # nothing past the failed transaction ran: no tombstone, no rewrite
     assert not os.path.exists(store._dir("_cdc_deletes"))
     assert {t: sorted(glob.glob(store._dir(t) + "/*.parquet")) for t in tables} == parquet_before
+
+
+def test_write_seq_strictly_increases_when_clock_stalls_or_steps_back(monkeypatch):
+    """More than 1000 writes in one frozen microsecond, then the wall clock
+    stepped back (an NTP step): every sequence number beats the last, so
+    last-writer-wins never picks an older version."""
+    now = [time.time()]
+    monkeypatch.setattr(store_mod, "time", SimpleNamespace(time=lambda: now[0]))
+    seqs = [store_mod._next_seq() for _ in range(2000)]
+    now[0] -= 5.0
+    seqs += [store_mod._next_seq() for _ in range(10)]
+    assert all(b > a for a, b in zip(seqs, seqs[1:]))
+
+
+def test_closing_one_store_keeps_reader_conn_for_another(tmp_path):
+    """Two stores on one root (api.init opens one per run); closing the
+    first must not unregister the second, or reader_conn would open a
+    read_only connection beside its read-write one and DuckDB refuses."""
+    root = str(tmp_path / "store")
+    a = WaddleStore(root)
+    b = WaddleStore(root)
+    a.close()
+    con = WaddleStore.reader_conn(root)
+    assert con.execute("SELECT count(*) FROM runs").fetchone() == (0,)
+    b.close()

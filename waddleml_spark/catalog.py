@@ -732,10 +732,10 @@ def revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders/lineitem share the orderkey; at scale both sides should be
     bucketed by orderkey so this is a shuffle-free sort-merge join
     (sources.bucketed.bucket_facts produces that layout in one call;
-    tools/bucketed_study.py measured it 5.93x — 5.34 s -> 0.90 s — at
-    the 100x replica, quiet-window interleaved min-of-5;
-    examples/bucketed_layout.py shows the user-facing flow).  AQE
-    handles skewed keys.  Locally Catalyst picks broadcast for orders.
+    the r8 history row in SCALING.md's 100× section records 5.93x —
+    5.34 s -> 0.90 s — at the 100x replica, quiet-window interleaved
+    min-of-5; examples/bucketed_layout.py shows the user-facing flow).
+    AQE handles skewed keys.  Locally Catalyst picks broadcast for orders.
     """
     o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
@@ -744,9 +744,9 @@ def revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def revenue_join(li: DataFrame, o: DataFrame) -> DataFrame:
     """revenue_by_priority's join+agg on EXPLICIT frames — the one shared
-    definition the parquet catalog query, the bucketed-layout test, and
-    tools/bucketed_study.py all build on, so the layout proof can never
-    measure a drifted shape."""
+    definition the parquet catalog query, the bucketed-layout test and
+    example all build on, so the layout proof can never check a drifted
+    shape."""
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)

@@ -603,7 +603,6 @@ def dsir_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 1024,
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """DSIR importance scores (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): per document, the
@@ -666,16 +665,13 @@ def dsir_scores(
         ((F.col("c_t") + 1) / (F.col("t_t") + n_buckets))
         / ((F.col("c_r") + 1) / (F.col("t_r") + n_buckets))
     )
-    lw_tbl = totals.select("bkt", lw.alias("lw"))
     # broadcast is BOUNDED BY CONSTRUCTION (the hint rule): bkt is
     # md5 % n_buckets, so lw_tbl can never exceed n_buckets rows at any
     # corpus size — without the hint the join is derived-frame sized by
     # Catalyst (join-output estimates blow past the threshold) and the
     # occurrence-grain side pays a full shuffle at scale (r10: 100×
-    # measured below the shuffle plan; SCALING.md).  broadcast_weights
-    # exists so the two arms stay interleavable in scale_study runs.
-    if broadcast_weights:
-        lw_tbl = F.broadcast(lw_tbl)
+    # measured below the shuffle plan; SCALING.md).
+    lw_tbl = F.broadcast(totals.select("bkt", lw.alias("lw")))
     scored = rows.join(lw_tbl, "bkt").select("id", "lw")
     return scored.groupBy("id").agg(
         F.count("*").alias("n_bigrams"),

@@ -35,6 +35,12 @@ from waddleml_spark.store import WaddleStore
 from waddleml_spark.streaming.live import LiveBus
 
 
+#: largest request body or WebSocket message accepted.  Dashboard
+#: requests are tiny JSON commands; 4 MB is orders of magnitude of
+#: headroom, and a claimed size past it is refused before any read.
+MAX_BODY_BYTES = 4 << 20
+
+
 class BadRequest(ValueError):
     """Malformed request input; the HTTP adapter answers 400."""
 
@@ -196,10 +202,9 @@ class WsReader:
     #: frame can CLAIM anything, and an endless FIN=0 continuation
     #: stream would grow the reassembly buffer without bound — either
     #: one is a memory-exhaustion vector for the dashboard thread
-    #: (round-5 advice).  Dashboard messages are tiny JSON commands;
-    #: 4 MB is orders of magnitude of headroom.  Oversize fails the
-    #: connection (return None), matching every other protocol error.
-    MAX_MESSAGE_BYTES = 4 << 20
+    #: (round-5 advice).  Oversize fails the connection (return None),
+    #: matching every other protocol error.
+    MAX_MESSAGE_BYTES = MAX_BODY_BYTES
 
     def __init__(self, rfile, require_mask: bool = True):
         self.rfile = rfile
@@ -386,8 +391,10 @@ def make_http_server(
         def _json_body(self):
             try:
                 n = int(self.headers.get("Content-Length", "0"))
-                if n < 0:
-                    raise ValueError(f"negative Content-Length {n}")
+                if not 0 <= n <= MAX_BODY_BYTES:
+                    raise ValueError(
+                        f"Content-Length {n} outside [0, {MAX_BODY_BYTES}]"
+                    )
                 return json.loads(self.rfile.read(n) or b"{}")
             except ValueError as e:  # incl. JSONDecodeError, UnicodeDecodeError
                 raise BadRequest(f"malformed request body: {e}") from None

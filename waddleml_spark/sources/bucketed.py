@@ -83,9 +83,9 @@ def bucket_facts(
 
     This is the ingest-side shuffle a 100 TB deployment pays once per
     fact table so that every subsequent same-key join/aggregate plans
-    with ZERO Exchange (tools/bucketed_study.py: revenue join 5.34 s →
-    0.90 s at the 100x replica, plan-asserted exchange-free, quiet-
-    window r8 measurement).  Bucket
+    with ZERO Exchange (SCALING.md 100× section, r8 history row: revenue
+    join 5.34 s → 0.90 s at the 100x replica, plan-asserted exchange-
+    free, quiet-window measurement).  Bucket
     counts must match across tables meant to co-join — this writes all
     requested tables with the same n_buckets.
     """

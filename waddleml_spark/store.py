@@ -30,7 +30,6 @@ stay cheap.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import threading
@@ -64,7 +63,7 @@ _CASCADE = (
 )
 
 _seq_lock = threading.Lock()
-_seq_counter = itertools.count()
+_last_seq = 0
 # DuckDB shares one database per file within a process; concurrent
 # CREATE TABLE IF NOT EXISTS from several connections to it raises
 # "Catalog write-write conflict", so store opens run their DDL one at a time
@@ -81,11 +80,14 @@ def _parallelism(spark: SparkSession) -> int:
 
 
 def _next_seq() -> int:
-    """Monotonic write sequence: epoch-micros * 1000 + counter mod 1000.
-    Orders writes across restarts (wall clock) and within a process
-    (counter); collisions would need >1000 writes in one microsecond."""
+    """Strictly increasing write sequence: epoch-micros * 1000, or one past
+    the last value when the clock has not moved on (many writes in one
+    microsecond, or a wall clock stepped backwards).  Orders writes across
+    restarts (wall clock) and within a process (never repeats)."""
+    global _last_seq
     with _seq_lock:
-        return int(time.time() * 1e6) * 1000 + next(_seq_counter) % 1000
+        _last_seq = max(int(time.time() * 1e6) * 1000, _last_seq + 1)
+        return _last_seq
 
 
 class WaddleStore:
@@ -465,5 +467,7 @@ class WaddleStore:
         return name
 
     def close(self) -> None:
-        WaddleStore._registry.pop(self.root, None)
+        # another open store on the same root may own the entry; keep it
+        if WaddleStore._registry.get(self.root) is self:
+            del WaddleStore._registry[self.root]
         self.duck.close()

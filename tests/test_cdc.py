@@ -1,5 +1,5 @@
 """Change-data-capture feed: store.changes() op classification, cursor
-semantics, delete tombstones, and the streaming upsert tail."""
+semantics, and delete tombstones before and after compact()."""
 
 from __future__ import annotations
 
@@ -81,30 +81,13 @@ def test_delete_emits_tombstones(spark, tmp_path, monkeypatch):
     assert len(dels) == 1 and dels[0]["run_id"] == rid
     run_dels = [r for r in _feed(store, "runs") if r["op"] == "delete"]
     assert len(run_dels) == 1 and run_dels[0]["id"] == rid
-    # data events for the deleted run are gone (history rewritten);
-    # the tombstone is the only trace — from-scratch consumers see it last
+    # until compact() the run's history stays in the feed, followed by its
+    # delete event, while the read view already hides the run
+    events = [r for r in _feed(store, "params") if r["run_id"] == rid]
+    assert [r["op"] for r in events] == ["insert", "delete"]
+    assert events[0]["_seq"] < events[1]["_seq"]
+    assert store.df("params").filter(f"run_id = '{rid}'").count() == 0
+    # compact() folds the history away; the tombstone is the only trace —
+    # from-scratch consumers see it last
+    store.compact()
     assert all(r["op"] == "delete" or r["run_id"] != rid for r in _feed(store, "params"))
-
-
-def test_changes_stream_tails_upserts(spark, tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="cdc4", system_metrics=False, spark=spark)
-    run.log_param("p", 1)
-    run.finish()
-    store = run._store
-    stream = store.changes_stream("params")
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("cdc_params")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM cdc_params").collect()
-        assert any(r.key == "p" for r in rows)
-        # every version row carries the cursor column
-        assert all(r._seq > 0 for r in rows)
-    finally:
-        q.stop()

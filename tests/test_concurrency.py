@@ -1,11 +1,12 @@
 """Write-path concurrency: parallel threads logging through one store
-(the reference's lock-serialized multi-thread scenario, S5) — no lost
-rows, both storage layers converge."""
+(the reference's lock-serialized multi-thread scenario, S5), and deletes
+beside a logging run — no lost rows, both storage layers converge."""
 
 from __future__ import annotations
 
 import sys
 import threading
+import time
 
 import pytest
 
@@ -189,3 +190,57 @@ def test_concurrent_open_of_one_store(tmp_path):
         assert stores[0].duck.execute("SELECT count(*) FROM runs").fetchone()[0] == n
         for store in stores:
             store.close()
+
+
+def test_delete_beside_a_logging_run_loses_no_row(spark, tmp_path):
+    """One run logs and flushes from a thread while the main thread
+    deletes other runs: the run's metric rows in the Parquet files equal
+    its DuckDB rows (a delete that swaps table dirs drops the part files
+    flushed meanwhile)."""
+    import pyarrow.parquet as pq
+
+    from waddleml_spark.run import Run
+
+    store = WaddleStore(str(tmp_path / "race"), spark=spark)
+    doomed = [f"{c}" * 32 for c in "abc"]
+    for rid in doomed:
+        r = Run(store=store, run_id=rid, project="race", system_metrics=False)
+        r.log({"m": 1.0})
+        r.finish()
+    live = Run(store=store, run_id="l" * 32, project="race", system_metrics=False)
+    flushed = threading.Event()
+    stop = threading.Event()
+    errors: list[BaseException] = []
+
+    def writer():
+        try:
+            i = 0
+            while not stop.is_set() or i < 20:
+                live.log({"m": float(i)})
+                live.flush()
+                flushed.set()
+                i += 1
+                time.sleep(0.005)
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=writer)
+    t.start()
+    try:
+        assert flushed.wait(timeout=60)
+        for rid in doomed:
+            store.delete_run(rid)
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    live.finish()
+    assert errors == []
+    n_duck = store.duck.execute(
+        "SELECT count(*) FROM metrics WHERE run_id = ?", [live.id]
+    ).fetchone()[0]
+    n_parquet = pq.read_table(
+        store._dir("metrics"), filters=[("run_id", "=", live.id)]
+    ).num_rows
+    assert n_parquet == n_duck >= 20
+    assert {r.id for r in store.df("runs").collect()} == {live.id}
+    store.close()

@@ -1,10 +1,13 @@
-"""Serving-layer tests: stdlib HTTP adapter wire format + CLI ls/init."""
+"""Serving-layer tests: stdlib HTTP adapter wire format + CLI ls/init, and
+the CLI's answers to a locked store and a bad `ls -n`."""
 
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+import textwrap
 import urllib.request
 
 import pytest
@@ -12,6 +15,8 @@ import pytest
 import waddleml_spark as w
 from waddleml_spark import state
 from waddleml_spark.server import serve_in_thread
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -93,6 +98,44 @@ def test_cli_ls_and_init(served, tmp_path, monkeypatch, capsys):
     assert rc == 0
     assert (tmp_path / ".waddle").is_dir()
     assert ".waddle/" in (tmp_path / ".gitignore").read_text()
+
+
+def test_cli_ls_and_serve_report_a_locked_store(tmp_path, capsys):
+    """Another process holds the store: `ls` and `serve` print one line
+    naming the store and DuckDB's message, no traceback, and return 1."""
+    from waddleml_spark import cli
+
+    root = str(tmp_path / ".waddle")
+    holder = subprocess.Popen(
+        [sys.executable, "-c", textwrap.dedent(f"""
+            import sys
+            sys.path.insert(0, {REPO!r})
+            from waddleml_spark.store import WaddleStore
+            store = WaddleStore({root!r})
+            print("ready", flush=True)
+            sys.stdin.read()
+        """)],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "ready"
+        for argv in (["ls", "--db", root], ["serve", "--db", root, "--port", "0"]):
+            assert cli.main(argv) == 1
+            err = capsys.readouterr().err.strip().splitlines()
+            assert len(err) == 1 and root in err[0] and "lock" in err[0], err
+    finally:
+        holder.stdin.close()
+        holder.wait(timeout=60)
+
+
+@pytest.mark.parametrize("n", ["0", "-1"])
+def test_cli_ls_limit_below_one_is_a_usage_error(n, tmp_path, capsys):
+    from waddleml_spark import cli
+
+    with pytest.raises(SystemExit) as e:
+        cli.main(["ls", "--db", str(tmp_path), "-n", n])
+    assert e.value.code == 2
+    assert "at least 1" in capsys.readouterr().err
 
 
 def test_dashboard_index_served(served):

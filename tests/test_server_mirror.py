@@ -109,11 +109,11 @@ def test_bad_content_length_is_400(server, length):
 
 def test_serving_never_starts_spark(tmp_path):
     """A finished store opened the way `cli serve` opens it, every GET
-    route and POST /api/compare answered 200, and no SparkContext (no
-    JVM) at exit."""
+    route and POST /api/compare answered 200, DELETE of a run answered 200
+    and the run then 404, and no SparkContext (no JVM) at exit."""
     script = textwrap.dedent(
         f"""
-        import json, sys, threading, urllib.request
+        import json, sys, threading, urllib.error, urllib.request
         sys.path.insert(0, {REPO!r})
         import pyspark
         import waddleml_spark as w
@@ -149,6 +149,14 @@ def test_serving_never_starts_spark(tmp_path):
                                      data=json.dumps({{"run_ids": ids}}).encode())
         with urllib.request.urlopen(req, timeout=30) as r:
             statuses["/api/compare"] = r.status
+        gone = f"/api/runs/{{ids[2]}}"
+        req = urllib.request.Request(base + gone, method="DELETE")
+        with urllib.request.urlopen(req, timeout=30) as r:
+            statuses["DELETE " + gone] = r.status
+        try:
+            urllib.request.urlopen(base + gone, timeout=30)
+        except urllib.error.HTTPError as e:
+            statuses["GET after DELETE"] = e.code
         srv.shutdown()
         print(json.dumps({{
             "statuses": statuses,
@@ -159,8 +167,10 @@ def test_serving_never_starts_spark(tmp_path):
     out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, capture_output=True,
                          text=True, timeout=120, check=True)
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert len(res["statuses"]) == 10
-    assert set(res["statuses"].values()) == {200}, res["statuses"]
+    statuses = res["statuses"]
+    assert statuses.pop("GET after DELETE") == 404
+    assert len(statuses) == 11
+    assert set(statuses.values()) == {200}, statuses
     assert res["spark"] is False
 
 

@@ -1,6 +1,7 @@
 """The store's single row-level write path: a write-only run never starts
 Spark, part files appear atomically, finish() leaves both layers holding
-the same row, delete_run's DuckDB side is one transaction, write sequence
+the same row, delete_run's DuckDB side is one transaction and its Parquet side one
+tombstone part, late writes to a deleted run stay hidden, write sequence
 numbers strictly increase, and closing one store leaves another on the
 same root readable."""
 
@@ -159,6 +160,54 @@ def test_delete_run_failure_rolls_back_every_table(spark, tmp_path, monkeypatch)
     # nothing past the failed transaction ran: no tombstone, no rewrite
     assert not os.path.exists(store._dir("_cdc_deletes"))
     assert {t: sorted(glob.glob(store._dir(t) + "/*.parquet")) for t in tables} == parquet_before
+
+
+def test_delete_run_adds_one_tombstone_part_and_moves_nothing(spark, tmp_path, monkeypatch):
+    """delete_run is one log write: exactly one new file under parquet/, a
+    _cdc_deletes part, and every file that was there stays in place."""
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="tomb", system_metrics=False, spark=spark)
+    run.log({"m": 1.0})
+    run.log_param("p", 1)
+    run.log_tag("t", "x")
+    run.log_artifact("a")
+    run.finish()
+    store = run._store
+    root = os.path.join(store.root, "parquet")
+
+    def files():
+        return {os.path.relpath(os.path.join(d, f), root) for d, _, fs in os.walk(root) for f in fs}
+
+    before = files()
+    store.delete_run(run.id)
+    after = files()
+    assert before <= after
+    [added] = after - before
+    assert added.startswith(os.path.join("_cdc_deletes", "part-"))
+
+
+def test_late_writes_after_delete_stay_hidden_and_finish_returns(spark, tmp_path, monkeypatch):
+    """A run deleted while it trains keeps logging, then finishes: finish()
+    returns without bringing the run back, DuckDB keeps the late metric
+    rows as orphans, and the tombstone hides them from the Spark view."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="late", system_metrics=False, spark=spark)
+    run.log({"m": 0.0})
+    run.flush()
+    store = run._store
+    store.delete_run(run.id)
+    for i in range(3):
+        run.log({"m": float(i + 1)})
+    run.finish()
+    assert store._duck_row("runs", "id", run.id) is None
+    assert store.duck.execute(
+        "SELECT count(*) FROM metrics WHERE run_id = ?", [run.id]
+    ).fetchone() == (3,)
+    assert pq.read_table(store._dir("metrics")).num_rows == 4  # hidden, not purged
+    assert store.df("metrics").count() == 0
+    assert store.df("runs").count() == 0
 
 
 def test_write_seq_strictly_increases_when_clock_stalls_or_steps_back(monkeypatch):

@@ -1,5 +1,5 @@
-"""Streaming tests (T1/T2): live bus fan-out, parquet-tail metric stream,
-watermarked window agg, sampler feed."""
+"""Streaming tests (T1/T2): live bus fan-out, watermarked window and
+session aggregation, stream-stream join, streaming dedup, sampler feed."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
-from waddleml_spark.streaming.live import LiveBus, MetricStream, metric_window_agg
+from waddleml_spark.streaming.live import LiveBus, metric_window_agg
 
 
 @pytest.fixture(autouse=True)
@@ -45,28 +45,6 @@ def test_run_publishes_to_live_bus(spark, tmp_path, monkeypatch):
     run.log({"loss": 0.5})
     run.finish()
     assert [ (r["key"], r["value"]) for r in seen ] == [("loss", 0.5)]
-
-
-def test_metric_stream_tails_store(spark, tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="stream", system_metrics=False, spark=spark)
-    run.log({"loss": 1.0})
-    run.flush()
-
-    ms = MetricStream(run._store, trigger_seconds=0.5)
-    got = []
-    ms.bus.subscribe(lambda rows: got.extend(rows))
-    ms.start()
-    ms.process_all_available()
-    assert {(r["key"], r["value"]) for r in got} == {("loss", 1.0)}
-
-    # new micro-batch lands → stream delivers it
-    run.log({"loss": 0.5})
-    run.flush()
-    ms.process_all_available()
-    assert {(r["key"], r["value"]) for r in got} == {("loss", 1.0), ("loss", 0.5)}
-    ms.stop()
-    run.finish()
 
 
 def test_metric_window_agg(spark, tmp_path, monkeypatch):
@@ -173,39 +151,6 @@ def test_metric_pair_stream_stream_join(spark, tmp_path, monkeypatch):
     q.stop()
     assert [(r.l_step, r.r_step) for r in rows] == [(0, 0), (1, 1), (2, 2)]
     run.finish()
-
-
-def test_metric_stream_checkpoint_resumes_after_restart(spark, tmp_path, monkeypatch):
-    """Restart-recovery: a NEW MetricStream on the same store resumes from
-    the checkpoint — already-delivered micro-batches are not re-delivered,
-    only rows logged after the stop arrive (file-source offsets + the
-    persisted checkpoint give exactly-once across restarts here; the
-    docstring's at-least-once caveat is about checkpoint deletion)."""
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="ckpt", system_metrics=False, spark=spark)
-    run.log({"loss": 1.0})
-    run.flush()
-
-    ms1 = MetricStream(run._store, trigger_seconds=0.5)
-    got1 = []
-    ms1.bus.subscribe(lambda rows: got1.extend(rows))
-    ms1.start()
-    ms1.process_all_available()
-    ms1.stop()
-    assert {(r["key"], r["value"]) for r in got1} == {("loss", 1.0)}
-
-    run.log({"loss": 0.5})
-    run.flush()
-
-    ms2 = MetricStream(run._store, trigger_seconds=0.5)
-    got2 = []
-    ms2.bus.subscribe(lambda rows: got2.extend(rows))
-    ms2.start()
-    ms2.process_all_available()
-    ms2.stop()
-    run.finish()
-    # only the post-restart row — nothing replayed
-    assert [(r["key"], r["value"]) for r in got2] == [("loss", 0.5)]
 
 
 def test_stream_dedup_drops_repeats_within_watermark(spark, tmp_path):

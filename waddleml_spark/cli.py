@@ -40,6 +40,20 @@ def _format_duration(started, ended) -> str:
     return ""
 
 
+def _store_locked(store_root: str, e: Exception) -> int:
+    """One stderr line instead of a traceback when another process holds
+    the store's DuckDB file lock."""
+    print(f"cannot open store {store_root}: {e}", file=sys.stderr)
+    return 1
+
+
+def _positive_int(s: str) -> int:
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def cmd_ls(a: argparse.Namespace) -> int:
     store_root = _find_store(a.db)
     if not store_root:
@@ -47,14 +61,19 @@ def cmd_ls(a: argparse.Namespace) -> int:
         return 1
     # read the DuckDB mirror directly: ls must stay instant, no JVM spin-up;
     # reader_conn reuses an in-process writer's cursor (S4) or opens read_only
+    import duckdb
+
     from waddleml_spark.store import WaddleStore
 
-    conn = WaddleStore.reader_conn(store_root)
+    try:
+        conn = WaddleStore.reader_conn(store_root)
+    except duckdb.IOException as e:
+        return _store_locked(store_root, e)
     try:
         rows = conn.execute(
             "SELECT id, project, name, status, started_at, ended_at, commit_sha "
             "FROM runs ORDER BY started_at DESC LIMIT ?",
-            [a.limit or 20],
+            [a.limit],
         ).fetchall()
         if not rows:
             print("no runs found")
@@ -80,10 +99,15 @@ def cmd_serve(a: argparse.Namespace) -> int:
             file=sys.stderr,
         )
         return 1
+    import duckdb
+
     from waddleml_spark.server import make_http_server
     from waddleml_spark.store import WaddleStore
 
-    store = WaddleStore(store_root)
+    try:
+        store = WaddleStore(store_root)
+    except duckdb.IOException as e:
+        return _store_locked(store_root, e)
     print(f"[waddleml-spark] serving {store_root} at http://{a.host}:{a.port}")
     server = make_http_server(store, a.host, a.port, static_dir=a.static_dir)
     try:
@@ -180,7 +204,7 @@ def build() -> argparse.ArgumentParser:
     pi.set_defaults(func=cmd_init)
     pl = sub.add_parser("ls", help="List recent runs")
     pl.add_argument("--db", help="path to store root or waddle.duckdb")
-    pl.add_argument("-n", "--limit", type=int, default=20, help="max runs to show")
+    pl.add_argument("-n", "--limit", type=_positive_int, default=20, help="max runs to show")
     pl.set_defaults(func=cmd_ls)
     ps = sub.add_parser("serve", help="Serve the dashboard API")
     ps.add_argument("--db", help="path to store root or waddle.duckdb")

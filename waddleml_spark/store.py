@@ -17,9 +17,9 @@ Reference storage is one DuckDB file with row-at-a-time autocommit INSERTs
   DuckDB gets real ON CONFLICT/DELETE, so both layers converge to
   identical logical state;
 - deletes cascade in FK order, mirroring waddle/_dashboard_api.py:237-249:
-  one DuckDB transaction, then a Spark anti-filter rewrite per Parquet
-  table (at scale: partition drop by run_id).  Spark only runs for these
-  whole-table rewrites (and compaction), never for a row-level write.
+  one DuckDB transaction plus one tombstone part file; the Spark read
+  views anti-join the tombstones, and compact() does the physical purge.
+  Spark only runs for analytics reads and compaction, never for a write.
 
 Scale posture: metrics is the tall fact table — at 100 TB it is written
 partitioned by run_id bucket and sorted within partitions by (key, step) so
@@ -235,22 +235,25 @@ class WaddleStore:
     def update_run(self, run_id: str, **fields) -> None:
         """D5: UPDATE runs SET ... WHERE id (ref waddle/_run.py:198-201),
         as an upsert of the merged row — the Parquet version row and the
-        DuckDB row come from the same dict."""
+        DuckDB row come from the same dict.  A missing run (deleted while
+        it trained) is a no-op, like the reference's UPDATE of 0 rows: an
+        upsert would bring the run back."""
         with self._duck_lock:
             current = self._duck_row("runs", "id", run_id)
-            if current is None:
-                raise KeyError(f"run {run_id} not found")
-            self.upsert("runs", [{**current, **fields}])
+            if current is not None:
+                self.upsert("runs", [{**current, **fields}])
 
     def delete_run(self, run_id: str) -> None:
         """D6: cascading delete in FK order (ref _dashboard_api.py:237-249).
-        DuckDB: the five DELETEs in one transaction.  Parquet: anti-filter
-        rewrite per table (at scale this is a partition drop when tables
-        partition by run_id).
+        DuckDB: the five DELETEs in one transaction.  Parquet: one part
+        file of tombstones, one per (table, run_id), in the _cdc_deletes
+        log; no data file is read, rewritten or renamed, and no Spark runs.
 
-        A tombstone per (table, run_id) lands in the _cdc_deletes log
-        before the data files are rewritten, so the change feed (changes())
-        can report the delete even though the history is physically gone."""
+        df() anti-joins the tombstones, so every Spark view hides the run
+        at once; compact() purges its rows physically.  The hiding is by
+        run id, so rows a still-running Run flushes after the delete are
+        hidden too.  DuckDB keeps those late rows as orphans (its metrics
+        table has no FK, as in the reference)."""
         with self._duck_lock:
             self.duck.execute("BEGIN TRANSACTION")
             try:
@@ -266,25 +269,6 @@ class WaddleStore:
             self._CDC_SCHEMA,
             {"table": tables, "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
         )
-        for tbl, key in _CASCADE:
-            d = self._dir(tbl)
-            if os.path.exists(d):
-                df = self.spark.read.schema(self._spark_schema(tbl, tbl in _VERSIONED)).parquet(d)
-                self._rewrite(tbl, df.filter(F.col(key) != run_id))
-
-    def _rewrite(self, table: str, df: DataFrame) -> None:
-        """Replace a table's parquet dir with `df` (a Spark job: bulk
-        rewrites scan the whole table).  The new dir is written beside the
-        live one and swapped in by two renames, so the table is missing
-        for one rename, not for a whole rmtree."""
-        d = self._dir(table)
-        tmp, old = d + ".rewrite", d + ".old"
-        df.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(d, old)
-        os.rename(tmp, d)
-        shutil.rmtree(old)
-        reset_fan_out_memo()
 
     # --- change data capture ---------------------------------------------
 
@@ -304,17 +288,18 @@ class WaddleStore:
 
         Consumers poll with their last-seen `_seq` as the cursor; the feed
         is totally ordered by `_seq`.  Replay from an old cursor is exact
-        until compact()/delete_run rewrite history (compaction keeps only
-        the latest version per PK; a from-scratch consumer then sees it as
-        the insert — eventually-consistent, like Delta CDF across VACUUM).
+        until compact() rewrites history (compaction keeps only the latest
+        version per PK and drops deleted runs; a from-scratch consumer then
+        sees it as the insert — eventually-consistent, like Delta CDF
+        across VACUUM).  Until then a deleted run's history stays in the
+        feed, followed by its delete event.
         op classification: the FIRST version of a PK ever
         seen is 'insert', later versions 'update' — one window over the PK,
         the same shuffle the read view already pays.  For commits
         (first-writer-wins) duplicate inserts are no-ops and are omitted.
 
         Append-only tables (metrics, artifacts) need no CDC machinery:
-        the parquet append log IS the change feed — tail it with
-        changes_stream()/MetricStream.
+        the parquet append log IS the change feed.
         """
         if table not in _VERSIONED:
             raise ValueError(
@@ -358,20 +343,6 @@ class WaddleStore:
             feed = feed.unionByName(dels)
         return feed.orderBy("_seq")
 
-    def changes_stream(self, table: str) -> DataFrame:
-        """Streaming change feed: Structured Streaming tail of a table's
-        version log (each appended version row is one change event; op
-        classification needs history, so the stream emits the raw upsert
-        feed — downstream stateful consumers derive insert-vs-update if
-        they need it).  Works for versioned AND append-only tables."""
-        versioned = table in _VERSIONED
-        schema = self._spark_schema(table, versioned)
-        return (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 64)
-            .parquet(self._dir(table))
-        )
-
     def _duck_row(self, table: str, key_col: str, key_val) -> dict | None:
         with self._duck_lock:
             cur = self.duck.execute(
@@ -386,13 +357,27 @@ class WaddleStore:
 
     def df(self, table: str) -> DataFrame:
         """Current logical state as a DataFrame (dedupe view for versioned
-        tables — window last-writer-wins, one shuffle on the PK)."""
+        tables — window last-writer-wins, one shuffle on the PK).  Rows of
+        deleted runs are hidden by a left-anti join on the tombstones."""
         d = self._dir(table)
         versioned = table in _VERSIONED
         schema = self._spark_schema(table, versioned)
         if not os.path.exists(d):
             return self.spark.createDataFrame([], schema if not versioned else schemas.WADDLE_TABLES[table])
         df = self.spark.read.schema(schema).parquet(d)
+        td = self._dir("_cdc_deletes")
+        key = dict(_CASCADE).get(table)
+        if key and os.path.exists(td):
+            # no broadcast hint: tombstones grow one set per deleted run,
+            # not bounded by construction (the repo rule)
+            tombs = (
+                self.spark.read.schema(self._CDC_SCHEMA)
+                .parquet(td)
+                .filter(F.col("table") == table)
+                .select(F.col("run_id").alias("__deleted"))
+            )
+            # a condition join, not on=key: USING would move the key first
+            df = df.join(tombs, df[key] == tombs["__deleted"], "left_anti")
         if not versioned:
             return df
         keys = _VERSIONED[table]
@@ -407,11 +392,12 @@ class WaddleStore:
     def compact(self, table: str | None = None) -> None:
         """Fold the event log: rewrite each versioned table to its deduped
         state (keeps read-side windows O(current) instead of O(history));
-        coalesce small append files.  Run periodically / post-ingest.
+        coalesce small append files; purge the rows of deleted runs.  Run
+        periodically / post-ingest.
 
-        Caveat: a running MetricStream checkpoints against the file listing
-        of metrics/ — stop streams before compacting that table (rewritten
-        files would be re-delivered or missed by the file-source log)."""
+        Precondition: no live writer on the store.  Each table's new dir
+        is written beside the live one and swapped in by two renames, so
+        a part file a Run flushes in between is lost."""
         tables = [table] if table else list(_VERSIONED) + list(_APPEND_ONLY)
         for tbl in tables:
             if not os.path.exists(self._dir(tbl)):
@@ -429,7 +415,14 @@ class WaddleStore:
                 cur = cur.repartition(n, "run_id").sortWithinPartitions("run_id", "key", "step")
             else:
                 cur = cur.coalesce(n)
-            self._rewrite(tbl, cur)
+            d = self._dir(tbl)
+            tmp, old = d + ".rewrite", d + ".old"
+            cur.write.mode("overwrite").parquet(tmp)
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(d, old)
+            os.rename(tmp, d)
+            shutil.rmtree(old)
+            reset_fan_out_memo()
 
     def bucket_table(
         self,

@@ -5,14 +5,11 @@ thread boundary (waddle/_run.py:128-136 → waddle/_server.py:115-124); its
 client debounces redraws at 500 ms, so per-event delivery is explicitly
 not required — micro-batched delivery is semantics-preserving.
 
-Two delivery paths, same subscriber interface:
-
-- LiveBus: in-process fan-out fed directly by Run.flush() micro-batches
-  (zero-latency path the dashboard uses when it shares the process —
-  the analog of the reference's shared-connection cursor S4);
-- MetricStream: Structured Streaming over the metrics Parquet append log →
-  foreachBatch → the same subscribers.  This is the cross-process path:
-  any number of dashboard processes can tail the store independently.
+One delivery path: LiveBus, an in-process fan-out fed directly by
+Run.flush() micro-batches, with no JVM (the analog of the reference's
+shared-connection cursor S4).  A dashboard sees live rows when it shares
+the writer's process, which is also the only process that can open the
+store while the run holds DuckDB's file lock.
 
 Watermarked windowed aggregation (metric_window_agg) goes beyond the
 reference (which has no event-time windows at all — staleness T3 is a
@@ -24,7 +21,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from waddleml_spark import schemas
@@ -57,54 +54,6 @@ class LiveBus:
         if dead:
             with self._lock:
                 self._subs = [s for s in self._subs if s not in dead]
-
-
-class MetricStream:
-    """Structured Streaming tail of the metrics append log.
-
-    readStream(parquet) → foreachBatch → subscriber fan-out.  Exactly-once
-    per micro-batch within a run of the query; the UI's debounce makes
-    at-least-once across restarts acceptable (ref T1 analysis).
-    """
-
-    def __init__(self, store: WaddleStore, trigger_seconds: float = 1.0):
-        self.store = store
-        self.trigger = trigger_seconds
-        self.bus = LiveBus()
-        self._query = None
-
-    def start(self) -> None:
-        spark = self.store.spark
-        src = (
-            spark.readStream.schema(schemas.METRICS)
-            .option("maxFilesPerTrigger", 64)
-            .parquet(self.store._dir("metrics"))
-        )
-
-        def deliver(df: DataFrame, epoch_id: int) -> None:
-            rows = [r.asDict() for r in df.collect()]
-            if rows:
-                self.bus.publish(rows)
-
-        self._query = (
-            src.writeStream.foreachBatch(deliver)
-            .trigger(processingTime=f"{self.trigger} seconds")
-            .option(
-                "checkpointLocation",
-                self.store.root + "/_checkpoints/metric_stream",
-            )
-            .start()
-        )
-
-    def process_all_available(self) -> None:
-        """Synchronous drain — lets tests and batch jobs pump the stream."""
-        if self._query is not None:
-            self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
 
 
 def metric_window_agg(

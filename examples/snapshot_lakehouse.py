@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from waddleml_spark.llmops import dedup
 from waddleml_spark.session import get_spark, read_table
-from waddleml_spark.sources import pyds, snaptable, zorder
+from waddleml_spark.sources import snaptable, zorder
 from waddleml_spark.streaming import snapsink
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -68,12 +68,6 @@ def main() -> None:
     assert snaptable.read(spark, table, version=v1).count() == batch1.count()
     for h in snaptable.history(table):
         print(h)
-
-    # -- the same table through Spark's own surface (Python Data Source
-    # API): pushed filters skip files via manifest stats automatically
-    pyds.register(spark)
-    native = spark.read.format("snaptable").load(table)
-    print("format('snaptable'):", native.filter(F.col("n_chars") <= 120).count())
 
     # -- streaming near-dup ingest: each batch is exact- AND LSH-deduped
     # against the stored corpus before committing (foreachBatch shape;

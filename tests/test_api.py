@@ -6,10 +6,13 @@ are asserted to converge to identical logical state.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import subprocess
+import weakref
 
+import numpy as np
 import pytest
 
 import waddleml_spark as w
@@ -153,6 +156,47 @@ def test_step_semantics(spark, tmp_path, monkeypatch):
         ).fetchall()
     ]
     assert steps == [0, 10, 11]
+
+
+def test_bad_row_raises_at_log_and_loses_no_buffered_row(spark, tmp_path, monkeypatch):
+    # metrics.step is INTEGER: a row that cannot be stored must fail at the
+    # call that made it, not at the flush that also carries the valid rows
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="bad", system_metrics=False, spark=spark)
+    for i in range(10):
+        run.log({"loss": 1.0 / (i + 1)})
+    for bad in (2**31, -(2**31) - 1, "3", True, 1.5, float("nan")):
+        with pytest.raises(ValueError):
+            run.log({"loss": 0.0}, step=bad)
+        with pytest.raises(ValueError):
+            run.log_metric("loss", bad, 0.0)
+        with pytest.raises(ValueError):
+            run.log_system({"system/cpu": 0.0}, bad)
+    with pytest.raises(ValueError):
+        run.log({3: 0.0})
+    with pytest.raises(ValueError):
+        run.log_metric(("loss",), 0, 0.0)
+    run.log({"loss": 0.1}, step=np.int64(10))  # steps that worked still do
+    run.log({"loss": 0.05}, step=11.0)
+    run.finish()
+    steps = [r[0] for r in run._store.duck.execute(
+        "SELECT step FROM metrics WHERE run_id = ? ORDER BY step", [run.id]
+    ).fetchall()]
+    assert steps == list(range(12))
+    parquet = run._store.df("metrics").filter(f"run_id = '{run.id}'")
+    assert sorted(r.step for r in parquet.collect()) == steps
+    assert run._store._duck_row("runs", "id", run.id)["status"] == "completed"
+
+
+def test_finished_run_is_freed(spark, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="gc", system_metrics=False, spark=spark)
+    run.log({"x": 1.0})
+    w.finish()
+    ref = weakref.ref(run)
+    del run
+    gc.collect()
+    assert ref() is None
 
 
 def test_artifact_logging(spark, tmp_path, monkeypatch):

@@ -58,6 +58,33 @@ def test_parallel_threads_one_run(spark, tmp_path, monkeypatch):
         assert vals == [float(t * 100 + i) for i in range(20)]
 
 
+def test_threads_logging_without_steps_each_get_their_own(tmp_path, monkeypatch):
+    # the auto-step counter is shared: a lost update hands two rows one step
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="steps", system_metrics=False)
+
+    def worker():
+        for _ in range(500):
+            run.log({"loss": 1.0})
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    run.finish()
+    steps = [r[0] for r in run._store.duck.execute(
+        "SELECT step FROM metrics WHERE run_id = ? ORDER BY step", [run.id]
+    ).fetchall()]
+    assert steps == list(range(8 * 500))
+
+
 def test_two_stores_two_runs(spark, tmp_path):
     s1 = WaddleStore(str(tmp_path / "a"), spark=spark)
     s2 = WaddleStore(str(tmp_path / "b"), spark=spark)

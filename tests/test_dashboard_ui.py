@@ -21,7 +21,7 @@ pytestmark = pytest.mark.skipif(
     shutil.which("node") is None, reason="node not installed"
 )
 
-_HARNESS = r"""
+_PRELUDE = r"""
 const fs = require('fs');
 let src = fs.readFileSync(process.argv[2], 'utf8').replace("'use strict';", "");
 // top-level let/const don't survive eval(); rewrite to var for the harness
@@ -57,11 +57,18 @@ global.confirm = () => false;
 const realFetch = global.fetch;
 global.fetch = (url, opts) =>
   realFetch(url.startsWith('http') ? url : BASE + url, opts);
+// the page's globals live in main()'s eval scope: poll through a getter
+async function loaded(runs) {
+  for (let i = 0; i < 80 && runs().length === 0; i++)
+    await new Promise(r => setTimeout(r, 250));
+}
+function finish(out) { console.log(JSON.stringify(out)); process.exit(0); }
+"""
 
+_FLOWS = _PRELUDE + r"""
 async function main() {
   eval(src);
-  for (let i = 0; i < 80 && runs.length === 0; i++)
-    await new Promise(r => setTimeout(r, 250));
+  await loaded(() => runs);
   const out = {runs: runs.length};
   await loadSummaryKeys();
   $('sumKey').value = 'loss';
@@ -90,8 +97,21 @@ async function main() {
     100, 'loss<img src=x>');
   const rendered = hostile.children.map(c => c._inner).join('');
   out.title_escaped = !rendered.includes('<img') && rendered.includes('&lt;img');
-  console.log(JSON.stringify(out));
-  process.exit(0);
+  finish(out);
+}
+main().catch(e => { console.error('HARNESS FAIL', e); process.exit(1); });
+"""
+
+_NAN_RUN = _PRELUDE + r"""
+async function main() {
+  eval(src);
+  await loaded(() => runs);
+  await openDetail(runs[0]);
+  $('metKey').value = 'loss';
+  drawBigChart();
+  const d = ($('bigChart').children[0]?._inner.match(/path d="([^"]*)"/) || [])[1] || '';
+  finish({big_chart_points: (d.match(/[ML]/g) || []).length,
+          small_charts: $('smallCharts').children.length});
 }
 main().catch(e => { console.error('HARNESS FAIL', e); process.exit(1); });
 """
@@ -121,7 +141,7 @@ def ui_base(spark, tmp_path_factory):
     state.set_active_run(None)
 
 
-def test_spa_flows_under_node(ui_base, tmp_path):
+def _run_harness(harness_src: str, base: str, tmp_path) -> dict:
     page = (
         Path(__file__).resolve().parents[1]
         / "waddleml_spark" / "static" / "index.html"
@@ -131,13 +151,17 @@ def test_spa_flows_under_node(ui_base, tmp_path):
     js = tmp_path / "dash.js"
     js.write_text(m.group(1))
     harness = tmp_path / "harness.js"
-    harness.write_text(_HARNESS)
+    harness.write_text(harness_src)
     proc = subprocess.run(
-        ["node", str(harness), str(js), ui_base],
+        ["node", str(harness), str(js), base],
         capture_output=True, text=True, timeout=120,
     )
     assert proc.returncode == 0, proc.stderr
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_spa_flows_under_node(ui_base, tmp_path):
+    out = _run_harness(_FLOWS, ui_base, tmp_path)
     assert out == {
         "runs": 2,
         "summary_bars": 2,          # one bar per run
@@ -151,3 +175,24 @@ def test_spa_flows_under_node(ui_base, tmp_path):
         "live_append": True,
         "title_escaped": True,
     }
+
+
+def test_run_with_a_nan_point_still_charts_its_finite_points(tmp_path):
+    """A diverged metric is served as null; the run view must still draw
+    every key, the NaN key from its finite points."""
+    import waddleml_spark as w
+    from waddleml_spark import state
+    from waddleml_spark.server import serve_in_thread
+
+    state.set_active_run(None)
+    run = w.init(project="nan", store_path=str(tmp_path / ".waddle"), system_metrics=False)
+    for step, loss in enumerate([1.0, float("nan"), 0.5, 0.25]):
+        run.log({"loss": loss, "acc": 0.1 * step})
+    run.finish()
+    state.set_active_run(None)
+    server = serve_in_thread(run._store, port=0)
+    try:
+        out = _run_harness(_NAN_RUN, "http://%s:%d" % server.server_address, tmp_path)
+    finally:
+        server.shutdown()
+    assert out == {"big_chart_points": 3, "small_charts": 2}

@@ -11,11 +11,18 @@ file name in a live document or runner: the README, CLAUDE.md, DEPLOY.md,
 a file under ``tests/`` or ``perfbench/``, or the examples runner.
 History documents (SCALING.md, ROADMAP.md, CHANGES.md, ...) do not count:
 a script only they mention is one nothing runs.
+
+Every ``waddleml_spark`` import in a script outside the test suite
+(examples, tools, perfbench, ``bench.py``, ``__spark_entry__.py``) must
+resolve: the module exists, and each imported name is a top-level
+definition of it or a submodule.  Checked from the source, never run —
+those scripts otherwise run only outside pytest.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
 import re
 from collections import Counter
 from pathlib import Path
@@ -100,3 +107,63 @@ def test_every_script_is_named_by_a_live_document():
         if not any(named.search(t) for d, t in docs.items() if d != script):
             unnamed.append(str(script.relative_to(REPO)))
     assert unnamed == [], "scripts no live document names:\n" + "\n".join(unnamed)
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    names: set[str] = set()
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            stack += node.body + getattr(node, "orelse", []) + getattr(node, "finalbody", [])
+            stack += [s for h in getattr(node, "handlers", []) for s in h.body]
+    return names
+
+
+def test_every_script_import_of_the_package_resolves():
+    scripts = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    for d in ("examples", "tools", "perfbench"):
+        scripts += sorted((REPO / d).glob("*.py"))
+    defined: dict[str, set[str]] = {}
+
+    def names_of(module: str) -> set[str]:
+        if module not in defined:
+            origin = importlib.util.find_spec(module).origin
+            defined[module] = _top_level_names(ast.parse(Path(origin).read_text(encoding="utf-8")))
+        return defined[module]
+
+    def exists(module: str) -> bool:
+        try:
+            return importlib.util.find_spec(module) is not None
+        except ModuleNotFoundError:  # a missing parent package
+            return False
+
+    checked, broken = 0, []
+    for script in scripts:
+        where = script.relative_to(REPO)
+        for node in ast.walk(ast.parse(script.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                pairs = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level and node.module:
+                pairs = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in pairs:
+                if module.split(".")[0] != "waddleml_spark":
+                    continue
+                checked += 1
+                if not exists(module):
+                    broken.append(f"{where}: {module}")
+                elif name not in (None, "*") and name not in names_of(module) and not exists(
+                    f"{module}.{name}"
+                ):
+                    broken.append(f"{where}: {module}.{name}")
+    assert checked > 0
+    assert broken == [], "script imports that do not resolve:\n" + "\n".join(broken)

@@ -107,6 +107,45 @@ def test_bad_content_length_is_400(server, length):
         conn.close()
 
 
+def _strict(raw: bytes):
+    """json.loads that rejects the NaN/Infinity tokens, as JSON.parse does."""
+    def bad(token):
+        raise ValueError(f"non-JSON token {token}")
+    return json.loads(raw, parse_constant=bad)
+
+
+def test_non_finite_metrics_are_strict_json_null(tmp_path):
+    """A run that logged NaN and Inf is served as strict JSON on every
+    route: the bad points are null, the finite ones unchanged."""
+    state.set_active_run(None)
+    run = w.init(project="nf", name="r", store_path=str(tmp_path / ".waddle"),
+                 system_metrics=False)
+    for s, v in enumerate([1.0, float("nan"), float("inf"), 0.5]):
+        run.log({"loss": v}, step=s)
+    run.finish()
+    state.set_active_run(None)
+    srv = make_http_server(run._store, port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = "http://%s:%d" % srv.server_address
+    bodies = {}
+    try:
+        for path in ["/api/runs", f"/api/runs/{run.id}", f"/api/runs/{run.id}/metrics",
+                     f"/api/runs/{run.id}/metrics/downsampled?key=loss&points=2",
+                     "/api/metric-keys", "/api/metric-summary?key=loss"]:
+            with urllib.request.urlopen(base + path, timeout=30) as r:
+                bodies[path] = _strict(r.read())
+        req = urllib.request.Request(base + "/api/compare", method="POST",
+                                     data=json.dumps({"run_ids": [run.id]}).encode())
+        with urllib.request.urlopen(req, timeout=30) as r:
+            bodies["/api/compare"] = _strict(r.read())
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    series = bodies[f"/api/runs/{run.id}/metrics"]
+    assert [m["value"] for m in sorted(series, key=lambda m: m["step"])] == [1.0, None, None, 0.5]
+    assert [m["value"] for m in bodies["/api/compare"]["metrics"]["loss"]] == [1.0, None, None, 0.5]
+
+
 def test_serving_never_starts_spark(tmp_path):
     """A finished store opened the way `cli serve` opens it, every GET
     route and POST /api/compare answered 200, DELETE of a run answered 200

@@ -205,6 +205,21 @@ def test_stdlib_ws_pushes_reference_metric_frames(ws_server):
         client.close()
 
 
+def test_stdlib_ws_sends_non_finite_values_as_null(ws_server):
+    # browsers' JSON.parse rejects NaN/Infinity and the client drops the
+    # frame; a diverged metric must arrive as null
+    (host, port), bus = ws_server
+    client = _RawWsClient(host, port)
+    try:
+        row = {"run_id": "r1", "key": "loss", "step": 1, "ts": 1.0, "value": float("nan")}
+        bus.publish([row, {**row, "step": 2, "value": float("-inf")}, {**row, "value": 0.5}])
+        frames = [client.recv_text() for _ in range(3)]
+        values = [json.loads(f, parse_constant=pytest.fail)["value"] for f in frames]
+        assert values == [None, None, 0.5]
+    finally:
+        client.close()
+
+
 def test_stdlib_ws_ping_pong_and_dead_client_prune(ws_server):
     (host, port), bus = ws_server
     client = _RawWsClient(host, port)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import atexit
 import hashlib
 import json
+import numbers
 import os
 import sys
 import threading
@@ -39,6 +40,26 @@ from waddleml_spark.store import WaddleStore
 # reference UI debounces at 500 ms, the sampler ticks at 5 s — 2 s is within contract).
 FLUSH_ROWS = 5000
 FLUSH_SECONDS = 2.0
+
+
+def _step(step: Any) -> int:
+    """``step`` as an int that fits metrics.step (INTEGER).  A bad row
+    must fail at the call that made it: once buffered, it would fail the
+    whole flush and lose every row batched with it."""
+    if (
+        isinstance(step, bool)
+        or not isinstance(step, numbers.Real)
+        or not -(2**31) <= step < 2**31
+        or step != int(step)
+    ):
+        raise ValueError(f"step must be an integer in [-2**31, 2**31), got {step!r}")
+    return int(step)
+
+
+def _key(key: Any) -> str:
+    if not isinstance(key, str):
+        raise ValueError(f"metric key must be a str, got {key!r}")
+    return key
 
 
 class Run:
@@ -105,26 +126,23 @@ class Run:
     # --- logging ----------------------------------------------------------
 
     def log(self, metrics: dict[str, float], step: int | None = None) -> None:
-        if step is None:
-            step = self._step
-            self._step += 1
-        else:
-            self._step = step + 1
         ts = time.time()
-        rows = [
-            {"run_id": self.id, "key": k, "step": step, "ts": ts, "value": float(v)}
-            for k, v in metrics.items()
-        ]
-        self._buffer(rows)
+        items = [(_key(k), float(v)) for k, v in metrics.items()]
+        with self._buf_lock:  # threads sharing a run each claim their own step
+            step = _step(self._step if step is None else step)
+            self._step = step + 1
+        self._buffer(
+            [{"run_id": self.id, "key": k, "step": step, "ts": ts, "value": v} for k, v in items]
+        )
 
     def log_metric(self, key: str, step: int, value: float, ts: float | None = None) -> None:
         self._buffer(
             [
                 {
                     "run_id": self.id,
-                    "key": key,
-                    "step": step,
-                    "ts": ts if ts is not None else time.time(),
+                    "key": _key(key),
+                    "step": _step(step),
+                    "ts": float(ts) if ts is not None else time.time(),
                     "value": float(value),
                 }
             ]
@@ -132,10 +150,10 @@ class Run:
 
     def log_system(self, metrics: dict[str, float], step: int) -> None:
         """Sampler entry point: system/* keys, sampler-owned step counter."""
-        ts = time.time()
+        ts, step = time.time(), _step(step)
         self._buffer(
             [
-                {"run_id": self.id, "key": k, "step": step, "ts": ts, "value": float(v)}
+                {"run_id": self.id, "key": _key(k), "step": step, "ts": ts, "value": float(v)}
                 for k, v in metrics.items()
             ]
         )
@@ -250,6 +268,8 @@ class Run:
         if self._finished:
             return
         self._finished = True
+        # the atexit hook is the last reference a finished run leaves
+        atexit.unregister(self._atexit)
         if self._sysmon:
             self._sysmon.stop()
         self.flush()

@@ -24,6 +24,7 @@ client uses).
 from __future__ import annotations
 
 import json
+import math
 import queue
 import re
 import threading
@@ -134,6 +135,27 @@ def _metric_messages(rows: list[dict]) -> list[dict]:
         }
         for r in rows
     ]
+
+
+def _finite(v):
+    """``v`` with every non-finite float replaced by None."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    if isinstance(v, dict):
+        return {k: _finite(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_finite(x) for x in v]
+    return v
+
+
+def _dumps(payload) -> bytes:
+    """Strict JSON: browsers' ``JSON.parse`` rejects the NaN/Infinity
+    tokens, so a diverged metric goes out as null.  Finite payloads cost
+    one encode; only one that fails is rewritten and encoded again."""
+    try:
+        return json.dumps(payload, allow_nan=False).encode()
+    except ValueError:
+        return json.dumps(_finite(payload)).encode()
 
 
 # --- minimal RFC 6455 server-side framing (stdlib-only /ws) ----------------
@@ -299,7 +321,7 @@ def make_http_server(
             pass
 
         def _json(self, payload, status=200):
-            body = json.dumps(payload).encode()
+            body = _dumps(payload)
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
@@ -471,9 +493,7 @@ def make_http_server(
                         break
                     with wlock:
                         for msg in _metric_messages(rows):
-                            self.wfile.write(
-                                ws_encode_frame(json.dumps(msg).encode())
-                            )
+                            self.wfile.write(ws_encode_frame(_dumps(msg)))
                         self.wfile.flush()
             except (BrokenPipeError, ConnectionResetError, OSError):
                 pass

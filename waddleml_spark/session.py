@@ -49,9 +49,6 @@ def get_spark(
             str(shuffle_partitions if shuffle_partitions is not None else cpus),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python Data Source API: let Catalyst hand pushed predicates to
-        # format("snaptable") for manifest-level file skipping (pyds.py)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # expr-string plan builds (llmops.sql_str) double backslashes on
         # the assumption the SQL parser processes escapes inside quoted

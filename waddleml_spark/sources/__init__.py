@@ -4,5 +4,4 @@
     bucketed.py   bucketed-table layout for shuffle-free co-located joins
     zorder.py     Z-order (Morton-curve) multi-column layout
     snaptable.py  the one table format: versioned snapshot commits
-    pyds.py       snaptable as a native Spark format (Python Data Source API)
 """

@@ -3,8 +3,9 @@
 The package's one table format: ACID-ish versioned commits, time travel
 and manifest-level file pruning, built from nothing but parquet data
 files plus JSON manifests, the public design shared by Delta Lake's
-transaction log and Iceberg's manifests.  ``sources/pyds.py`` exposes it
-to Spark as ``format("snaptable")``.
+transaction log and Iceberg's manifests.  This module's ``read`` and
+``write`` are the one way in: reads hand the manifest's files to Spark's
+native parquet scan.
 
 Layout::
 
@@ -311,10 +312,19 @@ def write(
     if mode == "append" and parent > 0:
         # fail fast before staging data; _commit re-validates on publish
         _check_append_schema(df.schema, _load_manifest(table, parent))
-    commit_dir = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+    return _stage_and_commit(df, table, uuid.uuid4().hex, mode, parent)
+
+
+def _stage_and_commit(
+    df: DataFrame, table: str, dir_name: str, operation: str, parent: int
+) -> int:
+    """The one write sequence (``write`` and the streaming sink): stage
+    ``df`` as parquet under the fresh ``data/<dir_name>``, read the new
+    files' footer stats, then ``_commit`` them as version parent+1."""
+    commit_dir = os.path.join(_DATA_DIR, dir_name)
     df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
-    new_entries = _collect_entries(table, commit_dir)
-    return _commit(table, new_entries, df.schema, mode, parent)
+    entries = _collect_entries(table, commit_dir)
+    return _commit(table, entries, df.schema, operation, parent)
 
 
 def _prune(files: list[dict], col: str, lo: Any, hi: Any) -> list[dict]:

@@ -142,21 +142,13 @@ def snapshot_sink(table: str, stream_id: str = "default"):
             return
         if epoch_id <= _stream_state(table).get(stream_id, -1):
             return
-        parent = snaptable.current_version(table)
         # uuid suffix: a replay that slipped past the check (both records
         # lost) must land in a FRESH dir — overwriting the epoch-named
         # dir would delete part files the earlier manifest references
-        commit_dir = os.path.join(
-            snaptable._DATA_DIR,
-            f"epoch-{stream_id}-{epoch_id}-{uuid.uuid4().hex[:8]}",
-        )
-        df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
-        entries = snaptable._collect_entries(table, commit_dir)
-        # only the new files: _commit hydrates the tip's file list and
-        # validates the append schema atomically with the version claim
-        snaptable._commit(
-            table, entries, df.schema,
-            f"append-epoch-{stream_id}-{epoch_id}", parent,
+        snaptable._stage_and_commit(
+            df, table, f"epoch-{stream_id}-{epoch_id}-{uuid.uuid4().hex[:8]}",
+            f"append-epoch-{stream_id}-{epoch_id}",
+            snaptable.current_version(table),
         )
         _record_epoch(table, stream_id, epoch_id)
 

@@ -1,7 +1,8 @@
 """Per-route parity: MirrorDashboard (DuckDB mirror, serves HTTP) must
 answer every route exactly as SparkDashboard (Spark plans over the
 Parquet event log) does, on the test_dashboard.py store plus a run with
-a tied last step, a fresh running run and a running run with no metrics.
+a tied last step, a fresh running run (one of its series holds a NaN
+point) and a running run with no metrics.
 
 Lists are compared in order wherever the route sorts them — rows tied
 on the route's sort key may come back in either order, so the sort keys
@@ -38,6 +39,8 @@ def dashes(seeded, spark):  # noqa: F811
                   system_metrics=False, spark=spark)
     for s in range(4):
         live.log({"loss": 0.5 / (s + 1)})
+    for s, v in enumerate((0.25, float("nan"), 0.5, 0.75)):
+        live.log_metric("acc", s, v)  # the one NaN-bearing series
     live.log_system({"system/cpu_percent": 3.0}, 0)
     live.flush()  # running, ended_at NULL, fresh metrics
     idle = w.init(project="beta", name="idle", store_path=root,
@@ -126,6 +129,11 @@ def test_get_metrics_downsampled_parity(dashes):
                 got = mirror.get_metrics_downsampled(rid, key, points=points)
                 want = spark_dash.get_metrics_downsampled(rid, key, points=points)
                 assert got == want, (rid, key, points)
+    # the live run's NaN point hides nothing: its bucket's value, min and
+    # max cover the finite points, and n still counts every point
+    (bucket,) = mirror.get_metrics_downsampled(ids[5], "acc", points=1)
+    assert bucket == {"bucket": 0, "step": 1.5, "value": 0.5, "value_min": 0.25,
+                      "value_max": 0.75, "n": 4}
 
 
 def test_compare_runs_parity(dashes):

@@ -1,5 +1,5 @@
 """Serving-layer tests: stdlib HTTP adapter wire format + CLI ls/init, and
-the CLI's answers to a locked store and a bad `ls -n`."""
+the CLI's answers to a locked store and a bad `ls -n` or `query --limit`."""
 
 from __future__ import annotations
 
@@ -138,6 +138,20 @@ def test_cli_ls_limit_below_one_is_a_usage_error(n, tmp_path, capsys):
     assert "at least 1" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("n", ["0", "-1"])
+def test_cli_query_limit_below_one_is_a_usage_error(n, capsys, monkeypatch):
+    from waddleml_spark import cli, session
+
+    def no_spark(*a, **k):
+        raise AssertionError("a usage error must not start Spark")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as e:
+        cli.main(["query", "forecast_revenue_q6", "--limit", n])
+    assert e.value.code == 2
+    assert "at least 1" in capsys.readouterr().err
+
+
 def test_dashboard_index_served(served):
     base, run = served
     with urllib.request.urlopen(f"{base}/", timeout=30) as r:
@@ -192,6 +206,29 @@ def test_http_downsampled_metrics(served):
     assert 0 < len(rows) <= 5
     assert all(r["value_min"] <= r["value"] <= r["value_max"] for r in rows)
     assert [r["bucket"] for r in rows] == sorted(r["bucket"] for r in rows)
+
+
+def test_http_downsampled_nan_point_keeps_bucket_finite(spark, tmp_path):
+    state.set_active_run(None)
+    run = w.init(
+        project="web", name="nan", store_path=str(tmp_path / ".waddle"),
+        system_metrics=False, spark=spark,
+    )
+    for v in (0.25, float("nan"), 0.75):
+        run.log({"loss": v})
+    run.finish()
+    server = serve_in_thread(run._store, port=0)
+    try:
+        host, port = server.server_address
+        status, rows = _get(
+            f"http://{host}:{port}/api/runs/{run.id}/metrics/downsampled?key=loss&points=1"
+        )
+    finally:
+        server.shutdown()
+        state.set_active_run(None)
+    assert status == 200
+    assert rows == [{"bucket": 0, "step": 1.0, "value": 0.5, "value_min": 0.25,
+                     "value_max": 0.75, "n": 3}]
 
 
 def test_cli_query_prints_json_rows(capsys):

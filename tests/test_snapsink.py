@@ -117,38 +117,6 @@ def test_new_stream_id_is_not_conflated_with_old_epochs(spark, tmp_path):
     ]
 
 
-def test_stream_state_rebuilds_without_sidecar(spark, tmp_path):
-    import os
-
-    tbl = str(tmp_path / "t_rebuild")
-    df = spark.range(0, 5).select(F.col("id"), F.lit("y").alias("text"))
-    sink = snapsink.snapshot_sink(tbl, stream_id="s1")
-    sink(df, 0)
-    sink(df, 1)
-    os.unlink(snapsink._streams_path(tbl))  # lose the O(1) sidecar
-    sink(df, 1)  # still detected as replay via manifest rebuild
-    assert st.current_version(tbl) == 2
-    sink(df, 2)
-    assert st.current_version(tbl) == 3
-
-
-def test_legacy_flat_sidecar_still_blocks_replays(spark, tmp_path):
-    import json, os
-
-    tbl = str(tmp_path / "t_legacy")
-    df = spark.range(0, 5).select(F.col("id"), F.lit("z").alias("text"))
-    sink = snapsink.snapshot_sink(tbl)
-    sink(df, 0)
-    # simulate the pre-watermark sidecar shape {stream: epoch} claiming
-    # epochs beyond any surviving manifest
-    with open(snapsink._streams_path(tbl), "w") as f:
-        json.dump({"default": 7}, f)
-    sink(df, 7)  # must be treated as a replay
-    assert st.current_version(tbl) == 1
-    sink(df, 8)  # genuinely new epoch still lands
-    assert st.current_version(tbl) == 2
-
-
 def test_neardup_sink_drops_near_matches_against_snapshot(spark, tmp_path):
     tbl = str(tmp_path / "t_near")
     base_text = "the quick brown fox jumps over the lazy dog near the old river bank today"
@@ -204,26 +172,81 @@ def test_neardup_sink_id_not_first_column_and_in_batch_pairs(spark, tmp_path):
 
 
 def test_vacuum_preserves_epoch_record_after_lost_sidecar(spark, tmp_path):
-    """Double-failure replay guard: sidecar write lost (crash between
-    _commit and _record_epoch) AND the epoch's manifest later vacuumed.
-    vacuum must fold manifest epochs into the sidecar before dropping
-    them, or a restarted query re-delivers the epoch and duplicates rows."""
-    import os
-
+    """The manifests are the one epoch record — there is no sidecar left
+    to lose.  The kept tip carries every stream's high-water mark, so
+    expiring the manifest that committed an epoch never turns its
+    re-delivery into a duplicate."""
     tbl = str(tmp_path / "s_vac")
     sink = snapsink.snapshot_sink(tbl)
     sink(spark.range(0, 5), 0)
     sink(spark.range(5, 9), 1)
-    # simulate the crash: the sidecar write never landed
-    os.unlink(snapsink._streams_path(tbl))
     # out-of-band maintenance expires epoch 0's manifest
     st.vacuum(tbl, keep_versions=1, retain_minutes=0)
-    assert snapsink._stream_state(tbl) == {"default": 1}
+    assert st._versions(tbl) == [2]
+    assert st.delivered_epoch(tbl, "default") == 1
     # the restarted query re-delivers both epochs: both must skip
     sink(spark.range(0, 5), 0)
     sink(spark.range(5, 9), 1)
     assert st.read(spark, tbl).count() == 9
     assert st.current_version(tbl) == 2
+
+
+def test_dedup_sink_replay_reads_no_snapshot(spark, tmp_path, monkeypatch):
+    tbl = str(tmp_path / "d_replay")
+    sink = snapsink.dedup_snapshot_sink(tbl)
+    batch = spark.createDataFrame(
+        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
+    )
+    sink(batch, 0)
+    sink(spark.createDataFrame([(3, "gamma")], "doc_id long, text string"), 1)
+
+    def no_read(*a, **k):
+        raise AssertionError("a replayed epoch must not read the snapshot")
+
+    monkeypatch.setattr(st, "read", no_read)
+    sink(batch, 0)
+    sink(batch, 1)
+    monkeypatch.undo()
+    assert st.current_version(tbl) == 2
+    assert st.read(spark, tbl).count() == 3
+
+
+def test_two_streams_commit_concurrently(spark, tmp_path):
+    """Two sinks with different stream ids race on one table: every epoch
+    lands once, the tip holds both marks, and after a vacuum a full
+    re-delivery of both streams commits nothing."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    tbl = str(tmp_path / "s_two")
+    epochs = 3
+
+    def batch(sid, e):
+        base = (0 if sid == "a" else 1000) + 10 * e
+        return spark.range(base, base + 4).withColumn("src", F.lit(sid))
+
+    def run(sid):
+        sink = snapsink.snapshot_sink(tbl, stream_id=sid)
+        for e in range(epochs):
+            sink(batch(sid, e), e)
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        list(ex.map(run, ["a", "b"]))
+    assert st.current_version(tbl) == 2 * epochs
+    log = snapsink.epoch_log(tbl)
+    assert sorted((e["stream"], e["epoch"]) for e in log) == [
+        (sid, e) for sid in ("a", "b") for e in range(epochs)
+    ]
+    assert st._load_manifest(tbl, st.current_version(tbl))["streams"] == {
+        "a": epochs - 1, "b": epochs - 1
+    }
+    st.vacuum(tbl, keep_versions=1, retain_minutes=0)
+    for sid in ("a", "b"):
+        sink = snapsink.snapshot_sink(tbl, stream_id=sid)
+        for e in range(epochs):
+            sink(batch(sid, e), e)
+    assert st.current_version(tbl) == 2 * epochs
+    got = st.read(spark, tbl)
+    assert got.count() == got.distinct().count() == 2 * epochs * 4
 
 
 def test_vacuum_grace_window_spares_young_files(spark, tmp_path):

@@ -171,6 +171,41 @@ def test_concurrent_appenders_all_land(spark, tmp_path):
     assert final.select("tag").distinct().count() == 9
 
 
+def test_racing_stream_commits_keep_every_mark(tmp_path):
+    """Metadata-only stress: more threads than cores race _commit, each
+    under its own stream id, with a shortened switch interval.  Every
+    rebase must carry the other streams' marks forward, so the tip holds
+    each stream's last epoch and every file."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    tbl = str(tmp_path / "marks")
+    schema = StructType([StructField("id", LongType())])
+    workers, epochs = 16, 5
+
+    def stream(w):
+        for e in range(epochs):
+            entry = st.FileEntry(f"data/s{w}-{e}/part-0.parquet", 1, {})
+            st._commit(tbl, [entry], schema, f"append-epoch-s{w}-{e}",
+                       st.current_version(tbl), stream=(f"s{w}", e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=workers) as ex:
+            futures = [ex.submit(stream, w) for w in range(workers)]
+            for f in futures:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert st.current_version(tbl) == workers * epochs
+    tip = st._load_manifest(tbl, workers * epochs)
+    assert tip["streams"] == {f"s{w}": epochs - 1 for w in range(workers)}
+    assert len(tip["files"]) == workers * epochs
+
+
 def test_date_bounds_normalized_for_prune(spark, tmp_path):
     import datetime as dt
 

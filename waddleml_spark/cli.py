@@ -220,7 +220,7 @@ def build() -> argparse.ArgumentParser:
     pq = sub.add_parser("query", help="Run a catalog query, print JSON lines")
     pq.add_argument("query", help="query name (see `explain list`)")
     pq.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    pq.add_argument("--limit", type=int, default=100)
+    pq.add_argument("--limit", type=_positive_int, default=100)
     pq.set_defaults(func=cmd_query)
     return p
 

@@ -208,11 +208,14 @@ class SparkDashboard:
         """Bounded-size chart series: bucket-mean downsample of one
         (run, key) stream — the scalable replacement for get_metrics'
         row-cap truncation (extension route; the reference would return
-        the first `limit` rows and silently drop the tail)."""
+        the first `limit` rows and silently drop the tail).  NaN points
+        become NULL first, so a bucket's value/min/max cover its finite
+        points (avg and max over a NaN are NaN) while ``n`` counts all."""
         m = (
             self.store.df("metrics")
             .filter((F.col("run_id") == run_id) & (F.col("key") == key))
             .withColumn("__x", F.col("step").cast("double"))
+            .withColumn("value", F.nanvl("value", F.lit(None).cast("double")))
         )
         out = series_downsample(m, ["run_id"], "__x", "value", target_points=points)
         return [
@@ -398,13 +401,16 @@ class MirrorDashboard:
     def get_metrics_downsampled(
         self, run_id: str, key: str, points: int = 200
     ) -> list[dict[str, Any]]:
-        """series_downsample's buckets for one (run, key) stream, in SQL."""
+        """series_downsample's buckets for one (run, key) stream, in SQL,
+        NaN points NULLed first like SparkDashboard's."""
         with self.store.duck.cursor() as cur:
             return _dicts(
                 cur,
                 """
                 WITH m AS (
-                    SELECT CAST(step AS DOUBLE) AS x, value FROM metrics
+                    SELECT CAST(step AS DOUBLE) AS x,
+                           CASE WHEN isnan(value) THEN NULL ELSE value END AS value
+                    FROM metrics
                     WHERE run_id = ? AND key = ? AND step IS NOT NULL),
                 e AS (SELECT min(x) AS lo, max(x) AS hi FROM m),
                 b AS (

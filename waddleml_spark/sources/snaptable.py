@@ -18,7 +18,10 @@ Layout::
 
 A manifest is the COMPLETE state of one version: schema (Spark JSON),
 the list of live data files with per-file row counts and per-column
-min/max stats, the parent version, and the operation.  Readers never
+min/max stats, the parent version, the operation, and ``streams`` —
+the highest delivered epoch of every streaming sink that has committed
+to the table (streaming/snapsink.py), carried forward by every commit
+the way Delta's log carries its (appId, version) txn actions.  Readers never
 list the data directory — they read one manifest and load exactly the
 files it names, which is what makes old versions immutable (time
 travel) and lets the planner skip files whose [min, max] range can't
@@ -235,6 +238,7 @@ def _commit(
     schema: StructType,
     operation: str,
     parent: int,
+    stream: tuple[str, int] | None = None,
 ) -> int:
     """Atomically publish version parent+1; ``added`` is ONLY this
     commit's new files — the previous snapshot's files are hydrated from
@@ -245,16 +249,25 @@ def _commit(
     uses ``os.link`` (fails EEXIST) — an exists-check + rename window
     would let two winners silently clobber each other's manifest.
     Overwrite semantics: ``added`` IS the whole table; a lost race
-    raises (its remove-set assumption is stale)."""
+    raises (its remove-set assumption is stale).
+
+    ``streams`` is copied from the same tip for appends and overwrites
+    alike, and a sink commit adds its own ``stream`` = (stream_id,
+    epoch), so the epoch record lands in the same ``os.link`` claim as
+    the data and a lost race rebases it with the file list."""
     os.makedirs(os.path.join(table, _MANIFEST_DIR), exist_ok=True)
     overwrite = operation == "overwrite"
     version = parent + 1
     while True:
         tip = version - 1
+        prev = _load_manifest(table, tip) if tip >= 1 else {}
+        streams = dict(prev.get("streams", {}))
+        if stream is not None:
+            sid, epoch = stream
+            streams[sid] = max(streams.get(sid, -1), epoch)
         if overwrite or tip < 1:
             files = list(added)
         else:
-            prev = _load_manifest(table, tip)
             _check_append_schema(schema, prev)
             prior = _prior_entries(prev)
             seen = {p.path for p in prior}
@@ -268,6 +281,7 @@ def _commit(
             "files": [
                 {"path": e.path, "rows": e.rows, "stats": e.stats} for e in files
             ],
+            "streams": streams,
         }
         tmp = os.path.join(table, _MANIFEST_DIR, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
@@ -316,15 +330,30 @@ def write(
 
 
 def _stage_and_commit(
-    df: DataFrame, table: str, dir_name: str, operation: str, parent: int
+    df: DataFrame,
+    table: str,
+    dir_name: str,
+    operation: str,
+    parent: int,
+    stream: tuple[str, int] | None = None,
 ) -> int:
     """The one write sequence (``write`` and the streaming sink): stage
     ``df`` as parquet under the fresh ``data/<dir_name>``, read the new
-    files' footer stats, then ``_commit`` them as version parent+1."""
+    files' footer stats, then ``_commit`` them as version parent+1
+    (a sink passes its (stream_id, epoch) through as ``stream``)."""
     commit_dir = os.path.join(_DATA_DIR, dir_name)
     df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
     entries = _collect_entries(table, commit_dir)
-    return _commit(table, entries, df.schema, operation, parent)
+    return _commit(table, entries, df.schema, operation, parent, stream)
+
+
+def delivered_epoch(table: str, stream_id: str) -> int:
+    """Highest epoch of ``stream_id`` committed to the table, or -1:
+    the tip manifest holds every stream's mark, so this is one read."""
+    v = current_version(table)
+    if v < 1:
+        return -1
+    return _load_manifest(table, v).get("streams", {}).get(stream_id, -1)
 
 
 def _prune(files: list[dict], col: str, lo: Any, hi: Any) -> list[dict]:
@@ -430,12 +459,9 @@ def vacuum(
     younger than the window are skipped; pass 0 only when no writer can
     be active.
 
-    Streaming-sink epochs survive manifest expiry: before a manifest is
-    dropped, its ``append-epoch-*`` operation is folded into the
-    streams.json sidecar (streaming/snapsink.py) — otherwise a crash
-    that lost the sidecar write plus a vacuum of that epoch's manifest
-    would erase both records and a restarted query would re-deliver the
-    epoch, duplicating rows.
+    Streaming-sink epochs survive manifest expiry: every manifest carries
+    the ``streams`` high-water marks of all earlier ones, so the kept
+    tip alone still makes every delivered epoch a replay.
     """
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
@@ -449,18 +475,12 @@ def vacuum(
     cutoff = time.time() - retain_minutes * 60.0
     deleted: list[str] = []
     data_root = os.path.join(table, _DATA_DIR)
-    # ORDER matters (round-6 review find): fold + unlink the expired
-    # manifests BEFORE deleting data files — a crash mid-vacuum then
-    # leaves harmless garbage files, never an on-disk manifest whose
-    # version reads would hand Spark already-deleted paths
-    if drop:
-        # the manifests being dropped are the durable record of delivered
-        # stream epochs; persist them to the sidecar FIRST
-        from waddleml_spark.streaming.snapsink import persist_stream_state
-
-        persist_stream_state(table)
-        for v in drop:
-            os.unlink(_manifest_path(table, v))
+    # ORDER matters (round-6 review find): unlink the expired manifests
+    # BEFORE deleting data files — a crash mid-vacuum then leaves
+    # harmless garbage files, never an on-disk manifest whose version
+    # reads would hand Spark already-deleted paths
+    for v in drop:
+        os.unlink(_manifest_path(table, v))
     # capture EVERY dir mtime BEFORE any deletion: unlinking a child file
     # bumps the parent's mtime, and rmdir'ing an emptied SUBDIRECTORY
     # bumps the grandparent too (topdown=False reaches parents after

@@ -17,27 +17,24 @@ epochs 0..N would collide with the old stream's and be dropped as
 replays.  Delta's transactional sink keys idempotence by (appId,
 version) the same way.
 
-The per-stream high-water mark lives in ``_snaptable/streams.json``
-(atomic tmp+rename; one writer per stream by Structured Streaming's
-serial-epoch guarantee), so the replay check is O(1) per trigger —
-rebuilt once from manifest operation strings when absent.  Per trigger
-the sink costs one Spark parquet write (data plane) plus one
-footer-stat pass and two JSON renames (metadata plane) — no compaction
-stalls; run snaptable.vacuum out of band.
+Each commit records (stream_id, epoch) in the manifest's ``streams``
+field (snaptable._commit carries every stream's high-water mark forward
+in each later manifest, overwrites included), so the replay check is one
+read of the tip manifest per trigger — ``snaptable.delivered_epoch`` —
+and holds after any vacuum.  Per trigger the sink costs one Spark
+parquet write (data plane) plus one footer-stat pass and one manifest
+publish (metadata plane) — no compaction stalls; run snaptable.vacuum
+out of band.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from waddleml_spark.sources import snaptable
-
-_STREAMS = "streams.json"
 
 
 def _parse_epoch_op(op: str) -> tuple[str, int] | None:
@@ -50,82 +47,33 @@ def _parse_epoch_op(op: str) -> tuple[str, int] | None:
     return (head or "default", int(tail))
 
 
-def _streams_path(table: str) -> str:
-    return os.path.join(table, snaptable._MANIFEST_DIR, _STREAMS)
-
-
-def _stream_state_scan(table: str) -> tuple[dict[str, int], int]:
-    """(per-stream max delivered epoch, highest manifest version the
-    scan actually covered).
-
-    The MANIFESTS are the atomic record (the sidecar write is a separate
-    step that can be lost to a crash or to a concurrent stream's
-    read-modify-write), so the sidecar is only a scan watermark: take
-    its per-stream values, then merge every manifest NEWER than its
-    ``at_version``.  A stale/lost sidecar costs one longer scan, never a
-    wrong answer.  A pre-watermark sidecar (the legacy flat
-    {stream: epoch} shape) is parsed as streams with at_version=0 —
-    discarding it would forget epochs whose manifests were vacuumed."""
-    p = _streams_path(table)
-    state: dict[str, int] = {}
-    at_version = 0
-    if os.path.exists(p):
-        with open(p) as f:
-            raw = json.load(f)
-        if "streams" in raw:
-            at_version = int(raw.get("at_version", 0))
-            state = {k: int(v) for k, v in raw["streams"].items()}
-        else:  # legacy flat shape
-            state = {k: int(v) for k, v in raw.items()}
-    covered = at_version
-    for v in snaptable._versions(table):
-        covered = max(covered, v)
-        if v <= at_version:
-            continue
-        parsed = _parse_epoch_op(snaptable._load_manifest(table, v)["operation"])
-        if parsed:
-            sid, epoch = parsed
-            state[sid] = max(state.get(sid, -1), epoch)
-    return state, covered
-
-
-def _stream_state(table: str) -> dict[str, int]:
-    return _stream_state_scan(table)[0]
-
-
-def _write_sidecar(table: str, state: dict[str, int], covered: int) -> None:
-    tmp = os.path.join(
-        table, snaptable._MANIFEST_DIR, f".tmp-streams-{uuid.uuid4().hex}"
-    )
-    with open(tmp, "w") as f:
-        json.dump({"at_version": covered, "streams": state}, f)
-    os.replace(tmp, _streams_path(table))
-
-
-def _record_epoch(table: str, stream_id: str, epoch_id: int) -> None:
-    # merge against a FRESH read so a concurrent stream's watermark is
-    # never regressed, and stamp at_version with the max version the
-    # merge scan actually COVERED — a fresh current_version() here could
-    # exceed the scan (a concurrent stream's manifest landed in between)
-    # and permanently hide that stream's epochs behind the watermark.
-    # Correctness doesn't depend on this write landing at all.
-    state, covered = _stream_state_scan(table)
-    state[stream_id] = max(state.get(stream_id, -1), epoch_id)
-    _write_sidecar(table, state, covered)
-
-
-def persist_stream_state(table: str) -> None:
-    """Fold every manifest's epoch record into the sidecar NOW.
-
-    snaptable.vacuum calls this before expiring manifests: the manifests
-    are the durable epoch record and the sidecar only a scan watermark,
-    so dropping a manifest whose epoch never reached the sidecar (crash
-    between _commit and _record_epoch) would erase the only evidence the
-    epoch was delivered — a restarted query would replay it."""
-    state, covered = _stream_state_scan(table)
-    if not state:
+def _commit_epoch(df: DataFrame, table: str, stream_id: str, epoch_id: int) -> None:
+    """Commit one non-replayed micro-batch as the next version, tagged
+    (stream_id, epoch) in its operation and its manifest's ``streams``;
+    an empty batch commits nothing."""
+    if df.isEmpty():
         return
-    _write_sidecar(table, state, covered)
+    # uuid suffix: every commit lands in a FRESH dir — overwriting an
+    # epoch-named dir would delete part files an earlier manifest
+    # references
+    snaptable._stage_and_commit(
+        df, table, f"epoch-{stream_id}-{epoch_id}-{uuid.uuid4().hex[:8]}",
+        f"append-epoch-{stream_id}-{epoch_id}",
+        snaptable.current_version(table),
+        stream=(stream_id, epoch_id),
+    )
+
+
+def _drop_known(batch: DataFrame, snap: DataFrame, text_col: str) -> DataFrame:
+    """Exact dedup against the snapshot: anti-join ``batch`` on content
+    fingerprints (16-byte hashes; the stored corpus never ships text)."""
+    from waddleml_spark.llmops.textstats import fingerprint
+
+    return batch.join(
+        snap.select(fingerprint(F.col(text_col)).alias("__fp")).distinct(),
+        fingerprint(F.col(text_col)) == F.col("__fp"),
+        "left_anti",
+    )
 
 
 def snapshot_sink(table: str, stream_id: str = "default"):
@@ -138,19 +86,8 @@ def snapshot_sink(table: str, stream_id: str = "default"):
     and under the old id the new batches would look like replays."""
 
     def sink(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
-            return
-        if epoch_id <= _stream_state(table).get(stream_id, -1):
-            return
-        # uuid suffix: a replay that slipped past the check (both records
-        # lost) must land in a FRESH dir — overwriting the epoch-named
-        # dir would delete part files the earlier manifest references
-        snaptable._stage_and_commit(
-            df, table, f"epoch-{stream_id}-{epoch_id}-{uuid.uuid4().hex[:8]}",
-            f"append-epoch-{stream_id}-{epoch_id}",
-            snaptable.current_version(table),
-        )
-        _record_epoch(table, stream_id, epoch_id)
+        if epoch_id > snaptable.delivered_epoch(table, stream_id):
+            _commit_epoch(df, table, stream_id, epoch_id)
 
     return sink
 
@@ -163,12 +100,13 @@ def dedup_snapshot_sink(
 ):
     """foreachBatch function: the streaming half of the corpus-ingestion
     loop (examples/snapshot_lakehouse.py) — every micro-batch is exact-
-    deduped against the CURRENT snapshot's content fingerprints (anti-
-    join on 16-byte hashes; the stored corpus never rescans its text),
-    then within itself, and only the surviving representatives commit as
-    the next snapshot version.  Restart-idempotent like snapshot_sink
-    (same-stream re-delivered epochs skip); a batch whose docs are all
-    already known commits nothing.
+    deduped within itself (lowest id per content fingerprint), then
+    against the CURRENT snapshot's fingerprints (anti-join on 16-byte
+    hashes; the stored corpus never rescans its text), and only the
+    surviving representatives commit as the next snapshot version.
+    Restart-idempotent like snapshot_sink (a same-stream re-delivered
+    epoch skips before any compute); a batch whose docs are all already
+    known commits nothing.
 
     At scale the fingerprint index should be a stored column: the read
     here projects (id, text) -> fingerprints per batch, which Spark
@@ -176,33 +114,23 @@ def dedup_snapshot_sink(
     """
     from waddleml_spark.llmops import dedup
 
-    base = snapshot_sink(table, stream_id=stream_id)
-
     def sink(df: DataFrame, epoch_id: int) -> None:
+        if epoch_id <= snaptable.delivered_epoch(table, stream_id):
+            return  # replay: skip before ANY compute
         if df.isEmpty():
             return
-        fresh = df
+        fresh = dedup.exact_dedup_keep(df, text_col=text_col, id_col=id_col)
         if snaptable.current_version(table) > 0:
             # spark here is the micro-batch's session — never a global
-            spark = df.sparkSession
-            index = snaptable.read(spark, table)
-            keep = dedup.incremental_dedup(
-                df, index, text_col=text_col, id_col=id_col
+            fresh = _drop_known(
+                fresh, snaptable.read(df.sparkSession, table), text_col
             )
-            fresh = df.join(
-                keep.select(F.col("keeper_id").alias(id_col)), id_col, "semi"
-            )
-        else:
-            fresh = dedup.exact_dedup_keep(df, text_col=text_col, id_col=id_col)
-        # the semi-join moves id_col first; the snapshot append-schema
-        # check is column-order-sensitive by design.  localCheckpoint
-        # cuts lineage at BATCH grain (bounded, unlike a corpus-scale
-        # checkpoint): base() runs isEmpty() and then the write, and
-        # without the cut each action re-executes the whole plan —
-        # including the snapshot-wide fingerprint scan — twice per
-        # micro-batch (round-6 review find; the neardup sink already
-        # checkpoints for the same reason)
-        base(fresh.select(*df.columns).localCheckpoint(), epoch_id)
+        # localCheckpoint cuts lineage at BATCH grain (bounded, unlike a
+        # corpus-scale checkpoint): the commit runs isEmpty() and then
+        # the write, and without the cut each action re-executes the
+        # whole plan — including the snapshot-wide fingerprint scan —
+        # twice per micro-batch
+        _commit_epoch(fresh.localCheckpoint(), table, stream_id, epoch_id)
 
     return sink
 
@@ -273,9 +201,6 @@ def neardup_snapshot_sink(
     At large snapshots, persist the signature column in the table
     instead of recomputing per batch."""
     from waddleml_spark.llmops import dedup
-    from waddleml_spark.llmops.textstats import fingerprint
-
-    base = snapshot_sink(table, stream_id=stream_id)
 
     def _drop_verified(frame, cand):
         """Anti-join frame by the id_a side of Jaccard-verified pairs."""
@@ -290,7 +215,7 @@ def neardup_snapshot_sink(
         return frame.join(drops, id_col, "anti")
 
     def sink(df, epoch_id: int) -> None:
-        if epoch_id <= _stream_state(table).get(stream_id, -1):
+        if epoch_id <= snaptable.delivered_epoch(table, stream_id):
             return  # replay: skip before ANY compute
         if df.isEmpty():
             return
@@ -309,12 +234,7 @@ def neardup_snapshot_sink(
         if snaptable.current_version(table) > 0:
             spark = df.sparkSession
             snap = snaptable.read(spark, table)
-            # exact vs snapshot: one fingerprint anti-join
-            batch = batch.join(
-                snap.select(fingerprint(F.col(text_col)).alias("__fp")).distinct(),
-                fingerprint(F.col(text_col)) == F.col("__fp"),
-                "left_anti",
-            ).localCheckpoint()
+            batch = _drop_known(batch, snap, text_col).localCheckpoint()
             b_keys = dedup.band_rows(
                 dedup.simhash32_jvm(batch, text_col, id_col),
                 band_bits,
@@ -364,6 +284,6 @@ def neardup_snapshot_sink(
             batch = batch.join(drops, id_col, "anti")
         # joins reorder columns (USING keys move first); the snapshot's
         # append-schema check is order-sensitive by design
-        base(batch.select(*cols), epoch_id)
+        _commit_epoch(batch.select(*cols), table, stream_id, epoch_id)
 
     return sink

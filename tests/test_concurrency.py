@@ -85,6 +85,34 @@ def test_threads_logging_without_steps_each_get_their_own(tmp_path, monkeypatch)
     assert steps == list(range(8 * 500))
 
 
+def test_timed_and_full_flushes_reach_the_bus_in_log_order(tmp_path, monkeypatch):
+    # the time trigger (a thread of its own) and the row threshold (the
+    # logging thread) race to flush one run: every row reaches the store
+    # once, and the live bus sees the batches in log order
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.run import Run
+
+    monkeypatch.setattr(run_mod, "FLUSH_SECONDS", 0.001)
+    monkeypatch.setattr(run_mod, "FLUSH_ROWS", 7)
+    store = WaddleStore(str(tmp_path / "order"))
+    run = Run(store=store, run_id="o" * 32, project="order", system_metrics=False)
+    seen = []
+    store.bus.subscribe(lambda rows: seen.extend(r["step"] for r in rows))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for i in range(2000):
+            run.log({"m": float(i)})
+    finally:
+        sys.setswitchinterval(old)
+    run.finish()
+    assert seen == list(range(2000))
+    assert store.duck.execute(
+        "SELECT count(*) FROM metrics WHERE run_id = ?", [run.id]
+    ).fetchone()[0] == 2000
+    store.close()
+
+
 def test_two_stores_two_runs(spark, tmp_path):
     s1 = WaddleStore(str(tmp_path / "a"), spark=spark)
     s2 = WaddleStore(str(tmp_path / "b"), spark=spark)

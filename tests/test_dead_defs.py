@@ -1,4 +1,4 @@
-"""Dead-code guards, pure ``ast`` and text scans; no Spark.
+"""Dead-code and layering guards, pure ``ast`` and text scans; no Spark.
 
 Every module-level ``def``/``class`` in the package must be named
 somewhere in the repo's Python files besides its own definition line —
@@ -17,6 +17,10 @@ Every ``waddleml_spark`` import in a script outside the test suite
 resolve: the module exists, and each imported name is a top-level
 definition of it or a submodule.  Checked from the source, never run —
 those scripts otherwise run only outside pytest.
+
+``store.py`` is the one writer of a store's DuckDB file: no other package
+module may take its write lock (``_duck_lock``) or call ``.duck.execute``
+/ ``.duck.register`` on the store's shared connection.
 """
 
 from __future__ import annotations
@@ -167,3 +171,25 @@ def test_every_script_import_of_the_package_resolves():
                     broken.append(f"{where}: {module}.{name}")
     assert checked > 0
     assert broken == [], "script imports that do not resolve:\n" + "\n".join(broken)
+
+
+def test_store_is_the_one_duckdb_writer():
+    # a store's DuckDB file has one writer, store.py: no other package
+    # module takes its write lock or executes on / registers with the
+    # store's shared connection (readers take a cursor of their own)
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "store.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            lock = isinstance(node, ast.Attribute) and node.attr == "_duck_lock"
+            call = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("execute", "register")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "duck"
+            )
+            if lock or call:
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert offenders == [], "DuckDB writes outside store.py:\n" + "\n".join(offenders)

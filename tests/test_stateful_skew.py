@@ -105,34 +105,6 @@ def test_salted_broadcast_left_matches_plain(spark):
     assert got == want
 
 
-def test_rollup_sink_materializes_to_duckdb(spark, tmp_path, monkeypatch):
-    from waddleml_spark.streaming.stateful import start_rollup_sink
-
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="rollup", system_metrics=False, spark=spark)
-    for i in range(5):
-        run.log({"loss": float(5 - i)})
-    run.flush()
-    q = start_rollup_sink(run._store)
-    q.processAllAvailable()
-    row = run._store.duck.execute(
-        "SELECT n, min_v, max_v, last_value FROM metric_rollup "
-        "WHERE run_id = ? AND key = 'loss'", [run.id],
-    ).fetchone()
-    assert row == (5, 1.0, 5.0, 1.0)
-    # more data → same PK upserts, not duplicates
-    run.log({"loss": 0.25})
-    run.flush()
-    q.processAllAvailable()
-    rows = run._store.duck.execute(
-        "SELECT n, last_value FROM metric_rollup WHERE run_id = ? AND key='loss'",
-        [run.id],
-    ).fetchall()
-    assert rows == [(6, 0.25)]
-    q.stop()
-    run.finish()
-
-
 def test_sliced_running_sum_matches_naive_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F

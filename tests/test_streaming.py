@@ -38,13 +38,36 @@ def test_live_bus_publish_and_prune():
 def test_run_publishes_to_live_bus(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     run = w.init(project="live", system_metrics=False, spark=spark)
-    bus = LiveBus()
     seen = []
-    bus.subscribe(lambda rows: seen.extend(rows))
-    run._live_bus = bus
+    run._store.bus.subscribe(lambda rows: seen.extend(rows))
     run.log({"loss": 0.5})
     run.finish()
     assert [ (r["key"], r["value"]) for r in seen ] == [("loss", 0.5)]
+
+
+def test_idle_run_flushes_within_flush_seconds(spark, tmp_path, monkeypatch):
+    # one log() and then silence: the batch's own time trigger carries it
+    # to the store, with no further call on the run
+    import time
+
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.store import WaddleStore
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(run_mod, "FLUSH_SECONDS", 0.2)
+    run = w.init(project="idle", system_metrics=False, spark=spark)
+    run.log({"loss": 0.5})
+    con = WaddleStore.reader_conn(run._store.root)
+    deadline = time.monotonic() + 10
+    n = 0
+    while n == 0 and time.monotonic() < deadline:
+        time.sleep(0.05)
+        n = con.execute(
+            "SELECT count(*) FROM metrics WHERE run_id = ?", [run.id]
+        ).fetchone()[0]
+    assert n == 1
+    run.finish()
+    assert run._timer is None
 
 
 def test_metric_window_agg(spark, tmp_path, monkeypatch):

@@ -25,12 +25,11 @@ import pytest
 
 from waddleml_spark import state
 from waddleml_spark.server import (
+    WsReader,
     serve_in_thread,
     ws_accept_key,
     ws_encode_frame,
-    ws_read_frame,
 )
-from waddleml_spark.streaming.live import LiveBus
 
 _GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -66,7 +65,7 @@ def test_frame_roundtrip_all_lengths():
 
     for n in (0, 1, 125, 126, 70000):
         payload = os.urandom(n)
-        op, got = ws_read_frame(io.BytesIO(_mask_frame(payload)))
+        op, got = WsReader(io.BytesIO(_mask_frame(payload))).read_message()
         assert (op, got) == (0x1, payload)
 
 
@@ -74,7 +73,7 @@ def test_read_frame_unmasks_client_payload():
     import io
 
     payload = b'{"hello":1}'
-    op, got = ws_read_frame(io.BytesIO(_mask_frame(payload)))
+    op, got = WsReader(io.BytesIO(_mask_frame(payload))).read_message()
     assert (op, got) == (0x1, payload)
 
 
@@ -83,7 +82,7 @@ def test_read_frame_rejects_unmasked_client_frame():
     import io
 
     raw = ws_encode_frame(b"nope")  # server-style frame = unmasked
-    assert ws_read_frame(io.BytesIO(raw)) is None
+    assert WsReader(io.BytesIO(raw)).read_message() is None
 
 
 def test_read_frame_reassembles_fragmented_message():
@@ -95,7 +94,7 @@ def test_read_frame_reassembles_fragmented_message():
         + _mask_frame(b"lo ", opcode=0x0, fin=False)
         + _mask_frame(b"ws", opcode=0x0, fin=True)
     )
-    assert ws_read_frame(io.BytesIO(raw)) == (0x1, b"hello ws")
+    assert WsReader(io.BytesIO(raw)).read_message() == (0x1, b"hello ws")
 
 
 def test_interleaved_control_frame_preserves_fragment_state():
@@ -103,8 +102,6 @@ def test_interleaved_control_frame_preserves_fragment_state():
     # fragmented data message is STILL reassembled by the next read —
     # fragment state lives on the WsReader, not the call
     import io
-
-    from waddleml_spark.server import WsReader
 
     raw = (
         _mask_frame(b"fra", opcode=0x1, fin=False)
@@ -181,9 +178,8 @@ def ws_server(spark, tmp_path):
         system_metrics=False, spark=spark,
     )
     run.finish()
-    bus = LiveBus()
-    server = serve_in_thread(run._store, port=0, bus=bus)
-    yield server.server_address, bus
+    server = serve_in_thread(run._store, port=0)
+    yield server.server_address, run._store.bus
     server.shutdown()
     state.set_active_run(None)
 
@@ -256,8 +252,6 @@ def test_oversize_frame_and_fragment_flood_fail_connection():
     # the oversize allocation, not after
     import io
 
-    from waddleml_spark.server import WsReader
-
     # declared length over the cap, no payload actually sent: must fail
     # on the declaration alone (never try to read/allocate 2^40 bytes)
     hdr = bytes([0x81, 0x80 | 127]) + (1 << 40).to_bytes(8, "big") + b"\0" * 4
@@ -300,7 +294,70 @@ def test_truncated_frame_is_protocol_failure_not_partial_message():
     import io
 
     full = _mask_frame(b"x" * 100)
-    assert ws_read_frame(io.BytesIO(full[: len(full) - 70])) is None
+    assert WsReader(io.BytesIO(full[: len(full) - 70])).read_message() is None
     big = _mask_frame(b"y" * 300)  # 126-style 2-byte extended length
-    assert ws_read_frame(io.BytesIO(big[:3])) is None  # EOF inside length
-    assert ws_read_frame(io.BytesIO(big[:4])) is None  # EOF inside mask
+    assert WsReader(io.BytesIO(big[:3])).read_message() is None  # EOF inside length
+    assert WsReader(io.BytesIO(big[:4])).read_message() is None  # EOF inside mask
+
+
+def test_every_run_of_a_store_is_live_on_ws(spark, tmp_path):
+    # two runs on one store in one process: the first serves the
+    # dashboard and finishes, the second logs.  /ws carries every frame
+    # of both, in log order per run, and each frame's row is already
+    # returned by GET /api/runs/{id}/metrics when the frame arrives
+    import threading
+    import urllib.request
+
+    import waddleml_spark as w
+
+    root = str(tmp_path / ".waddle")
+    state.set_active_run(None)
+    r1 = w.init(project="sweep", name="r1", store_path=root,
+                system_metrics=False, spark=spark)
+    server = r1.serve_dashboard(port=0)
+    host, port = server.server_address
+    client = _RawWsClient(host, port)
+    frames, unreadable, errors = [], [], []
+    n_frames = 2 * (5 + 4)  # two keys; r1 logs 5 steps, r2 logs 4
+
+    def watch():
+        try:
+            for _ in range(n_frames):
+                msg = json.loads(client.recv_text())
+                url = f"http://{host}:{port}/api/runs/{msg['run_id']}/metrics"
+                with urllib.request.urlopen(url, timeout=30) as r:
+                    rows = json.loads(r.read())
+                if not any((m["key"], m["step"]) == (msg["key"], msg["step"]) for m in rows):
+                    unreadable.append(msg)
+                frames.append(msg)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    watcher = threading.Thread(target=watch)
+    watcher.start()
+    try:
+        for step in range(5):
+            r1.log({"loss": 1.0 / (step + 1), "acc": step / 10})
+            if step == 2:
+                r1.flush()
+        r1.finish()
+        state.set_active_run(None)
+        r2 = w.init(project="sweep", name="r2", store_path=root,
+                    system_metrics=False, spark=spark)
+        for step in range(4):
+            r2.log({"loss": 2.0 / (step + 1), "acc": step / 20})
+            if step == 1:
+                r2.flush()
+        r2.finish()
+        watcher.join(timeout=60)
+    finally:
+        client.close()
+        server.shutdown()
+        server.server_close()
+        state.set_active_run(None)
+    assert errors == []
+    assert unreadable == []
+    for run, steps in ((r1, 5), (r2, 4)):
+        got = [(m["key"], m["step"]) for m in frames if m["run_id"] == run.id]
+        assert sorted(got) == sorted((k, s) for s in range(steps) for k in ("loss", "acc"))
+        assert [s for _, s in got] == sorted(s for _, s in got)  # log order

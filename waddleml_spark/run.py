@@ -14,8 +14,12 @@
 
 Engine difference (deliberate, SURVEY.md §3.1): metrics buffer into
 micro-batches — the reference's row-at-a-time autocommit INSERT is its own
-perf ceiling; batching is the idiomatic Spark translation.  `flush()` is
-the visibility barrier (finish() always flushes).
+perf ceiling; batching is the idiomatic Spark translation.  A batch is
+flushed when it reaches FLUSH_ROWS rows or FLUSH_SECONDS after its first
+row, whichever comes first, with no further call needed; `flush()` is the
+visibility barrier (finish() always flushes).  The store publishes every
+flushed batch on its live bus (streaming.live), so a run needs no bus of
+its own.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ import sys
 import threading
 import time
 import uuid
+import weakref
 from typing import Any
 
 from waddleml_spark import state
@@ -40,6 +45,14 @@ from waddleml_spark.store import WaddleStore
 # reference UI debounces at 500 ms, the sampler ticks at 5 s — 2 s is within contract).
 FLUSH_ROWS = 5000
 FLUSH_SECONDS = 2.0
+
+
+def _flush_later(ref: weakref.ref) -> None:
+    """Time trigger body.  It holds the run weakly: a trigger still
+    winding down must not keep a finished run alive."""
+    run = ref()
+    if run is not None:
+        run.flush()
 
 
 def _step(step: Any) -> int:
@@ -74,7 +87,6 @@ class Run:
         repo_id: str | None = None,
         commit_sha: str | None = None,
         system_metrics: bool = True,
-        live_bus=None,
     ):
         self._store = store
         self.id = run_id
@@ -86,8 +98,8 @@ class Run:
         self._sysmon: Any = None
         self._buf: list[dict] = []
         self._buf_lock = threading.Lock()
-        self._buf_first_ts: float | None = None
-        self._live_bus = live_bus  # streaming broadcast hook (T1)
+        self._flush_lock = threading.Lock()  # batches reach the store in log order
+        self._timer: threading.Timer | None = None  # the buffered batch's time trigger
 
         env = {
             "python": sys.version,
@@ -160,25 +172,30 @@ class Run:
 
     def _buffer(self, rows: list[dict]) -> None:
         with self._buf_lock:
-            if self._buf_first_ts is None:
-                self._buf_first_ts = time.time()
             self._buf.extend(rows)
-            should_flush = (
-                len(self._buf) >= FLUSH_ROWS
-                or time.time() - self._buf_first_ts >= FLUSH_SECONDS
-            )
-        if should_flush:
+            full = len(self._buf) >= FLUSH_ROWS
+            if not full and self._timer is None:
+                self._timer = threading.Timer(
+                    FLUSH_SECONDS, _flush_later, [weakref.ref(self)]
+                )
+                self._timer.daemon = True
+                self._timer.start()
+        if full:
             self.flush()
 
     def flush(self) -> None:
-        """Visibility barrier: drain the metric buffer into the store."""
-        with self._buf_lock:
-            batch, self._buf = self._buf, []
-            self._buf_first_ts = None
-        if batch:
-            self._store.append("metrics", batch)
-            if self._live_bus is not None:
-                self._live_bus.publish(batch)
+        """Visibility barrier: drain the metric buffer into the store and
+        cancel the drained batch's time trigger.  One run's flushes run one
+        at a time, so its batches reach the store (and its live bus) in
+        the order they were logged."""
+        with self._flush_lock:
+            with self._buf_lock:
+                batch, self._buf = self._buf, []
+                timer, self._timer = self._timer, None
+            if timer is not None:
+                timer.cancel()
+            if batch:
+                self._store.append("metrics", batch)
 
     def log_param(self, key: str, value: Any) -> None:
         self._store.upsert(
@@ -236,13 +253,12 @@ class Run:
     def serve_dashboard(self, host: str = "127.0.0.1", port: int = 8000):
         """Start the dashboard HTTP server on a background thread, sharing
         this process's store (ref: waddle/_run.py:86-109 — same shared-
-        connection model) and wiring live metric delivery to /ws."""
+        connection model).  Its /ws streams the store's live bus: every
+        run logging on this store in the process is live, also after
+        this one finishes."""
         from waddleml_spark.server import serve_in_thread
-        from waddleml_spark.streaming.live import LiveBus
 
-        if self._live_bus is None:
-            self._live_bus = LiveBus()
-        server = serve_in_thread(self._store, host=host, port=port, bus=self._live_bus)
+        server = serve_in_thread(self._store, host=host, port=port)
         host_out, port_out = server.server_address
         print(f"Dashboard at http://{host_out}:{port_out}")
         return server
@@ -272,7 +288,7 @@ class Run:
         atexit.unregister(self._atexit)
         if self._sysmon:
             self._sysmon.stop()
-        self.flush()
+        self.flush()  # also cancels the pending time trigger
         self._store.update_run(self.id, status=status, ended_at=time.time())
 
     def __enter__(self) -> "Run":

@@ -1,24 +1,22 @@
 """HTTP serving layer with the reference's exact wire format
 (ref: waddle/_server.py:99-110 route table and response shapes).
 
-Framework-free core: `Routes` maps (method, path) → JSON-ready payloads by
-delegating to a dashboard backend — so any HTTP adapter can host it.
-`make_http_server` always backs it with MirrorDashboard, which answers
-every route from the store's DuckDB mirror: serving starts no JVM and
-runs no Spark job (SparkDashboard, the same routes as Spark plans, stays
-the analytics API).  Malformed input (a non-integer or negative
-limit/offset, a `points` outside [1, 2**31), a non-JSON compare body, a
-`run_ids` that is not a list of strings) gets `400 {"error": ...}`.  The
-bundled (and only) adapter is the stdlib ThreadingHTTPServer: an earlier
-import-gated Starlette twin was removed because no test could run it —
-wrapping `Routes` in any ASGI framework remains a straightforward
-exercise for deployments that want one.
+`make_http_server` is a stdlib ThreadingHTTPServer whose handler looks
+each request up in one (method, path regex) → handler table and answers
+it from a MirrorDashboard, which serves every route from the store's
+DuckDB mirror: serving starts no JVM and runs no Spark job
+(SparkDashboard, the same routes as Spark plans, stays the analytics
+API).  Malformed input (a non-integer or negative limit/offset, a
+`points` outside [1, 2**31), a non-JSON compare body, a `run_ids` that
+is not a list of strings) gets `400 {"error": ...}`; an unknown route
+gets 404.
 
 Live updates: the reference pushes per-insert WebSocket messages
-{"type":"metric",...} (ref :115-124).  The stdlib adapter speaks that
-exact wire protocol at GET /ws via a vendored minimal RFC 6455 server
-(handshake + text frames + close/ping — the whole surface the reference
-client uses).
+{"type":"metric",...} (ref :115-124).  GET /ws speaks that exact wire
+protocol via a vendored minimal RFC 6455 server (handshake + text frames
++ close/ping — the whole surface the reference client uses) and streams
+the store's live bus (`WaddleStore.bus`), which every run logging on the
+store's root in this process feeds.
 """
 
 from __future__ import annotations
@@ -28,12 +26,13 @@ import math
 import queue
 import re
 import threading
+from functools import partialmethod
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from pathlib import Path
 from urllib.parse import parse_qs, urlparse
 
-from waddleml_spark.operators.dashboard import MirrorDashboard, SparkDashboard
+from waddleml_spark.operators.dashboard import MirrorDashboard
 from waddleml_spark.store import WaddleStore
-from waddleml_spark.streaming.live import LiveBus
 
 
 #: largest request body or WebSocket message accepted.  Dashboard
@@ -59,67 +58,6 @@ def _count(q: dict, name: str, default: int, lo: int = 0, bits: int = 63) -> int
     if not lo <= n < 1 << bits:
         raise BadRequest(f"{name} must be in [{lo}, 2**{bits}), got {n}")
     return n
-
-
-class Routes:
-    """Framework-agnostic route layer, one method per reference route,
-    delegating to a MirrorDashboard or SparkDashboard (same methods and
-    wire shapes).  Raises BadRequest on malformed input."""
-
-    def __init__(self, dash: MirrorDashboard | SparkDashboard, bus: LiveBus | None = None):
-        self.dash = dash
-        self.bus = bus or LiveBus()
-
-    # GET /api/runs
-    def list_runs(self, q: dict) -> list:
-        return self.dash.list_runs(
-            project=q.get("project"),
-            status=q.get("status"),
-            sort=q.get("sort", "started_at"),
-            order=q.get("order", "desc"),
-            limit=_count(q, "limit", 200),
-            offset=_count(q, "offset", 0),
-        )
-
-    # GET /api/runs/{run_id}  (404 when missing, ref :45-50)
-    def get_run(self, run_id: str) -> tuple[int, dict]:
-        data = self.dash.get_run(run_id)
-        return (404, {"error": "not found"}) if not data else (200, data)
-
-    # GET /api/runs/{run_id}/metrics
-    def get_metrics(self, run_id: str, q: dict) -> list:
-        return self.dash.get_metrics(
-            run_id, key=q.get("key"), limit=_count(q, "limit", 5000)
-        )
-
-    # GET /api/runs/{run_id}/metrics/downsampled  (extension route)
-    def get_metrics_downsampled(self, run_id: str, q: dict) -> list:
-        # at least one bucket; bucket numbers are CAST to INTEGER
-        points = _count(q, "points", 200, lo=1, bits=31)
-        return self.dash.get_metrics_downsampled(run_id, q.get("key", ""), points=points)
-
-    # POST /api/compare
-    def compare(self, body: dict) -> dict:
-        if not isinstance(body, dict):
-            raise BadRequest("body must be a JSON object")
-        run_ids = body.get("run_ids", [])
-        # a bare string would reach the IN-list one character at a time
-        if not isinstance(run_ids, list) or not all(isinstance(i, str) for i in run_ids):
-            raise BadRequest("run_ids must be a list of strings")
-        return self.dash.compare_runs(run_ids)
-
-    # DELETE /api/runs/{run_id}
-    def delete_run(self, run_id: str) -> tuple[int, dict]:
-        ok = self.dash.delete_run(run_id)
-        return (200, {"ok": True}) if ok else (500, {"error": "delete failed"})
-
-    # GET /api/metric-keys
-    def metric_keys(self) -> list:
-        return self.dash.metric_keys_global()
-
-    # GET /api/metric-summary
-    def metric_summary(self, q: dict) -> list:
-        return self.dash.metric_summary(q.get("key", ""), limit=_count(q, "limit", 20))
 
 
 def _metric_messages(rows: list[dict]) -> list[dict]:
@@ -298,117 +236,113 @@ class WsReader:
                 return msg
 
 
-def ws_read_frame(rfile, require_mask: bool = True) -> tuple[int, bytes] | None:
-    """One-shot ``WsReader`` read — for single-message uses.  Connection
-    loops must hold a ``WsReader`` so fragment state survives interleaved
-    control frames."""
-    return WsReader(rfile, require_mask).read_message()
-
-
 def make_http_server(
     store: WaddleStore,
     host: str = "127.0.0.1",
     port: int = 8000,
-    bus: LiveBus | None = None,
     static_dir: str | None = None,
 ) -> ThreadingHTTPServer:
-    """stdlib adapter: same routes, JSON responses, plus WebSocket /ws.
-    static_dir overrides the bundled assets (ref cli.py:146 parity)."""
-    routes = Routes(MirrorDashboard(store), bus=bus)
+    """The reference's routes as JSON, the static assets, and WebSocket
+    /ws.  static_dir overrides the bundled assets (ref cli.py:146 parity)."""
+    dash = MirrorDashboard(store)
+    static = Path(static_dir or Path(__file__).parent / "static").resolve()
+
+    def static_file(h, name: str) -> None:
+        # ref route parity (waddle/_server.py:108); resolve() + prefix
+        # check blocks traversal
+        target = (static / name).resolve()
+        if (static in target.parents or target == static) and target.is_file():
+            html = target.suffix == ".html"
+            ctype = "text/html; charset=utf-8" if html else "application/octet-stream"
+            return h._send(target.read_bytes(), ctype)
+        h._json({"error": "not found"}, 404)
+
+    def list_runs(h, q):
+        h._json(dash.list_runs(
+            project=q.get("project"),
+            status=q.get("status"),
+            sort=q.get("sort", "started_at"),
+            order=q.get("order", "desc"),
+            limit=_count(q, "limit", 200),
+            offset=_count(q, "offset", 0),
+        ))
+
+    def get_run(h, q, run_id):
+        data = dash.get_run(run_id)
+        if not data:  # ref :45-50
+            return h._json({"error": "not found"}, 404)
+        h._json(data)
+
+    def downsampled(h, q, run_id):
+        # at least one bucket; bucket numbers are CAST to INTEGER
+        points = _count(q, "points", 200, lo=1, bits=31)
+        h._json(dash.get_metrics_downsampled(run_id, q.get("key", ""), points=points))
+
+    def compare(h, q):
+        body = h._json_body()
+        if not isinstance(body, dict):
+            raise BadRequest("body must be a JSON object")
+        run_ids = body.get("run_ids", [])
+        # a bare string would reach the IN-list one character at a time
+        if not isinstance(run_ids, list) or not all(isinstance(i, str) for i in run_ids):
+            raise BadRequest("run_ids must be a list of strings")
+        h._json(dash.compare_runs(run_ids))
+
+    def delete_run(h, q, run_id):
+        if not dash.delete_run(run_id):
+            return h._json({"error": "delete failed"}, 500)
+        h._json({"ok": True})
+
+    routes = [
+        (method, re.compile(path), fn)
+        for method, path, fn in (
+            ("GET", r"/", lambda h, q: static_file(h, "index.html")),
+            ("GET", r"/static/(.*)", lambda h, q, name: static_file(h, name)),
+            ("GET", r"/api/runs", list_runs),
+            ("GET", r"/api/runs/([^/]+)", get_run),
+            ("GET", r"/api/runs/([^/]+)/metrics", lambda h, q, run_id: h._json(
+                dash.get_metrics(run_id, key=q.get("key"), limit=_count(q, "limit", 5000))
+            )),
+            ("GET", r"/api/runs/([^/]+)/metrics/downsampled", downsampled),
+            ("GET", r"/api/metric-keys", lambda h, q: h._json(dash.metric_keys_global())),
+            ("GET", r"/api/metric-summary", lambda h, q: h._json(
+                dash.metric_summary(q.get("key", ""), limit=_count(q, "limit", 20))
+            )),
+            ("GET", r"/ws", lambda h, q: h._ws()),
+            ("POST", r"/api/compare", compare),
+            ("DELETE", r"/api/runs/([^/]+)", delete_run),
+        )
+    ]
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
             pass
 
-        def _json(self, payload, status=200):
-            body = _dumps(payload)
+        def _send(self, body: bytes, ctype: str, status: int = 200) -> None:
             self.send_response(status)
-            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
 
-        def _html(self, body: bytes, status=200):
-            self.send_response(status)
-            self.send_header("Content-Type", "text/html; charset=utf-8")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+        def _json(self, payload, status: int = 200) -> None:
+            self._send(_dumps(payload), "application/json", status)
 
-        def do_GET(self):
-            try:
-                self._get()
-            except BadRequest as e:
-                self._json({"error": str(e)}, 400)
-
-        def do_POST(self):
-            try:
-                self._post()
-            except BadRequest as e:
-                self._json({"error": str(e)}, 400)
-
-        def _get(self):
+        def _route(self, method: str) -> None:
             u = urlparse(self.path)
             q = {k: v[0] for k, v in parse_qs(u.query).items()}
-            if u.path == "/":
-                import pathlib
-
-                base = (
-                    pathlib.Path(static_dir)
-                    if static_dir
-                    else pathlib.Path(__file__).parent / "static"
-                )
-                return self._html((base / "index.html").read_bytes())
-            if u.path.startswith("/static/"):
-                # ref route parity (waddle/_server.py:108): serve bundled
-                # static assets; resolve() + prefix check blocks traversal
-                import pathlib
-
-                static = (
-                    pathlib.Path(static_dir)
-                    if static_dir
-                    else pathlib.Path(__file__).parent / "static"
-                ).resolve()
-                target = (static / u.path[len("/static/"):]).resolve()
-                if static in target.parents or target == static:
-                    if target.is_file():
-                        ctype = (
-                            "text/html; charset=utf-8"
-                            if target.suffix == ".html"
-                            else "application/octet-stream"
-                        )
-                        body = target.read_bytes()
-                        self.send_response(200)
-                        self.send_header("Content-Type", ctype)
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        return self.wfile.write(body)
-                return self._json({"error": "not found"}, 404)
-            if u.path == "/api/runs":
-                return self._json(routes.list_runs(q))
-            m = re.fullmatch(r"/api/runs/([^/]+)/metrics/downsampled", u.path)
-            if m:
-                return self._json(routes.get_metrics_downsampled(m.group(1), q))
-            m = re.fullmatch(r"/api/runs/([^/]+)/metrics", u.path)
-            if m:
-                return self._json(routes.get_metrics(m.group(1), q))
-            m = re.fullmatch(r"/api/runs/([^/]+)", u.path)
-            if m:
-                status, data = routes.get_run(m.group(1))
-                return self._json(data, status)
-            if u.path == "/api/metric-keys":
-                return self._json(routes.metric_keys())
-            if u.path == "/api/metric-summary":
-                return self._json(routes.metric_summary(q))
-            if u.path == "/ws":
-                return self._ws()
+            for m, path, fn in routes:
+                match = m == method and path.fullmatch(u.path)
+                if match:
+                    try:
+                        return fn(self, q, *match.groups())
+                    except BadRequest as e:
+                        return self._json({"error": str(e)}, 400)
             self._json({"error": "not found"}, 404)
 
-        def _post(self):
-            u = urlparse(self.path)
-            if u.path == "/api/compare":
-                return self._json(routes.compare(self._json_body()))
-            self._json({"error": "not found"}, 404)
+        do_GET = partialmethod(_route, "GET")
+        do_POST = partialmethod(_route, "POST")
+        do_DELETE = partialmethod(_route, "DELETE")
 
         def _json_body(self):
             try:
@@ -421,18 +355,11 @@ def make_http_server(
             except ValueError as e:  # incl. JSONDecodeError, UnicodeDecodeError
                 raise BadRequest(f"malformed request body: {e}") from None
 
-        def do_DELETE(self):
-            m = re.fullmatch(r"/api/runs/([^/]+)", urlparse(self.path).path)
-            if m:
-                status, data = routes.delete_run(m.group(1))
-                return self._json(data, status)
-            self._json({"error": "not found"}, 404)
-
         def _ws(self):
             """True RFC 6455 WebSocket: the reference's wire protocol
             (waddle/_server.py:115-124), one text frame per metric insert.
             A reader thread services client close/ping frames while the
-            handler thread drains the LiveBus queue."""
+            handler thread drains the store's live bus queue."""
             key = self.headers.get("Sec-WebSocket-Key")
             if (
                 key is None
@@ -445,7 +372,7 @@ def make_http_server(
             # handshake writes too — a client that vanishes mid-101 must
             # not leave a zombie subscriber buffering rows forever.
             sub = _QueueSub()
-            routes.bus.subscribe(sub)
+            store.bus.subscribe(sub)
             _CLOSED = object()
             # pongs (reader thread) and metric frames (this thread) share
             # wfile; an unlocked interleaved sendall could split one frame
@@ -504,8 +431,8 @@ def make_http_server(
     return server
 
 
-def serve_in_thread(store: WaddleStore, host="127.0.0.1", port=8000, bus=None):
-    server = make_http_server(store, host, port, bus=bus)
+def serve_in_thread(store: WaddleStore, host="127.0.0.1", port=8000):
+    server = make_http_server(store, host, port)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from waddleml_spark import schemas
 from waddleml_spark.session import get_spark, reset_fan_out_memo
+from waddleml_spark.streaming.live import LiveBus
 
 # tables whose reads are last-writer-wins per PK (the event-log tables)
 _VERSIONED: dict[str, list[str]] = {
@@ -95,6 +96,10 @@ class WaddleStore:
     # the writer's connection as a cursor instead of fighting the file lock
     # (ref S4 shared-connection cursor, waddle/_dashboard_api.py:16-19)
     _registry: dict[str, "WaddleStore"] = {}
+    # one live metric feed per root: every store opened on it publishes
+    # here and every /ws client of the process reads it, whichever run
+    # serves the dashboard (ref T1: each insert reaches every client)
+    _buses: dict[str, LiveBus] = {}
 
     def __init__(self, root: str, spark: SparkSession | None = None):
         self.root = os.path.abspath(root)
@@ -108,6 +113,7 @@ class WaddleStore:
             for stmt in schemas.DUCKDB_DDL.split(";"):
                 if stmt.strip():
                     self.duck.execute(stmt)
+            self.bus = WaddleStore._buses.setdefault(self.root, LiveBus())
         WaddleStore._registry[self.root] = self
 
     @classmethod
@@ -208,8 +214,13 @@ class WaddleStore:
             self.duck.unregister("_batch")
 
     def append(self, table: str, rows: list[dict]) -> None:
-        """Plain append (D1/D2: metrics, artifacts, new runs/commits...)."""
+        """Plain append (D1/D2: metrics, artifacts, new runs/commits...).
+        Metric rows then go out on the root's live bus: the part file and
+        the DuckDB insert already hold them (the ordering streaming.live
+        documents)."""
         self._write_batch(table, rows, None)
+        if table == "metrics" and rows:
+            self.bus.publish(rows)
 
     def upsert(self, table: str, rows: list[dict]) -> None:
         """Upsert by the table's PK (D3: params/tags ON CONFLICT DO UPDATE,

@@ -5,11 +5,19 @@ thread boundary (waddle/_run.py:128-136 → waddle/_server.py:115-124); its
 client debounces redraws at 500 ms, so per-event delivery is explicitly
 not required — micro-batched delivery is semantics-preserving.
 
-One delivery path: LiveBus, an in-process fan-out fed directly by
-Run.flush() micro-batches, with no JVM (the analog of the reference's
-shared-connection cursor S4).  A dashboard sees live rows when it shares
-the writer's process, which is also the only process that can open the
-store while the run holds DuckDB's file lock.
+One delivery path: LiveBus, an in-process fan-out with no JVM (the analog
+of the reference's shared-connection cursor S4).  There is exactly one
+bus per store root in a process (`WaddleStore.bus`), shared by every
+store opened on that root, so every run's flushes reach every /ws client
+of the process, whichever run started the dashboard.  A dashboard sees
+live rows when it shares the writer's process, which is also the only
+process that can open the store while the run holds DuckDB's file lock.
+
+Ordering invariant: `WaddleStore.append("metrics", rows)` publishes
+`rows` only after both the Parquet part file and the DuckDB insert hold
+them, so a row a /ws client receives is already readable over HTTP (the
+server answers from the same DuckDB database).  Batches of one run are
+published in log order (`Run.flush` serialises its flushes).
 
 Watermarked windowed aggregation (metric_window_agg) goes beyond the
 reference (which has no event-time windows at all — staleness T3 is a
@@ -20,19 +28,23 @@ from __future__ import annotations
 
 import threading
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from waddleml_spark import schemas
-from waddleml_spark.store import WaddleStore
+
+if TYPE_CHECKING:  # store imports this module for LiveBus
+    from waddleml_spark.store import WaddleStore
 
 Subscriber = Callable[[list[dict]], None]
 
 
 class LiveBus:
-    """In-process metric fan-out: Run.flush() publishes each micro-batch;
-    dead subscribers are pruned on send failure (ref T5 prune behavior)."""
+    """In-process metric fan-out: the store publishes each appended
+    metric batch; dead subscribers are pruned on send failure (ref T5
+    prune behavior)."""
 
     def __init__(self):
         self._subs: list[Subscriber] = []

@@ -5,8 +5,8 @@ path for live leaderboards/summaries that must not rescan history).
 
 State per group: (count, sum, min, max, last_step, last_value).  Each
 micro-batch updates state in O(batch) and emits one refreshed summary row
-per touched group — downstream sinks (dashboard, DuckDB rollup table) get
-an always-current metric summary without re-aggregating the append log.
+per touched group — a downstream sink gets an always-current metric
+summary without re-aggregating the append log.
 """
 
 from __future__ import annotations
@@ -92,54 +92,10 @@ def _update(
     )
 
 
-ROLLUP_DDL = """
-CREATE TABLE IF NOT EXISTS metric_rollup (
-    run_id VARCHAR NOT NULL, key VARCHAR NOT NULL, n BIGINT,
-    sum_v DOUBLE, min_v DOUBLE, max_v DOUBLE,
-    last_step INTEGER, last_value DOUBLE,
-    PRIMARY KEY (run_id, key));
-"""
-
-
-def start_rollup_sink(store: WaddleStore, trigger_seconds: float = 2.0):
-    """Materialize the stateful summaries into a DuckDB `metric_rollup`
-    table (upsert per micro-batch): the dashboard's live leaderboard reads
-    a tiny always-current table instead of aggregating the append log.
-    Returns the StreamingQuery (caller stops it)."""
-    with store._duck_lock:
-        store.duck.execute(ROLLUP_DDL)
-
-    def sink(df: DataFrame, epoch_id: int) -> None:
-        pdf = df.toPandas()
-        if pdf.empty:
-            return
-        with store._duck_lock:
-            store.duck.register("_rollup_batch", pdf)
-            store.duck.execute(
-                "INSERT INTO metric_rollup SELECT * FROM _rollup_batch "
-                "ON CONFLICT (run_id, key) DO UPDATE SET n=EXCLUDED.n, "
-                "sum_v=EXCLUDED.sum_v, min_v=EXCLUDED.min_v, "
-                "max_v=EXCLUDED.max_v, last_step=EXCLUDED.last_step, "
-                "last_value=EXCLUDED.last_value"
-            )
-            store.duck.unregister("_rollup_batch")
-
-    agg = running_metric_summary(store)
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .option(
-            "checkpointLocation", store.root + "/_checkpoints/rollup_sink"
-        )
-        .start()
-    )
-
-
 def running_metric_summary(store: WaddleStore) -> DataFrame:
     """Streaming DataFrame of incrementally-maintained per-(run_id, key)
-    summaries over the metrics append log.  Attach a sink (memory for
-    tests; foreachBatch→DuckDB for a live rollup table)."""
+    summaries over the metrics append log; the caller attaches a sink
+    (the tests use the memory sink)."""
     from waddleml_spark.session import ensure_shipped
 
     spark = store.spark

@@ -58,10 +58,31 @@ def test_parallel_threads_one_run(spark, tmp_path, monkeypatch):
         assert vals == [float(t * 100 + i) for i in range(20)]
 
 
+class _YieldingLock:
+    """A lock that gives up the GIL each time it is released, so another
+    thread runs in every gap between two holds: a race between holds shows
+    on every run instead of now and then."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+
+    def __enter__(self):
+        self._lock.acquire()
+
+    def __exit__(self, *exc):
+        self._lock.release()
+        time.sleep(0)
+
+
 def test_threads_logging_without_steps_each_get_their_own(tmp_path, monkeypatch):
-    # the auto-step counter is shared: a lost update hands two rows one step
+    # the auto-step counter is shared: a lost update hands two rows one step;
+    # a step claimed in one lock hold and buffered in another lets a later
+    # step overtake it on the way to the bus
     monkeypatch.chdir(tmp_path)
     run = w.init(project="steps", system_metrics=False)
+    run._buf_lock = _YieldingLock()
+    delivered = []
+    run._store.bus.subscribe(lambda rows: delivered.extend(r["step"] for r in rows))
 
     def worker():
         for _ in range(500):
@@ -83,6 +104,8 @@ def test_threads_logging_without_steps_each_get_their_own(tmp_path, monkeypatch)
         "SELECT step FROM metrics WHERE run_id = ? ORDER BY step", [run.id]
     ).fetchall()]
     assert steps == list(range(8 * 500))
+    assert len(delivered) == 8 * 500
+    assert delivered == sorted(delivered), "the bus delivered a step after a later one"
 
 
 def test_timed_and_full_flushes_reach_the_bus_in_log_order(tmp_path, monkeypatch):

@@ -20,7 +20,7 @@ import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
-from waddleml_spark.operators.dashboard import MirrorDashboard, SparkDashboard
+from waddleml_spark.operators.dashboard import MirrorDashboard, SparkDashboard, _dumps
 from tests.test_dashboard import seeded  # noqa: F401  (module-scoped store)
 
 
@@ -106,19 +106,33 @@ def test_get_run_parity(dashes):
     assert mirror.get_run("missing") == spark_dash.get_run("missing") == {}
 
 
+def _wire(payload):
+    """A SparkDashboard result as the server would send it: strict JSON,
+    parsed back."""
+    return json.loads(_dumps(payload))
+
+
 def test_get_metrics_parity(dashes):
     mirror, spark_dash, ids = dashes
     by_key_step = lambda r: (r["key"], r["step"])  # noqa: E731
+
+    def metrics(rid, **kw):
+        got = json.loads(mirror.get_metrics(rid, **kw))
+        same_sorted(got, _wire(spark_dash.get_metrics(rid, **kw)), by_key_step)
+        return got
+
     for rid in ids:
         for kw in ({}, {"key": "loss"}, {"key": "acc"}, {"key": "system/cpu_percent"},
                    {"key": "nope"}):
-            same_sorted(mirror.get_metrics(rid, **kw), spark_dash.get_metrics(rid, **kw),
-                        by_key_step)
+            metrics(rid, **kw)
     # the cross-key limit (ref O3 quirk) on a run with two 5-step keys
     for kw in ({"limit": 7}, {"limit": 5}, {"limit": 0}, {"key": "loss", "limit": 3}):
-        got = mirror.get_metrics(ids[0], **kw)
-        same_sorted(got, spark_dash.get_metrics(ids[0], **kw), by_key_step)
-    assert [r["key"] for r in mirror.get_metrics(ids[0], limit=7)] == ["acc"] * 5 + ["loss"] * 2
+        metrics(ids[0], **kw)
+    assert [r["key"] for r in metrics(ids[0], limit=7)] == ["acc"] * 5 + ["loss"] * 2
+    assert metrics(ids[0], limit=0) == metrics(ids[0], key="nope") == []
+    # the live run's NaN acc point goes out as null
+    acc = metrics(ids[5], key="acc")
+    assert [r["value"] for r in acc] == [0.25, None, 0.5, 0.75]
 
 
 def test_get_metrics_downsampled_parity(dashes):
@@ -138,11 +152,13 @@ def test_get_metrics_downsampled_parity(dashes):
 
 def test_compare_runs_parity(dashes):
     mirror, spark_dash, ids = dashes
-    assert mirror.compare_runs([]) == spark_dash.compare_runs([]) == {
+    assert json.loads(mirror.compare_runs([])) == spark_dash.compare_runs([]) == {
         "runs": [], "param_diff": {}, "metrics": {}}
+    assert json.loads(mirror.compare_runs(["missing", "nope"])) == _wire(
+        spark_dash.compare_runs(["missing", "nope"])) == {"runs": [], "params": {}, "metrics": {}}
     by_step = lambda r: r["step"]  # noqa: E731
     for sel in ([ids[0]], [ids[0], ids[2], ids[4]], [ids[4], ids[5], "missing"]):
-        got, want = mirror.compare_runs(sel), spark_dash.compare_runs(sel)
+        got, want = json.loads(mirror.compare_runs(sel)), _wire(spark_dash.compare_runs(sel))
         assert got.keys() == want.keys() == {"runs", "params", "metrics"}
         same_unordered(got["runs"], want["runs"])
         assert got["params"] == want["params"]

@@ -115,13 +115,15 @@ def _strict(raw: bytes):
 
 
 def test_non_finite_metrics_are_strict_json_null(tmp_path):
-    """A run that logged NaN and Inf is served as strict JSON on every
-    route: the bad points are null, the finite ones unchanged."""
+    """A run that logged NaN, Inf and -Inf values and an Inf timestamp is
+    served as strict JSON on every route: the bad points are null, the
+    finite ones unchanged."""
     state.set_active_run(None)
     run = w.init(project="nf", name="r", store_path=str(tmp_path / ".waddle"),
                  system_metrics=False)
-    for s, v in enumerate([1.0, float("nan"), float("inf"), 0.5]):
+    for s, v in enumerate([1.0, float("nan"), float("inf"), 0.5, float("-inf")]):
         run.log({"loss": v}, step=s)
+    run.log_metric("loss", 5, 0.25, ts=float("inf"))
     run.finish()
     state.set_active_run(None)
     srv = make_http_server(run._store, port=0)
@@ -141,9 +143,13 @@ def test_non_finite_metrics_are_strict_json_null(tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+    want = [1.0, None, None, 0.5, None, 0.25]
     series = bodies[f"/api/runs/{run.id}/metrics"]
-    assert [m["value"] for m in sorted(series, key=lambda m: m["step"])] == [1.0, None, None, 0.5]
-    assert [m["value"] for m in bodies["/api/compare"]["metrics"]["loss"]] == [1.0, None, None, 0.5]
+    assert [m["step"] for m in series] == list(range(6))
+    assert [m["value"] for m in series] == want
+    assert series[5]["ts"] is None
+    assert all(isinstance(m["ts"], float) for m in series[:5])
+    assert [m["value"] for m in bodies["/api/compare"]["metrics"]["loss"]] == want
 
 
 def test_serving_never_starts_spark(tmp_path):
@@ -214,29 +220,35 @@ def test_serving_never_starts_spark(tmp_path):
 
 
 def test_polling_while_a_run_logs(tmp_path):
-    """4 threads poll the run list, the run and its metrics while the run
-    logs and flushes: no request fails, each poller's row count never
-    decreases, and the last count equals DuckDB's."""
+    """4 threads poll the run list, the run, its metrics and a compare of
+    it while the run logs and flushes: every request succeeds and its body
+    parses, each poller's row counts (metrics and compare, apart) never
+    decrease, and the last count equals DuckDB's."""
     state.set_active_run(None)
     run = w.init(project="c", name="live", store_path=str(tmp_path / "store"),
                  system_metrics=False)
     srv = run.serve_dashboard(port=0)
     base = "http://%s:%d" % srv.server_address
-    paths = ["/api/runs", f"/api/runs/{run.id}", f"/api/runs/{run.id}/metrics?limit=1000000"]
+    compare = json.dumps({"run_ids": [run.id]}).encode()
+    paths = ["/api/runs", f"/api/runs/{run.id}", f"/api/runs/{run.id}/metrics?limit=1000000",
+             "/api/compare"]
     done = threading.Event()
     counts: list[list[int]] = [[] for _ in range(4)]
+    compared: list[list[int]] = [[] for _ in range(4)]
     errors: list[str] = []
 
     def poll(i):
         try:
             k = i
             while not done.is_set():
-                path = paths[k % 3]
-                status, body = _request(base, path)
+                path = paths[k % len(paths)]
+                status, body = _request(base, path, compare if path == "/api/compare" else None)
                 if status != 200:
                     errors.append(f"{path}: {status}")
                 elif path.endswith("limit=1000000"):
                     counts[i].append(len(body))
+                elif path == "/api/compare":
+                    compared[i].append(sum(map(len, body["metrics"].values())))
                 k += 1
         except Exception as e:  # a request that errors is a failure
             errors.append(f"{type(e).__name__}: {e}")
@@ -264,7 +276,7 @@ def test_polling_while_a_run_logs(tmp_path):
         state.set_active_run(None)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:5]
-    for c in counts:
+    for c in counts + compared:
         assert c and c == sorted(c), "a poller saw the row count go down"
         assert all(n % 2 == 0 for n in c), "a poller saw half of a logged step"
     duck = run._store.duck.execute(

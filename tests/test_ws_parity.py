@@ -63,7 +63,7 @@ def _mask_frame(payload: bytes, opcode: int = 0x1, fin: bool = True) -> bytes:
 def test_frame_roundtrip_all_lengths():
     import io
 
-    for n in (0, 1, 125, 126, 70000):
+    for n in (0, 1, 3, 4, 125, 126, 4097, 70000, WsReader.MAX_MESSAGE_BYTES):
         payload = os.urandom(n)
         op, got = WsReader(io.BytesIO(_mask_frame(payload))).read_message()
         assert (op, got) == (0x1, payload)

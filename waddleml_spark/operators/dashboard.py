@@ -1,5 +1,5 @@
 """The dashboard's query repertoire (ref: waddle/_dashboard_api.py:22-249)
-in two backends with the same method names, arguments and wire-shape dicts:
+in two backends with the same method names, arguments and wire shapes:
 
 - MirrorDashboard serves HTTP (`server.make_http_server`).  Every route
   is a parameterised SQL query on a per-request cursor of the store's
@@ -10,9 +10,12 @@ in two backends with the same method names, arguments and wire-shape dicts:
   reference that tests/test_dashboard_parity.py pins MirrorDashboard to,
   route by route.
 
-Only the fetch differs between the two; the rules both apply (sort
-allowlist, stale → aborted reclassification, tolerant JSON decoding,
-the compare regroup) are module functions both call.
+The rules both apply (sort allowlist, stale → aborted reclassification,
+tolerant JSON decoding) are module functions both call.  The mirror's
+get_metrics and compare_runs return the JSON body itself, encoded by
+DuckDB in one to_json aggregate per route, never a Python object per
+metric row; the strict-JSON rule (`_dumps`: non-finite → null) the
+server applies to every other body lives here beside them.
 
 Key plan upgrades of the Spark side over the reference (SURVEY.md §3.2/§3.3):
 - list_runs: the per-row correlated MAX(ts) re-query (an N+1 loop,
@@ -30,6 +33,7 @@ TakeOrderedAndProject.
 from __future__ import annotations
 
 import json
+import math
 import time
 from collections.abc import Sequence
 from typing import Any
@@ -46,6 +50,37 @@ _ARTIFACT_COLS = ["id", "name", "kind", "created_at", "uri", "sha256", "size_byt
 _SORTABLE = ("started_at", "ended_at", "name", "status", "project")
 # a running run with no metric for this long displays as aborted (ref P9)
 _STALE_AFTER_S = 300
+
+
+# --- strict JSON -----------------------------------------------------------
+
+
+def _finite(v):
+    """``v`` with every non-finite float replaced by None."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    if isinstance(v, dict):
+        return {k: _finite(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_finite(x) for x in v]
+    return v
+
+
+def _dumps(payload) -> bytes:
+    """Strict JSON: browsers' ``JSON.parse`` rejects the NaN/Infinity
+    tokens, so a diverged metric goes out as null.  Finite payloads cost
+    one encode; only one that fails is rewritten and encoded again."""
+    try:
+        return json.dumps(payload, allow_nan=False).encode()
+    except ValueError:
+        return json.dumps(_finite(payload)).encode()
+
+
+def _finite_sql(col: str) -> str:
+    """The SQL twin of `_finite` for one DOUBLE column: DuckDB's to_json
+    writes bare NaN/Infinity tokens, so a non-finite value becomes NULL
+    (JSON null) before it is encoded."""
+    return f"CASE WHEN isfinite({col}) THEN {col} END"
 
 
 # --- rules both backends apply --------------------------------------------
@@ -117,7 +152,8 @@ def _group_params(rows) -> dict[str, dict[str, Any]]:
 
 def _group_series(rows) -> dict[str, list[dict[str, Any]]]:
     """(key, run_id, step, value) rows in (key, step) order → compare's
-    {key: [{run_id, step, value}, ...]}."""
+    {key: [{run_id, step, value}, ...]} (SparkDashboard; MirrorDashboard
+    has DuckDB build the same object)."""
     out: dict[str, list[dict[str, Any]]] = {}
     for k, run_id, step, value in rows:
         out.setdefault(k, []).append({"run_id": run_id, "step": step, "value": value})
@@ -320,7 +356,10 @@ class MirrorDashboard:
     registration; `_duck_lock` serialises writes there).  Readers see
     each committed write batch whole (DuckDB MVCC).  Every value reaches
     DuckDB as a bound parameter; the only spliced identifiers are the
-    allowlisted sort column and direction."""
+    allowlisted sort column and direction.
+
+    get_metrics and compare_runs return strict-JSON bytes that DuckDB
+    encodes, with the GIL released; the other routes return dicts."""
 
     def __init__(self, store: WaddleStore):
         self.store = store
@@ -386,17 +425,26 @@ class MirrorDashboard:
 
     # --- get_metrics ------------------------------------------------------
 
-    def get_metrics(
-        self, run_id: str, key: str | None = None, limit: int = 5000
-    ) -> list[dict[str, Any]]:
+    def get_metrics(self, run_id: str, key: str | None = None, limit: int = 5000) -> bytes:
+        """The route's body, ``[{key, step, ts, value}, ...]`` in (key,
+        step) order: the limited rows, encoded by one to_json aggregate."""
         sql = "SELECT key, step, ts, value FROM metrics WHERE run_id = ?"
         if key:
             sql, params = sql + " AND key = ? ORDER BY step LIMIT ?", [run_id, key, limit]
         else:
             # ref quirk preserved: the limit truncates ACROSS keys (:140-149)
             sql, params = sql + " ORDER BY key, step LIMIT ?", [run_id, limit]
+        row = (
+            f"{{'key': key, 'step': step, 'ts': {_finite_sql('ts')},"
+            f" 'value': {_finite_sql('value')}}}"
+        )
         with self.store.duck.cursor() as cur:
-            return _dicts(cur, sql, params)
+            (body,) = cur.execute(
+                # an aggregate over no rows is NULL: the body is then []
+                f"SELECT coalesce(to_json(list({row} ORDER BY key, step)), '[]') FROM ({sql})",
+                params,
+            ).fetchone()
+        return body.encode()
 
     def get_metrics_downsampled(
         self, run_id: str, key: str, points: int = 200
@@ -427,9 +475,12 @@ class MirrorDashboard:
 
     # --- compare_runs -----------------------------------------------------
 
-    def compare_runs(self, run_ids: list[str]) -> dict[str, Any]:
+    def compare_runs(self, run_ids: list[str]) -> bytes:
+        """The route's body: `_dumps` encodes the small runs/params head;
+        each key's series, ``[{run_id, step, value}, ...]`` in (step,
+        run_id) order, is one to_json string spliced in as it is."""
         if not run_ids:
-            return {"runs": [], "param_diff": {}, "metrics": {}}
+            return _dumps({"runs": [], "param_diff": {}, "metrics": {}})
         marks = _marks(run_ids)
         with self.store.duck.cursor() as cur:
             runs = _dicts(
@@ -440,15 +491,17 @@ class MirrorDashboard:
                 run_ids,
             ).fetchall()
             series = cur.execute(
-                "SELECT key, run_id, step, value FROM metrics"
-                f" WHERE run_id IN ({marks}) ORDER BY key, step, run_id",
+                f"SELECT key, to_json(list({{'run_id': run_id, 'step': step,"
+                f" 'value': {_finite_sql('value')}}} ORDER BY step, run_id))"
+                f" FROM metrics WHERE run_id IN ({marks}) GROUP BY key ORDER BY key",
                 run_ids,
             ).fetchall()
-        return {
-            "runs": runs,
-            "params": _group_params(params),
-            "metrics": _group_series(series),
-        }
+        metrics = ", ".join(f"{json.dumps(k)}: {s}" for k, s in series)
+        return b"".join((
+            b'{"runs": ', _dumps(runs),
+            b', "params": ', _dumps(_group_params(params)),
+            b', "metrics": {', metrics.encode(), b"}}",
+        ))
 
     # --- metric keys / summary -------------------------------------------
 

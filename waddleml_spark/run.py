@@ -140,12 +140,18 @@ class Run:
     def log(self, metrics: dict[str, float], step: int | None = None) -> None:
         ts = time.time()
         items = [(_key(k), float(v)) for k, v in metrics.items()]
-        with self._buf_lock:  # threads sharing a run each claim their own step
+        # threads sharing a run each claim their own step, and buffer its
+        # rows in the same lock hold: the buffer, the part files and the
+        # live bus then see the run's rows in step order
+        with self._buf_lock:
             step = _step(self._step if step is None else step)
             self._step = step + 1
-        self._buffer(
-            [{"run_id": self.id, "key": k, "step": step, "ts": ts, "value": v} for k, v in items]
-        )
+            full = self._buffer_locked(
+                [{"run_id": self.id, "key": k, "step": step, "ts": ts, "value": v}
+                 for k, v in items]
+            )
+        if full:
+            self.flush()
 
     def log_metric(self, key: str, step: int, value: float, ts: float | None = None) -> None:
         self._buffer(
@@ -172,16 +178,22 @@ class Run:
 
     def _buffer(self, rows: list[dict]) -> None:
         with self._buf_lock:
-            self._buf.extend(rows)
-            full = len(self._buf) >= FLUSH_ROWS
-            if not full and self._timer is None:
-                self._timer = threading.Timer(
-                    FLUSH_SECONDS, _flush_later, [weakref.ref(self)]
-                )
-                self._timer.daemon = True
-                self._timer.start()
+            full = self._buffer_locked(rows)
         if full:
             self.flush()
+
+    def _buffer_locked(self, rows: list[dict]) -> bool:
+        """Append ``rows`` to the batch; the caller holds ``_buf_lock``.
+        True when the batch is full and the caller must flush; otherwise
+        the batch's time trigger is armed."""
+        self._buf.extend(rows)
+        if len(self._buf) >= FLUSH_ROWS:
+            return True
+        if self._timer is None:
+            self._timer = threading.Timer(FLUSH_SECONDS, _flush_later, [weakref.ref(self)])
+            self._timer.daemon = True
+            self._timer.start()
+        return False
 
     def flush(self) -> None:
         """Visibility barrier: drain the metric buffer into the store and

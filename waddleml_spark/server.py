@@ -6,7 +6,11 @@ each request up in one (method, path regex) → handler table and answers
 it from a MirrorDashboard, which serves every route from the store's
 DuckDB mirror: serving starts no JVM and runs no Spark job
 (SparkDashboard, the same routes as Spark plans, stays the analytics
-API).  Malformed input (a non-integer or negative limit/offset, a
+API).  The two bulk routes, a run's metrics and POST /api/compare, come
+back from MirrorDashboard as finished JSON bytes that DuckDB encoded and
+are sent unchanged; every other body, and each /ws frame, is encoded
+here with the dashboard module's strict `_dumps` (non-finite floats go
+out as null).  Malformed input (a non-integer or negative limit/offset, a
 `points` outside [1, 2**31), a non-JSON compare body, a `run_ids` that
 is not a list of strings) gets `400 {"error": ...}`; an unknown route
 gets 404.
@@ -22,7 +26,6 @@ store's root in this process feeds.
 from __future__ import annotations
 
 import json
-import math
 import queue
 import re
 import threading
@@ -31,7 +34,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlparse
 
-from waddleml_spark.operators.dashboard import MirrorDashboard
+from waddleml_spark.operators.dashboard import MirrorDashboard, _dumps
 from waddleml_spark.store import WaddleStore
 
 
@@ -73,27 +76,6 @@ def _metric_messages(rows: list[dict]) -> list[dict]:
         }
         for r in rows
     ]
-
-
-def _finite(v):
-    """``v`` with every non-finite float replaced by None."""
-    if isinstance(v, float):
-        return v if math.isfinite(v) else None
-    if isinstance(v, dict):
-        return {k: _finite(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [_finite(x) for x in v]
-    return v
-
-
-def _dumps(payload) -> bytes:
-    """Strict JSON: browsers' ``JSON.parse`` rejects the NaN/Infinity
-    tokens, so a diverged metric goes out as null.  Finite payloads cost
-    one encode; only one that fails is rewritten and encoded again."""
-    try:
-        return json.dumps(payload, allow_nan=False).encode()
-    except ValueError:
-        return json.dumps(_finite(payload)).encode()
 
 
 # --- minimal RFC 6455 server-side framing (stdlib-only /ws) ----------------
@@ -221,7 +203,11 @@ class WsReader:
             if payload is None:
                 return None
             if masked:
-                payload = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+                # one big-int XOR against the repeated key: a per-byte
+                # Python loop would hold the GIL for ~0.3 s on a 4 MB
+                # message and stall every other handler thread
+                stream = int.from_bytes((mask * (n // 4 + 1))[:n], "big")
+                payload = (int.from_bytes(payload, "big") ^ stream).to_bytes(n, "big")
             if op >= 0x8:  # control frame — may interleave with fragments
                 return op, payload
             if op != 0x0:
@@ -286,7 +272,7 @@ def make_http_server(
         # a bare string would reach the IN-list one character at a time
         if not isinstance(run_ids, list) or not all(isinstance(i, str) for i in run_ids):
             raise BadRequest("run_ids must be a list of strings")
-        h._json(dash.compare_runs(run_ids))
+        h._send(dash.compare_runs(run_ids), "application/json")
 
     def delete_run(h, q, run_id):
         if not dash.delete_run(run_id):
@@ -300,8 +286,9 @@ def make_http_server(
             ("GET", r"/static/(.*)", lambda h, q, name: static_file(h, name)),
             ("GET", r"/api/runs", list_runs),
             ("GET", r"/api/runs/([^/]+)", get_run),
-            ("GET", r"/api/runs/([^/]+)/metrics", lambda h, q, run_id: h._json(
-                dash.get_metrics(run_id, key=q.get("key"), limit=_count(q, "limit", 5000))
+            ("GET", r"/api/runs/([^/]+)/metrics", lambda h, q, run_id: h._send(
+                dash.get_metrics(run_id, key=q.get("key"), limit=_count(q, "limit", 5000)),
+                "application/json",
             )),
             ("GET", r"/api/runs/([^/]+)/metrics/downsampled", downsampled),
             ("GET", r"/api/metric-keys", lambda h, q: h._json(dash.metric_keys_global())),

@@ -116,6 +116,7 @@ def test_timed_and_full_flushes_reach_the_bus_in_log_order(tmp_path, monkeypatch
     from waddleml_spark.run import Run
 
     monkeypatch.setattr(run_mod, "FLUSH_SECONDS", 0.001)
+    monkeypatch.setattr(run_mod, "LIVE_FLUSH_SECONDS", 0.001)  # the bus is watched
     monkeypatch.setattr(run_mod, "FLUSH_ROWS", 7)
     store = WaddleStore(str(tmp_path / "order"))
     run = Run(store=store, run_id="o" * 32, project="order", system_metrics=False)
@@ -133,6 +134,47 @@ def test_timed_and_full_flushes_reach_the_bus_in_log_order(tmp_path, monkeypatch
     assert store.duck.execute(
         "SELECT count(*) FROM metrics WHERE run_id = ?", [run.id]
     ).fetchone()[0] == 2000
+    store.close()
+
+
+def test_failed_timed_flush_fails_the_run(tmp_path, monkeypatch):
+    # a time-triggered flush fails on its timer thread: the error is kept
+    # on the run, the next log() and finish() raise it, and the run ends
+    # failed, not completed
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.run import Run
+
+    monkeypatch.setattr(run_mod, "FLUSH_SECONDS", 0.1)
+    uncaught = []
+    monkeypatch.setattr(threading, "excepthook", uncaught.append)
+    store = WaddleStore(str(tmp_path / "fail"))
+    run = Run(store=store, run_id="f" * 32, project="fail", system_metrics=False)
+    append, calls = store.append, []
+
+    def flaky(table, rows):
+        if table == "metrics" and not calls:
+            calls.append(rows)
+            raise OSError("disk full")
+        append(table, rows)
+
+    store.append = flaky
+    run.log({"loss": 1.0})
+    deadline = time.monotonic() + 10
+    while not calls and time.monotonic() < deadline:
+        time.sleep(0.02)
+    with run._flush_lock:  # the timer's flush has ended
+        pass
+    with pytest.raises(OSError, match="disk full"):
+        run.log({"loss": 2.0})
+    with pytest.raises(OSError, match="disk full"):
+        run.flush()
+    with pytest.raises(OSError, match="disk full"):
+        run.finish()
+    assert uncaught == []  # the timer thread raised nothing
+    assert [r["step"] for r in calls[0]] == [0]
+    status = store.duck.execute("SELECT status FROM runs WHERE id = ?", [run.id]).fetchone()
+    assert status == ("failed",)
+    assert store.duck.execute("SELECT count(*) FROM metrics").fetchone() == (0,)
     store.close()
 
 

@@ -70,6 +70,105 @@ def test_idle_run_flushes_within_flush_seconds(spark, tmp_path, monkeypatch):
     assert run._timer is None
 
 
+def _store_run(tmp_path, monkeypatch):
+    """A run on a fresh store whose slow trigger never fires in a test:
+    only the live cadence can explain a flush."""
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.run import Run
+    from waddleml_spark.store import WaddleStore
+
+    monkeypatch.setattr(run_mod, "FLUSH_SECONDS", 60.0)
+    store = WaddleStore(str(tmp_path / "cadence"))
+    return store, Run(store=store, run_id="c" * 32, project="cadence", system_metrics=False)
+
+
+def _metric_rows(store, run) -> int:
+    return store.duck.execute(
+        "SELECT count(*) FROM metrics WHERE run_id = ?", [run.id]
+    ).fetchone()[0]
+
+
+def test_watched_run_flushes_at_the_live_cadence(tmp_path, monkeypatch):
+    # one log() on a watched store reaches the subscriber, and DuckDB,
+    # with no further call on the run
+    import time
+
+    store, run = _store_run(tmp_path, monkeypatch)
+    seen = []
+    store.bus.subscribe(lambda rows: seen.extend(rows))
+    run.log({"loss": 0.5})
+    deadline = time.monotonic() + 10
+    while not seen and time.monotonic() < deadline:
+        time.sleep(0.02)
+    assert [(r["key"], r["value"]) for r in seen] == [("loss", 0.5)]
+    assert _metric_rows(store, run) == 1
+    run.finish()
+    store.close()
+
+
+def test_unwatched_run_keeps_the_slow_cadence(tmp_path, monkeypatch):
+    import glob
+    import time
+
+    store, run = _store_run(tmp_path, monkeypatch)
+    run.log({"loss": 0.5})
+    time.sleep(1.0)
+    assert glob.glob(f"{store._dir('metrics')}/*.parquet") == []
+    assert _metric_rows(store, run) == 0
+    run.finish()
+    assert _metric_rows(store, run) == 1
+    store.close()
+
+
+def test_cadence_falls_back_once_the_last_ws_client_is_pruned(tmp_path, monkeypatch):
+    # a closed /ws client stays subscribed until the publish that prunes
+    # it, so at most one fast batch follows the disconnect
+    import base64
+    import os
+    import socket
+    import time
+
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.server import serve_in_thread
+
+    store, run = _store_run(tmp_path, monkeypatch)
+    server = serve_in_thread(store, port=0)
+    try:
+        sock = socket.create_connection(server.server_address, timeout=10)
+        key = base64.b64encode(os.urandom(16)).decode()
+        sock.sendall(
+            f"GET /ws HTTP/1.1\r\nHost: x\r\nUpgrade: websocket\r\n"
+            f"Connection: Upgrade\r\nSec-WebSocket-Key: {key}\r\n"
+            "Sec-WebSocket-Version: 13\r\n\r\n".encode()
+        )
+        head = b""
+        while not head.endswith(b"\r\n\r\n"):
+            head += sock.recv(1)
+        assert b" 101 " in head
+        run.log({"loss": 1.0})
+        assert run._timer.interval == run_mod.LIVE_FLUSH_SECONDS
+        run.flush()
+        sock.sendall(bytes([0x88, 0x80]) + os.urandom(4))  # masked close
+        sock.close()
+        deadline = time.monotonic() + 10
+        while not all(s.dead for s in store.bus._subs) and time.monotonic() < deadline:
+            time.sleep(0.02)
+        assert store.bus._subs and all(s.dead for s in store.bus._subs)
+        intervals = []
+        for step in range(3):
+            run.log({"loss": float(step)})
+            intervals.append(run._timer.interval)
+            run.flush()
+        assert not store.bus.watched
+        assert intervals.count(run_mod.LIVE_FLUSH_SECONDS) <= 1
+        assert intervals[-1] == run_mod.FLUSH_SECONDS
+        run.finish()
+    finally:
+        server.shutdown()
+        server.server_close()
+        store.close()
+
+
 def test_metric_window_agg(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     run = w.init(project="winagg", system_metrics=False, spark=spark)

@@ -15,11 +15,18 @@
 Engine difference (deliberate, SURVEY.md §3.1): metrics buffer into
 micro-batches — the reference's row-at-a-time autocommit INSERT is its own
 perf ceiling; batching is the idiomatic Spark translation.  A batch is
-flushed when it reaches FLUSH_ROWS rows or FLUSH_SECONDS after its first
-row, whichever comes first, with no further call needed; `flush()` is the
-visibility barrier (finish() always flushes).  The store publishes every
-flushed batch on its live bus (streaming.live), so a run needs no bus of
-its own.
+flushed when it reaches FLUSH_ROWS rows or when its time trigger fires,
+whichever comes first, with no further call needed; `flush()` is the
+visibility barrier (finish() always flushes).  The trigger has two
+cadences, picked when a batch's first row arrives: LIVE_FLUSH_SECONDS
+while the store's live bus has a subscriber (a /ws client is watching),
+FLUSH_SECONDS otherwise.  The store publishes every flushed batch on its
+live bus (streaming.live), so a run needs no bus of its own.
+
+A time-triggered flush runs on a timer thread, where nobody sees it fail.
+A failure is kept on the run instead: the failed batch is not retried
+(its part file may already exist), the run's next log(), flush() or
+finish() raises it, and finish() records the run as failed first.
 """
 
 from __future__ import annotations
@@ -41,18 +48,28 @@ from waddleml_spark.store import WaddleStore
 
 # Micro-batch sizing: each flush is one driver-local part file + DuckDB
 # insert (a few ms), so the row threshold bounds the part-file count under
-# sustained logging while the time threshold bounds live-update latency (the
-# reference UI debounces at 500 ms, the sampler ticks at 5 s — 2 s is within contract).
+# sustained logging while the time threshold bounds live-update latency.
+# Unwatched, 2 s keeps files few (the sampler ticks at 5 s).  Watched,
+# 0.25 s keeps p90 /ws delivery under the reference client's 500 ms redraw
+# debounce; 0.1 s would save ~70 ms more at 2.1x the part files.
 FLUSH_ROWS = 5000
 FLUSH_SECONDS = 2.0
+LIVE_FLUSH_SECONDS = 0.25
 
 
 def _flush_later(ref: weakref.ref) -> None:
     """Time trigger body.  It holds the run weakly: a trigger still
-    winding down must not keep a finished run alive."""
+    winding down must not keep a finished run alive.  A failure is kept
+    on the run for its next caller to raise."""
     run = ref()
     if run is not None:
-        run.flush()
+        # kept before the flush lock goes: a finish() waiting on it must
+        # see the failure
+        with run._flush_lock:
+            try:
+                run.flush()
+            except Exception as e:
+                run._failure = e
 
 
 def _step(step: Any) -> int:
@@ -98,8 +115,9 @@ class Run:
         self._sysmon: Any = None
         self._buf: list[dict] = []
         self._buf_lock = threading.Lock()
-        self._flush_lock = threading.Lock()  # batches reach the store in log order
+        self._flush_lock = threading.RLock()  # batches reach the store in log order
         self._timer: threading.Timer | None = None  # the buffered batch's time trigger
+        self._failure: Exception | None = None  # a time-triggered flush's error
 
         env = {
             "python": sys.version,
@@ -185,12 +203,15 @@ class Run:
     def _buffer_locked(self, rows: list[dict]) -> bool:
         """Append ``rows`` to the batch; the caller holds ``_buf_lock``.
         True when the batch is full and the caller must flush; otherwise
-        the batch's time trigger is armed."""
+        the batch's time trigger is armed, at the live cadence while the
+        store's bus is watched."""
+        self._raise_failure()
         self._buf.extend(rows)
         if len(self._buf) >= FLUSH_ROWS:
             return True
         if self._timer is None:
-            self._timer = threading.Timer(FLUSH_SECONDS, _flush_later, [weakref.ref(self)])
+            wait = LIVE_FLUSH_SECONDS if self._store.bus.watched else FLUSH_SECONDS
+            self._timer = threading.Timer(wait, _flush_later, [weakref.ref(self)])
             self._timer.daemon = True
             self._timer.start()
         return False
@@ -202,12 +223,17 @@ class Run:
         the order they were logged."""
         with self._flush_lock:
             with self._buf_lock:
+                self._raise_failure()
                 batch, self._buf = self._buf, []
                 timer, self._timer = self._timer, None
             if timer is not None:
                 timer.cancel()
             if batch:
                 self._store.append("metrics", batch)
+
+    def _raise_failure(self) -> None:
+        if self._failure is not None:
+            raise self._failure
 
     def log_param(self, key: str, value: Any) -> None:
         self._store.upsert(
@@ -300,12 +326,18 @@ class Run:
         atexit.unregister(self._atexit)
         if self._sysmon:
             self._sysmon.stop()
-        self.flush()  # also cancels the pending time trigger
+        try:
+            self.flush()  # also cancels the pending time trigger
+        except Exception:
+            self._store.update_run(self.id, status="failed", ended_at=time.time())
+            raise
         self._store.update_run(self.id, status=status, ended_at=time.time())
 
     def __enter__(self) -> "Run":
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
-        self.finish(status="failed" if exc else "completed")
-        state.set_active_run(None)
+        try:
+            self.finish(status="failed" if exc else "completed")
+        finally:
+            state.set_active_run(None)

@@ -405,9 +405,12 @@ def make_http_server(
                         continue
                     if rows is _CLOSED:
                         break
+                    # one frame per row, one socket write per batch
+                    frames = b"".join(
+                        ws_encode_frame(_dumps(msg)) for msg in _metric_messages(rows)
+                    )
                     with wlock:
-                        for msg in _metric_messages(rows):
-                            self.wfile.write(ws_encode_frame(_dumps(msg)))
+                        self.wfile.write(frames)
                         self.wfile.flush()
             except (BrokenPipeError, ConnectionResetError, OSError):
                 pass

@@ -1,8 +1,9 @@
-"""Per-route parity: MirrorDashboard (DuckDB mirror, serves HTTP) must
-answer every route exactly as SparkDashboard (Spark plans over the
-Parquet event log) does, on the test_dashboard.py store plus a run with
-a tied last step, a fresh running run (one of its series holds a NaN
-point) and a running run with no metrics.
+"""Per-route parity: every route's `_SQL` texts, run by both engines,
+must give the same answers.  MirrorDashboard (the DuckDB mirror, serves
+HTTP) is checked against SparkDashboard (spark.sql over the Parquet event
+log) on the test_dashboard.py store plus a run with a tied last step, a
+fresh running run (one of its series holds a NaN point) and a running run
+with no metrics, and on a store that holds no rows.
 
 Lists are compared in order wherever the route sorts them — rows tied
 on the route's sort key may come back in either order, so the sort keys
@@ -13,6 +14,8 @@ compared without regard to order.
 
 from __future__ import annotations
 
+import ast
+import inspect
 import json
 import time
 
@@ -20,7 +23,14 @@ import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
-from waddleml_spark.operators.dashboard import MirrorDashboard, SparkDashboard, _dumps
+from waddleml_spark.operators.dashboard import (
+    _SQL,
+    MirrorDashboard,
+    SparkDashboard,
+    _dumps,
+    series_downsample,
+)
+from waddleml_spark.store import WaddleStore
 from tests.test_dashboard import seeded  # noqa: F401  (module-scoped store)
 
 
@@ -148,6 +158,39 @@ def test_get_metrics_downsampled_parity(dashes):
     (bucket,) = mirror.get_metrics_downsampled(ids[5], "acc", points=1)
     assert bucket == {"bucket": 0, "step": 1.5, "value": 0.5, "value_min": 0.25,
                       "value_max": 0.75, "n": 4}
+    # two buckets: steps 0-1 (the NaN one among them) and steps 2-3
+    assert mirror.get_metrics_downsampled(ids[5], "acc", points=2) == [
+        {"bucket": 0, "step": 0.5, "value": 0.25, "value_min": 0.25, "value_max": 0.25,
+         "n": 2},
+        {"bucket": 1, "step": 2.5, "value": 0.625, "value_min": 0.5, "value_max": 0.75,
+         "n": 2},
+    ]
+
+
+def test_get_metrics_downsampled_matches_series_downsample(dashes):
+    """The route's SQL against the DataFrame operator it reimplements, over
+    the same series with NaN points NULLed (the route's documented rule)."""
+    from pyspark.sql import functions as F
+
+    mirror, spark_dash, ids = dashes
+    m = (
+        spark_dash.store.df("metrics")
+        .withColumn("__x", F.col("step").cast("double"))
+        .withColumn("value", F.nanvl("value", F.lit(None).cast("double")))
+    )
+    for points in (1, 2, 3, 200):
+        want: dict = {}
+        out = series_downsample(m, ["run_id", "key"], "__x", "value", target_points=points)
+        for r in out.orderBy("bucket").collect():
+            want.setdefault((r.run_id, r.key), []).append({
+                "bucket": r.bucket, "step": r.x, "value": r.y_mean,
+                "value_min": r.y_min, "value_max": r.y_max, "n": r.n_points,
+            })
+        assert (ids[5], "acc") in want  # the NaN-bearing series
+        for rid, key in want:
+            got = spark_dash.get_metrics_downsampled(rid, key, points=points)
+            assert got == mirror.get_metrics_downsampled(rid, key, points=points)
+            assert got == want[rid, key], (rid, key, points)
 
 
 def test_compare_runs_parity(dashes):
@@ -184,3 +227,47 @@ def test_metric_summary_parity_keeps_ties(dashes):
                     spark_dash.metric_summary(key, limit=limit), by_run)
     tie_rows = [r["value"] for r in mirror.metric_summary("loss") if r["run_id"] == ids[4]]
     assert sorted(tie_rows) == [0.0, 9.5]
+
+
+def test_every_route_agrees_on_an_empty_store(spark, tmp_path):
+    # store.df() of a table with no part file is createDataFrame([], schema)
+    store = WaddleStore(str(tmp_path / "empty"), spark=spark)
+    mirror, spark_dash = MirrorDashboard(store), SparkDashboard(store)
+    try:
+        for kw in ({}, {"project": "alpha", "status": "running"}, {"sort": "name", "limit": 0}):
+            assert mirror.list_runs(**kw) == spark_dash.list_runs(**kw) == []
+        assert mirror.get_run("x") == spark_dash.get_run("x") == {}
+        for kw in ({}, {"key": "loss"}):
+            got = json.loads(mirror.get_metrics("x", **kw))
+            assert got == spark_dash.get_metrics("x", **kw) == []
+        assert (mirror.get_metrics_downsampled("x", "loss")
+                == spark_dash.get_metrics_downsampled("x", "loss") == [])
+        assert json.loads(mirror.compare_runs(["x"])) == spark_dash.compare_runs(["x"]) == {
+            "runs": [], "params": {}, "metrics": {}}
+        assert mirror.metric_keys_global() == spark_dash.metric_keys_global() == []
+        assert mirror.metric_summary("loss") == spark_dash.metric_summary("loss") == []
+    finally:
+        store.close()
+
+
+def test_each_route_is_written_once():
+    """SparkDashboard's routes build no DataFrame: each runs `_SQL` texts
+    through the engine seam.  MirrorDashboard defines no route, only its
+    engine."""
+    assert [n for n in vars(MirrorDashboard) if not n.startswith("__")] == ["_engine"]
+    routes = {n: f for n, f in vars(SparkDashboard).items()
+              if inspect.isfunction(f) and not n.startswith("_")}
+    assert routes.keys() == {"list_runs", "get_run", "get_metrics", "get_metrics_downsampled",
+                             "compare_runs", "metric_keys_global", "metric_summary",
+                             "delete_run"}
+    frame_api = {"F", "ops", "df", "spark", "sql", "filter", "select", "orderBy", "groupBy",
+                 "agg", "collect", "withColumn"}
+    src = inspect.getsource(SparkDashboard)
+    for name, fn in routes.items():
+        tree = ast.parse(inspect.getsource(fn).strip())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+        assert not used & frame_api, (name, used & frame_api)
+        assert name == "delete_run" or "_engine" in used, name
+    # every text is some route's
+    assert [k for k in _SQL if f'"{k}"' not in src] == []

@@ -42,32 +42,6 @@ def in_list_filter(df: DataFrame, col_name: str, values: Sequence) -> DataFrame:
     return df.filter(F.col(col_name).isin(list(values)))
 
 
-def allowlist_sort(
-    df: DataFrame,
-    sort_col: str,
-    direction: str = "desc",
-    allowed: Sequence[str] = ("started_at", "ended_at", "name", "status", "project"),
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Whitelisted dynamic sort (ref O1: waddle/_dashboard_api.py:45-48).
-
-    The allowlist is retained even though the DataFrame API is
-    injection-safe by construction — it preserves the reference's API
-    contract (unknown column → fall back to default, same as ref).
-    `tiebreak` pins a total order so LIMIT/OFFSET pagination is
-    deterministic (the ref inherits whatever DuckDB returns; we do better).
-
-    NULL ordering is pinned to match DuckDB defaults: NULLS LAST on ASC,
-    NULLS LAST on DESC (DuckDB default is NULLS LAST for both).
-    """
-    if sort_col not in allowed:
-        sort_col = allowed[0]
-    col = F.col(sort_col)
-    key = col.desc_nulls_last() if direction.lower() == "desc" else col.asc_nulls_last()
-    keys = [key] + ([F.col(tiebreak).asc()] if tiebreak else [])
-    return df.orderBy(*keys)
-
-
 def paginate(df: DataFrame, limit: int = 200, offset: int = 0) -> DataFrame:
     """LIMIT/OFFSET pagination (ref O2: waddle/_dashboard_api.py:50-51).
 

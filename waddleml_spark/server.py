@@ -3,12 +3,12 @@
 
 `make_http_server` is a stdlib ThreadingHTTPServer whose handler looks
 each request up in one (method, path regex) → handler table and answers
-it from a MirrorDashboard, which serves every route from the store's
-DuckDB mirror: serving starts no JVM and runs no Spark job
-(SparkDashboard, the same routes as Spark plans, stays the analytics
-API).  The two bulk routes, a run's metrics and POST /api/compare, come
-back from MirrorDashboard as finished JSON bytes that DuckDB encoded and
-are sent unchanged; every other body, and each /ws frame, is encoded
+it from a MirrorDashboard.  Each route's SQL text is the one
+SparkDashboard (the Spark analytics API) runs with spark.sql; the mirror
+runs it on the store's DuckDB mirror, so serving starts no JVM and runs
+no Spark job.  The two bulk routes, a run's metrics and POST
+/api/compare, come back from MirrorDashboard as finished JSON bytes that
+DuckDB encoded and are sent unchanged; every other body, and each /ws frame, is encoded
 here with the dashboard module's strict `_dumps` (non-finite floats go
 out as null).  Malformed input (a non-integer or negative limit/offset, a
 `points` outside [1, 2**31), a non-JSON compare body, a `run_ids` that

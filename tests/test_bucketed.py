@@ -74,29 +74,6 @@ def test_bucketed_join_matches_unbucketed_result(spark, bucketed_pair):
     )
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    from waddleml_spark.plans.inspect import explain_str
-    from waddleml_spark.sources.bucketed import write_partitioned
-
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").withColumn(
-        "order_month",
-        F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM"),
-    )
-    path = str(tmp_path / "orders_by_month")
-    write_partitioned(o, path, ["order_month"])
-
-    back = spark.read.parquet(path)
-    one_month = back.filter(F.col("order_month") == "1996-03")
-    plan = explain_str(one_month, "formatted")
-    # the month predicate resolves against directory names, not row data
-    assert "PartitionFilters" in plan and "order_month" in plan.split(
-        "PartitionFilters", 1
-    )[1].split("\n", 1)[0]
-    # and values survive the round trip
-    expected = o.filter(F.col("order_month") == "1996-03").count()
-    assert one_month.count() == expected > 0
-
-
 def test_bucket_facts_one_call_then_catalog_revenue_join_shuffle_free(spark):
     """The layout API end-to-end: ONE bucket_facts call, then the
     CATALOG's own revenue join (the shared revenue_join definition)

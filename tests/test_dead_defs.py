@@ -1,10 +1,12 @@
 """Dead-code and layering guards, pure ``ast`` and text scans; no Spark.
 
 Every module-level ``def``/``class`` in the package must be named
-somewhere in the repo's Python files besides its own definition line —
-in code, a test, an example, a tool or a comment.  Exempt: dunder names,
-and catalog queries registered with ``@_register(...)`` (they are
-reached by key through ``catalog.QUERIES``).
+somewhere in the repo's Python files outside ``tests/``, besides its own
+definition line — in package code, an example, a tool, a benchmark or a
+comment there.  A test is not a caller: code only tests reach is code
+nothing runs.  Exempt: dunder names, catalog queries registered with
+``@_register(...)`` (reached by key through ``catalog.QUERIES``), and the
+names in ``KEPT``, each with the reason it stays.
 
 Every top-level script and every file under ``tools/`` must be named by
 file name in a live document or runner: the README, CLAUDE.md, DEPLOY.md,
@@ -17,6 +19,10 @@ Every ``waddleml_spark`` import in a script outside the test suite
 resolve: the module exists, and each imported name is a top-level
 definition of it or a submodule.  Checked from the source, never run —
 those scripts otherwise run only outside pytest.
+
+Every test COVERAGE.md cites must exist: each ``tests/<file>.py`` names
+a test file, each ``tests/<file>.py::<name>`` a test function of that
+file, and each bare ``test_<name>`` a test file or a test function.
 
 ``store.py`` is the one writer of a store's DuckDB file: no other package
 module may take its write lock (``_duck_lock``) or call ``.duck.execute``
@@ -35,6 +41,10 @@ REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "waddleml_spark"
 _SKIP_DIRS = {".perfbench_work", "spark-warehouse"}
 _WORD = re.compile(r"\w+")
+TESTS = REPO / "tests"
+
+# definition name -> why it stays although only tests call it
+KEPT: dict[str, str] = {}
 
 
 def _py_files() -> list[Path]:
@@ -59,7 +69,8 @@ def test_no_dead_module_level_definitions():
     texts: dict[Path, str] = {}
     for path in _py_files():
         texts[path] = path.read_text(encoding="utf-8")
-        uses.update(_WORD.findall(texts[path]))
+        if TESTS not in path.parents:
+            uses.update(_WORD.findall(texts[path]))
 
     dead = []
     for path in sorted(p for p in texts if PKG in p.parents):
@@ -75,12 +86,14 @@ def test_no_dead_module_level_definitions():
             name = node.name
             if name.startswith("__") and name.endswith("__"):
                 continue
-            if _registered(node):
+            if _registered(node) or name in KEPT:
                 continue
             own = _WORD.findall(lines[node.lineno - 1]).count(name)
             if uses[name] <= own:
                 dead.append(f"{path.relative_to(REPO)}:{node.lineno} {name}")
-    assert dead == [], "module-level definitions nothing names:\n" + "\n".join(dead)
+    assert dead == [], (
+        "module-level definitions nothing outside tests/ names:\n" + "\n".join(dead)
+    )
 
 
 def _live_documents() -> dict[Path, str]:
@@ -111,6 +124,27 @@ def test_every_script_is_named_by_a_live_document():
         if not any(named.search(t) for d, t in docs.items() if d != script):
             unnamed.append(str(script.relative_to(REPO)))
     assert unnamed == [], "scripts no live document names:\n" + "\n".join(unnamed)
+
+
+def test_every_test_coverage_cites_exists():
+    tests = {
+        p.name: {
+            n.name for n in ast.walk(ast.parse(p.read_text(encoding="utf-8")))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.name.startswith("test_")
+        }
+        for p in TESTS.glob("test_*.py")
+    }
+    every = set().union(*tests.values())
+    text = (REPO / "COVERAGE.md").read_text(encoding="utf-8")
+    files = re.findall(r"tests/(\w+\.py)", text)
+    qualified = re.findall(r"tests/(\w+\.py)::(\w+)", text)
+    bare = re.findall(r"(?<![\w/.:])test_\w+", text)
+    missing = [f"tests/{f}" for f in files if f not in tests]
+    missing += [f"tests/{f}::{n}" for f, n in qualified if n not in tests.get(f, ())]
+    missing += [n for n in bare if f"{n}.py" not in tests and n not in every]
+    assert qualified and bare
+    assert missing == [], "COVERAGE.md cites tests that do not exist:\n" + "\n".join(missing)
 
 
 def _top_level_names(tree: ast.Module) -> set[str]:

@@ -1,4 +1,4 @@
-"""Multimodal plumbing: feature extraction, resize, frame sampling —
+"""Multimodal plumbing: feature extraction, frame sampling —
 schemas, batch shapes and determinism (kernels stubbed by design)."""
 
 from __future__ import annotations
@@ -116,13 +116,6 @@ def test_extract_features_decodes_real_media(spark):
     expect = (px[:, :, 0].mean() / 255 + px[:, :, 1].mean() / 255
               + px[:, :, 2].mean() / 255 + px.std() / 255) / 4
     assert abs(got[1].feat_mean - expect) < 1e-12
-
-
-def test_resize_images_tracks_dims(spark, media):
-    out = multimodal.resize_images(media.limit(50), 64, 32).collect()
-    assert len(out) == 50
-    assert all(r.width == 64 and r.height == 32 for r in out)
-    assert all(len(r.payload) == 64 * 32 // 64 for r in out)
 
 
 def test_sample_frames_fans_out(spark, media):

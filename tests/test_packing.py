@@ -222,37 +222,6 @@ def test_weighted_sample_exact_k_deterministic_and_weight_proportional(spark):
     assert [r.doc_id for r in got] == [3]
 
 
-def test_weighted_sample_per_group_budget_and_determinism(spark):
-    # exactly min(k, group size) rows per group, deterministic across
-    # layouts, and within-group selection matches the global sampler
-    # restricted to that group (same keys, same ordering)
-    from pyspark.sql import functions as F
-
-    from waddleml_spark.llmops.packing import (
-        weighted_sample,
-        weighted_sample_per_group,
-    )
-
-    df = spark.range(0, 90).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 3).cast("string").alias("src"),
-        (F.col("id") % 7 + 1).cast("double").alias("w"),
-    )
-    s = weighted_sample_per_group(df, "w", 5, ["src"], salt=":g")
-    counts = {r.src: r.n for r in s.groupBy("src").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"0": 5, "1": 5, "2": 5}
-    s2 = weighted_sample_per_group(df.repartition(11), "w", 5, ["src"], salt=":g")
-    assert sorted(r.doc_id for r in s.collect()) == sorted(r.doc_id for r in s2.collect())
-    for src in ("0", "1", "2"):
-        grp = weighted_sample(df.filter(F.col("src") == src), "w", 5, salt=":g")
-        assert sorted(r.doc_id for r in grp.collect()) == sorted(
-            r.doc_id for r in s.filter(F.col("src") == src).collect()
-        )
-    # small group: returns the whole group, never pads
-    tiny = weighted_sample_per_group(df.filter("doc_id < 4"), "w", 5, ["src"])
-    assert tiny.count() == 4
-
-
 def test_bernoulli_keep_p_one_keeps_everything(spark):
     # round-6 review find: format(65536,'04x') is the FIVE-char '10000'
     # and the lexicographic compare h4 < '10000' kept only ~6% of rows;

@@ -8,13 +8,38 @@ from waddleml_spark.sources import snaptable as st
 from waddleml_spark.streaming import snapsink
 
 
+def _epoch_log(table: str) -> list[dict]:
+    """Version -> (stream, epoch, rows) for the sink's commits, read from
+    the manifests.  ``rows`` is the rows COMMITTED BY that epoch: a
+    manifest lists the cumulative file set, so an epoch's count is the
+    rows of the files new relative to the preceding version."""
+    out = []
+    prev_paths: set = set()
+    for v in st._versions(table):
+        m = st._load_manifest(table, v)
+        files = {f["path"]: f["rows"] for f in m["files"]}
+        op = m["operation"]
+        if op.startswith("append-epoch-"):  # append-epoch-<stream_id>-<epoch>
+            stream, _, epoch = op[len("append-epoch-"):].rpartition("-")
+            out.append(
+                {
+                    "version": v,
+                    "stream": stream,
+                    "epoch": int(epoch),
+                    "rows": sum(r for f, r in files.items() if f not in prev_paths),
+                }
+            )
+        prev_paths = set(files)
+    return out
+
+
 def test_each_epoch_becomes_one_version(spark, tmp_path):
     tbl = str(tmp_path / "s1")
     sink = snapsink.snapshot_sink(tbl)
     sink(spark.range(0, 10).withColumn("v", F.col("id") * 2), 0)
     sink(spark.range(10, 25).withColumn("v", F.col("id") * 2), 1)
     assert st.read(spark, tbl).count() == 25
-    log = snapsink.epoch_log(tbl)
+    log = _epoch_log(tbl)
     # rows = rows committed BY the epoch (manifests are cumulative; the
     # log diffs against the parent — round-6 fix: this read 25 before)
     assert [(e["version"], e["epoch"], e["rows"]) for e in log] == [
@@ -93,7 +118,7 @@ def test_streaming_end_to_end_rate_source(spark, tmp_path):
     n = got.count()
     assert n > 0 and got.columns == ["value"]
     assert got.distinct().count() == n  # no duplicate rows across versions
-    assert st.current_version(tbl) == len(snapsink.epoch_log(tbl))
+    assert st.current_version(tbl) == len(_epoch_log(tbl))
 
 
 def test_new_stream_id_is_not_conflated_with_old_epochs(spark, tmp_path):
@@ -111,7 +136,7 @@ def test_new_stream_id_is_not_conflated_with_old_epochs(spark, tmp_path):
     fresh = snapsink.snapshot_sink(tbl, stream_id="run2")
     fresh(df, 0)
     assert st.current_version(tbl) == 4
-    log = snapsink.epoch_log(tbl)
+    log = _epoch_log(tbl)
     assert [(e["stream"], e["epoch"]) for e in log] == [
         ("default", 0), ("default", 1), ("default", 2), ("run2", 0)
     ]
@@ -232,7 +257,7 @@ def test_two_streams_commit_concurrently(spark, tmp_path):
     with ThreadPoolExecutor(max_workers=2) as ex:
         list(ex.map(run, ["a", "b"]))
     assert st.current_version(tbl) == 2 * epochs
-    log = snapsink.epoch_log(tbl)
+    log = _epoch_log(tbl)
     assert sorted((e["stream"], e["epoch"]) for e in log) == [
         (sid, e) for sid in ("a", "b") for e in range(epochs)
     ]

@@ -1,60 +1,6 @@
-"""Stateful streaming summary + skew-salting operators."""
+"""Skew-salting and temporal-join operators."""
 
 from __future__ import annotations
-
-import pytest
-
-import waddleml_spark as w
-from waddleml_spark import state
-
-
-@pytest.fixture(autouse=True)
-def reset_state():
-    state.set_active_run(None)
-    yield
-    run = state.get_active_run()
-    if run is not None:
-        run._finished = True
-    state.set_active_run(None)
-
-
-def test_running_metric_summary_incremental(spark, tmp_path, monkeypatch):
-    from waddleml_spark.streaming.stateful import running_metric_summary
-
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="stateful", system_metrics=False, spark=spark)
-    for i in range(4):
-        run.log({"loss": float(10 - i)})
-    run.flush()
-
-    agg = running_metric_summary(run._store)
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stateful_out")
-        .start()
-    )
-    q.processAllAvailable()
-    row = spark.sql(
-        "SELECT * FROM stateful_out WHERE key = 'loss' ORDER BY n DESC LIMIT 1"
-    ).head()
-    assert row.n == 4
-    assert row.sum_v == pytest.approx(10 + 9 + 8 + 7)
-    assert row.min_v == 7.0 and row.max_v == 10.0
-    assert row.last_step == 3 and row.last_value == 7.0
-
-    # second micro-batch updates the SAME state (no rescan of history)
-    run.log({"loss": 0.5})
-    run.flush()
-    q.processAllAvailable()
-    row = spark.sql(
-        "SELECT * FROM stateful_out WHERE key = 'loss' ORDER BY n DESC LIMIT 1"
-    ).head()
-    assert row.n == 5
-    assert row.last_step == 4 and row.last_value == 0.5
-    q.stop()
-    run.finish()
-
 
 def test_salted_agg_matches_plain(spark):
     from pyspark.sql import functions as F
@@ -218,62 +164,3 @@ def test_resample_interpolate_span_inside_one_interval_is_empty(spark):
         [(1, 5.0, 1.0), (1, 7.0, 2.0)], "k long, ts double, v double"
     )
     assert resample_interpolate(df, "k", "ts", "v", 3600).count() == 0
-
-
-def test_salted_self_pairs_bit_identical_to_plain_self_join(spark):
-    # DEPLOY.md documents this as the AQE-blind-quadratic mitigation;
-    # pin the bit-identical-output guarantee it promises
-    from waddleml_spark.operators.skew import salted_self_pairs
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, i % 3) for i in range(60)], "id long, label long"
-    )
-    salted = (
-        salted_self_pairs(df, "label", "id")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-    )
-    a, b = df.alias("a"), df.alias("b")
-    plain = (
-        a.join(b, (F.col("a.label") == F.col("b.label"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_stateful_update_nan_values_consistent():
-    # round-6 review find: pandas sum/min/max skip NaN while len()
-    # counts it — n said 3 while sum covered 1 value, and an all-NaN
-    # batch poisoned min/max forever via Python min(NaN, x).  Stats now
-    # summarize the non-NaN values; last_value stays the literal latest.
-    import math
-
-    import pandas as pd
-
-    from waddleml_spark.streaming.stateful import _update
-
-    class _FakeState:
-        exists = False
-
-        def update(self, t):
-            self.stored = t
-
-    st = _FakeState()
-    pdf = pd.DataFrame(
-        {"value": [float("nan"), 5.0, float("nan")], "step": [1, 2, 3]}
-    )
-    out = list(_update(("r", "loss"), iter([pdf]), st))[0].iloc[0]
-    assert out["n"] == 1 and out["sum_v"] == 5.0
-    assert out["min_v"] == 5.0 and out["max_v"] == 5.0
-    assert out["last_step"] == 3 and math.isnan(out["last_value"])
-    # a later real batch is not poisoned by the earlier NaNs
-    st2 = _FakeState()
-    st2.exists = False
-    list(_update(("r", "loss"), iter([pd.DataFrame(
-        {"value": [float("nan")], "step": [1]})]), st2))
-    st2.exists, st2.get = True, st2.stored
-    out2 = list(_update(("r", "loss"), iter([pd.DataFrame(
-        {"value": [2.0], "step": [2]})]), st2))[0].iloc[0]
-    assert out2["min_v"] == 2.0 and out2["n"] == 1

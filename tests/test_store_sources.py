@@ -1,5 +1,5 @@
 """Store internals + source connectors: compaction (incl. bucketed metrics
-layout), empty-store reads, bulk binary ingest, scalar helpers."""
+layout), empty-store reads, scalar helpers."""
 
 from __future__ import annotations
 
@@ -53,30 +53,6 @@ def test_compact_folds_history_and_buckets_metrics(spark, tmp_path, monkeypatch)
     # metrics intact after the bucketed rewrite
     assert store.df("metrics").count() == 5
     assert store.df("runs").filter("status = 'completed'").count() == 1
-
-
-def test_bulk_binary_ingest(spark, tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    art_dir = tmp_path / "arts"
-    art_dir.mkdir()
-    (art_dir / "a.bin").write_bytes(b"alpha")
-    (art_dir / "b.bin").write_bytes(b"beta" * 100)
-    run = w.init(project="bulk", system_metrics=False, spark=spark)
-    from waddleml_spark.sources.binary import ingest_artifacts
-
-    n = ingest_artifacts(spark, run._store, run.id, str(art_dir), glob="*.bin")
-    run.finish()
-    assert n == 2
-    rows = run._store.duck.execute(
-        "SELECT name, size_bytes, sha256, inline_bytes IS NOT NULL FROM artifacts "
-        "WHERE run_id = ? ORDER BY name",
-        [run.id],
-    ).fetchall()
-    assert [(r[0], r[1]) for r in rows] == [("a.bin", 5), ("b.bin", 400)]
-    import hashlib
-
-    assert rows[0][2] == hashlib.sha256(b"alpha").hexdigest()
-    assert all(r[3] for r in rows)  # both under inline threshold
 
 
 def test_scalar_helpers(spark):

@@ -1,5 +1,5 @@
-"""Streaming tests (T1/T2): live bus fan-out, watermarked window and
-session aggregation, stream-stream join, streaming dedup, sampler feed."""
+"""Streaming tests (T1/T2): live bus fan-out and flush cadence,
+streaming dedup, sampler feed."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
-from waddleml_spark.streaming.live import LiveBus, metric_window_agg
+from waddleml_spark.streaming.live import LiveBus
 
 
 @pytest.fixture(autouse=True)
@@ -169,60 +169,6 @@ def test_cadence_falls_back_once_the_last_ws_client_is_pruned(tmp_path, monkeypa
         store.close()
 
 
-def test_metric_window_agg(spark, tmp_path, monkeypatch):
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="winagg", system_metrics=False, spark=spark)
-    base = 1_700_000_010.0  # divisible by 30 → windows align with the data
-    for i in range(6):
-        run.log_metric("loss", i, float(i), ts=base + i * 10)
-    run.flush()
-
-    agg = metric_window_agg(spark, run._store, window="30 seconds")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("winagg_out")
-        .start()
-    )
-    q.processAllAvailable()
-    rows = spark.sql(
-        "SELECT n, avg_value FROM winagg_out ORDER BY window.start"
-    ).collect()
-    q.stop()
-    # 60s of points at 10s spacing over 30s tumbling windows → 3/3 split
-    assert [r.n for r in rows] == [3, 3]
-    assert rows[0].avg_value == pytest.approx(1.0)
-    run.finish()
-
-
-def test_metric_session_agg(spark, tmp_path, monkeypatch):
-    from waddleml_spark.streaming.live import metric_session_agg
-
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="sess", system_metrics=False, spark=spark)
-    base = 1_700_000_000.0
-    # two bursts separated by > gap (5 min): expect two sessions
-    for i in range(3):
-        run.log_metric("loss", i, float(i), ts=base + i * 10)
-    for i in range(2):
-        run.log_metric("loss", 10 + i, float(i), ts=base + 1000 + i * 10)
-    run.flush()
-    agg = metric_session_agg(spark, run._store, gap="5 minutes")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_out")
-        .start()
-    )
-    q.processAllAvailable()
-    rows = spark.sql(
-        "SELECT n FROM sess_out ORDER BY session_window.start"
-    ).collect()
-    q.stop()
-    assert [r.n for r in rows] == [3, 2]
-    run.finish()
-
-
 def test_sampler_writes_system_metrics(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     from waddleml_spark.sysmetrics import sample_system_metrics
@@ -241,37 +187,6 @@ def test_sampler_writes_system_metrics(spark, tmp_path, monkeypatch):
             ).fetchall()
         ]
         assert "system/cpu_percent" in keys
-    run.finish()
-
-
-def test_metric_pair_stream_stream_join(spark, tmp_path, monkeypatch):
-    from waddleml_spark.streaming.live import metric_pair_join
-
-    monkeypatch.chdir(tmp_path)
-    run = w.init(project="pairjoin", system_metrics=False, spark=spark)
-    base = 1_700_000_000.0
-    # loss every 20s; lr 5s after each — with ±6s tolerance each loss
-    # pairs with exactly its own lr (neighbors are 15s away); the lr at
-    # +300s is beyond every loss's tolerance
-    for i in range(3):
-        run.log_metric("loss", i, 1.0 * i, ts=base + i * 20)
-        run.log_metric("lr", i, 0.1 * i, ts=base + i * 20 + 5)
-    run.log_metric("lr", 99, 9.9, ts=base + 300)
-    run.flush()
-
-    joined = metric_pair_join(spark, run._store, "loss", "lr", tolerance_seconds=6)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("pair_out")
-        .start()
-    )
-    q.processAllAvailable()
-    rows = spark.sql(
-        "SELECT l_step, r_step FROM pair_out ORDER BY l_step"
-    ).collect()
-    q.stop()
-    assert [(r.l_step, r.r_step) for r in rows] == [(0, 0), (1, 1), (2, 2)]
     run.finish()
 
 

@@ -3,7 +3,7 @@
 waddle/_schema.py:70).
 
 Design: image/audio/video travel as `binary` columns with a metadata
-struct (modality, mime, width/height/duration...).  Decode / resize /
+struct (modality, mime, width/height/duration...).  Decode and
 frame-sample run as Arrow-batched functions over mapInPandas so each
 partition processes a columnar batch.
 
@@ -338,50 +338,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """STUB resize kernel: deterministic fake — real deployments drop in
-    PIL here.  Produces a payload whose size tracks the target dims so
-    downstream size accounting is testable."""
-    if payload is None:
-        raise NotImplementedError("no payload; real decoder not bundled")
-    digest = hashlib.sha256(payload).digest()
-    need = max(1, (width * height) // 64)
-    return (digest * (need // len(digest) + 1))[:need]
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize over mapInPandas: Arrow batches in/out, payload →
-    payload, metadata updated.  The Spark-side contract (schema, batch
-    shape, partition-parallel) is real; the pixel kernel is stubbed."""
-    from waddleml_spark.session import ensure_shipped, fan_out
-
-    ensure_shipped(media.sparkSession)
-    src = fan_out(media.select("media_id", "payload"))
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "width": width,
-                    "height": height,
-                    "payload": [resize_stub(p, width, height) for p in pdf["payload"]],
-                }
-            )
-
-    return src.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(

@@ -288,42 +288,6 @@ def weighted_sample(
     )
 
 
-def weighted_sample_per_group(
-    df: DataFrame,
-    weight_col: str,
-    k_per_group: int,
-    group_cols: list[str],
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """Stratified :func:`weighted_sample`: the k smallest A-ES keys
-    WITHIN each group — the balanced-corpus construction shape (equal
-    doc budget per source/language, weight-proportional inside each).
-
-    Same deterministic hash-derived uniform; the global TakeOrdered
-    becomes one window rank over the group key.  At scale this is a
-    single shuffle on ``group_cols`` with WindowGroupLimit pre-limiting
-    per task before the exchange (the top3_orders_per_cust plan shape).
-    """
-    from pyspark.sql import Window
-
-    h32 = F.conv(
-        F.substring(order_key(F.col(id_col), salt), 1, 8), 16, 10
-    ).cast("double")
-    u = (h32 + F.lit(1.0)) / F.lit(float(1 << 32))
-    w = F.col(weight_col).cast("double")
-    win = Window.partitionBy(*group_cols).orderBy(
-        F.asc("aes_key"), F.asc(id_col)
-    )
-    return (
-        df.filter(w > 0)
-        .withColumn("aes_key", -F.log(u) / w)
-        .withColumn("__rk", F.row_number().over(win))
-        .filter(F.col("__rk") <= k_per_group)
-        .drop("__rk")
-    )
-
-
 def training_shard_plan(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -72,49 +72,6 @@ def salted_broadcast_left(
     return bigs.join(F.broadcast(smalls), on=[on, "__salt"]).drop("__salt")
 
 
-def salted_self_pairs(
-    df: DataFrame,
-    block_col: str,
-    id_col: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Self-join pair frame within a blocking key, with the quadratic
-    work SPREAD over ``len(blocks) * salt_buckets`` tasks instead of one
-    task per block.
-
-    A plain self-equi-join on a low-cardinality blocking key caps
-    parallelism at the number of distinct keys — and worse, AQE's
-    input-size-based coalescing sees tiny INPUT partitions and merges
-    them, oblivious to the quadratic JOIN OUTPUT each one fans into
-    (measured 2.2x slower than static planning on a 5-label embedding
-    self-join).  Salting restores the parallelism AQE can't infer: the
-    left side gets a deterministic salt from its id, the right side
-    replicates once per salt value, and the join keys on
-    (block, salt) — every unordered pair still meets exactly once, so
-    with the caller's usual ``a.id < b.id`` dedup the OUTPUT is
-    bit-identical to the unsalted join.  Cost: right side shuffles
-    salt_buckets copies — choose salt_buckets ~ cores/blocks, small.
-
-    Returns the joined frame with sides aliased ``a`` and ``b``; apply
-    pair predicates (id ordering, similarity threshold) on top.
-    """
-    a = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    )
-    # shuffle_merge pins the strategy: at small scale the replicated side
-    # slips under the broadcast threshold, but broadcasting a salted COPY
-    # of the corpus is the exact full-side-broadcast this operator exists
-    # to avoid — the plan must be the one that survives 100x.
-    b = df.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    ).hint("shuffle_merge")
-    return a.alias("a").join(
-        b.alias("b"),
-        (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-        & (F.col("a.__salt") == F.col("b.__salt")),
-    )
-
-
 def sliced_running_sum(
     df: DataFrame,
     key_col: str,

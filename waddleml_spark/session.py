@@ -50,12 +50,6 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # expr-string plan builds (llmops.sql_str) double backslashes on
-        # the assumption the SQL parser processes escapes inside quoted
-        # literals — the default, but a Hive-compat flag can flip it and
-        # silently corrupt every embedded regex.  Pin the default
-        # explicitly; read_table re-pins it at runtime for bare sessions.
-        .config("spark.sql.parser.escapedStringLiterals", "false")
         # driver testdata writes events.ts as TIMESTAMP(NANOS); Spark can't
         # read nanos natively — read as long, convert in read_table()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -237,10 +231,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     # expr-string plan builds (llmops.sql_str) require the default
     # escape-processing parser; a session with the Hive-compat
     # escapedStringLiterals flag would silently corrupt every embedded
-    # regex literal (doubled backslashes kept literally), so pin it
-    # here where every catalog query passes through
+    # regex literal (doubled backslashes kept literally), so reset it
+    # here where every catalog query passes through.  Spark 4 deprecated
+    # the conf and logs a WARN on each set, so set it only when it is on.
+    escaped = "spark.sql.parser.escapedStringLiterals"
     try:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+        if spark.conf.get(escaped, "false") != "false":
+            spark.conf.set(escaped, "false")
     except Exception:
         pass
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

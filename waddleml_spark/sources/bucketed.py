@@ -105,23 +105,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     reintroduce the shuffle — the catalog carries the layout metadata,
     so always read through it)."""
     return spark.table(table)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style directory partitioning — the other half of the 100 TB
-    layout story (bucketing co-locates joins; partitioning prunes scans).
-
-    A filter on a partition column never reads the excluded directories
-    at all: the planner resolves `PartitionFilters` against directory
-    names before any I/O, so a day-filter on a year of daily partitions
-    scans 1/365th of the files.  Choose LOW-cardinality derived columns
-    (date, source, lang) — one directory (and ≥1 file) per value; a
-    high-cardinality partition key is the classic small-files mistake
-    (bucket by it instead).
-    """
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)

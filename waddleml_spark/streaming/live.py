@@ -28,24 +28,19 @@ The invariant above is unchanged: a watched run flushes sooner, it does
 not publish sooner than its flush.  The price is more part files, paid
 only while someone watches.
 
-Watermarked windowed aggregation (metric_window_agg) goes beyond the
-reference (which has no event-time windows at all — staleness T3 is a
-query-time batch expression, see operators.core.stale_status).
+Nothing here tails the store's part files as a Spark stream: a file
+source would miss the `_cdc_deletes` tombstones `WaddleStore.df()`
+anti-joins, and since it tracks files by name it would count every row
+`compact()` rewrites a second time.  The two dedup operators below run
+on a document stream the caller supplies.
 """
 
 from __future__ import annotations
 
 import threading
 from collections.abc import Callable
-from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from waddleml_spark import schemas
-
-if TYPE_CHECKING:  # store imports this module for LiveBus
-    from waddleml_spark.store import WaddleStore
 
 Subscriber = Callable[[list[dict]], None]
 
@@ -81,57 +76,6 @@ class LiveBus:
         if dead:
             with self._lock:
                 self._subs = [s for s in self._subs if s not in dead]
-
-
-def metric_window_agg(
-    spark: SparkSession,
-    store: WaddleStore,
-    window: str = "30 seconds",
-    slide: str | None = None,
-    watermark: str = "2 minutes",
-):
-    """Watermarked event-time windowed aggregation over the live metric
-    stream: per (window, run_id, key) count/avg/min/max.  Late rows beyond
-    the watermark are dropped — the engine's late-data story, absent in the
-    reference (extension operator).
-
-    Returns the streaming DataFrame; callers attach a sink
-    (memory sink for tests, foreachBatch→store for materialized rollups).
-    """
-    src = (
-        spark.readStream.schema(schemas.METRICS)
-        .parquet(store._dir("metrics"))
-        .withColumn("event_time", F.timestamp_seconds(F.col("ts")))
-        .withWatermark("event_time", watermark)
-    )
-    win = F.window("event_time", window, slide) if slide else F.window("event_time", window)
-    return src.groupBy(win, "run_id", "key").agg(
-        F.count("*").alias("n"),
-        F.avg("value").alias("avg_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-
-
-def metric_session_agg(
-    spark: SparkSession,
-    store: WaddleStore,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-):
-    """Session-window aggregation over the live metric stream: dynamic
-    per-(run, key) sessions that close after `gap` of event-time silence —
-    the streaming rendition of the batch sessionize operator
-    (catalog `sessionize_users`).  Extension beyond the reference."""
-    src = (
-        spark.readStream.schema(schemas.METRICS)
-        .parquet(store._dir("metrics"))
-        .withColumn("event_time", F.timestamp_seconds(F.col("ts")))
-        .withWatermark("event_time", watermark)
-    )
-    return src.groupBy(
-        F.session_window("event_time", gap), "run_id", "key"
-    ).agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
 
 
 def stream_dedup(
@@ -214,50 +158,3 @@ def stream_url_dedup(
         .drop("__curl")
     )
     return deduped.unionByName(docs.filter(~has_url))
-
-
-def metric_pair_join(
-    spark: SparkSession,
-    store: WaddleStore,
-    left_key: str,
-    right_key: str,
-    tolerance_seconds: int = 30,
-    watermark: str = "2 minutes",
-):
-    """Stream-stream inner join: correlate two live metric keys of the
-    same run whose event times fall within ±tolerance (e.g. pair each
-    `loss` point with the `lr` in effect around it).
-
-    The canonical watermarked interval join: BOTH sides carry a
-    watermark and the join condition bounds event-time distance, so the
-    engine can expire state — each side buffers only
-    watermark + tolerance of data per run, regardless of stream length.
-    Without the time bound this would be an ever-growing state table;
-    with it, state is O(rate × window) — the property that keeps the
-    join runnable forever at scale.  Extension beyond the reference
-    (its dashboard correlates metrics only at query time over DuckDB).
-    """
-    def side(key: str, alias: str):
-        return (
-            spark.readStream.schema(schemas.METRICS)
-            .parquet(store._dir("metrics"))
-            .filter(F.col("key") == key)
-            .withColumn("event_time", F.timestamp_seconds(F.col("ts")))
-            .withWatermark("event_time", watermark)
-            .select(
-                F.col("run_id").alias(f"{alias}_run"),
-                F.col("step").alias(f"{alias}_step"),
-                F.col("value").alias(f"{alias}_value"),
-                F.col("event_time").alias(f"{alias}_time"),
-            )
-        )
-
-    a, b = side(left_key, "l"), side(right_key, "r")
-    tol = F.expr(f"INTERVAL {int(tolerance_seconds)} SECONDS")
-    return a.join(
-        b,
-        (F.col("l_run") == F.col("r_run"))
-        & (F.col("r_time") >= F.col("l_time") - tol)
-        & (F.col("r_time") <= F.col("l_time") + tol),
-        "inner",
-    )

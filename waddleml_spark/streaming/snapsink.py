@@ -37,16 +37,6 @@ from pyspark.sql import functions as F
 from waddleml_spark.sources import snaptable
 
 
-def _parse_epoch_op(op: str) -> tuple[str, int] | None:
-    """'append-epoch-<epoch>' (legacy → stream 'default') or
-    'append-epoch-<stream_id>-<epoch>' → (stream_id, epoch)."""
-    if not op.startswith("append-epoch-"):
-        return None
-    rest = op[len("append-epoch-"):]
-    head, _, tail = rest.rpartition("-")
-    return (head or "default", int(tail))
-
-
 def _commit_epoch(df: DataFrame, table: str, stream_id: str, epoch_id: int) -> None:
     """Commit one non-replayed micro-batch as the next version, tagged
     (stream_id, epoch) in its operation and its manifest's ``streams``;
@@ -133,36 +123,6 @@ def dedup_snapshot_sink(
         _commit_epoch(fresh.localCheckpoint(), table, stream_id, epoch_id)
 
     return sink
-
-
-def epoch_log(table: str) -> list[dict]:
-    """Version -> (stream, epoch) mapping for the sink's commits.
-
-    ``rows`` is the rows COMMITTED BY that epoch: manifests store the
-    cumulative hydrated file list, so the per-epoch count is the rows
-    of files NEW relative to the immediately preceding version (summing
-    the raw manifest was reporting ever-growing whole-table counts —
-    round-6 review find)."""
-    out = []
-    prev_paths: set = set()
-    for v in snaptable._versions(table):
-        m = snaptable._load_manifest(table, v)
-        files = {f["path"]: f["rows"] for f in m["files"]}
-        parsed = _parse_epoch_op(m["operation"])
-        if parsed:
-            sid, epoch = parsed
-            out.append(
-                {
-                    "version": v,
-                    "stream": sid,
-                    "epoch": epoch,
-                    "rows": sum(
-                        r for p, r in files.items() if p not in prev_paths
-                    ),
-                }
-            )
-        prev_paths = set(files)
-    return out
 
 
 def neardup_snapshot_sink(

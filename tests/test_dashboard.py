@@ -159,7 +159,7 @@ def test_list_runs_matches_duckdb_mirror(seeded):
 
 def test_series_downsample_bounds_and_coverage(spark):
     from pyspark.sql import functions as F
-    from waddleml_spark.operators.dashboard import series_downsample
+    from waddleml_spark.operators.core import series_downsample
     from tests.conftest import SF_SMOKE
 
     from waddleml_spark.session import read_table
@@ -185,7 +185,7 @@ def test_series_downsample_bounds_and_coverage(spark):
 
 def test_lttb_keeps_spikes_mean_downsample_flattens(spark):
     from pyspark.sql import functions as F
-    from waddleml_spark.operators.dashboard import lttb_downsample
+    from waddleml_spark.operators.core import lttb_downsample
 
     # flat series with one huge spike mid-way
     rows = [(0, float(i), 1.0 if i != 500 else 100.0) for i in range(1000)]
@@ -209,7 +209,7 @@ def test_list_runs_status_sort_uses_stored_status_for_page_membership(seeded):
 
 
 def test_series_downsample_null_x_rows_do_not_pollute_last_bucket(spark):
-    from waddleml_spark.operators.dashboard import series_downsample
+    from waddleml_spark.operators.core import series_downsample
     from pyspark.sql import functions as F
 
     rows = [("g", float(i), 1.0) for i in range(100)] + [("g", None, 1000.0)]
@@ -220,7 +220,7 @@ def test_series_downsample_null_x_rows_do_not_pollute_last_bucket(spark):
 
 
 def test_lttb_single_bucket_group_keeps_both_endpoints(spark):
-    from waddleml_spark.operators.dashboard import lttb_downsample
+    from waddleml_spark.operators.core import lttb_downsample
 
     # constant x -> span 0 -> every row lands in bucket 0
     df = spark.createDataFrame(

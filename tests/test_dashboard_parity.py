@@ -23,13 +23,8 @@ import pytest
 
 import waddleml_spark as w
 from waddleml_spark import state
-from waddleml_spark.operators.dashboard import (
-    _SQL,
-    MirrorDashboard,
-    SparkDashboard,
-    _dumps,
-    series_downsample,
-)
+from waddleml_spark.operators.core import series_downsample
+from waddleml_spark.operators.dashboard import _SQL, MirrorDashboard, SparkDashboard, _dumps
 from waddleml_spark.store import WaddleStore
 from tests.test_dashboard import seeded  # noqa: F401  (module-scoped store)
 

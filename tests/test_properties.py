@@ -1,5 +1,5 @@
 """Property-based differential tests (hypothesis): the custom operators
-(as-of join, range join, last-per-group, stale status) vs brute-force
+(as-of join, range join, last-per-group) vs brute-force
 Python reference semantics on randomized inputs — beyond the reference's
 example-based suite (SURVEY.md §5)."""
 
@@ -117,37 +117,6 @@ def test_range_join_matches_bruteforce(spark, rows, dist):
         for j, (u2, t2, _) in enumerate(rows)
         if u1 == u2 and abs(t1 - t2) <= dist
     }
-    assert got == want
-
-
-@given(
-    rows=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 1000)), min_size=0, max_size=20
-    ),
-    threshold=st.integers(1, 500),
-)
-@SET
-def test_stale_status_matches_bruteforce(spark, rows, threshold):
-    from waddleml_spark.operators.core import stale_status
-
-    now = 2000.0
-    run_ids = sorted({u for u, _ in rows} | {99})  # 99 has no metrics
-    runs = spark.createDataFrame(
-        [(str(u), "running", 0.0) for u in run_ids],
-        "id string, status string, started_at double",
-    )
-    metrics = spark.createDataFrame(
-        [(str(u), float(t)) for u, t in rows], "run_id string, ts double"
-    )
-    got = {
-        (r.id, r.status)
-        for r in stale_status(runs, metrics, now_ts=now, threshold_s=float(threshold)).collect()
-    }
-    want = set()
-    for u in run_ids:
-        ts = [t for uu, t in rows if uu == u]
-        last = max(ts) if ts else 0.0  # falls back to started_at=0
-        want.add((str(u), "aborted" if last < now - threshold else "running"))
     assert got == want
 
 

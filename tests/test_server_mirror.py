@@ -154,13 +154,13 @@ def test_non_finite_metrics_are_strict_json_null(tmp_path):
 
 def test_serving_never_starts_spark(tmp_path):
     """A finished store opened the way `cli serve` opens it, every GET
-    route and POST /api/compare answered 200, DELETE of a run answered 200
-    and the run then 404, and no SparkContext (no JVM) at exit."""
+    route and POST /api/compare answered 200, a /ws handshake answered
+    101, DELETE of a run answered 200 and the run then 404, and no pyspark
+    module imported at exit (so no JVM)."""
     script = textwrap.dedent(
         f"""
-        import json, sys, threading, urllib.error, urllib.request
+        import json, socket, sys, threading, urllib.error, urllib.request
         sys.path.insert(0, {REPO!r})
-        import pyspark
         import waddleml_spark as w
         from waddleml_spark.server import make_http_server
         from waddleml_spark.store import WaddleStore
@@ -194,6 +194,16 @@ def test_serving_never_starts_spark(tmp_path):
                                      data=json.dumps({{"run_ids": ids}}).encode())
         with urllib.request.urlopen(req, timeout=30) as r:
             statuses["/api/compare"] = r.status
+        with socket.create_connection(srv.server_address, timeout=30) as ws:
+            ws.sendall(b"GET /ws HTTP/1.1\\r\\nHost: x\\r\\nUpgrade: websocket\\r\\n"
+                       b"Connection: Upgrade\\r\\nSec-WebSocket-Key: dGhlIHNhbXBsZSBub25jZQ==\\r\\n"
+                       b"Sec-WebSocket-Version: 13\\r\\n\\r\\n")
+            f = ws.makefile("rb")
+            status = int(f.readline().split()[1])
+            headers = set(iter(f.readline, b"\\r\\n"))
+            # RFC 6455 §1.3's sample key and its accept value
+            ok = b"Sec-WebSocket-Accept: s3pPLMBiTxaQ9kYGzzhZRbK+xOo=\\r\\n" in headers
+            statuses["/ws"] = status if ok else -1
         gone = f"/api/runs/{{ids[2]}}"
         req = urllib.request.Request(base + gone, method="DELETE")
         with urllib.request.urlopen(req, timeout=30) as r:
@@ -205,7 +215,7 @@ def test_serving_never_starts_spark(tmp_path):
         srv.shutdown()
         print(json.dumps({{
             "statuses": statuses,
-            "spark": pyspark.SparkContext._active_spark_context is not None,
+            "pyspark": sorted(m for m in sys.modules if m.split(".")[0] == "pyspark"),
         }}))
         """
     )
@@ -214,9 +224,10 @@ def test_serving_never_starts_spark(tmp_path):
     res = json.loads(out.stdout.strip().splitlines()[-1])
     statuses = res["statuses"]
     assert statuses.pop("GET after DELETE") == 404
+    assert statuses.pop("/ws") == 101
     assert len(statuses) == 11
     assert set(statuses.values()) == {200}, statuses
-    assert res["spark"] is False
+    assert res["pyspark"] == []
 
 
 def test_polling_while_a_run_logs(tmp_path):

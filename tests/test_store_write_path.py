@@ -38,14 +38,14 @@ def reset_state():
 
 def test_write_only_run_never_starts_spark(tmp_path):
     """init → 200 log → log_artifact → finish in a fresh interpreter: no
-    SparkContext (no JVM) is ever created, and the run ends completed."""
+    pyspark module is ever imported (so no JVM starts), and the run ends
+    completed."""
     art = tmp_path / "model.bin"
     art.write_bytes(b"weights")
     script = textwrap.dedent(
         f"""
         import json, sys
         sys.path.insert(0, {REPO!r})
-        import pyspark
         import waddleml_spark as w
 
         run = w.init(project="wo", config={{"lr": 0.1}}, tags={{"team": "a"}},
@@ -58,8 +58,7 @@ def test_write_only_run_never_starts_spark(tmp_path):
             "SELECT status, ended_at FROM runs WHERE id = ?", [run.id]
         ).fetchone()
         print(json.dumps({{
-            "spark": pyspark.SparkContext._active_spark_context is not None,
-            "gateway": pyspark.SparkContext._gateway is not None,
+            "pyspark": sorted(m for m in sys.modules if m.split(".")[0] == "pyspark"),
             "status": status,
             "ended_at": ended,
         }}))
@@ -74,7 +73,7 @@ def test_write_only_run_never_starts_spark(tmp_path):
         check=True,
     )
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert res["spark"] is False and res["gateway"] is False
+    assert res["pyspark"] == []
     assert res["status"] == "completed"
     assert res["ended_at"] is not None
 

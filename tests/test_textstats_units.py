@@ -323,20 +323,27 @@ def test_sql_str_literal_round_trips_regex_patterns(spark):
 def test_read_table_turns_off_escaped_string_literals(spark, tmp_path):
     # a session with the Hive-compat escapedStringLiterals flag on keeps
     # sql_str's doubled backslashes literally, corrupting every embedded
-    # regex; read_table turns the flag back off (on a table's first read:
-    # later reads of it are memoized, hence a table of this test's own)
+    # regex; read_table turns the flag back off, and does so again when
+    # it is flipped after the table's first read (a memo hit)
     from waddleml_spark.llmops import sql_str
     from waddleml_spark.session import read_table
 
     spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
     flag = "spark.sql.parser.escapedStringLiterals"
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
     digits = sql_str(r"\d+")
     query = f"SELECT regexp_replace('a12b', {digits}, '#') AS s"
     spark.conf.set(flag, "true")
     try:
         assert spark.sql(query).head().s == "a12b"  # the corruption
-        assert read_table(spark, str(tmp_path), "t").count() == 3
+        first = read_table(spark, str(tmp_path), "t")
+        assert first.count() == 3
         assert spark.conf.get(flag) == "false"
         assert spark.sql(query).head().s == "a#b"
+        for conf in (flag, ntz):
+            spark.conf.set(conf, "true")
+        assert read_table(spark, str(tmp_path), "t") is first
+        assert [spark.conf.get(c) for c in (flag, ntz)] == ["false", "false"]
     finally:
         spark.conf.set(flag, "false")
+        spark.conf.set(ntz, "false")

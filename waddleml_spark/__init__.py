@@ -11,7 +11,7 @@ search, text analysis, multimodal columns) designed for 100 TB scale.
 
 Layout:
     session     SparkSession factory (AQE, UTC, arrow, tuned shuffle)
-    schemas     StructTypes for the 7 waddle tables + driver tables
+    schemas     the 7 waddle tables' spec; DuckDB DDL, Arrow and Spark schemas
     store       Parquet event-log storage + DuckDB write-through mirror
     api / run   wandb-style init/log/finish lifecycle (ref: waddle/_api.py)
     operators/  read-path query library (SURVEY.md §2.2-2.8)

@@ -558,8 +558,8 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def series_downsample_50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chart downsampling to ≤50 points per series (dashboard.
-    series_downsample): equal-width buckets over each series' time
+    """Chart downsampling to ≤50 points per series (operators.
+    core.series_downsample): equal-width buckets over each series' time
     extent, mean point + min/max band per bucket.
 
     The reference truncates series at a row cap (get_metrics limit=5000,
@@ -567,7 +567,7 @@ def series_downsample_50(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded output — and stays two broadcast-joined aggregates, so a
     billion-point series downsamples in one pass with no sort.
     """
-    from waddleml_spark.operators.dashboard import series_downsample
+    from waddleml_spark.operators.core import series_downsample
 
     ev = t(spark, sf_dir, "events").withColumn("__x", _epoch("ts"))
     out = series_downsample(ev, ["event_type"], "__x", "value", target_points=50)
@@ -628,11 +628,11 @@ def series_downsample_50(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def series_lttb_50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LTTB chart downsampling to ≤50 points per series (parallel
-    neighbor-mean variant — dashboard.lttb_downsample): keeps the
+    neighbor-mean variant — core.lttb_downsample): keeps the
     visually dominant point of each bucket instead of the mean, which
     preserves spikes a mean-downsample flattens.  Fully relational:
     bucket means + one lag/lead window + per-bucket argmax."""
-    from waddleml_spark.operators.dashboard import lttb_downsample
+    from waddleml_spark.operators.core import lttb_downsample
 
     ev = t(spark, sf_dir, "events").withColumn("__x", _epoch("ts"))
     out = lttb_downsample(ev, ["event_type"], "__x", "value", target_points=50)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -90,75 +90,6 @@ def last_per_group(
     w = Window.partitionBy(*group_cols).orderBy(order)
     fn = F.rank() if keep_ties else F.row_number()
     return df.withColumn("__rk", fn.over(w)).filter(F.col("__rk") == 1).drop("__rk")
-
-
-def top_n_per_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_exprs: Sequence[Column],
-    n: int,
-) -> DataFrame:
-    """Top-N rows per group (extension of W1; standard OLAP top-k).
-
-    Pass fully-deterministic order_exprs (include a unique tiebreaker) so
-    results are stable across partitionings.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(*order_exprs)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
-    )
-
-
-def stale_status(
-    runs: DataFrame,
-    metrics: DataFrame,
-    now_ts: float,
-    threshold_s: float = 300.0,
-    run_id_col: str = "id",
-    status_col: str = "status",
-    started_col: str = "started_at",
-) -> DataFrame:
-    """Query-time stale-run reclassification (ref P9/T3).
-
-    Ref: waddle/_dashboard_api.py:56-69 — a per-row correlated MAX(ts)
-    re-query in a Python loop (N+1).  Here: one aggregate + one broadcastable
-    left join + a CASE expression, evaluated lazily (never written back),
-    exactly the reference's semantics at threshold 300 s.
-    """
-    last = metrics.groupBy(F.col("run_id").alias("__rid")).agg(
-        F.max("ts").alias("__last_ts")
-    )
-    joined = runs.join(last, runs[run_id_col] == F.col("__rid"), "left")
-    effective = F.when(
-        (F.col(status_col) == "running")
-        & (F.coalesce(F.col("__last_ts"), F.col(started_col)) < F.lit(now_ts - threshold_s)),
-        F.lit("aborted"),
-    ).otherwise(F.col(status_col))
-    return joined.withColumn(status_col, effective).drop("__rid", "__last_ts")
-
-
-def pivot_wide(
-    df: DataFrame,
-    row_key: str,
-    pivot_col: str,
-    value_col: str,
-    pivot_values: Sequence[str] | None = None,
-    agg: str = "first",
-) -> DataFrame:
-    """Pivot an EAV/tall table to wide (ref A4 param-diff:
-    waddle/_dashboard_api.py:171-183 + index.html:373-389, done in
-    Python/JS there; a single relational pivot here).
-
-    Always pass `pivot_values` in production: it avoids the extra distinct
-    pass over the data and keeps the output schema stable.
-    """
-    aggfn = {"first": F.first, "avg": F.avg, "sum": F.sum, "max": F.max}[agg]
-    piv = df.groupBy(row_key).pivot(
-        pivot_col, list(pivot_values) if pivot_values is not None else None
-    )
-    return piv.agg(aggfn(value_col))
 
 
 def distinct_values(df: DataFrame, col_name: str, exclude_prefix: str | None = None) -> DataFrame:
@@ -263,3 +194,158 @@ def profile_columns(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
         .selectExpr(f"explode({rows}) AS p")
         .select("p.*")
     )
+
+
+def series_downsample(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    order_col: str,
+    value_col: str,
+    target_points: int = 1000,
+) -> DataFrame:
+    """Chart-ready series downsampling: bucket each group's order range
+    into ≤target_points equal-width buckets and emit one averaged point
+    per bucket (bucket midpoint as x, mean as y, min/max to draw error
+    bands).
+
+    The reference CAPS series at 5,000 rows (get_metrics limit —
+    _dashboard_api.py:136) and silently drops the rest; this keeps the
+    whole series' shape at bounded output size.  Pure two-pass
+    aggregate: per-group extent (tiny, broadcast back), then one
+    grouped mean over (group, bucket) — no window, no sort, scales to
+    series of any length.  Constant-valued order ranges (hi == lo)
+    collapse to bucket 0.
+    """
+    # drop NULL-x rows up front: they belong to no bucket, and the
+    # bucket expression would otherwise dump them into the LAST one
+    # (F.least SKIPS null args: least(NULL, tp-1) = tp-1 — round-6
+    # review find), skewing its stats
+    df = df.filter(F.col(order_col).isNotNull())
+    ext = df.groupBy(*group_cols).agg(
+        F.min(order_col).alias("__lo"), F.max(order_col).alias("__hi")
+    )
+    j = df.join(F.broadcast(ext), list(group_cols))
+    span = F.col("__hi") - F.col("__lo")
+    bucket = F.when(span <= 0, F.lit(0)).otherwise(
+        F.least(
+            F.floor(
+                (F.col(order_col) - F.col("__lo")) / span * target_points
+            ).cast("int"),
+            F.lit(target_points - 1),
+        )
+    )
+    return (
+        j.withColumn("__b", bucket)
+        .groupBy(*group_cols, "__b")
+        .agg(
+            F.avg(order_col).alias("x"),
+            F.avg(value_col).alias("y_mean"),
+            F.min(value_col).alias("y_min"),
+            F.max(value_col).alias("y_max"),
+            F.count("*").alias("n_points"),
+        )
+        .withColumnRenamed("__b", "bucket")
+    )
+
+
+def lttb_downsample(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    order_col: str,
+    value_col: str,
+    target_points: int = 1000,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Largest-Triangle-Three-Buckets chart downsampling, parallel variant.
+
+    Classic LTTB selects, per bucket, the point forming the largest
+    triangle with the PREVIOUS SELECTED point and the next bucket's mean
+    — a sequential dependency chain.  The standard parallel relaxation
+    anchors on the neighbor buckets' MEANS instead (both sides), which
+    breaks the chain: every bucket selects independently, one window
+    pass over bucket-level rows.  First/last buckets keep their
+    first/last points exactly (LTTB's endpoint rule).
+
+    Cross-engine determinism: bucket means are floor-rounded before the
+    area formula (double SUM order is engine-dependent; everything after
+    is per-row IEEE arithmetic), and the per-bucket argmax is a
+    row_number ordered by (area DESC, order_col) — ties break on the
+    x position, never on float identity.
+    """
+    # Built from parsed expr strings (round-8 conversion): the Column-API
+    # build — two windows with seven window Columns, the area formula,
+    # three row_numbers — paid 0.37 s of driver py4j per invocation at
+    # sf0.1, half this query's wall; the parsed strings produce the
+    # identical Catalyst plan (oracle parity re-certified).  0.5D in the
+    # rounding literal: a bare SQL 0.5 parses as DECIMAL and would
+    # insert a cast the Column build never had.
+    def bq(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    g = [bq(c) for c in group_cols]
+    gl = ", ".join(g)
+    x, y = bq(order_col), bq(value_col)
+    tp = int(target_points)
+    # drop NULL-x rows up front: they belong to no bucket, and the
+    # bucket expression would otherwise dump them into the LAST one
+    # (least() SKIPS null args: least(NULL, tp-1) = tp-1 — round-6
+    # review find), skewing its stats
+    df = df.filter(f"{x} IS NOT NULL")
+    ext = df.groupBy(*group_cols).agg(
+        F.expr(f"min({x}) AS __lo"), F.expr(f"max({x}) AS __hi")
+    )
+    j = df.join(F.broadcast(ext), list(group_cols))
+    bucket = (
+        "CASE WHEN __hi - __lo <= 0 THEN 0 ELSE least("
+        f"CAST(floor(({x} - __lo) / (__hi - __lo) * {tp}) AS INT), {tp - 1})"
+        " END"
+    )
+    d = j.selectExpr("*", f"{bucket} AS __b").drop("__lo", "__hi")
+    p = 10 ** int(round_digits)
+    rr = lambda e: f"floor(({e}) * {p} + 0.5D) / {p}"  # noqa: E731
+    means = d.groupBy(*group_cols, "__b").agg(
+        F.expr(f"{rr(f'avg({x})')} AS __mx"),
+        F.expr(f"{rr(f'avg({y})')} AS __my"),
+    )
+    wb = ("PARTITION BY " + gl + " " if g else "") + "ORDER BY __b"
+    anchors = means.selectExpr(
+        "*",
+        f"lag(__mx) OVER ({wb}) AS __px",
+        f"lag(__my) OVER ({wb}) AS __py",
+        f"lead(__mx) OVER ({wb}) AS __nx",
+        f"lead(__my) OVER ({wb}) AS __ny",
+    )
+    cand = d.join(anchors, [*group_cols, "__b"])
+    area = (
+        f"abs(__px * ({y} - __ny) + {x} * (__ny - __py)"
+        f" + __nx * (__py - {y}))"
+    )
+    interior = "(__px IS NOT NULL AND __nx IS NOT NULL)"
+    pb = "PARTITION BY " + (gl + ", __b" if g else "__b")
+    # value_col joins every tie-break: duplicate timestamps must not make
+    # the selection depend on row order
+    wsel = f"{pb} ORDER BY __area DESC, {x}, {y}"
+    wfirst = f"{pb} ORDER BY {x}, {y}"
+    wlast = f"{pb} ORDER BY {x} DESC, {y} DESC"
+    out = (
+        cand.selectExpr(
+            "*", f"CASE WHEN {interior} THEN {area} END AS __area"
+        )
+        .selectExpr(
+            "*",
+            f"row_number() OVER ({wsel}) AS __rsel",
+            f"row_number() OVER ({wfirst}) AS __rfirst",
+            f"row_number() OVER ({wlast}) AS __rlast",
+        )
+        # no px-NOT-NULL requirement on the last-bucket branch: a
+        # group collapsing to ONE bucket (constant x / short series)
+        # has px AND nx NULL, and the docstring's endpoint rule must
+        # still keep BOTH its first and last points (round-6 fix,
+        # mirrored in the SQL oracle)
+        .filter(
+            f"({interior} AND __rsel = 1)"
+            " OR (__px IS NULL AND __rfirst = 1)"
+            " OR (__nx IS NULL AND __rlast = 1)"
+        )
+    )
+    return out.selectExpr(*g, "__b AS bucket", x, y)

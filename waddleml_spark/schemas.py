@@ -1,138 +1,153 @@
-"""Explicit StructType schemas.
+"""The tracker store's tables, each written down once.
 
-Waddle-domain tables mirror the reference DDL (ref: waddle/_schema.py:3-72):
-7 tables — repos, commits, runs, params, tags, metrics, artifacts.  Types map
-per SURVEY.md §1.3: epoch-seconds DOUBLE timestamps, JSON kept as canonical
-sorted strings, BLOB → BinaryType.
+`TABLES` mirrors the reference DDL (ref: waddle/_schema.py:3-72): 7 tables
+— repos, commits, runs, params, tags, metrics, artifacts.  Types map per
+SURVEY.md §1.3: epoch-seconds DOUBLE timestamps, JSON kept as canonical
+sorted strings, BLOB → binary.  Each `Table` holds its columns (DuckDB
+type, nullability, default), its DuckDB key, unique and index
+constraints, and its upsert key.  Derived from it once at import:
 
-Driver synthetic tables (TESTDATA.md / FIXTURES.md §B) are read from parquet
-with their embedded schemas; the constants here are for validation only.
+- `DUCKDB_DDL`: the mirror's CREATE statements, one per table or index;
+- `ARROW`: each table's Parquet write schema — a versioned (upserted)
+  table carries a `_seq` column, and `_cdc_deletes` is the tombstone
+  log `WaddleStore.delete_run` appends to.
+
+`spark_schema` builds a table's Spark StructType from its Arrow schema
+when a Spark path asks for one, so a process that only logs or serves
+never imports pyspark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+import functools
+from dataclasses import dataclass
+from typing import NamedTuple
 
-# --- waddle domain (ref: waddle/_schema.py) ---------------------------------
+import pyarrow as pa
 
-REPOS = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("origin_url", T.StringType(), True),
-        T.StructField("default_branch", T.StringType(), True),
-        T.StructField("created_at", T.DoubleType(), False),
-    ]
+
+class Column(NamedTuple):
+    name: str
+    type: str  # DuckDB type; JSON is a string everywhere else
+    nullable: bool = True
+    default: str | None = None  # SQL literal
+
+
+@dataclass(frozen=True)
+class Table:
+    columns: tuple[Column, ...]
+    primary_key: tuple[str, ...] = ()
+    unique: str | None = None
+    index: tuple[str, tuple[str, ...]] | None = None  # (name, columns)
+    # the key reads are last-writer-wins on; empty for an append-only table
+    upsert_key: tuple[str, ...] = ()
+    first_writer_wins: bool = False  # upserts DO NOTHING, reads keep the first
+    run_col: str | None = None  # the column delete_run matches the run id on
+
+    @property
+    def names(self) -> list[str]:
+        return [c.name for c in self.columns]
+
+
+_RUN_KV = Table(  # EAV tables: value is a JSON-encoded scalar/structure
+    (Column("run_id", "VARCHAR", False), Column("key", "VARCHAR", False),
+     Column("value", "JSON", False)),
+    primary_key=("run_id", "key"), upsert_key=("run_id", "key"), run_col="run_id",
 )
 
-COMMITS = T.StructType(
-    [
-        T.StructField("repo_id", T.StringType(), False),
-        T.StructField("commit_sha", T.StringType(), False),
-        T.StructField("tree_sha", T.StringType(), True),
-        T.StructField("author", T.StringType(), True),
-        T.StructField("author_time", T.DoubleType(), True),
-        T.StructField("message", T.StringType(), True),
-    ]
-)
-
-RUNS = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("project", T.StringType(), False),
-        T.StructField("repo_id", T.StringType(), True),
-        T.StructField("commit_sha", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("started_at", T.DoubleType(), False),
-        T.StructField("ended_at", T.DoubleType(), True),
-        T.StructField("env", T.StringType(), True),  # canonical sorted JSON
-        T.StructField("config", T.StringType(), True),  # canonical sorted JSON
-        T.StructField("notes", T.StringType(), True),
-    ]
-)
-
-# EAV tables: PK (run_id, key), value is a JSON-encoded scalar/structure.
-PARAMS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("key", T.StringType(), False),
-        T.StructField("value", T.StringType(), False),
-    ]
-)
-TAGS = PARAMS
-
-# Tall fact table; ref has a secondary index (run_id,key,step) — our
-# equivalent is partition-by-run_id + sortWithinPartitions(key, step) so
-# parquet min/max stats prune series scans (SURVEY.md §4.1).
-METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("key", T.StringType(), False),
-        T.StructField("step", T.IntegerType(), False),
-        T.StructField("ts", T.DoubleType(), False),
-        T.StructField("value", T.DoubleType(), False),
-    ]
-)
-
-ARTIFACTS = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("created_at", T.DoubleType(), False),
-        T.StructField("uri", T.StringType(), True),
-        T.StructField("sha256", T.StringType(), True),
-        T.StructField("size_bytes", T.LongType(), True),
-        T.StructField("inline_bytes", T.BinaryType(), True),
-    ]
-)
-
-WADDLE_TABLES: dict[str, T.StructType] = {
-    "repos": REPOS,
-    "commits": COMMITS,
-    "runs": RUNS,
-    "params": PARAMS,
-    "tags": TAGS,
-    "metrics": METRICS,
-    "artifacts": ARTIFACTS,
+TABLES: dict[str, Table] = {
+    "repos": Table(
+        (Column("id", "VARCHAR", False), Column("name", "VARCHAR", False),
+         Column("path", "VARCHAR", False), Column("origin_url", "VARCHAR"),
+         Column("default_branch", "VARCHAR"), Column("created_at", "DOUBLE", False)),
+        primary_key=("id",), unique="name",
+        upsert_key=("name",),  # ref upserts repos BY NAME (waddle/_db.py:76-98)
+    ),
+    "commits": Table(
+        (Column("repo_id", "VARCHAR", False), Column("commit_sha", "VARCHAR", False),
+         Column("tree_sha", "VARCHAR"), Column("author", "VARCHAR"),
+         Column("author_time", "DOUBLE"), Column("message", "VARCHAR")),
+        primary_key=("repo_id", "commit_sha"), upsert_key=("repo_id", "commit_sha"),
+        first_writer_wins=True,
+    ),
+    "runs": Table(
+        (Column("id", "VARCHAR", False), Column("project", "VARCHAR", False, "'default'"),
+         Column("repo_id", "VARCHAR"), Column("commit_sha", "VARCHAR"),
+         Column("name", "VARCHAR"), Column("status", "VARCHAR", False, "'running'"),
+         Column("started_at", "DOUBLE", False), Column("ended_at", "DOUBLE"),
+         Column("env", "JSON"), Column("config", "JSON"), Column("notes", "VARCHAR")),
+        primary_key=("id",), upsert_key=("id",), run_col="id",
+    ),
+    "params": _RUN_KV,
+    "tags": _RUN_KV,
+    # Tall fact table.  Parquet's equivalent of the index is compact()'s
+    # cluster by run_id, sorted by (key, step), so min/max stats prune
+    # series scans (SURVEY.md §4.1).
+    "metrics": Table(
+        (Column("run_id", "VARCHAR", False), Column("key", "VARCHAR", False),
+         Column("step", "INTEGER", False), Column("ts", "DOUBLE", False),
+         Column("value", "DOUBLE", False)),
+        index=("idx_metrics_run_key_step", ("run_id", "key", "step")), run_col="run_id",
+    ),
+    "artifacts": Table(
+        (Column("id", "VARCHAR", False), Column("run_id", "VARCHAR", False),
+         Column("name", "VARCHAR", False), Column("kind", "VARCHAR", False, "'file'"),
+         Column("created_at", "DOUBLE", False), Column("uri", "VARCHAR"),
+         Column("sha256", "VARCHAR"), Column("size_bytes", "BIGINT"),
+         Column("inline_bytes", "BLOB")),
+        primary_key=("id",), run_col="run_id",
+    ),
 }
 
 # Run status enum-by-convention (ref: waddle/_run.py:53,192-201).
 RUN_STATUSES = ("running", "completed", "failed", "aborted")
 
-# DuckDB mirror DDL — semantically equivalent to waddle/_schema.py:3-72
-# (constraints relaxed: the Spark side treats these as append logs and
-# enforces key semantics via dedupe views; DuckDB is storage/oracle).
-DUCKDB_DDL = """
-CREATE TABLE IF NOT EXISTS repos (
-    id VARCHAR PRIMARY KEY, name VARCHAR NOT NULL UNIQUE, path VARCHAR NOT NULL,
-    origin_url VARCHAR, default_branch VARCHAR, created_at DOUBLE NOT NULL);
-CREATE TABLE IF NOT EXISTS commits (
-    repo_id VARCHAR NOT NULL, commit_sha VARCHAR NOT NULL, tree_sha VARCHAR,
-    author VARCHAR, author_time DOUBLE, message VARCHAR,
-    PRIMARY KEY (repo_id, commit_sha));
-CREATE TABLE IF NOT EXISTS runs (
-    id VARCHAR PRIMARY KEY, project VARCHAR NOT NULL DEFAULT 'default',
-    repo_id VARCHAR, commit_sha VARCHAR, name VARCHAR,
-    status VARCHAR NOT NULL DEFAULT 'running',
-    started_at DOUBLE NOT NULL, ended_at DOUBLE,
-    env JSON, config JSON, notes VARCHAR);
-CREATE TABLE IF NOT EXISTS params (
-    run_id VARCHAR NOT NULL, key VARCHAR NOT NULL, value JSON NOT NULL,
-    PRIMARY KEY (run_id, key));
-CREATE TABLE IF NOT EXISTS tags (
-    run_id VARCHAR NOT NULL, key VARCHAR NOT NULL, value JSON NOT NULL,
-    PRIMARY KEY (run_id, key));
-CREATE TABLE IF NOT EXISTS metrics (
-    run_id VARCHAR NOT NULL, key VARCHAR NOT NULL, step INTEGER NOT NULL,
-    ts DOUBLE NOT NULL, value DOUBLE NOT NULL);
-CREATE INDEX IF NOT EXISTS idx_metrics_run_key_step
-    ON metrics (run_id, key, step);
-CREATE TABLE IF NOT EXISTS artifacts (
-    id VARCHAR PRIMARY KEY, run_id VARCHAR NOT NULL, name VARCHAR NOT NULL,
-    kind VARCHAR NOT NULL DEFAULT 'file', created_at DOUBLE NOT NULL,
-    uri VARCHAR, sha256 VARCHAR, size_bytes BIGINT, inline_bytes BLOB);
-"""
+
+def _ddl(name: str, t: Table) -> list[str]:
+    # a one-column key stays inline, as the reference writes it: DuckDB
+    # numbers a table's constraints in the order the DDL declares them
+    inline_pk = t.primary_key if len(t.primary_key) == 1 else ()
+    cols = []
+    for c in t.columns:
+        s = f"{c.name} {c.type}"
+        s += " PRIMARY KEY" if c.name in inline_pk else ("" if c.nullable else " NOT NULL")
+        s += " UNIQUE" if c.name == t.unique else ""
+        s += f" DEFAULT {c.default}" if c.default else ""
+        cols.append(s)
+    if t.primary_key and not inline_pk:
+        cols.append(f"PRIMARY KEY ({', '.join(t.primary_key)})")
+    out = [f"CREATE TABLE IF NOT EXISTS {name} ({', '.join(cols)})"]
+    if t.index:
+        idx, on = t.index
+        out.append(f"CREATE INDEX IF NOT EXISTS {idx} ON {name} ({', '.join(on)})")
+    return out
+
+
+_DUCK_TO_ARROW = {
+    "VARCHAR": pa.string(), "JSON": pa.string(), "DOUBLE": pa.float64(),
+    "INTEGER": pa.int32(), "BIGINT": pa.int64(), "BLOB": pa.binary(),
+}
+# the strictly increasing write sequence versioned rows and tombstones carry
+_SEQ = pa.field("_seq", pa.int64(), False)
+
+
+def _arrow(columns: tuple[Column, ...], seq: bool) -> pa.Schema:
+    fields = [pa.field(c.name, _DUCK_TO_ARROW[c.type], c.nullable) for c in columns]
+    return pa.schema(fields + [_SEQ] * seq)
+
+
+DUCKDB_DDL: tuple[str, ...] = tuple(s for n, t in TABLES.items() for s in _ddl(n, t))
+
+ARROW: dict[str, pa.Schema] = {n: _arrow(t.columns, bool(t.upsert_key)) for n, t in TABLES.items()}
+# one tombstone per (table, deleted run id); no DuckDB side
+ARROW["_cdc_deletes"] = _arrow(
+    (Column("table", "VARCHAR", False), Column("run_id", "VARCHAR", False)), seq=True
+)
+
+
+@functools.cache
+def spark_schema(table: str):
+    """`ARROW[table]` as a Spark StructType (names, types, nullability)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(ARROW[table])

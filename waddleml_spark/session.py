@@ -10,9 +10,11 @@ factory only sets what is semantically required plus local-mode ergonomics.
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 # Local-mode parallelism: the driver benches with SPARK_GRAFT_CPUS.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -36,6 +38,8 @@ def get_spark(
         from a deliberately-high initial number.
       - Arrow for any pandas-exchange path (similarity / multimodal UDFs).
     """
+    from pyspark.sql import SparkSession
+
     cpus = int(_DEFAULT_CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -182,6 +186,30 @@ def fan_out(df, min_partitions: int | None = None):
 _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 
+# The session confs every driver-table read needs, and the value each must
+# hold.  Each is set only when it differs: setting the deprecated
+# escapedStringLiterals logs a WARN every time.
+_READ_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    # plain timestamp[us] (no isAdjustedToUTC) would infer as NTZ, which
+    # can't cast to double AND forces a cast-Project over every scan that
+    # blocks parquet predicate pushdown on timestamp columns.  Reading it
+    # as TIMESTAMP directly (raw micros == UTC instant == DuckDB epoch())
+    # keeps filters like `o_orderdate >= lit` in PushedFilters.
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    # any driver table's temporal column may drift to TIMESTAMP(NANOS)
+    # between rounds (events.ts did in r1); without this runtime-settable
+    # conf a nanos column refuses to read at all
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # expr-string plan builds (llmops.sql_str) require the default
+    # escape-processing parser; a session with the Hive-compat
+    # escapedStringLiterals flag would silently corrupt every embedded
+    # regex literal (doubled backslashes kept literally), so reset it
+    # here where every catalog query passes through
+    ("spark.sql.parser.escapedStringLiterals", "false"),
+)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver parquet table, normalizing timestamp physical types.
 
@@ -194,52 +222,28 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     first (runtime-settable — the driver hands us a bare session) so the
     NTZ→LTZ reinterpretation and DuckDB's naive-as-UTC epoch() agree.
 
-    SIDE EFFECT (deliberate, process-wide): the first read_table call
-    flips the session to UTC + inferTimestampNTZ=false and leaves it
-    there — every catalog query requires those semantics, and restoring
-    per-call would let a mid-plan conf flip change how a lazily-analyzed
-    sibling frame reads.  Co-resident code that needs local-time session
-    semantics must use its own SparkSession.
+    SIDE EFFECT (deliberate, process-wide): every read_table call sets
+    the session to `_READ_CONFS` (UTC, inferTimestampNTZ=false, ...) and
+    leaves it there — every catalog query requires those semantics, and
+    restoring per-call would let a mid-plan conf flip change how a
+    lazily-analyzed sibling frame reads.  Co-resident code that needs
+    local-time session semantics must use its own SparkSession.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    # repaired on every call, memo hit or not: a conf flipped after a
+    # table's first read would otherwise stay flipped for every later read
+    for conf, want in _READ_CONFS:
+        try:
+            if spark.conf.get(conf) != want:
+                spark.conf.set(conf, want)
+        except Exception:
+            pass
     memo = _TABLE_MEMO.setdefault(spark, {})
     key = (os.path.abspath(sf_dir), name)
     if key in memo:
         return memo[key]
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
-    try:
-        # plain timestamp[us] (no isAdjustedToUTC) would infer as NTZ, which
-        # can't cast to double AND forces a cast-Project over every scan that
-        # blocks parquet predicate pushdown on timestamp columns.  Reading it
-        # as TIMESTAMP directly (raw micros == UTC instant == DuckDB epoch())
-        # keeps filters like `o_orderdate >= lit` in PushedFilters.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    # any driver table's temporal column may drift to TIMESTAMP(NANOS)
-    # between rounds (events.ts did in r1); without this runtime-settable
-    # conf a nanos column refuses to read at all
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # expr-string plan builds (llmops.sql_str) require the default
-    # escape-processing parser; a session with the Hive-compat
-    # escapedStringLiterals flag would silently corrupt every embedded
-    # regex literal (doubled backslashes kept literally), so reset it
-    # here where every catalog query passes through.  Spark 4 deprecated
-    # the conf and logs a WARN on each set, so set it only when it is on.
-    escaped = "spark.sql.parser.escapedStringLiterals"
-    try:
-        if spark.conf.get(escaped, "false") != "false":
-            spark.conf.set(escaped, "false")
-    except Exception:
-        pass
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     temporal_cols = {"ts", "o_orderdate", "l_shipdate"}
     for f in df.schema.fields:

@@ -7,19 +7,22 @@ Reference storage is one DuckDB file with row-at-a-time autocommit INSERTs
 (SURVEY.md §1.3, §4.3):
 
 - every row-level write lands as a micro-batch: rows → one driver-local
-  Arrow table →
+  Arrow table in the table's `schemas.ARROW` write schema →
   (a) one Parquet part file in the table's directory (written under a
       hidden temp name, then renamed into place),
   (b) the same Arrow table → DuckDB INSERT / ON CONFLICT;
 - mutable semantics (upsert D3, update D5, delete D6) on immutable Parquet
   use an event-log discipline: versioned tables carry a monotonic `_seq`;
-  the read view is last-writer-wins per primary key (window dedupe).
+  the read view is last-writer-wins per upsert key (window dedupe; the
+  keys are `schemas.TABLES`').
   DuckDB gets real ON CONFLICT/DELETE, so both layers converge to
   identical logical state;
 - deletes cascade in FK order, mirroring waddle/_dashboard_api.py:237-249:
   one DuckDB transaction plus one tombstone part file; the Spark read
   views anti-join the tombstones, and compact() does the physical purge.
-  Spark only runs for analytics reads and compaction, never for a write.
+  Spark only runs for analytics reads and compaction, never for a write,
+  and only those methods import pyspark: a process that only logs or
+  serves never loads it.
 
 Scale posture: metrics is the tall fact table — at 100 TB it is written
 partitioned by run_id bucket and sorted within partitions by (key, step) so
@@ -35,33 +38,20 @@ import shutil
 import threading
 import time
 import uuid
+from typing import TYPE_CHECKING
 
 import duckdb
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import pyarrow as pa
 
-from waddleml_spark import schemas
+from waddleml_spark.schemas import ARROW, DUCKDB_DDL, TABLES, spark_schema
 from waddleml_spark.session import get_spark, reset_fan_out_memo
 from waddleml_spark.streaming.live import LiveBus
 
-# tables whose reads are last-writer-wins per PK (the event-log tables)
-_VERSIONED: dict[str, list[str]] = {
-    "runs": ["id"],
-    "params": ["run_id", "key"],
-    "tags": ["run_id", "key"],
-    "repos": ["name"],  # ref upserts repos BY NAME (waddle/_db.py:76-98)
-    "commits": ["repo_id", "commit_sha"],  # idempotent: first writer wins
-}
-_APPEND_ONLY = ("metrics", "artifacts")
-# delete_run's cascade in FK order: (table, column holding the run id)
-_CASCADE = (
-    ("metrics", "run_id"),
-    ("artifacts", "run_id"),
-    ("tags", "run_id"),
-    ("params", "run_id"),
-    ("runs", "id"),
-)
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+
+# delete_run's cascade in FK order; each table's run-id column is its run_col
+_CASCADE = ("metrics", "artifacts", "tags", "params", "runs")
 
 _seq_lock = threading.Lock()
 _last_seq = 0
@@ -110,9 +100,8 @@ class WaddleStore:
         self._duck_lock = threading.RLock()
         with _open_lock:
             self.duck = duckdb.connect(self.duck_path)
-            for stmt in schemas.DUCKDB_DDL.split(";"):
-                if stmt.strip():
-                    self.duck.execute(stmt)
+            for stmt in DUCKDB_DDL:
+                self.duck.execute(stmt)
             self.bus = WaddleStore._buses.setdefault(self.root, LiveBus())
         WaddleStore._registry[self.root] = self
 
@@ -139,37 +128,21 @@ class WaddleStore:
 
     # --- write path -------------------------------------------------------
 
-    def _spark_schema(self, table: str, versioned: bool) -> T.StructType:
-        base = schemas.WADDLE_TABLES[table]
-        if not versioned:
-            return base
-        return T.StructType(list(base.fields) + [T.StructField("_seq", T.LongType(), False)])
+    def _write_part(self, table: str, data: dict[str, list]):
+        """Write `data` (column → values) as ONE part file of `table` in
+        its `schemas.ARROW` schema; returns the Arrow table written.
 
-    _ARROW_TYPES = {
-        "string": "string",
-        "double": "float64",
-        "int": "int32",
-        "bigint": "int64",
-        "binary": "binary",
-    }
-
-    def _write_part(self, table: str, schema: T.StructType, data: dict[str, list]):
-        """Write `data` (column → values, in `schema` order) as ONE part
-        file of `table`; returns the Arrow table written.
-
-        The file is written under a hidden temp name and renamed into
-        place, so a crash mid-write never leaves a torn file where Spark's
-        readers (batch and file-stream, which both skip dot-files) look."""
-        import pyarrow as pa
+        A NULL in a NOT NULL column raises before anything is written: a
+        Parquet writer silently corrupts a file with one.  The file is
+        written under a hidden temp name and renamed into place, so a
+        crash mid-write never leaves a torn file where Spark's readers
+        (which skip dot-files) look."""
         import pyarrow.parquet as pq
 
-        arrow_schema = pa.schema(
-            [
-                pa.field(f.name, getattr(pa, self._ARROW_TYPES[f.dataType.simpleString()])())
-                for f in schema.fields
-            ]
-        )
-        arrow_tbl = pa.table(data, schema=arrow_schema)
+        arrow_tbl = pa.table(data, schema=ARROW[table])
+        for f in arrow_tbl.schema:
+            if not f.nullable and arrow_tbl.column(f.name).null_count:
+                raise ValueError(f"NULL in NOT NULL column {table}.{f.name}")
         d = self._dir(table)
         os.makedirs(d, exist_ok=True)
         name = uuid.uuid4().hex
@@ -195,18 +168,18 @@ class WaddleStore:
         and a createDataFrame → coalesce(1).write job costs ~150 ms of
         scheduling for ~10 ms of IO (measured: the swap took the hot
         logging path from ~18 k to >40 k rows/s) and a JVM start in a
-        process that only logs.  The Arrow schema mirrors schemas.WADDLE_TABLES
-        exactly, so Spark's analytical readers (and the streaming parquet
-        tail, which declares the same schema) see files identical to what
-        a Spark write would produce.  Spark remains the ANALYTICS engine.
+        process that only logs.  The part file's schema is the table's
+        `schemas.ARROW` schema, the one `WaddleStore.df` reads it with
+        (as a Spark StructType); DuckDB gets the same Arrow table without
+        `_seq`.  Spark remains the ANALYTICS engine.
         """
         if not rows:
             return
-        versioned = table in _VERSIONED
-        data = {f.name: [r.get(f.name) for r in rows] for f in schemas.WADDLE_TABLES[table].fields}
+        versioned = bool(TABLES[table].upsert_key)
+        data = {c: [r.get(c) for r in rows] for c in TABLES[table].names}
         if versioned:
             data["_seq"] = [_next_seq()] * len(rows)
-        arrow_full = self._write_part(table, self._spark_schema(table, versioned), data)
+        arrow_full = self._write_part(table, data)
         arrow_tbl = arrow_full.drop_columns(["_seq"]) if versioned else arrow_full
         with self._duck_lock:
             self.duck.register("_batch", arrow_tbl)
@@ -223,20 +196,18 @@ class WaddleStore:
             self.bus.publish(rows)
 
     def upsert(self, table: str, rows: list[dict]) -> None:
-        """Upsert by the table's PK (D3: params/tags ON CONFLICT DO UPDATE,
-        ref waddle/_run.py:139-150; D4 commits DO NOTHING)."""
-        keys = _VERSIONED[table]
-        cols = [f.name for f in schemas.WADDLE_TABLES[table].fields]
-        # DuckDB forbids assigning UNIQUE/PK columns in DO UPDATE (repos is
-        # keyed by name but carries an id PK) — exclude them from the SET
-        pk_cols = {"repos": ["id"]}.get(table, [])
-        non_keys = [c for c in cols if c not in keys and c not in pk_cols]
-        if table == "commits":
+        """Upsert by the table's upsert key (D3: params/tags ON CONFLICT DO
+        UPDATE, ref waddle/_run.py:139-150; D4 commits DO NOTHING)."""
+        t = TABLES[table]
+        if t.first_writer_wins:
             action = "DO NOTHING"
         else:
-            sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in non_keys)
+            # DuckDB forbids assigning key columns in DO UPDATE (repos is
+            # upserted by name but carries an id PK) — keep both out of the SET
+            keys = {*t.upsert_key, *t.primary_key}
+            sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in t.names if c not in keys)
             action = f"DO UPDATE SET {sets}"
-        conflict = ", ".join(keys)
+        conflict = ", ".join(t.upsert_key)
         self._write_batch(
             table,
             rows,
@@ -268,28 +239,34 @@ class WaddleStore:
         with self._duck_lock:
             self.duck.execute("BEGIN TRANSACTION")
             try:
-                for tbl, key in _CASCADE:
-                    self.duck.execute(f"DELETE FROM {tbl} WHERE {key} = ?", [run_id])
+                for tbl in _CASCADE:
+                    self.duck.execute(
+                        f"DELETE FROM {tbl} WHERE {TABLES[tbl].run_col} = ?", [run_id]
+                    )
                 self.duck.execute("COMMIT")
             except BaseException:
                 self.duck.execute("ROLLBACK")
                 raise
-        tables, n = [tbl for tbl, _ in _CASCADE], len(_CASCADE)
+        n = len(_CASCADE)
         self._write_part(  # tombstones: no DuckDB side
             "_cdc_deletes",
-            self._CDC_SCHEMA,
-            {"table": tables, "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
+            {"table": list(_CASCADE), "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
         )
 
     # --- change data capture ---------------------------------------------
 
-    _CDC_SCHEMA = T.StructType(
-        [
-            T.StructField("table", T.StringType(), False),
-            T.StructField("run_id", T.StringType(), False),
-            T.StructField("_seq", T.LongType(), False),
-        ]
-    )
+    def _tombstones(self, table: str) -> DataFrame | None:
+        """The run ids deleted from `table`, or None when it has none."""
+        from pyspark.sql import functions as F
+
+        td = self._dir("_cdc_deletes")
+        if TABLES[table].run_col is None or not os.path.exists(td):
+            return None
+        return (
+            self.spark.read.schema(spark_schema("_cdc_deletes"))
+            .parquet(td)
+            .filter(F.col("table") == table)
+        )
 
     def changes(self, table: str, since_seq: int = 0) -> DataFrame:
         """Change-data feed for a versioned table: every version row with
@@ -312,43 +289,35 @@ class WaddleStore:
         Append-only tables (metrics, artifacts) need no CDC machinery:
         the parquet append log IS the change feed.
         """
-        if table not in _VERSIONED:
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        t = TABLES[table]
+        if not t.upsert_key:
             raise ValueError(
                 f"{table} is append-only; its append log is the change feed"
             )
-        d = self._dir(table)
-        keys = _VERSIONED[table]
-        schema = self._spark_schema(table, True)
-        cols = [f.name for f in schemas.WADDLE_TABLES[table].fields]
-        if not os.path.exists(d):
-            data = self.spark.createDataFrame([], schema)
-        else:
-            data = self.spark.read.schema(schema).parquet(d)
-        w = Window.partitionBy(*keys).orderBy(F.col("_seq").asc())
+        data = self._read(table)
+        w = Window.partitionBy(*t.upsert_key).orderBy(F.col("_seq").asc())
         versions = data.withColumn("__rn", F.row_number().over(w))
-        if table == "commits":
+        if t.first_writer_wins:
             versions = versions.filter(F.col("__rn") == 1)
         op = F.when(F.col("__rn") == 1, "insert").otherwise("update")
         feed = (
             versions.filter(F.col("_seq") > since_seq)
-            .select(op.alias("op"), "_seq", *cols)
+            .select(op.alias("op"), "_seq", *t.names)
         )
-        # deletes: tombstones are per run_id; runs key on id, EAV tables on
-        # run_id — both match the tombstone's run_id column
-        td = self._dir("_cdc_deletes")
-        if os.path.exists(td):
-            key_col = "id" if table == "runs" else "run_id"
-            tombs = (
-                self.spark.read.schema(self._CDC_SCHEMA)
-                .parquet(td)
-                .filter((F.col("table") == table) & (F.col("_seq") > since_seq))
-            )
-            dels = tombs.select(
+        # deletes: one tombstone per run id, matched on the table's run_col
+        tombs = self._tombstones(table)
+        if tombs is not None:
+            dels = tombs.filter(F.col("_seq") > since_seq).select(
                 F.lit("delete").alias("op"),
                 "_seq",
                 *[
-                    F.col("run_id").alias(c) if c == key_col else F.lit(None).cast(f.dataType).alias(c)
-                    for c, f in zip(cols, schemas.WADDLE_TABLES[table].fields)
+                    F.col("run_id").alias(f.name) if f.name == t.run_col
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in spark_schema(table).fields
+                    if f.name != "_seq"
                 ],
             )
             feed = feed.unionByName(dels)
@@ -366,34 +335,36 @@ class WaddleStore:
 
     # --- read path --------------------------------------------------------
 
+    def _read(self, table: str) -> DataFrame:
+        """Every row of `table`'s part files, `_seq` included."""
+        schema = spark_schema(table)
+        d = self._dir(table)
+        if not os.path.exists(d):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(d)
+
     def df(self, table: str) -> DataFrame:
         """Current logical state as a DataFrame (dedupe view for versioned
         tables — window last-writer-wins, one shuffle on the PK).  Rows of
         deleted runs are hidden by a left-anti join on the tombstones."""
-        d = self._dir(table)
-        versioned = table in _VERSIONED
-        schema = self._spark_schema(table, versioned)
-        if not os.path.exists(d):
-            return self.spark.createDataFrame([], schema if not versioned else schemas.WADDLE_TABLES[table])
-        df = self.spark.read.schema(schema).parquet(d)
-        td = self._dir("_cdc_deletes")
-        key = dict(_CASCADE).get(table)
-        if key and os.path.exists(td):
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        t = TABLES[table]
+        if not os.path.exists(self._dir(table)):
+            return self._read(table).drop("_seq")
+        df = self._read(table)
+        tombs = self._tombstones(table)
+        if tombs is not None:
             # no broadcast hint: tombstones grow one set per deleted run,
-            # not bounded by construction (the repo rule)
-            tombs = (
-                self.spark.read.schema(self._CDC_SCHEMA)
-                .parquet(td)
-                .filter(F.col("table") == table)
-                .select(F.col("run_id").alias("__deleted"))
-            )
-            # a condition join, not on=key: USING would move the key first
-            df = df.join(tombs, df[key] == tombs["__deleted"], "left_anti")
-        if not versioned:
+            # not bounded by construction (the repo rule).  A condition
+            # join, not on=key: USING would move the key first
+            deleted = tombs.select(F.col("run_id").alias("__deleted"))
+            df = df.join(deleted, df[t.run_col] == deleted["__deleted"], "left_anti")
+        if not t.upsert_key:
             return df
-        keys = _VERSIONED[table]
-        order = F.col("_seq").desc() if table != "commits" else F.col("_seq").asc()
-        w = Window.partitionBy(*keys).orderBy(order)
+        order = F.col("_seq").asc() if t.first_writer_wins else F.col("_seq").desc()
+        w = Window.partitionBy(*t.upsert_key).orderBy(order)
         return (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -409,13 +380,14 @@ class WaddleStore:
         Precondition: no live writer on the store.  Each table's new dir
         is written beside the live one and swapped in by two renames, so
         a part file a Run flushes in between is lost."""
-        tables = [table] if table else list(_VERSIONED) + list(_APPEND_ONLY)
-        for tbl in tables:
+        from pyspark.sql import functions as F
+
+        for tbl in [table] if table else list(TABLES):
             if not os.path.exists(self._dir(tbl)):
                 continue
             n = max(1, _parallelism(self.spark) // 4)
             cur = self.df(tbl)
-            if tbl in _VERSIONED:
+            if TABLES[tbl].upsert_key:
                 cur = cur.withColumn("_seq", F.lit(_next_seq()))
             if tbl == "metrics":
                 # the 100 TB layout: cluster by run_id, sort by (key, step)

@@ -40,8 +40,6 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import functions as F
-
 Subscriber = Callable[[list[dict]], None]
 
 
@@ -103,6 +101,8 @@ def stream_dedup(
     `time_col`; returns the deduplicated stream (original columns).
     Extension beyond the reference (no streaming surface there at all).
     """
+    from pyspark.sql import functions as F
+
     from waddleml_spark.llmops.textstats import fingerprint
 
     deduped = (
@@ -145,6 +145,8 @@ def stream_url_dedup(
     micro-batch once per branch, the standard cost of a streaming
     split.
     """
+    from pyspark.sql import functions as F
+
     from waddleml_spark.llmops import WS_TRIM_RE
     from waddleml_spark.llmops.urlnorm import with_canonical_url
 

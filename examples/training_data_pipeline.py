@@ -42,8 +42,8 @@ n0 = docs.count()
 #    domain's contribution (deterministic md5-rank keeper — a
 #    reproducible uniform-ish sample of over-represented domains).  The
 #    fixture has no url column, so derive a plausible one; a real crawl
-#    passes its own.  Canonical-URL dedup proper is the streaming
-#    frontier's job (stream_url_dedup) or one groupBy on canonical_url.
+#    passes its own.  Canonical-URL dedup proper is one groupBy on
+#    canonical_url.
 url_docs = docs.selectExpr(
     "*",
     "concat('https://WWW.example', CAST(doc_id % 7 AS STRING),"

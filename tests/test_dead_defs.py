@@ -1,12 +1,19 @@
 """Dead-code and layering guards, pure ``ast`` and text scans; no Spark.
 
-Every module-level ``def``/``class`` in the package must be named
-somewhere in the repo's Python files outside ``tests/``, besides its own
-definition line — in package code, an example, a tool, a benchmark or a
-comment there.  A test is not a caller: code only tests reach is code
-nothing runs.  Exempt: dunder names, catalog queries registered with
-``@_register(...)`` (reached by key through ``catalog.QUERIES``), and the
-names in ``KEPT``, each with the reason it stays.
+Every module-level ``def``/``class`` in the package, and every method of
+a module-level package class, must be referenced by Python code outside
+``tests/`` and outside its own body: an ``ast.Name``, an attribute name,
+an import alias, or a string constant that is exactly the identifier
+(``tracer.wrap(Run, "flush", ...)``, a table of method names).  Docstrings
+and comments are not callers, and neither is a test: code only tests
+reach is code nothing runs.  Exempt: dunder names, catalog queries
+registered with ``@_register(...)`` (reached by key through
+``catalog.QUERIES``), and the names in ``KEPT``, each with the reason it
+stays.
+
+No module in the package or the test suite imports a name it never uses
+(``__future__`` imports and ``# noqa: F401`` re-exports aside; a name in a
+string annotation is a use).
 
 Every top-level script and every file under ``tools/`` must be named by
 file name in a live document or runner: the README, CLAUDE.md, DEPLOY.md,
@@ -40,11 +47,19 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "waddleml_spark"
 _SKIP_DIRS = {".perfbench_work", "spark-warehouse"}
-_WORD = re.compile(r"\w+")
 TESTS = REPO / "tests"
 
-# definition name -> why it stays although only tests call it
-KEPT: dict[str, str] = {}
+# definition ("name", or "Class.method" for a method) -> why it stays
+# although only tests call it
+KEPT: dict[str, str] = {
+    "vacuum": "snapshot-table garbage collector; README, DEPLOY and "
+    "MIGRATION tell an operator to run it",
+    "snapshot_sink": "the micro-batch -> atomic snapshot version sink of "
+    "README and MIGRATION; tests/test_format_model.py's walk drives it",
+    "WaddleStore.compact": "DEPLOY's maintenance call",
+    "WaddleStore.bucket_table": "DEPLOY's one-call metrics layout",
+    "Run.log_metric": "the reference API's log_metric row in MIGRATION",
+}
 
 
 def _py_files() -> list[Path]:
@@ -63,37 +78,103 @@ def _registered(node: ast.AST) -> bool:
     )
 
 
+def _code_refs(tree: ast.AST) -> Counter[str]:
+    """Identifiers code under ``tree`` references; prose never counts."""
+    refs: Counter[str] = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs.update(node.name.split("."))
+            if node.asname:
+                refs[node.asname] += 1
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.isidentifier()
+        ):
+            refs[node.value] += 1
+    return refs
+
+
+def _definitions(tree: ast.Module):
+    """(qualified name, node) of each module-level def/class and method."""
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for node in tree.body:
+        if isinstance(node, defs):
+            yield node.name, node
+        if isinstance(node, ast.ClassDef):
+            for member in node.body:
+                if isinstance(member, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield f"{node.name}.{member.name}", member
+
+
 def test_no_dead_module_level_definitions():
-    # word-boundary matches of an identifier are exactly its \w+ tokens
     uses: Counter[str] = Counter()
-    texts: dict[Path, str] = {}
+    trees: dict[Path, ast.Module] = {}
     for path in _py_files():
-        texts[path] = path.read_text(encoding="utf-8")
+        trees[path] = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
         if TESTS not in path.parents:
-            uses.update(_WORD.findall(texts[path]))
+            uses.update(_code_refs(trees[path]))
 
     dead = []
-    for path in sorted(p for p in texts if PKG in p.parents):
-        tree = ast.parse(texts[path], filename=str(path))
-        # split on "\n" only: ast's line numbers ignore the other
-        # separators str.splitlines() honours (\x0b, \x0c, ...)
-        lines = texts[path].split("\n")
-        for node in tree.body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
+    for path in sorted(p for p in trees if PKG in p.parents):
+        for qualname, node in _definitions(trees[path]):
+            dunder = node.name.startswith("__") and node.name.endswith("__")
+            if dunder or _registered(node) or qualname in KEPT:
                 continue
-            name = node.name
-            if name.startswith("__") and name.endswith("__"):
-                continue
-            if _registered(node) or name in KEPT:
-                continue
-            own = _WORD.findall(lines[node.lineno - 1]).count(name)
-            if uses[name] <= own:
-                dead.append(f"{path.relative_to(REPO)}:{node.lineno} {name}")
+            # a reference inside the definition's own body (recursion,
+            # a class naming itself) is not a caller
+            if uses[node.name] <= _code_refs(node)[node.name]:
+                dead.append(f"{path.relative_to(REPO)}:{node.lineno} {qualname}")
     assert dead == [], (
-        "module-level definitions nothing outside tests/ names:\n" + "\n".join(dead)
+        "definitions no code outside tests/ references:\n" + "\n".join(dead)
     )
+
+
+def _annotation_names(tree: ast.Module) -> set[str]:
+    """Names used inside string annotations (``x: "Run"``)."""
+    annotations = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            annotations.append(node.returns)
+        elif isinstance(node, ast.arg):
+            annotations.append(node.annotation)
+        elif isinstance(node, ast.AnnAssign):
+            annotations.append(node.annotation)
+    names: set[str] = set()
+    for ann in filter(None, annotations):
+        for c in ast.walk(ann):
+            if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                names.update(
+                    n.id for n in ast.walk(ast.parse(c.value, mode="eval"))
+                    if isinstance(n, ast.Name)
+                )
+    return names
+
+
+def test_no_unused_imports():
+    unused = []
+    for path in sorted([*PKG.rglob("*.py"), *TESTS.rglob("*.py")]):
+        text = path.read_text(encoding="utf-8")
+        tree = ast.parse(text, filename=str(path))
+        lines = text.split("\n")
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= _annotation_names(tree)
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if "noqa" in lines[node.lineno - 1] and "F401" in lines[node.lineno - 1]:
+                continue  # a re-export
+            for a in node.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound not in used:
+                    unused.append(f"{path.relative_to(REPO)}:{node.lineno} {bound}")
+    assert unused == [], "imports nothing uses:\n" + "\n".join(unused)
 
 
 def _live_documents() -> dict[Path, str]:

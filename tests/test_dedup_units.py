@@ -153,17 +153,6 @@ def test_simhash_kernel_vectorized_parity():
         assert got["doc_id"].tolist() == list(range(len(texts)))
 
 
-def test_simhash_buckets_shape(spark, docs):
-    sigs = dedup.simhash_signatures(docs)
-    banded = dedup.simhash_buckets(sigs, band_bits=16).collect()
-    # 64/16 = 4 bands per doc
-    assert len(banded) == 6 * 4
-    # identical docs share every band bucket
-    b0 = sorted((r.band, r.bucket) for r in banded if r.doc_id == 0)
-    b1 = sorted((r.band, r.bucket) for r in banded if r.doc_id == 1)
-    assert b0 == b1
-
-
 def test_minhash_mega_bucket_star_pattern(spark):
     # 200 identical docs: naive expansion = 19900 pairs; star caps at O(n)
     rows = [(i, "same exact text repeated for the template case") for i in range(200)]

@@ -118,18 +118,6 @@ def test_extract_features_decodes_real_media(spark):
     assert abs(got[1].feat_mean - expect) < 1e-12
 
 
-def test_sample_frames_fans_out(spark, media):
-    frames = multimodal.sample_frames(media.limit(20), every_nth=2, max_frames=3).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    assert set(by_media) <= set(range(20)) and by_media
-    for idxs in by_media.values():
-        assert len(idxs) <= 3
-        assert idxs == sorted(idxs)
-        assert all(i % 2 == 0 for i in idxs)
-
-
 def test_payload_stats_metadata_only(spark, media):
     row = multimodal.payload_stats(media).head()
     assert row.modality == "image" and row.n == 500

@@ -5,8 +5,6 @@ dims broadcast, top-N avoids global sorts, windows pre-limit per group.
 
 from __future__ import annotations
 
-import pytest
-
 from waddleml_spark import catalog
 from waddleml_spark.plans import assert_plan, pushed_filters, read_schema_columns
 from waddleml_spark.plans.inspect import count_op
@@ -68,7 +66,6 @@ def test_semi_and_anti_join_shapes(spark):
 def test_metric_summary_broadcasts_runs_dim(spark, tmp_path):
     import waddleml_spark as w
     from waddleml_spark import state
-    from waddleml_spark.operators.dashboard import SparkDashboard
     from waddleml_spark.operators import core as ops
     from pyspark.sql import functions as F
 

@@ -5,7 +5,6 @@ example-based suite (SURVEY.md §5)."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -43,14 +43,3 @@ def test_score_quality_ranks_teacher_positives(spark, docs):
     agg = scored.groupBy("label").agg(F.avg("quality_prob").alias("p")).collect()
     by_label = {r.label: r.p for r in agg}
     assert 0.0 <= by_label[0.0] < by_label[1.0] <= 1.0
-
-
-def test_lm_teacher_drops_middle_tercile(spark, docs):
-    labeled = qm.lm_teacher_labels(docs)
-    n_docs = docs.count()
-    n = labeled.count()
-    assert 0.5 * n_docs < n < 0.8 * n_docs  # ~2/3 kept
-    assert set(r.label for r in labeled.select("label").distinct().collect()) == {
-        0.0,
-        1.0,
-    }

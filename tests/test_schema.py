@@ -231,10 +231,6 @@ def test_runs_nullable_fk(tmp_path, spark):
     store.close()
 
 
-def test_run_status_enum(tmp_path, spark):
-    assert schemas.RUN_STATUSES == ("running", "completed", "failed", "aborted")
-
-
 def test_read_table_normalizes_timestamp_physical_types(tmp_path, spark):
     """Driver testdata timestamp physical types drift between rounds
     (TIMESTAMP(NANOS) → timestamp[us]/NTZ observed r1→r2); read_table must

@@ -243,6 +243,15 @@ def test_cli_query_prints_json_rows(capsys):
     assert set(row) == {"revenue", "n_items"}
 
 
+def test_cli_explain_leaves_the_callers_session_running(spark, capsys):
+    from tests.conftest import SF_SMOKE
+    from waddleml_spark.cli import main
+
+    rc = main(["explain", "forecast_revenue_q6", "--sf-dir", SF_SMOKE])
+    assert rc == 0 and "== Physical Plan ==" in capsys.readouterr().out
+    assert spark.range(1).count() == 1
+
+
 def test_cli_query_unknown_name(capsys):
     from waddleml_spark.cli import main
 

@@ -69,16 +69,16 @@ def test_empty_batch_commits_nothing(spark, tmp_path):
     assert st.current_version(tbl) == 0
 
 
-def test_dedup_sink_skips_known_and_internal_dups(spark, tmp_path):
+def test_neardup_sink_skips_known_and_internal_exact_dups(spark, tmp_path):
     tbl = str(tmp_path / "d1")
-    sink = snapsink.dedup_snapshot_sink(tbl)
+    sink = snapsink.neardup_snapshot_sink(tbl)
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    # batch 0: one internal dup -> 2 docs land
-    sink(docs([(1, "alpha beta"), (2, "alpha beta"), (3, "gamma")]), 0)
-    assert st.read(spark, tbl).count() == 2
+    # batch 0: one internal exact dup -> 2 docs land, the lower id kept
+    sink(docs([(2, "alpha beta"), (1, "alpha beta"), (3, "gamma")]), 0)
+    assert sorted(r.doc_id for r in st.read(spark, tbl).collect()) == [1, 3]
     # batch 1: one known dup, one fresh -> only the fresh doc lands
     sink(docs([(4, "gamma"), (5, "delta")]), 1)
     got = st.read(spark, tbl)
@@ -216,9 +216,9 @@ def test_vacuum_preserves_epoch_record_after_lost_sidecar(spark, tmp_path):
     assert st.current_version(tbl) == 2
 
 
-def test_dedup_sink_replay_reads_no_snapshot(spark, tmp_path, monkeypatch):
+def test_neardup_sink_replay_reads_no_snapshot(spark, tmp_path, monkeypatch):
     tbl = str(tmp_path / "d_replay")
-    sink = snapsink.dedup_snapshot_sink(tbl)
+    sink = snapsink.neardup_snapshot_sink(tbl)
     batch = spark.createDataFrame(
         [(1, "alpha"), (2, "beta")], "doc_id long, text string"
     )

@@ -31,58 +31,6 @@ def test_salted_agg_matches_plain(spark):
     assert got == want
 
 
-def test_salted_broadcast_left_matches_plain(spark):
-    from pyspark.sql import functions as F
-
-    from waddleml_spark.operators.skew import salted_broadcast_left
-
-    big = spark.range(0, 1000).select(
-        F.when(F.col("id") % 5 < 4, 1).otherwise(F.col("id") % 7).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(7)], "k long, label string"
-    )
-    got = sorted(
-        (r.payload, r.label)
-        for r in salted_broadcast_left(big, small, on="k").collect()
-    )
-    want = sorted((r.payload, r.label) for r in big.join(small, on="k").collect())
-    assert got == want
-
-
-def test_sliced_running_sum_matches_naive_window(spark):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from waddleml_spark.operators.skew import sliced_running_sum
-    from tests.conftest import SF_SMOKE
-
-    # collapse to one row per (user, ts) so both orderings are total —
-    # running sums are only comparable under a deterministic order
-    from waddleml_spark.session import read_table
-
-    ev = (
-        read_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id", "ts")
-        .agg(F.sum("value").alias("v"))
-    )
-    fast = sliced_running_sum(ev, "user_id", "ts", "v", slice_seconds=86400)
-    naive = ev.withColumn(
-        "running_sum",
-        F.sum("v").over(
-            Window.partitionBy("user_id")
-            .orderBy("ts")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    # float addition grouped differently → compare rounded
-    r = lambda df: df.select(  # noqa: E731
-        "user_id", "ts", F.round("running_sum", 6).alias("rs")
-    )
-    assert r(fast).exceptAll(r(naive)).count() == 0
-    assert r(naive).exceptAll(r(fast)).count() == 0
-
-
 def test_asof_join_null_right_value_is_the_match_not_stale(spark):
     # round-6 review find: per-column ignorenulls fill replaced a
     # genuinely-NULL matched value with a STALE earlier row's value

@@ -4,8 +4,8 @@ layout), empty-store reads, scalar helpers."""
 from __future__ import annotations
 
 import glob
-import os
 
+import pyarrow.parquet as pq
 import pytest
 
 import waddleml_spark as w
@@ -42,6 +42,13 @@ def test_compact_folds_history_and_buckets_metrics(spark, tmp_path, monkeypatch)
         run.log_param("p", i)  # 5 upsert versions
     run.finish()
     store = run._store
+    # a second run, deleted before compact(): tombstoned, not yet purged
+    gone = w.init(project="cmp", system_metrics=False, spark=spark)
+    gone.log({"m": 9.0})
+    gone.log_param("q", 1)
+    gone.finish()
+    assert gone._store.root == store.root
+    store.delete_run(gone.id)
     files_before = len(glob.glob(store._dir("params") + "/*.parquet"))
     assert files_before >= 5
     before = {(r.key, r.value) for r in store.df("params").collect()}
@@ -53,6 +60,11 @@ def test_compact_folds_history_and_buckets_metrics(spark, tmp_path, monkeypatch)
     # metrics intact after the bucketed rewrite
     assert store.df("metrics").count() == 5
     assert store.df("runs").filter("status = 'completed'").count() == 1
+    # compact() purges the deleted run's rows from the part files themselves
+    for tbl, col in (("params", "run_id"), ("metrics", "run_id"), ("runs", "id")):
+        parts = glob.glob(store._dir(tbl) + "/**/*.parquet", recursive=True)
+        ids = {i for p in parts for i in pq.read_table(p, columns=[col])[col].to_pylist()}
+        assert run.id in ids and gone.id not in ids, tbl
 
 
 def test_scalar_helpers(spark):

@@ -190,69 +190,6 @@ def test_sampler_writes_system_metrics(spark, tmp_path, monkeypatch):
     run.finish()
 
 
-def test_stream_dedup_drops_repeats_within_watermark(spark, tmp_path):
-    """Streaming exact-dedup: duplicate text arriving in the same or a later
-    micro-batch (inside the watermark) is dropped; distinct text passes."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import types as T
-
-    from waddleml_spark.streaming.live import stream_dedup
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ingest_time", T.TimestampType()),
-        ]
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # batch 1: A, B, and an in-batch dup of A
-    write_batch(
-        [
-            (1, "alpha document body", t0),
-            (2, "beta document body", t0 + timedelta(seconds=1)),
-            (3, "alpha document body", t0 + timedelta(seconds=2)),
-        ]
-    )
-
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    out = stream_dedup(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option(
-            "checkpointLocation", str(tmp_path / "ckpt")
-        )
-        .start()
-    )
-    q.processAllAvailable()
-
-    # batch 2: cross-batch dup of A (within watermark) + fresh C
-    write_batch(
-        [
-            (4, "alpha document body", t0 + timedelta(seconds=30)),
-            (5, "gamma document body", t0 + timedelta(seconds=31)),
-        ]
-    )
-    q.processAllAvailable()
-    rows = spark.sql("SELECT doc_id, text FROM dedup_out").collect()
-    q.stop()
-
-    kept = sorted(r.doc_id for r in rows)
-    assert kept == [1, 2, 5]  # 3 (in-batch dup) and 4 (cross-batch dup) dropped
-    assert {r.text.split()[0] for r in rows} == {"alpha", "beta", "gamma"}
-
-
 def test_streaming_cms_accumulates_to_whole_corpus_sketch(spark, tmp_path):
     # count-min is a LINEAR sketch: summing per-micro-batch partial
     # matrices equals the batch sketch of the whole stream — the
@@ -278,86 +215,3 @@ def test_streaming_cms_accumulates_to_whole_corpus_sketch(spark, tmp_path):
     exact = df.groupBy("v").agg(F.count("*").alias("n"))
     est = sketches.cms_estimates(exact, "v", acc).collect()
     assert all(r.cms_est >= r.n for r in est)
-
-
-def test_stream_url_dedup_collapses_canonical_variants(spark, tmp_path):
-    """Streaming crawl-frontier dedup: scheme/tracking/slash variants of
-    one page collapse to the first arrival within the watermark; a
-    genuinely different page passes; a later-batch variant (inside the
-    watermark) is dropped too."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import types as T
-
-    from waddleml_spark.streaming.live import stream_url_dedup
-
-    src = tmp_path / "urls_in"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("ingest_time", T.TimestampType()),
-        ]
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # doc 1 arrives ALONE in batch 1: dropDuplicatesWithinWatermark keeps
-    # an arbitrary first-PROCESSED row within a batch, so the survivor is
-    # only deterministic across batch boundaries (review find — the
-    # variants go in later batches)
-    write_batch([(1, "https://example.com/page/1", t0)])
-
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    out = stream_url_dedup(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("url_dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-
-    # batch 2: scheme/case/www/port/slash/tracking variant of doc 1
-    # (drops), a distinct page, and a NULL url (must PASS THROUGH, not
-    # collapse into the constant 'https:///' group)
-    write_batch(
-        [
-            (2, "HTTP://WWW.Example.COM:80/page/1/?utm_source=x",
-             t0 + timedelta(seconds=10)),
-            (3, "https://example.com/other", t0 + timedelta(seconds=11)),
-            (6, None, t0 + timedelta(seconds=12)),
-        ]
-    )
-    q.processAllAvailable()
-
-    # batch 3: fragment variant of doc 1 (drops), a fresh page, a
-    # second NULL url (also passes — url-less rows never dedup), and
-    # TWO whitespace-only urls (advisor find: ' ' slipped past the
-    # NULL/'' guard, collapsed into one canonical group, and every such
-    # row after the first was dropped — both must pass through)
-    write_batch(
-        [
-            (4, "https://example.com/page/1#frag",
-             t0 + timedelta(seconds=30)),
-            (5, "https://example.com/fresh", t0 + timedelta(seconds=31)),
-            (7, None, t0 + timedelta(seconds=32)),
-            (8, " ", t0 + timedelta(seconds=33)),
-            (9, " \t ", t0 + timedelta(seconds=34)),
-        ]
-    )
-    q.processAllAvailable()
-    got = sorted(
-        r.doc_id for r in spark.sql("SELECT doc_id FROM url_dedup_out").collect()
-    )
-    q.stop()
-    # docs 2 and 4 both canonicalize to https://example.com/page/1 and
-    # drop; the first arrival, the two distinct pages, BOTH url-less
-    # rows, and BOTH whitespace-only rows survive
-    assert got == [1, 3, 5, 6, 7, 8, 9]

@@ -18,7 +18,6 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window

@@ -413,7 +413,7 @@ def names_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def orders_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar bucketing (date_trunc month, DST-aware path of time_bucket)."""
+    """Calendar bucketing (date_trunc month, DST-aware)."""
     o = t(spark, sf_dir, "orders")
     return o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month")
@@ -472,7 +472,7 @@ def json_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_changes_since(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-data-capture feed shape (store.WaddleStore.changes): events as
+    """Change-data-capture feed shape (Delta-CDF style): events as
     an upsert log keyed by (user_id, event_type); rows after the consumer's
     cursor are classified insert (first version of the key ever) vs update.
 

@@ -562,10 +562,10 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode → bucket-group → in-bucket pair expansion (same shape as the
     MinHash band join — one shuffle on the fingerprint).
 
-    r10 rebuild: this previously exploded
-    textstats.winnowing_fingerprints, whose nested interpreted HOFs are
-    QUADRATIC per document (the wins lambda re-evaluates the grams
-    transform per window — no CSE; the 100× pass hung past 570 s).
+    r10 rebuild: this previously exploded a per-row HOF array of
+    winnowing fingerprints, whose nested interpreted HOFs were QUADRATIC
+    per document (the window lambda re-evaluated the grams transform
+    per window — no CSE; the 100× pass hung past 570 s).
     The fingerprints now come from the LINEAR positioned construction
     (codegen'd generator gram rows + one doc-grain sliding window-min,
     xxhash64 gram hashes — dedup.winnowing32_overlap_pairs' shape with
@@ -3017,8 +3017,8 @@ def domain_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; the domain-grain window is the single exchange before
     the domain-grain agg reuses its partitioning.  A mega-domain makes
     the window a hot key — at crawl scale pre-aggregate counts and rank
-    members only for domains past the cap (the sliced_running_sum
-    two-phase precedent, urlnorm.domain_capped_keepers docstring).
+    members only for domains past the cap (urlnorm.domain_capped_keepers
+    docstring).
     Integer sums CAST to BIGINT in the oracle (the HUGEINT rule)."""
     from pyspark.sql import Window
 

@@ -7,7 +7,6 @@ git repo or when git is absent (ref AGENTS.md "never required").
 
 from __future__ import annotations
 
-import os
 import subprocess
 
 

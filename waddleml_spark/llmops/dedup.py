@@ -6,17 +6,14 @@ Scale design:
   map-side combine; at 100 TB shuffle only (hash, id) pairs, never text.
 - MinHash/LSH turns all-pairs O(n²) into per-band bucket joins; bucket
   sizes are bounded by construction, AQE splits stragglers.
-- SimHash buckets near-identical docs by hamming-banding a 64-bit
-  signature; signature computation is an Arrow-batched pandas UDF (the
-  per-token bit-vote loop is genuinely imperative), everything after is
-  relational.
+- SimHash signs each doc with a 64-bit signature, computed by an
+  Arrow-batched pandas UDF (the per-token bit-vote loop is genuinely
+  imperative); the JVM-side 32-bit twin is relational end to end.
 - n-gram Jaccard is the exact verifier applied INSIDE candidate buckets,
   never globally.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -678,30 +675,6 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     return src.mapInPandas(_simhash_batch, schema=_SIMHASH_SCHEMA)
 
 
-def simhash_buckets(signatures: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Band a 64-bit signature into 64/band_bits buckets for hamming-ball
-    candidate generation; relational from here on."""
-    bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    return signatures.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.bucket")
-
-
 def incremental_dedup(
     new_df: DataFrame,
     index_df: DataFrame,
@@ -936,18 +909,15 @@ def winnowing32_overlap_pairs(
     word trigrams, guaranteeing any shared run of ≥ w+k−1 tokens
     produces a shared fingerprint while keeping only ~2/(w+1) of the
     gram volume — the sampled (cheaper) complement of
-    ngram_overlap_pairs' exhaustive counts, and the oracle-certifiable
-    twin of the xxhash-based winnowing_fingerprints production column
-    (same construction, md5-BE32 gram hashes both engines compute
-    identically).
+    ngram_overlap_pairs' exhaustive counts, with md5-BE32 gram hashes
+    both engines compute identically.
 
     Shape: the codegen'd position-explode gram rows (same clamped
     construction as shingle_rows, positions kept) → per-doc sliding
-    window MIN over gram positions (ONE doc-grain window — plain
-    expressions, where winnowing_fingerprints' per-row HOF array
-    accumulator evaluates interpreted) → truncated tail windows
-    dropped (windows = max(G − w + 1, 1) like the array twin's
-    sequence clamp) → distinct (doc, fingerprint) → the shared
+    window MIN over gram positions (ONE doc-grain window of plain
+    expressions; a per-row HOF array accumulator would evaluate
+    interpreted) → truncated tail windows dropped (windows =
+    max(G − w + 1, 1)) → distinct (doc, fingerprint) → the shared
     df-capped pair-count tail (_shared_hash_pair_counts).  All linear;
     the df cap bounds the quadratic term exactly as in
     ngram_overlap_pairs.

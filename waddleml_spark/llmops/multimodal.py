@@ -3,9 +3,9 @@
 waddle/_schema.py:70).
 
 Design: image/audio/video travel as `binary` columns with a metadata
-struct (modality, mime, width/height/duration...).  Decode and
-frame-sample run as Arrow-batched functions over mapInPandas so each
-partition processes a columnar batch.
+struct (modality, mime, width/height/duration...).  Decode runs as
+Arrow-batched functions over mapInPandas so each partition processes a
+columnar batch.
 
 Decode kernels: UNCOMPRESSED formats decode for real, numpy-only —
 PPM P6 (decode_ppm), BMP 24-bit BI_RGB (decode_bmp), WAV PCM16
@@ -340,48 +340,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_sha", T.StringType(), True),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_nth: int = 10, max_frames: int = 8) -> DataFrame:
-    """Video frame sampling over mapInPandas: one input row fans out to N
-    frame rows (batch shape change is the point — the output iterator is
-    not 1:1 with the input).  Frame decode is stubbed: frame identity
-    derives from (payload digest, frame index)."""
-    from waddleml_spark.session import ensure_shipped, fan_out
-
-    ensure_shipped(media.sparkSession)
-    src = fan_out(media.select("media_id", "payload"))
-
-    def batches(it):
-        for pdf in it:
-            ids, idxs, shas = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                # stub: pretend the payload has len(payload)//32 frames
-                n_frames = max(1, len(payload) // 32)
-                for k, frame in enumerate(range(0, n_frames, every_nth)):
-                    if k >= max_frames:
-                        break
-                    ids.append(mid)
-                    idxs.append(frame)
-                    shas.append(
-                        hashlib.sha256(payload + frame.to_bytes(4, "big")).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_sha": shas}
-            )
-
-    return src.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
 PHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -558,8 +516,7 @@ def phash_neardup_pairs(
     max_bucket: int = 64,
 ) -> DataFrame:
     """Image near-dup pairs by banded perceptual hash — the pigeonhole
-    LSH used for SimHash (dedup.simhash_buckets), on pixels instead of
-    tokens: two hashes within `max_dist` bits collide on at least one
+    banding LSH of SimHash, on pixels instead of tokens: two hashes within `max_dist` bits collide on at least one
     of 64/band_bits bands whenever max_dist < 64/band_bits... for wider
     radii the bands are a high-recall candidate filter, and the exact
     JVM bit_count(xor) verify keeps the result precise.
@@ -643,9 +600,8 @@ def chunk_fingerprints(
     media: DataFrame, chunk_bytes: int = 32, max_chunks: int = 64
 ) -> DataFrame:
     """Content-defined frame fingerprints: hash each aligned chunk_bytes
-    slice of the payload (up to max_chunks).  Unlike sample_frames —
-    whose stub derives frame identity from the WHOLE payload digest —
-    each fingerprint covers only its own bytes, so payloads sharing
+    slice of the payload (up to max_chunks).  Each fingerprint covers
+    only its own bytes, not the whole payload, so payloads sharing
     aligned content (same video with trailing edits, re-muxed streams,
     doc re-encodes) share fingerprints.  All JVM-side (substring on
     binary + sha2 inside a transform) — no Python, no decode.

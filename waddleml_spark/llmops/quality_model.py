@@ -2,11 +2,10 @@
 
 The production pattern behind fastText/KenLM-style corpus quality
 filters (public: CCNet, Gopher, FineWeb pipelines): an EXPENSIVE
-teacher signal (here the corpus-trained bigram-LM score,
-textstats.bigram_lm_scores — at 100 TB that is an occurrence-scale
-job you run once) labels a sample, a cheap surface-feature model is
-fit to those labels, and the FITTED model scores the whole corpus as
-a pure projection.  Spark-first end to end:
+teacher signal (here the marker-regex lang-ID confidence,
+langid_teacher_labels) labels a sample, a cheap surface-feature model
+is fit to those labels, and the FITTED model scores the whole corpus
+as a pure projection.  Spark-first end to end:
 
 * features: the zero/low-shuffle projections already in llmops
   (quality_features length/token ratios + repetition_ratio) assembled
@@ -17,10 +16,8 @@ a pure projection.  Spark-first end to end:
 * scoring: ``model.transform`` is Tungsten-side per-row math; the
   teacher never runs again.
 
-Labels come from teacher-score terciles (top third = good, bottom
-third = bad, middle discarded — standard distillation margin), split
-train/eval by a hash of doc_id so the split is deterministic and
-content-independent.
+Labels are split train/eval by a hash of doc_id so the split is
+deterministic and content-independent.
 
 No counterpart in the reference (briangu/waddleml has no ML surface);
 extends the engine the way its training-data users need.
@@ -89,28 +86,6 @@ def feature_frame(docs: DataFrame) -> DataFrame:
         inputCols=feature_cols(), outputCol="features", handleInvalid="skip"
     )
     return asm.transform(joined)
-
-
-def lm_teacher_labels(docs: DataFrame) -> DataFrame:
-    """(doc_id, label) from bigram-LM score terciles (middle third
-    dropped — the distillation margin).  On a corpus with no quality
-    axis (the synthetic fixtures: lm_score spans ~0.4 nats) the student
-    honestly reports chance AUC; on real crawl data this is the CCNet-
-    style perplexity filter teacher."""
-    from . import textstats
-
-    scored = textstats.bigram_lm_scores(docs)
-    qs = scored.approxQuantile("lm_score", [1 / 3, 2 / 3], 0.001)
-    if len(qs) != 2:  # approxQuantile returns [] on zero rows — crisp
-        raise ValueError("lm_teacher_labels: empty corpus (no lm_score rows)")
-    lo, hi = qs
-    return (
-        scored.filter((F.col("lm_score") <= lo) | (F.col("lm_score") >= hi))
-        .select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("lm_score") >= hi, 1.0).otherwise(0.0).alias("label"),
-        )
-    )
 
 
 def langid_teacher_labels(docs: DataFrame) -> DataFrame:
@@ -231,8 +206,7 @@ def learned_filter_report(
     """Distill the lang-ID-confidence teacher into the linear surface-
     feature student — the two-class signal the fixture corpus actually
     carries (its text is template-English regardless of the lang column,
-    and it contains no PII or quality axis; swap in lm_teacher_labels on
-    a real crawl).  Teacher + fit + eval all run on the bounded
+    and it contains no PII or quality axis).  Teacher + fit + eval all run on the bounded
     ``fit_sample`` (the round-4 review's last unbounded fit); applying
     the learned filter to the corpus remains a pure projection."""
     from waddleml_spark.session import read_table

@@ -125,37 +125,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def winnowing_fingerprints(
-    text: Column, k: int = 3, window: int = 4
-) -> Column:
-    """Winnowing (MOSS-style) local fingerprints: rolling k-gram token
-    hashes, then the minimum hash of each sliding window of `window`
-    grams, distinct.  Robust partial-overlap detector — two documents
-    sharing any sufficiently long passage share fingerprints, unlike the
-    whole-document md5.  Pure expressions; zero shuffle per row.
-
-    WARNING — serving/single-doc use ONLY, never a corpus hot path
-    (r10 find): interpreted HOF lambdas get no CSE, so the `wins`
-    lambda re-evaluates the whole `grams` transform PER WINDOW —
-    O(G²·k) interpreted ops per document.  The 100× corpus pass hung
-    past 570 s on exactly this column; corpus-scale winnowing goes
-    through the LINEAR positioned-window construction instead
-    (dedup.winnowing32_overlap_pairs / catalog winnowing_overlap_pairs,
-    rebuilt r10).
-    """
-    toks = F.split(lower_trim(text), WS_RE)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(th) - (k - 1), F.lit(1))),
-        lambda i: F.xxhash64(*[F.try_element_at(th, i + j) for j in range(k)]),
-    )
-    wins = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(grams) - (window - 1), F.lit(1))),
-        lambda i: F.array_min(F.slice(grams, i, window)),
-    )
-    return F.array_distinct(wins)
-
-
 def nopartial_gram_exprs(
     k: int, tok_col: str = "__t", n_col: str = "__n", i_col: str = "__i"
 ) -> tuple[Column, Column]:

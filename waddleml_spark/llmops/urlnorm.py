@@ -278,8 +278,7 @@ def domain_capped_keepers(
     Scale shape: canonicalization + domain are map-only; the only
     exchange is the domain-grain window.  A mega-domain makes that a
     hot key — at crawl scale, pre-aggregate per-domain counts first
-    and rank members only for domains past the cap (the
-    sliced_running_sum two-phase precedent); the report twin
+    and rank members only for domains past the cap; the report twin
     (catalog domain_cap_report) documents the same flip rule.
     """
     from pyspark.sql import Window

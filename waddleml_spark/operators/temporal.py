@@ -9,7 +9,7 @@ Design notes (guide §Common OLAP patterns):
 - range join = bucketize the range key + equi-join on neighboring buckets +
   exact residual filter: turns an O(n·m) inequality join into a bounded
   hash join.  Bucket width trades join fan-out vs candidate count.
-- time_bucket = date_trunc / arbitrary-width epoch bucketing; hierarchical
+- time-bucket rollups bucket by date_trunc (DST-aware); hierarchical
   rollups reaggregate coarse from fine (hypertable continuous-aggregate
   pattern) so each level is one cheap pass over the previous.
 """
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -160,14 +160,6 @@ def range_join_bucketized(
     return joined.filter(
         F.abs(F.col(left_val) - F.col(right_val)) <= max_distance
     )
-
-
-def time_bucket(col: Column, width_seconds: int) -> Column:
-    """Arbitrary-width epoch bucket start (timestamp), hypertable-style.
-    For calendar units prefer date_trunc (DST-aware)."""
-    epoch = col.cast("double")
-    start = F.floor(epoch / width_seconds) * width_seconds
-    return F.timestamp_seconds(start.cast("long"))
 
 
 def rollup_hierarchy(

@@ -99,10 +99,6 @@ TABLES: dict[str, Table] = {
     ),
 }
 
-# Run status enum-by-convention (ref: waddle/_run.py:53,192-201).
-RUN_STATUSES = ("running", "completed", "failed", "aborted")
-
-
 def _ddl(name: str, t: Table) -> list[str]:
     # a one-column key stays inline, as the reference writes it: DuckDB
     # numbers a table's constraints in the order the DDL declares them

@@ -62,7 +62,6 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_snaptable"

@@ -253,7 +253,7 @@ class WaddleStore:
             {"table": list(_CASCADE), "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
         )
 
-    # --- change data capture ---------------------------------------------
+    # --- deleted runs ------------------------------------------------------
 
     def _tombstones(self, table: str) -> DataFrame | None:
         """The run ids deleted from `table`, or None when it has none."""
@@ -267,61 +267,6 @@ class WaddleStore:
             .parquet(td)
             .filter(F.col("table") == table)
         )
-
-    def changes(self, table: str, since_seq: int = 0) -> DataFrame:
-        """Change-data feed for a versioned table: every version row with
-        `_seq > since_seq`, classified as op ∈ insert/update/delete (the
-        Delta-CDF shape, built on the engine's own event log — no extra
-        write-path cost; deletes come from the tombstone log).
-
-        Consumers poll with their last-seen `_seq` as the cursor; the feed
-        is totally ordered by `_seq`.  Replay from an old cursor is exact
-        until compact() rewrites history (compaction keeps only the latest
-        version per PK and drops deleted runs; a from-scratch consumer then
-        sees it as the insert — eventually-consistent, like Delta CDF
-        across VACUUM).  Until then a deleted run's history stays in the
-        feed, followed by its delete event.
-        op classification: the FIRST version of a PK ever
-        seen is 'insert', later versions 'update' — one window over the PK,
-        the same shuffle the read view already pays.  For commits
-        (first-writer-wins) duplicate inserts are no-ops and are omitted.
-
-        Append-only tables (metrics, artifacts) need no CDC machinery:
-        the parquet append log IS the change feed.
-        """
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        t = TABLES[table]
-        if not t.upsert_key:
-            raise ValueError(
-                f"{table} is append-only; its append log is the change feed"
-            )
-        data = self._read(table)
-        w = Window.partitionBy(*t.upsert_key).orderBy(F.col("_seq").asc())
-        versions = data.withColumn("__rn", F.row_number().over(w))
-        if t.first_writer_wins:
-            versions = versions.filter(F.col("__rn") == 1)
-        op = F.when(F.col("__rn") == 1, "insert").otherwise("update")
-        feed = (
-            versions.filter(F.col("_seq") > since_seq)
-            .select(op.alias("op"), "_seq", *t.names)
-        )
-        # deletes: one tombstone per run id, matched on the table's run_col
-        tombs = self._tombstones(table)
-        if tombs is not None:
-            dels = tombs.filter(F.col("_seq") > since_seq).select(
-                F.lit("delete").alias("op"),
-                "_seq",
-                *[
-                    F.col("run_id").alias(f.name) if f.name == t.run_col
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in spark_schema(table).fields
-                    if f.name != "_seq"
-                ],
-            )
-            feed = feed.unionByName(dels)
-        return feed.orderBy("_seq")
 
     def _duck_row(self, table: str, key_col: str, key_val) -> dict | None:
         with self._duck_lock:

@@ -1,2 +1,2 @@
-"""Streaming path (SURVEY.md §2.10): live metric broadcast and
-streaming dedup (live), and the snapshot-table sink (snapsink)."""
+"""Streaming path (SURVEY.md §2.10): live metric broadcast (live) and
+the snapshot-table sinks (snapsink)."""

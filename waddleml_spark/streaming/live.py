@@ -31,8 +31,7 @@ only while someone watches.
 Nothing here tails the store's part files as a Spark stream: a file
 source would miss the `_cdc_deletes` tombstones `WaddleStore.df()`
 anti-joins, and since it tracks files by name it would count every row
-`compact()` rewrites a second time.  The two dedup operators below run
-on a document stream the caller supplies.
+`compact()` rewrites a second time.
 """
 
 from __future__ import annotations
@@ -75,88 +74,3 @@ class LiveBus:
             with self._lock:
                 self._subs = [s for s in self._subs if s not in dead]
 
-
-def stream_dedup(
-    docs,
-    text_col: str = "text",
-    time_col: str = "ingest_time",
-    watermark: str = "10 minutes",
-):
-    """Streaming exact-dedup of a document stream: drop any doc whose
-    normalized content fingerprint was already seen within the watermark
-    horizon (dropDuplicatesWithinWatermark).
-
-    The streaming twin of llmops.dedup.incremental_dedup: that one is the
-    recurring-crawl batch shape (anti join against the FULL stored index —
-    exact forever, one scheduled job per crawl); this one is the live-firehose
-    shape, where exactness-forever would mean unbounded state.  Keyed state
-    holds one 16-byte fingerprint per distinct doc seen within the watermark
-    and is evicted as event time advances, so state is O(ingest rate ×
-    watermark), independent of corpus size — the property that keeps the
-    query runnable forever on a 1000-executor cluster.  Re-crawls typically
-    re-surface a URL within minutes; anything beyond the horizon is caught
-    by the nightly incremental_dedup pass (belt and suspenders).
-
-    `docs` is a STREAMING DataFrame with `text_col` and an event-time
-    `time_col`; returns the deduplicated stream (original columns).
-    Extension beyond the reference (no streaming surface there at all).
-    """
-    from pyspark.sql import functions as F
-
-    from waddleml_spark.llmops.textstats import fingerprint
-
-    deduped = (
-        docs.withColumn("__fp", fingerprint(F.col(text_col)))
-        .withWatermark(time_col, watermark)
-        .dropDuplicatesWithinWatermark(["__fp"])
-    )
-    return deduped.drop("__fp")
-
-
-def stream_url_dedup(
-    docs,
-    url_col: str = "url",
-    time_col: str = "ingest_time",
-    watermark: str = "10 minutes",
-):
-    """Streaming crawl-frontier dedup: drop any document whose CANONICAL
-    URL (llmops.urlnorm — scheme/www/port/slash/fragment/tracking-param
-    normalization) was already seen within the watermark horizon.
-
-    The live twin of the batch url_dedup_report: a crawl frontier
-    re-surfaces the same page as scheme/tracking variants within
-    minutes, and canonicalization is a stateless map-only projection,
-    so it composes with dropDuplicatesWithinWatermark exactly like
-    stream_dedup's content fingerprint — keyed state is one canonical
-    string per distinct page within the watermark, O(ingest rate x
-    watermark), corpus-size-independent.  Content-level dups that
-    survive (different URL, same text) fall through to stream_dedup /
-    the nightly incremental_dedup pass downstream.
-
-    NULL/empty/WHITESPACE-ONLY urls PASS THROUGH undeduplicated (review
-    + advisor find): urlnorm folds NULL/'' to the constant 'https:///'
-    (and every all-whitespace url to one 'https://<ws>/' family), so
-    keying state on them would collapse every url-less row (unresolved
-    redirect, sitemap stub) after the first into "duplicates" — data
-    loss, not dedup.  The emptiness check strips the shared explicit
-    whitespace class (WS_TRIM_RE — never the engine trim builtins, the
-    CLAUDE.md rule) so ' ' takes the pass-through branch too.  The
-    url-less branch unions back in; the source re-reads each
-    micro-batch once per branch, the standard cost of a streaming
-    split.
-    """
-    from pyspark.sql import functions as F
-
-    from waddleml_spark.llmops import WS_TRIM_RE
-    from waddleml_spark.llmops.urlnorm import with_canonical_url
-
-    has_url = F.col(url_col).isNotNull() & (
-        F.regexp_replace(F.col(url_col), WS_TRIM_RE, "") != ""
-    )
-    deduped = (
-        with_canonical_url(docs.filter(has_url), url_col, out_col="__curl")
-        .withWatermark(time_col, watermark)
-        .dropDuplicatesWithinWatermark(["__curl"])
-        .drop("__curl")
-    )
-    return deduped.unionByName(docs.filter(~has_url))

@@ -7,6 +7,11 @@ never a half-written file set — and any historical batch boundary can be
 time-traveled back to.  This is the exactly-once-ish pattern Delta's
 streaming sink uses (idempotent versioned commits per epoch).
 
+Two sinks: ``snapshot_sink`` commits each micro-batch as it arrives;
+``neardup_snapshot_sink`` first drops exact and SimHash near-duplicates,
+within the batch and against the current snapshot, and commits only the
+survivors.
+
 Epoch identity is scoped by ``stream_id``: Structured Streaming epoch
 ids are monotone only WITHIN one checkpoint, so "epoch seen before"
 is meaningful only per (checkpoint ≙ stream_id).  A query restarted
@@ -82,49 +87,6 @@ def snapshot_sink(table: str, stream_id: str = "default"):
     return sink
 
 
-def dedup_snapshot_sink(
-    table: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    stream_id: str = "default",
-):
-    """foreachBatch function: the streaming half of the corpus-ingestion
-    loop (examples/snapshot_lakehouse.py) — every micro-batch is exact-
-    deduped within itself (lowest id per content fingerprint), then
-    against the CURRENT snapshot's fingerprints (anti-join on 16-byte
-    hashes; the stored corpus never rescans its text), and only the
-    surviving representatives commit as the next snapshot version.
-    Restart-idempotent like snapshot_sink (a same-stream re-delivered
-    epoch skips before any compute); a batch whose docs are all already
-    known commits nothing.
-
-    At scale the fingerprint index should be a stored column: the read
-    here projects (id, text) -> fingerprints per batch, which Spark
-    prunes to just those columns via the manifest-listed files.
-    """
-    from waddleml_spark.llmops import dedup
-
-    def sink(df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= snaptable.delivered_epoch(table, stream_id):
-            return  # replay: skip before ANY compute
-        if df.isEmpty():
-            return
-        fresh = dedup.exact_dedup_keep(df, text_col=text_col, id_col=id_col)
-        if snaptable.current_version(table) > 0:
-            # spark here is the micro-batch's session — never a global
-            fresh = _drop_known(
-                fresh, snaptable.read(df.sparkSession, table), text_col
-            )
-        # localCheckpoint cuts lineage at BATCH grain (bounded, unlike a
-        # corpus-scale checkpoint): the commit runs isEmpty() and then
-        # the write, and without the cut each action re-executes the
-        # whole plan — including the snapshot-wide fingerprint scan —
-        # twice per micro-batch
-        _commit_epoch(fresh.localCheckpoint(), table, stream_id, epoch_id)
-
-    return sink
-
-
 def neardup_snapshot_sink(
     table: str,
     text_col: str = "text",
@@ -134,8 +96,10 @@ def neardup_snapshot_sink(
     max_bucket: int = 64,
     jaccard_threshold: float = 0.8,
 ):
-    """foreachBatch function: streaming NEAR-dup ingest — the LSH version
-    of dedup_snapshot_sink.  Per micro-batch: exact dedup within the
+    """foreachBatch function: streaming NEAR-dup ingest, the streaming
+    half of the corpus-ingestion loop (examples/snapshot_lakehouse.py).
+    Per micro-batch: exact dedup (lowest id per content fingerprint)
+    within the
     batch, exact fingerprint anti-join against the snapshot, banded
     32-bit SimHash near-dup removal WITHIN the batch, then against the
     stored corpus — every candidate verified at exact n-gram Jaccard >=

@@ -31,7 +31,7 @@ spark.sparkContext.setLogLevel("ERROR")
 
 # 1. ingest-side: write both facts bucketed+sorted by their join key.
 #    This is the one-time shuffle the layout trades for every later one.
-names = bucket_facts(spark, SF_DIR, tables=("lineitem", "orders"), n_buckets=8)
+names = bucket_facts(spark, SF_DIR, n_buckets=8)
 print(f"bucketed tables       : {names}")
 
 # 2. query-side: read THROUGH the catalog (a plain parquet read of the

@@ -34,6 +34,16 @@ file, and each bare ``test_<name>`` a test file or a test function.
 ``store.py`` is the one writer of a store's DuckDB file: no other package
 module may take its write lock (``_duck_lock``) or call ``.duck.execute``
 / ``.duck.register`` on the store's shared connection.
+
+Every parameter with a default, on a function or method in the same
+scope as the dead-definition guard, must be passed some other value by
+at least one call in the repo (tests included: a knob a test turns is a
+covered configuration).  A value that only forwards an enclosing
+function's own parameter sets nothing unless that parameter is set, so
+the check runs to a fixpoint; a ``*args``/``**kwargs`` call sets every
+parameter of its callee.  Exempt: column bindings (``*_col``/``*_cols``)
+and the names in ``KEPT_PARAMS``, each with the reason it stays.  A
+value nothing sets is a constant: write it as one.
 """
 
 from __future__ import annotations
@@ -308,3 +318,170 @@ def test_store_is_the_one_duckdb_writer():
             if lock or call:
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert offenders == [], "DuckDB writes outside store.py:\n" + "\n".join(offenders)
+
+
+# "func.param" (or "Class.method.param") with a default that no call
+# sets -> why it stays a parameter
+KEPT_PARAMS: dict[str, str] = {
+    "connected_components.id_a": "column binding: the edge table's first id",
+    "connected_components.id_b": "column binding: the edge table's second id",
+    "asof_join.suffix": "column binding: the suffix of the right side's clashing names",
+    "canonical_url_subquery_sql.url_expr": "column binding: the url's SQL expression",
+    "init.db_path": "MIGRATION's alias of the reference tracker's db_path",
+    "snapshot_sink.stream_id": "MIGRATION's replay key for a restarted stream",
+    "neardup_snapshot_sink.stream_id": "MIGRATION's replay key for a restarted stream",
+    "WaddleStore.compact.table": "DEPLOY's maintenance call names its table",
+    "WaddleStore.bucket_table.keys": "DEPLOY's one-call metrics layout names its keys",
+    "WaddleStore.bucket_table.name": "DEPLOY's one-call metrics layout names its table",
+    "vacuum.*": "the snapshot-table garbage collector's options README and DEPLOY name",
+    "file_list.version": "time travel: the snapshot version to list",
+    "serve_dashboard.host": "MIGRATION's run.serve_dashboard(host, port) row",
+    "Run.serve_dashboard.host": "MIGRATION's run.serve_dashboard(host, port) row",
+}
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
+    """(index among positional parameters or None, name, default) of
+    each parameter of ``fn`` with a default."""
+    a = fn.args
+    positional = [*a.posonlyargs, *a.args]
+    first = len(positional) - len(a.defaults)
+    for i, (arg, default) in enumerate(zip(positional[first:], a.defaults), first):
+        yield i, arg.arg, default
+    for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+        if default is not None:
+            yield None, arg.arg, default
+
+
+def _param_names(fn) -> list[str]:
+    a = fn.args
+    names = [x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs)]
+    return names + [x.arg for x in (a.vararg, a.kwarg) if x]
+
+
+def _bound_self(fn, in_class: bool) -> int:
+    """How many leading parameters a call through ``obj.name(...)`` or
+    ``Class(...)`` binds implicitly (``self``/``cls``)."""
+    static = any(
+        isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list
+    )
+    return int(in_class and not static)
+
+
+def single_value_parameters() -> list[str]:
+    """Every defaulted parameter in scope that no call sets, to a fixpoint.
+
+    A call sets a parameter when it passes it (by keyword or position) a
+    value whose ``ast`` differs from the default's. A value that is a
+    parameter of an enclosing function forwards it: it sets the callee's
+    parameter only if that one is set. A call with ``*args``/``**kwargs``
+    sets every parameter of its callee.
+    """
+    trees = {
+        p: ast.parse(p.read_text(encoding="utf-8"), filename=str(p))
+        for p in _py_files()
+    }
+    # simple name -> [(qualname, fn node, implicit leading params)]
+    by_name: dict[str, list] = {}
+    params: dict[str, tuple[Path, int]] = {}  # "qual.param" -> where
+    defaults: dict[str, str] = {}  # "qual.param" -> ast.dump(default)
+    scoped: dict[ast.AST, str] = {}  # in-scope fn node -> qualname
+    for path in sorted(p for p in trees if PKG in p.parents):
+        for qualname, node in _definitions(trees[path]):
+            if isinstance(node, ast.ClassDef):
+                init = next(
+                    (
+                        m for m in node.body
+                        if isinstance(m, ast.FunctionDef) and m.name == "__init__"
+                    ),
+                    None,
+                )
+                if init is not None:
+                    by_name.setdefault(node.name, []).append(
+                        (f"{qualname}.__init__", init, 1)
+                    )
+                continue
+            implicit = _bound_self(node, "." in qualname)
+            by_name.setdefault(node.name, []).append((qualname, node, implicit))
+            scoped[node] = qualname
+            for _, name, default in _defaulted(node):
+                key = f"{qualname}.{name}"
+                params[key] = (path.relative_to(REPO), node.lineno)
+                defaults[key] = ast.dump(default)
+
+    def exempt(key: str) -> bool:
+        qual, name = key.rsplit(".", 1)
+        return (
+            name.endswith(("_col", "_cols"))
+            or key in KEPT_PARAMS
+            or f"{qual}.*" in KEPT_PARAMS
+        )
+
+    # (callee "qual.param", value) pairs: value is None (always sets), or
+    # the "qual.param" of the enclosing parameter it forwards
+    edges: list[tuple[str, str | None]] = []
+
+    def visit(node: ast.AST, enclosing: list) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            enclosing = [*enclosing, node]
+        if isinstance(node, ast.Call):
+            func = node.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", "")
+            for qual, fn, implicit in by_name.get(name, ()):
+                record(node, qual, fn, implicit, enclosing)
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    def origin(value: ast.AST, enclosing: list) -> str | None:
+        """The "qual.param" a forwarded value names, else None."""
+        if not isinstance(value, ast.Name):
+            return None
+        for fn in reversed(enclosing):
+            if value.id in _param_names(fn):
+                qual = scoped.get(fn)
+                return f"{qual}.{value.id}" if qual else None
+        return None
+
+    def record(call: ast.Call, qual: str, fn, implicit: int, enclosing: list) -> None:
+        spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords
+        )
+        if spread:
+            edges.extend((f"{qual}.{name}", None) for _, name, _ in _defaulted(fn))
+        positional = [*fn.args.posonlyargs, *fn.args.args][implicit:]
+        passed = [(p.arg, v) for p, v in zip(positional, call.args)]
+        passed += [(k.arg, k.value) for k in call.keywords if k.arg]
+        for name, value in passed:
+            key = f"{qual}.{name}"
+            if key in defaults and ast.dump(value) != defaults[key]:
+                edges.append((key, origin(value, enclosing)))
+
+    for tree in trees.values():
+        visit(tree, [])
+
+    def sets(source: str | None) -> bool:
+        """Whether a value from ``source`` is a real setting: a literal or
+        expression (None), a required or exempt parameter, or a set one."""
+        return source is None or source not in params or exempt(source) or source in set_
+
+    set_: set[str] = set()
+    changed = True
+    while changed:
+        changed = False
+        for key, source in edges:
+            if key not in set_ and sets(source):
+                set_.add(key)
+                changed = True
+    return [
+        f"{params[k][0]}:{params[k][1]} {k}"
+        for k in sorted(params, key=lambda k: (params[k], k))
+        if k not in set_ and not exempt(k)
+    ]
+
+
+def test_no_single_value_parameters():
+    unset = single_value_parameters()
+    assert unset == [], (
+        "parameters with a default that no call sets to another value "
+        "(make each one its default, or name it in KEPT_PARAMS):\n" + "\n".join(unset)
+    )

@@ -88,7 +88,7 @@ def test_minhash_block_candidates_semantics(spark, docs):
     assert not any((a in (4, 5)) != (b in (4, 5)) for a, b in pairs)
 
     # mega-bucket guard: 200 identical word sets = one bucket of 200
-    # > max_bucket -> DROPPED entirely (mirrored in the demo oracles'
+    # > the star cap -> DROPPED entirely (mirrored in the demo oracles'
     # HAVING); at 64 members it still pairs
     big = spark.createDataFrame(
         [(i, ["tpl", "words"]) for i in range(200)], "doc_id long, ws array<string>"
@@ -354,7 +354,7 @@ def test_minhash32_band_pairs_mega_bucket_dropped(spark):
              (501, "tiny pair one of two near dup docs here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {(r.id_a, r.id_b) for r in dedup.minhash32_band_pairs(df).collect()}
-    # the 80-doc template bucket exceeds max_bucket=64 in EVERY band -> dropped
+    # the 80-doc template bucket exceeds the star cap (64) in EVERY band -> dropped
     assert pairs == {(500, 501)}
 
 
@@ -389,7 +389,7 @@ def test_bloom_no_false_negatives_and_measured_fp(spark):
     others = spark.range(0, 2000).select(
         F.concat(F.lit("x"), F.col("id").cast("string")).alias("v")
     )
-    bits = bloom.bloom_build(members, "v", n_bits=1 << 16, k=5)
+    bits = bloom.bloom_build(members, "v", n_bits=1 << 16)
     assert len(bits) == (1 << 16) // 8
     flagged_m = bloom.bloom_flag(members, "v", bits).filter("in_bloom").count()
     assert flagged_m == 2000  # no false negatives, ever
@@ -397,7 +397,7 @@ def test_bloom_no_false_negatives_and_measured_fp(spark):
     # m=65536 bits, n=2000, k=5 -> theoretical fp ~ 0.00025; allow 50x
     assert fp <= 25
     # determinism across partition layouts
-    bits2 = bloom.bloom_build(members.repartition(7), "v", n_bits=1 << 16, k=5)
+    bits2 = bloom.bloom_build(members.repartition(7), "v", n_bits=1 << 16)
     assert bits == bits2
 
 
@@ -484,7 +484,7 @@ def test_ngram_overlap_pairs_exact_counts_and_df_cap(spark):
         (3, "completely unrelated words here now"),
     ]
     # plus 70 docs sharing ONLY one boilerplate trigram — its document
-    # frequency (70) exceeds max_df=64, so the cap must drop it and the
+    # frequency (70) exceeds the star cap (64), so the cap must drop it and the
     # 70 docs must produce ZERO pairs even at min_shared=1
     rows += [(100 + i, f"common gram here u{i} v{i} w{i}") for i in range(70)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -589,7 +589,7 @@ def test_containment_threshold_and_df_cap(spark):
         (1, "alpha beta gamma delta epsilon " + filler_a),
         (2, "alpha beta gamma delta epsilon " + filler_b),
     ]
-    # plus 70 docs sharing one boilerplate trigram: df = 70 > max_df=64
+    # plus 70 docs sharing one boilerplate trigram: df = 70 > the star cap (64)
     # drops it from numerators AND denominators on the flood docs, which
     # then hold zero rare grams and can produce no pairs
     rows += [(100 + i, f"common gram here u{i} v{i} w{i}") for i in range(70)]
@@ -616,7 +616,7 @@ def test_remove_duplicate_passages_semantics(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r
-        for r in dedup.remove_duplicate_passages(df, passage_words=20).collect()
+        for r in dedup.remove_duplicate_passages(df).collect()
     }
     assert out[1].n_removed == 0 and out[1].clean_text.startswith("w0 w1")
     assert out[2].n_removed == 1 and out[2].n_words_removed == 20
@@ -642,7 +642,7 @@ def test_remove_duplicate_passages_semantics(spark):
     # determinism: a second run rewrites byte-identically
     again = {
         r.doc_id: r
-        for r in dedup.remove_duplicate_passages(df, passage_words=20).collect()
+        for r in dedup.remove_duplicate_passages(df).collect()
     }
     assert {k: tuple(v) for k, v in out.items()} == {
         k: tuple(v) for k, v in again.items()
@@ -660,7 +660,7 @@ def test_remove_duplicate_passages_accounting(spark):
     out = dedup.remove_duplicate_passages(docs).agg(
         F.sum("n_passages").alias("tot"), F.sum("n_removed").alias("rem")
     ).head()
-    inst = dedup._passage_inst(docs, "text", "doc_id", "source", 20)
+    inst = dedup._passage_inst(docs, "text", "doc_id", "source")
     stats = inst.agg(
         F.sum("inst").alias("tot"),
         F.count_distinct("ph").alias("nh"),

@@ -264,7 +264,7 @@ def test_frame_neardup_flood_bucket_is_guarded(spark):
     media = spark.createDataFrame(
         rows, "media_id long, modality string, payload binary"
     )
-    got = frame_neardup_pairs(media, min_shared=4).collect()
+    got = frame_neardup_pairs(media).collect()
     flood = [r for r in got if r.id_a < 500 and r.id_b < 500]
     assert not flood, "mega-bucket guard failed on the payload flood"
     # the two tail-edited variants share their 16 aligned prefix chunks
@@ -290,4 +290,4 @@ def test_hash_kernels_reject_over_64_bit_grids(spark):
     with pytest.raises(ValueError, match="64 bits"):
         ahash_kernel(np.zeros((16, 16, 3)), side=9)
     with pytest.raises(ValueError, match="64 bits"):
-        audio_fingerprint_kernel([0.0] * 64, n_frames=16, n_bands=8)
+        audio_fingerprint_kernel([0.0] * 64, n_frames=16)

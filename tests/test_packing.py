@@ -93,7 +93,7 @@ def test_bernoulli_keep_is_stable_and_salted(spark):
 def test_chunk_tokens_coverage_and_overlap(spark):
     from waddleml_spark.llmops.packing import chunk_tokens
 
-    rows = chunk_tokens(docs(spark), chunk=64, overlap=16).collect()
+    rows = chunk_tokens(docs(spark)).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.id, []).append(r)

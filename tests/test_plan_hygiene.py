@@ -132,7 +132,7 @@ def test_no_duplicated_python_stage(spark, name):
 
 def test_containment_carries_partial_window_group_limit(spark):
     """doc_containment_pairs' scale guard (r11): the dense_rank <=
-    max_df+1 cap must compile to a PARTIAL WindowGroupLimit — the
+    STAR_CAP+1 cap must compile to a PARTIAL WindowGroupLimit — the
     map-side cut that bounds what a universal shingle ships through
     the gram-grain exchange.  If a Spark upgrade or plan edit drops
     the partial mode, the memory bound silently reverts to the

@@ -78,7 +78,7 @@ def test_metric_summary_broadcasts_runs_dim(spark, tmp_path):
     run.finish()
     store = run._store
     m = store.df("metrics").filter(F.col("key") == "loss")
-    last = ops.last_per_group(m, ["run_id"], "step", keep_ties=True)
+    last = ops.last_per_group(m, ["run_id"], "step")
     runs = store.df("runs").select(F.col("id").alias("run_id"), "name", "started_at")
     out = last.join(F.broadcast(runs), on="run_id")
     assert_plan(out, contains=["BroadcastHashJoin"])

@@ -72,7 +72,7 @@ def test_last_per_group_matches_bruteforce(spark, rows):
         [(u, t, v, i) for i, (u, t, v) in enumerate(rows)],
         "u long, t long, v long, rid long",
     )
-    got = {(r.u, r.t) for r in last_per_group(df, ["u"], "t", keep_ties=True).collect()}
+    got = {(r.u, r.t) for r in last_per_group(df, ["u"], "t").collect()}
     want = set()
     groups: dict[int, list[tuple[int, int]]] = {}
     for u, t, v in rows:
@@ -82,7 +82,7 @@ def test_last_per_group_matches_bruteforce(spark, rows):
         want.add((u, tmax))
     assert got == want
     # rank() keeps ALL max-t rows (ref J2 equality-on-MAX semantics)
-    got_rows = last_per_group(df, ["u"], "t", keep_ties=True).count()
+    got_rows = last_per_group(df, ["u"], "t").count()
     want_rows = sum(
         sum(1 for t, _ in tv if t == max(x for x, _ in tv)) for tv in groups.values()
     )
@@ -137,7 +137,7 @@ def test_chunk_count_matches_analytic_formula(spark, counts):
 
     rows = [(i, " ".join(["ab"] * n)) for i, n in enumerate(counts)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = chunk_tokens(df, chunk=64, overlap=16)
+    out = chunk_tokens(df)
     got = {r["id"]: r["cnt"] for r in out.groupBy("id").agg(F.count("*").alias("cnt")).collect()}
     for i, n in enumerate(counts):
         if n == 0:

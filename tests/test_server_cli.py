@@ -252,6 +252,26 @@ def test_cli_explain_leaves_the_callers_session_running(spark, capsys):
     assert spark.range(1).count() == 1
 
 
+def _root_log_level(spark) -> str:
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.logging.log4j.LogManager.getRootLogger().getLevel().toString()
+
+
+def test_cli_query_leaves_the_callers_log_level(spark, capsys):
+    """A catalog command run inside a host process must not mute the
+    host's session: only a session the command creates logs at ERROR."""
+    from waddleml_spark.cli import main
+
+    before = _root_log_level(spark)
+    spark.sparkContext.setLogLevel("INFO")
+    try:
+        rc = main(["query", "forecast_revenue_q6", "--sf-dir", "/root/testdata/sf0.001"])
+        assert rc == 0
+        assert _root_log_level(spark) == "INFO"
+    finally:
+        spark.sparkContext.setLogLevel(before)
+
+
 def test_cli_query_unknown_name(capsys):
     from waddleml_spark.cli import main
 

@@ -156,7 +156,7 @@ def test_domain_mix_smoothing_upsamples_tail_domains(spark):
     from tests.conftest import SF_SMOKE
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    rep = domain_mix_report(emb, n_domains=4, alpha=0.5).collect()
+    rep = domain_mix_report(emb, n_domains=4).collect()
     assert len(rep) == 4
     assert abs(sum(r.natural_share for r in rep) - 1.0) < 1e-4
     assert abs(sum(r.smoothed_share for r in rep) - 1.0) < 1e-4
@@ -165,7 +165,7 @@ def test_domain_mix_smoothing_upsamples_tail_domains(spark):
     if smallest.n_docs < largest.n_docs:  # non-degenerate clustering
         assert smallest.sample_rate > 1.0 > largest.sample_rate
     # deterministic (fixed KMeans seed + floor rounding)
-    again = domain_mix_report(emb, n_domains=4, alpha=0.5).collect()
+    again = domain_mix_report(emb, n_domains=4).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in rep]
 
 
@@ -184,7 +184,7 @@ def test_blocked_cosine_pairs_drops_duplicate_id_self_pairs(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, label string, embedding array<float>"
     )
-    got = blocked_cosine_pairs(df, "label", threshold=0.3).collect()
+    got = blocked_cosine_pairs(df, "label").collect()
     pairs = {(r.id_a, r.id_b) for r in got}
     assert (1, 1) not in pairs          # duplicate-id self pair excluded
     assert (1, 2) in pairs              # real pair survives (twice: one
@@ -213,7 +213,6 @@ def test_semantic_dedup_report_cell_accounting(spark):
     pairs = similarity.blocked_cosine_pairs(
         emb.join(cells.select("vec_id", "ivf_cell"), "vec_id"),
         "ivf_cell",
-        threshold=0.3,
     )
     comp = dedup.connected_components(pairs)
     from pyspark.sql import functions as F
@@ -234,7 +233,7 @@ def test_blocked_cosine_pairs_carries_input_id_type(spark):
     df = spark.createDataFrame(
         rows, "vec_id string, label string, embedding array<float>"
     )
-    out = blocked_cosine_pairs(df, "label", threshold=0.3)
+    out = blocked_cosine_pairs(df, "label")
     assert out.schema["id_a"].dataType.simpleString() == "string"
     got = {(r.id_a, r.id_b) for r in out.collect()}
     assert got == {("a", "b")}
@@ -243,7 +242,7 @@ def test_blocked_cosine_pairs_carries_input_id_type(spark):
         [(1, "x", [1.0, 0.0]), (2, "x", [1.0, 0.1])],
         "vec_id int, label string, embedding array<float>",
     )
-    out32 = blocked_cosine_pairs(df32, "label", threshold=0.3)
+    out32 = blocked_cosine_pairs(df32, "label")
     assert out32.schema["id_a"].dataType.simpleString() == "int"
     assert {(r.id_a, r.id_b) for r in out32.collect()} == {(1, 2)}
 
@@ -388,10 +387,10 @@ def test_cosine_topk_lookup_matches_literal_path_and_empty_is_zero_rows(spark):
     ]
     lookup_rows = [
         (r.vec_id, r.cos_sim)
-        for r in similarity.cosine_topk_lookup(emb, 0, k=10).collect()
+        for r in similarity.cosine_topk_lookup(emb, 0).collect()
     ]
     assert lit_rows == lookup_rows
-    assert similarity.cosine_topk_lookup(emb, -999, k=10).count() == 0
+    assert similarity.cosine_topk_lookup(emb, -999).count() == 0
 
 
 def test_dispersion_by_label_hand_values_and_exclusions(spark):

@@ -58,7 +58,7 @@ def test_cms_one_sided_error_and_merge(spark):
         F.concat(F.lit("w"), (F.col("id") % 300).cast("string")).alias("v"),
         (F.col("id") % 2 == 0).alias("half"),
     )
-    cms = sketches.cms_build(df, "v", width=1 << 10, depth=4)
+    cms = sketches.cms_build(df, "v", width=1 << 10)
     assert cms.shape == (4, 1 << 10) and cms.sum() == 5000 * 4
     exact = df.groupBy("v").agg(F.count("*").alias("n"))
     est = sketches.cms_estimates(exact, "v", cms).collect()
@@ -66,10 +66,10 @@ def test_cms_one_sided_error_and_merge(spark):
     # width 1024 >> 300 distinct: most estimates exact, overcount bounded
     assert sum(r.cms_est - r.n for r in est) <= 2 * 5000 * 4 // (1 << 10) * 300
 
-    a = sketches.cms_build(df.filter("half"), "v", width=1 << 10, depth=4)
-    b = sketches.cms_build(df.filter("NOT half"), "v", width=1 << 10, depth=4)
+    a = sketches.cms_build(df.filter("half"), "v", width=1 << 10)
+    b = sketches.cms_build(df.filter("NOT half"), "v", width=1 << 10)
     assert np.array_equal(a + b, cms)
-    again = sketches.cms_build(df.repartition(7), "v", width=1 << 10, depth=4)
+    again = sketches.cms_build(df.repartition(7), "v", width=1 << 10)
     assert np.array_equal(again, cms)
 
 

@@ -204,11 +204,11 @@ def test_streaming_cms_accumulates_to_whole_corpus_sketch(spark, tmp_path):
         F.concat(F.lit("tok"), (F.col("id") % 97).cast("string")).alias("v"),
         (F.col("id") % 5).alias("part"),
     )
-    whole = sketches.cms_build(df, "v", width=1 << 10, depth=4)
+    whole = sketches.cms_build(df, "v", width=1 << 10)
     acc = np.zeros_like(whole)
     for b in range(5):  # five "micro-batches" arriving over time
         acc += sketches.cms_build(
-            df.filter(F.col("part") == b), "v", width=1 << 10, depth=4
+            df.filter(F.col("part") == b), "v", width=1 << 10
         )
     assert np.array_equal(acc, whole)
     # and the merged sketch serves estimates identical to the whole-corpus one

@@ -53,7 +53,7 @@ def test_leakage_safe_split_covers_corpus(spark):
     rep = catalog.QUERIES["leakage_safe_split"](spark, SF_SMOKE).collect()
     assert sum(r.n_docs for r in rep) == n_docs
     # independent largest-cluster check straight from CC
-    pairs = dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(docs)
     comps = dedup.connected_components(pairs)
     biggest = (
         comps.groupBy("component").count().agg(F.max("count")).first()[0]
@@ -77,7 +77,7 @@ def test_cluster_canonical_keeper_rule(spark):
     assert all(r.cluster_size >= 2 for r in rows)
     # keeper is the longest doc of its cluster: verify on one cluster
     docs = read_table(spark, SF_SMOKE, "documents")
-    pairs = dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(docs)
     comps = dedup.connected_components(pairs)
     comp0 = rows[0].component
     members = (

@@ -337,7 +337,7 @@ def test_neardup_cluster_sizes_invariants(spark):
         assert r.cluster_size >= 2
         assert r.n_docs == r.cluster_size * r.n_clusters
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pairs = _dd.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
+    pairs = _dd.minhash_lsh_candidates(docs)
     n_nodes = (
         pairs.select(F.col("id_a").alias("id"))
         .unionByName(pairs.select(F.col("id_b").alias("id")))

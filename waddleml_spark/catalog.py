@@ -326,7 +326,7 @@ def dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def last_per_group_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    out = ops.last_per_group(ev, ["user_id", "event_type"], "ts", keep_ties=True)
+    out = ops.last_per_group(ev, ["user_id", "event_type"], "ts")
     return out.select("user_id", "event_type", F.col("value").alias("last_value"))
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from waddleml_spark.catalog import _r, _r_nan, _r_nan_sql, _r_sql, _register, t
 from waddleml_spark.llmops import dedup, multimodal, pii, similarity, textstats
 from waddleml_spark.llmops.textstats import lower_trim as _lt
+from waddleml_spark.llmops import STAR_CAP
 from waddleml_spark.llmops import WS_CHARS as _WSC
 from waddleml_spark.llmops import WS_TRIM_RE as _WST
 from waddleml_spark.llmops import WS_RE as _WS  # one whitespace class for Spark
@@ -99,7 +100,7 @@ def _md5_be32_sql(col: str) -> str:
     )
 
 
-def _minhash_block_sql(d_cte: str, max_bucket: int = 64) -> str:
+def _minhash_block_sql(d_cte: str) -> str:
     """Shared CTE chain for the single-permutation-MinHash-blocked pair
     demos — the SQL twin of dedup.minhash_block_candidates.  Expects a
     CTE named ``d`` with (doc_id, ws [, ...]) and emits ``kept``
@@ -112,7 +113,7 @@ def _minhash_block_sql(d_cte: str, max_bucket: int = 64) -> str:
         GROUP BY doc_id
     ), ok AS (
         SELECT bkey FROM k GROUP BY bkey
-        HAVING COUNT(*) BETWEEN 2 AND {max_bucket}
+        HAVING COUNT(*) BETWEEN 2 AND {STAR_CAP}
     ), kept AS (
         SELECT k.doc_id, k.bkey FROM k JOIN ok USING (bkey)
     )"""
@@ -277,7 +278,7 @@ def cosine_topk_q0(spark: SparkSession, sf_dir: str) -> DataFrame:
     a driver-side ``.head()`` fetch that needed its own empty-input
     carve-out)."""
     emb = t(spark, sf_dir, "embeddings")
-    out = similarity.cosine_topk_lookup(emb, 0, k=10)
+    out = similarity.cosine_topk_lookup(emb, 0)
     return out.select("vec_id", _r(F.col("cos_sim"), 6).alias("cos_sim"))
 
 
@@ -498,7 +499,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen).  Only surviving pairs leave the kernel."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     pairs = similarity.blocked_cosine_pairs(
-        e, "label", id_col="vec_id", vec_col="embedding", threshold=0.3
+        e, "label", id_col="vec_id", vec_col="embedding"
     )
     # _r_nan, not _r: the kernel deliberately passes zero-norm NaN pairs
     # through the threshold (both engines order NaN above every value),
@@ -534,7 +535,7 @@ def media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("minhash_lsh_candidates", None)
 def minhash_lsh_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_candidates(
-        t(spark, sf_dir, "documents"), num_hashes=32, bands=8
+        t(spark, sf_dir, "documents")
     ).orderBy("id_a", "id_b")
 
 
@@ -551,7 +552,7 @@ def ann_lsh_topk_q0(spark: SparkSession, sf_dir: str) -> DataFrame:
     # test SFs; at corpus scale raise planes with corpus size (bucket ≈ n/2^p)
     planes = np.random.RandomState(42).randn(4, len(qvec)).tolist()
     return similarity.ann_topk_lsh(
-        emb.filter(F.col("vec_id") != 0), qvec, planes, k=10
+        emb.filter(F.col("vec_id") != 0), qvec, planes
     )
 
 
@@ -578,7 +579,7 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = 4
     d = fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
     rows = dedup.shingle_rows(
-        d, "text", "doc_id", k=3, distinct=False, with_pos=True
+        d, "text", "doc_id", distinct=False, with_pos=True
     ).select("id", "__i", "__ng", F.xxhash64(F.col("__s")).alias("__h"))
     win = Window.partitionBy("id").orderBy("__i").rowsBetween(0, w - 1)
     fps = (
@@ -651,7 +652,7 @@ def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "catalog.semantic_dedup.cells", cells.select("vec_id", "ivf_cell")
     )
     pairs = similarity.blocked_cosine_pairs(
-        emb.join(cells, "vec_id"), "ivf_cell", threshold=0.3
+        emb.join(cells, "vec_id"), "ivf_cell"
     )
     comp = dedup.connected_components(pairs)
     dups = comp.filter(F.col("id") != F.col("component")).join(
@@ -781,7 +782,7 @@ def contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     every other source is checked for word-3-gram collisions against it
     (textstats.ngram_collision_report — broadcast semi join on shingles)."""
     return textstats.ngram_collision_report(
-        t(spark, sf_dir, "documents"), bench_pred=F.col("source") == "src0", k=3
+        t(spark, sf_dir, "documents"), bench_pred=F.col("source") == "src0"
     )
 
 
@@ -1189,7 +1190,7 @@ def sequence_packing_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from waddleml_spark.llmops.packing import packing_report
 
-    return packing_report(t(spark, sf_dir, "documents"), seq_len=2048)
+    return packing_report(t(spark, sf_dir, "documents"))
 
 
 _MIX_RATES = {"src0": 3.0, "src1": 1.25, "src2": 0.5, "src3": 0.0}
@@ -1315,7 +1316,7 @@ def chunking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from waddleml_spark.llmops.packing import chunk_tokens
 
     d = t(spark, sf_dir, "documents")
-    chunks = chunk_tokens(d, chunk=64, overlap=16)
+    chunks = chunk_tokens(d)
     ids = d.select(F.col("doc_id").alias("id"), "source")
     return (
         chunks.join(ids, "id")
@@ -1727,7 +1728,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         lsh = {
             r.vec_id
-            for r in similarity.ann_topk_lsh(cand, qvec, planes, k=10).collect()
+            for r in similarity.ann_topk_lsh(cand, qvec, planes).collect()
         }
         ivf_cand = with_cells.filter(F.col("vec_id") != qid)
         ivf_recall = []
@@ -1889,7 +1890,7 @@ def neardup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete.  This is the number a dedup run reports: "N docs in M
     near-dup clusters, N−M dropped"."""
     d = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_candidates(d, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(d)
     comps = dedup.connected_components(pairs)
     sizes = comps.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -1912,7 +1913,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 cut points as dataset_split_report (~90/5/5).  Per split: cluster
     count, doc count, and the largest cluster that landed there."""
     d = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_candidates(d, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(d)
     comps = dedup.connected_components(pairs)
     docs = d.select("doc_id").join(
         comps, d.doc_id == comps.id, "left"
@@ -1941,7 +1942,7 @@ def cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id rule would have thrown away (negative = min-id kept a longer
     doc).  Window over component — cluster-grain, never corpus-grain."""
     d = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_candidates(d, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(d)
     comps = dedup.connected_components(pairs)
     scored = comps.join(
         d.select("doc_id", textstats.word_count(F.col("text")).alias("n_words")),
@@ -2028,7 +2029,7 @@ def corpus_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text again — pruned re-scan joined to the keeper ids
     docs2 = d.join(exact.select("doc_id"), "doc_id")
     comps = dedup.connected_components(
-        dedup.minhash_lsh_candidates(docs2, num_hashes=32, bands=8)
+        dedup.minhash_lsh_candidates(docs2)
     )
     labeled = exact.join(comps, exact.doc_id == comps.id, "left").select(
         "doc_id",
@@ -2347,13 +2348,14 @@ def _minhash32_oracle() -> str:
     """
 
 
-def _minhash32_band_cte(bands: int = 8, max_bucket: int = 64) -> str:
+def _minhash32_band_cte() -> str:
     """ONE definition of the banded-minhash candidate CTE chain (band
     rows via UNION ALL grouped on the rows_per_band raw min values, the
     mega-bucket HAVING guard, the DISTINCT cross-band self-join ending
     in ``cand``) — shared by the pairs oracle and the sketch-accuracy
     audit oracle so the band/guard semantics can never drift between
     them (round-7 review find; mirrors dedup._minhash32_band_buckets)."""
+    bands = dedup.MINHASH32_BANDS
     rpb = 32 // bands
     cols = ", ".join(f"s{r}" for r in range(rpb))
     band_sel = "\n        UNION ALL ".join(
@@ -2370,7 +2372,7 @@ def _minhash32_band_cte(bands: int = 8, max_bucket: int = 64) -> str:
         {band_sel}
     ), bsz AS (
         SELECT band, {cols} FROM bands
-        GROUP BY band, {cols} HAVING COUNT(*) BETWEEN 2 AND {max_bucket}
+        GROUP BY band, {cols} HAVING COUNT(*) BETWEEN 2 AND {STAR_CAP}
     ), kept AS (
         SELECT bands.* FROM bands JOIN bsz USING (band, {cols})
     ), cand AS (
@@ -2379,11 +2381,11 @@ def _minhash32_band_cte(bands: int = 8, max_bucket: int = 64) -> str:
     )"""
 
 
-def _minhash32_pairs_oracle(bands: int = 8, max_bucket: int = 64) -> str:
+def _minhash32_pairs_oracle() -> str:
     """SQL twin of dedup.minhash32_band_pairs — the shared candidate CTE
     chain, selected as-is."""
     return f"""
-    WITH {_minhash32_band_cte(bands, max_bucket)}
+    WITH {_minhash32_band_cte()}
     SELECT id_a, id_b FROM cand
     """
 
@@ -2411,11 +2413,11 @@ def minhash32_band_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash32_pairs_oracle() -> str:
-    """SQL twin of dedup.simhash32_band_pairs (band_bits=16, max_bucket=64):
+    """SQL twin of dedup.simhash32_band_pairs (band_bits=16, STAR_CAP):
     the simhash32 chain, then bands via integer division, then a self-join
     per shared (band, bucket) with DISTINCT across bands.  The bsz CTE
-    mirrors the Spark-side mega-bucket star guard (buckets of more than 64
-    docs are excluded from pair expansion on BOTH engines)."""
+    mirrors the Spark-side mega-bucket star guard (buckets of more than
+    STAR_CAP docs are excluded from pair expansion on BOTH engines)."""
     base = _simhash32_oracle()
     return rf"""
     WITH sigs AS (
@@ -2426,7 +2428,7 @@ def _simhash32_pairs_oracle() -> str:
         FROM sigs, (SELECT unnest(generate_series(0, 1)) AS band) b
     ), bsz AS (
         SELECT band, bucket FROM bands
-        GROUP BY band, bucket HAVING COUNT(*) BETWEEN 2 AND 64
+        GROUP BY band, bucket HAVING COUNT(*) BETWEEN 2 AND {STAR_CAP}
     ), kept AS (
         SELECT bands.* FROM bands JOIN bsz USING (band, bucket)
     )
@@ -2436,10 +2438,10 @@ def _simhash32_pairs_oracle() -> str:
     """
 
 
-def _ngram_overlap_oracle(min_shared: int = 3, max_df: int = 64) -> str:
+def _ngram_overlap_oracle() -> str:
     """SQL twin of dedup.ngram_overlap_pairs: distinct (doc, md5-BE32
     trigram hash) rows, grams with document frequency outside
-    [2, max_df] dropped (the HAVING mirrors the Spark-side df cap), then
+    [2, STAR_CAP] dropped (the HAVING mirrors the Spark-side df cap), then
     a self-join per shared hash with a pair-grain count.  Hash-grain
     DISTINCT on both sides so a 32-bit collision behaves identically in
     both engines."""
@@ -2448,7 +2450,7 @@ def _ngram_overlap_oracle(min_shared: int = 3, max_df: int = 64) -> str:
         SELECT DISTINCT doc_id, {_md5_be32_sql('g')} AS h32
         FROM ({_trigram_rows_clamped_sql()}) WHERE g IS NOT NULL
     ), hot AS (
-        SELECT h32 FROM t GROUP BY h32 HAVING COUNT(*) BETWEEN 2 AND {max_df}
+        SELECT h32 FROM t GROUP BY h32 HAVING COUNT(*) BETWEEN 2 AND {STAR_CAP}
     ), kept AS (
         SELECT t.* FROM t JOIN hot USING (h32)
     )
@@ -2456,19 +2458,18 @@ def _ngram_overlap_oracle(min_shared: int = 3, max_df: int = 64) -> str:
            CAST(COUNT(*) AS BIGINT) AS n_shared
     FROM kept a JOIN kept b ON a.h32 = b.h32 AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= {min_shared}
+    HAVING COUNT(*) >= {dedup.NGRAM_MIN_SHARED}
     """
 
 
-def _winnowing_overlap_oracle(
-    w: int = 4, min_shared: int = 2, max_df: int = 64
-) -> str:
+def _winnowing_overlap_oracle() -> str:
     """SQL twin of dedup.winnowing32_overlap_pairs: clamped trigram rows
     with their word position, md5-BE32 gram hashes, sliding-window MIN
-    over each doc's ``w`` consecutive grams (ROWS BETWEEN CURRENT ROW
+    over each doc's w = WINNOW_W consecutive grams (ROWS BETWEEN CURRENT ROW
     AND w−1 FOLLOWING — tie-free, i is unique per doc), truncated tail
     windows dropped via the per-doc gram count, then the same df-capped
     shared-hash pair count as the ngram-overlap oracle."""
+    w = dedup.WINNOW_W
     return rf"""
     WITH tr AS (
         SELECT doc_id, i, g
@@ -2487,7 +2488,7 @@ def _winnowing_overlap_oracle(
         SELECT DISTINCT doc_id, f AS h32
         FROM fp WHERE i <= greatest(ng - {w - 1}, 1)
     ), hot AS (
-        SELECT h32 FROM t GROUP BY h32 HAVING COUNT(*) BETWEEN 2 AND {max_df}
+        SELECT h32 FROM t GROUP BY h32 HAVING COUNT(*) BETWEEN 2 AND {STAR_CAP}
     ), kept AS (
         SELECT t.* FROM t JOIN hot USING (h32)
     )
@@ -2495,7 +2496,7 @@ def _winnowing_overlap_oracle(
            CAST(COUNT(*) AS BIGINT) AS n_shared
     FROM kept a JOIN kept b ON a.h32 = b.h32 AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= {min_shared}
+    HAVING COUNT(*) >= {dedup.WINNOW_MIN_SHARED}
     """
 
 
@@ -2510,14 +2511,12 @@ def winnowing32_overlap_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.winnowing32_overlap_pairs(t(spark, sf_dir, "documents"))
 
 
-def _containment_oracle(
-    min_shared: int = 3, min_containment: float = 0.5, max_df: int = 64
-) -> str:
+def _containment_oracle() -> str:
     """SQL twin of dedup.containment_pairs: distinct (doc, md5-BE32
     trigram hash) rows, gram document frequency via a count window over
     the hash, per-doc rare-gram counts via a count window over the doc
-    AFTER the df ≤ max_df cut (df = 1 grams stay in the denominators,
-    df > max_df boilerplate leaves both sides), then a self-join per
+    AFTER the df ≤ STAR_CAP cut (df = 1 grams stay in the denominators,
+    df > STAR_CAP boilerplate leaves both sides), then a self-join per
     shared gram with pair-grain count and the containment division —
     two exact BIGINTs through IEEE double, bit-identical cross-engine."""
     return rf"""
@@ -2529,7 +2528,7 @@ def _containment_oracle(
         FROM t
     ), r AS (
         SELECT doc_id, h32, df, COUNT(*) OVER (PARTITION BY doc_id) AS nd
-        FROM d WHERE df <= {max_df}
+        FROM d WHERE df <= {STAR_CAP}
     ), kept AS (
         SELECT * FROM r WHERE df >= 2
     )
@@ -2541,9 +2540,9 @@ def _containment_oracle(
                AS containment
     FROM kept a JOIN kept b ON a.h32 = b.h32 AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= {min_shared}
+    HAVING COUNT(*) >= {dedup.CONTAINMENT_MIN_SHARED}
        AND CAST(COUNT(*) AS DOUBLE) / LEAST(MIN(a.nd), MIN(b.nd))
-           >= {min_containment}
+           >= {dedup.MIN_CONTAINMENT}
     """
 
 
@@ -2613,7 +2612,7 @@ def _jaccard_verify_lsh_oracle() -> str:
     """
 
 
-def _minhash_estimate_oracle(bands: int = 8, max_bucket: int = 64) -> str:
+def _minhash_estimate_oracle() -> str:
     """SQL twin of dedup.minhash_estimate_pairs: the SHARED minhash32
     candidate CTE chain (_minhash32_band_cte — one definition with the
     pairs oracle), then the 32-term signature match count joined against
@@ -2626,7 +2625,7 @@ def _minhash_estimate_oracle(bands: int = 8, max_bucket: int = 64) -> str:
         f"(CASE WHEN ga.m{i} = gb.m{i} THEN 1 ELSE 0 END)" for i in range(32)
     )
     return f"""
-    WITH {_minhash32_band_cte(bands, max_bucket)}, d AS (
+    WITH {_minhash32_band_cte()}, d AS (
         {_shingle_cte_sql()}
     ), scored AS (
         SELECT c.id_a, c.id_b,
@@ -2976,9 +2975,16 @@ def url_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _domain_cap_oracle(cap: int = 25) -> str:
+# 25 BINDS at driver SF (sf0.01: 50 docs/domain -> 25 kept, 25
+# dropped), so the md5-rank keeper selection is actually exercised by
+# the hash compare, not just the count arithmetic
+_DOMAIN_CAP = 25
+
+
+def _domain_cap_oracle() -> str:
     from waddleml_spark.llmops import urlnorm
 
+    cap = _DOMAIN_CAP
     inner = f"SELECT doc_id, n_chars, {_URL_PLANT} AS url FROM documents"
     dom = urlnorm.registered_domain_subquery_sql(
         urlnorm.canonical_url_subquery_sql(inner)
@@ -3025,10 +3031,7 @@ def domain_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from waddleml_spark.llmops import urlnorm
     from waddleml_spark.llmops.dedup import _md5_be32
 
-    # 25 BINDS at driver SF (sf0.01: 50 docs/domain -> 25 kept, 25
-    # dropped), so the md5-rank keeper selection is actually exercised
-    # by the hash compare, not just the count arithmetic
-    cap = 25
+    cap = _DOMAIN_CAP
     d = t(spark, sf_dir, "documents").selectExpr(
         "doc_id", "n_chars", f"{_URL_PLANT} AS url"
     )
@@ -3156,8 +3159,8 @@ def gram_df_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-frequency histogram of word trigrams: how many distinct
     gram hashes appear in exactly df documents — THE tuning signal for
     every df-capped dedup stage here (ngram_overlap / containment /
-    rare-gram blocking read max_df off this curve; the boilerplate tail
-    the star guards exist for is its high-df end).
+    rare-gram blocking read the df cap, STAR_CAP, off this curve; the
+    boilerplate tail the star guards exist for is its high-df end).
 
     df = distinct docs holding ≥1 gram hashing to the md5-BE32 value
     (hash-grain semantics, mirrored verbatim in the oracle — two
@@ -3174,7 +3177,7 @@ def gram_df_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from waddleml_spark.llmops.dedup import _md5_be32, shingle_rows
 
     sh = shingle_rows(
-        t(spark, sf_dir, "documents"), k=3, distinct=False
+        t(spark, sf_dir, "documents"), distinct=False
     ).select(_md5_be32(F.col("__s")).alias("h32"), "id")
     dfs = sh.groupBy("h32").agg(F.countDistinct("id").alias("df"))
     return (
@@ -3349,7 +3352,7 @@ def neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's band shuffles + O(log diameter) CC rounds, then two tiny
     component-grain aggregates."""
     d = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_candidates(d, num_hashes=32, bands=8)
+    pairs = dedup.minhash_lsh_candidates(d)
     comp = dedup.connected_components(pairs)
     sizes = comp.groupBy("component").agg(
         F.count("*").alias("cluster_size")
@@ -3366,7 +3369,9 @@ def neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shard_plan_oracle(n_shards: int = 8) -> str:
+def _shard_plan_oracle() -> str:
+    from waddleml_spark.llmops.packing import N_SHARDS as n_shards
+
     h = _md5_be32_sql("CAST(doc_id AS STRING)")
     return f"""
     SELECT doc_id,

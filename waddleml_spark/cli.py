@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import argparse
 import sys
-from contextlib import contextmanager
 from pathlib import Path
 
 GITIGNORE_LINES = [".waddle/"]
@@ -118,33 +117,11 @@ def cmd_serve(a: argparse.Namespace) -> int:
     return 0
 
 
-@contextmanager
-def _command_spark(app_name: str):
-    """A local SparkSession for one catalog command, logging at ERROR.
-    Only a session the command itself created is stopped: embedded in a
-    host process (tests, notebooks), the active session is not ours to
-    kill."""
-    from pyspark.sql import SparkSession
-
-    from waddleml_spark.session import get_spark
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=app_name, master="local[2]", shuffle_partitions=2)
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
-    except Exception:
-        pass  # Spark Connect: no SparkContext; log level is server-side
-    try:
-        yield spark
-    finally:
-        if not preexisting:
-            spark.stop()
-
-
 def cmd_explain(a: argparse.Namespace) -> int:
     """Print the physical plan for a named catalog query (or list names)."""
     from waddleml_spark import catalog
     from waddleml_spark.plans import explain_str
+    from waddleml_spark.session import command_spark
 
     if not a.query or a.query == "list":
         for name in sorted(catalog.QUERIES):
@@ -154,7 +131,7 @@ def cmd_explain(a: argparse.Namespace) -> int:
     if a.query not in catalog.QUERIES:
         print(f"unknown query {a.query!r}; run `explain list`", file=sys.stderr)
         return 1
-    with _command_spark("explain") as spark:
+    with command_spark("explain") as spark:
         print(explain_str(catalog.QUERIES[a.query](spark, a.sf_dir), a.mode))
     return 0
 
@@ -166,11 +143,12 @@ def cmd_query(a: argparse.Namespace) -> int:
     import json
 
     from waddleml_spark import catalog
+    from waddleml_spark.session import command_spark
 
     if a.query not in catalog.QUERIES:
         print(f"unknown query {a.query!r}; run `explain list`", file=sys.stderr)
         return 1
-    with _command_spark("query") as spark:
+    with command_spark("query") as spark:
         rows = catalog.QUERIES[a.query](spark, a.sf_dir).limit(a.limit).collect()
     for r in rows:
         print(json.dumps(r.asDict(), default=str))

@@ -35,6 +35,13 @@ WS_RE = f"[{WS_CHARS}]+"
 # does not — the fuzzer's second find ('0\r\x85' trimmed differently).
 WS_TRIM_RE = rf"\A[{WS_CHARS}]+|[{WS_CHARS}]+\z"
 
+# The mega-bucket star guard's cap, for every pairwise expansion and its
+# oracle: a bucket (or a gram's document frequency) above it is dropped,
+# or expands as a star, instead of turning quadratic.  The synthetic
+# corpus's boilerplate clusters (a 370-doc signature family at sf0.1)
+# are what it bounds; the Spark operator and its SQL twin must agree.
+STAR_CAP = 64
+
 
 def sql_str(s: str) -> str:
     """A Spark-SQL single-quoted string literal whose PARSED value is

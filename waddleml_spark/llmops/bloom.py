@@ -32,21 +32,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _bit_positions(value: Column, n_bits: int, k: int, seed: int) -> Column:
-    """k bit positions for ``value`` — the ONE shared build/probe hash
-    expression (functions.scalars.hash_positions; the count-min sketch
-    uses the same helper, so the pairing rule holds by construction)."""
+# Hashes per value and their seed: the build and the probe share them.
+BLOOM_K = 5
+BLOOM_SEED = 42
+
+
+def _bit_positions(value: Column, n_bits: int) -> Column:
+    """BLOOM_K bit positions for ``value`` — the ONE shared build/probe
+    hash expression (functions.scalars.hash_positions; the count-min
+    sketch uses the same helper, so the pairing rule holds by
+    construction)."""
     from waddleml_spark.functions.scalars import hash_positions
 
-    return hash_positions(value, n_bits, k, seed)
+    return hash_positions(value, n_bits, BLOOM_K, BLOOM_SEED)
 
 
 def bloom_build(
     df: DataFrame,
     value: Column | str,
     n_bits: int = 1 << 23,
-    k: int = 5,
-    seed: int = 42,
 ) -> bytes:
     """Build the packed bitset (n_bits/8 bytes) over every value in
     ``df[value]``.  One map pass: each Arrow batch emits its partial
@@ -62,7 +66,7 @@ def bloom_build(
     spark = df.sparkSession
     ensure_shipped(spark)
     col = F.col(value) if isinstance(value, str) else value
-    pos = df.select(_bit_positions(col, n_bits, k, seed).alias("__pos"))
+    pos = df.select(_bit_positions(col, n_bits).alias("__pos"))
 
     n_bytes = n_bits // 8
     schema = T.StructType([T.StructField("bits", T.BinaryType())])
@@ -90,11 +94,9 @@ def bloom_flag(
     df: DataFrame,
     value: Column | str,
     bits: bytes,
-    k: int = 5,
-    seed: int = 42,
     flag_col: str = "in_bloom",
 ) -> DataFrame:
-    """Append ``flag_col``: true iff ALL k of the value's bits are set.
+    """Append ``flag_col``: true iff ALL BLOOM_K of the value's bits are set.
     Map-only: the bitset broadcasts once; each Arrow batch tests its
     positions vectorized.  Never a false negative; false-positive rate
     is the standard Bloom bound (measure it — bloom_decontamination
@@ -109,7 +111,7 @@ def bloom_flag(
     ensure_shipped(spark)
     bbits = spark.sparkContext.broadcast(bits)
     col = F.col(value) if isinstance(value, str) else value
-    src = df.withColumn("__pos", _bit_positions(col, n_bits, k, seed))
+    src = df.withColumn("__pos", _bit_positions(col, n_bits))
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(flag_col, T.BooleanType())]
     )
@@ -131,12 +133,9 @@ def bloom_flag(
 def bloom_decontamination_report(
     docs: DataFrame,
     bench_pred: Column,
-    k_shingle: int = 3,
-    n_bits: int = 1 << 23,
-    k_hashes: int = 5,
-    seed: int = 42,
 ) -> DataFrame:
-    """Per-source decontamination via the Bloom path, SELF-AUDITED
+    """Per-source decontamination via the Bloom path over word-trigram
+    shingles in a 2^23-bit filter, SELF-AUDITED
     against the exact shingle semi-join on the same data: per corpus
     source reports doc counts flagged by the Bloom filter vs truly
     contaminated, so the false-positive cost of the compact filter is a
@@ -174,7 +173,7 @@ def bloom_decontamination_report(
             F.size(toks).alias("__n"),
         )
     )
-    starts, gram = nopartial_gram_exprs(k_shingle)
+    starts, gram = nopartial_gram_exprs(3)
     g_rows = rotate_persist(
         "bloom.shingle_rows",
         base.select(
@@ -186,14 +185,14 @@ def bloom_decontamination_report(
     bench_g = g_rows.filter(F.col("__bench")).select("g").distinct()
     # the doc universe comes straight off the pruned docs scan (doc_id,
     # source + bench_pred's columns only — no text): shingle-less docs
-    # (< k words) stay counted as docs, exactly as the exact twin
+    # (< 3 words) stay counted as docs, exactly as the exact twin
     # (`contamination_by_source`) counts them, without carrying them
     # through the explode
     corpus_docs = docs.filter(~bench_pred).select("doc_id", "source")
     corpus_g = g_rows.filter(~F.col("__bench")).select("doc_id", "g")
-    bits = bloom_build(bench_g, "g", n_bits=n_bits, k=k_hashes, seed=seed)
+    bits = bloom_build(bench_g, "g")
     by_doc_flag = (
-        bloom_flag(corpus_g, "g", bits, k=k_hashes, seed=seed)
+        bloom_flag(corpus_g, "g", bits)
         .groupBy("doc_id")
         .agg(F.max("in_bloom").alias("__flag"))
     )

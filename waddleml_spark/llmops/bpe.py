@@ -200,7 +200,6 @@ def _train_inmem(
 def train_bpe(
     freqs: DataFrame,
     n_merges: int = 50,
-    checkpoint_every: int = 8,
     topk: int = 512,
     driver_vocab_rows: int = 2_000_000,
 ) -> list[tuple[str, str]]:
@@ -219,7 +218,7 @@ def train_bpe(
       top-``topk`` pair ranking and ``_select_batch`` certifies the
       longest prefix provably identical to sequential greedy; each
       batch applies in ONE Arrow kernel pass, lineage cut with
-      localCheckpoint every ``checkpoint_every`` merges.
+      localCheckpoint every 8 merges.
 
     The size probe is ``limit(cap+1).count()`` — one tiny job shipping a
     single long to the driver, NOT a cap+1-row collect: an over-cap vocab
@@ -267,7 +266,7 @@ def train_bpe(
         produced |= {a + b for a, b in batch}
         vocab = vocab.withColumn("syms", _merge_kernel(batch)(F.col("syms")))
         since_ckpt += len(batch)
-        if since_ckpt >= checkpoint_every:
+        if since_ckpt >= 8:
             vocab = vocab.localCheckpoint()
             since_ckpt = 0
     return merges

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import WS_RE
+from . import STAR_CAP, WS_RE
 
 from waddleml_spark.llmops.textstats import fingerprint, lower_trim
 
@@ -58,18 +58,17 @@ def shingle_rows(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     distinct: bool = True,
     with_pos: bool = False,
 ) -> DataFrame:
-    """(id, __s) rows: one distinct word-k-gram shingle per row.
+    """(id, __s) rows: one distinct word-trigram shingle per row.
 
     Shape: explode a position sequence (generator — codegen'd) and build
     each gram with F.get element access + concat_ws (plain expressions),
     instead of a higher-order transform lambda (interpreted; measured
     3.5 s vs 0.6 s for 260k shingles at sf0.1).  concat_ws skips the
     nulls F.get yields past the end, which gives the short-doc clamp
-    (docs under k words shingle to the whole text; NULL text shingles
+    (docs under 3 words shingle to the whole text; NULL text shingles
     to the one gram '');
     distinct=True mirrors array_distinct (one shuffle).  Pass
     distinct=False for duplicate-insensitive consumers (MIN/MAX
@@ -112,6 +111,7 @@ def shingle_rows(
     # one Project exactly as before (whole-stage codegen's common-
     # subexpression elimination collapses it), so no consumer's plan —
     # or oracle contract — changes shape.
+    k = 3
     idq = "`" + id_col.replace("`", "``") + "`"
     tq = "`" + text_col.replace("`", "``") + "`"
     toks = tokens_sql("__sr_text")
@@ -149,19 +149,18 @@ def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """MinHash + banded LSH candidate pairs (id_a < id_b, per-band dedup'd).
 
     shingle → per-hash min over xxhash64(shingle, seed_i) → band rows →
     self-join on (band, signature).  All relational: explode + groupBy +
-    join; no driver-side loops.  num_hashes/bands tune recall vs cost.
+    join; no driver-side loops.  32 hashes in 8 bands of 4 rows, hash
+    seeds 42..73.
     """
     from waddleml_spark.llmops import tokens_sql
     from waddleml_spark.session import fan_out
 
+    num_hashes, bands, seed = 32, 8, 42
     rows_per_band = num_hashes // bands
     # fan out before the hash-heavy stage: single-row-group inputs
     # otherwise pin num_hashes × |shingles| hashing onto one core
@@ -227,7 +226,7 @@ def minhash_lsh_candidates(
     #
     # Mega-bucket guard: a bucket of b ids would expand b(b-1)/2 pairs —
     # a template repeated 10k times means 50M pairs in ONE task.  Above
-    # `star_threshold` we emit the STAR pattern instead (min id ↔ each
+    # STAR_CAP we emit the STAR pattern instead (min id ↔ each
     # other id): connectivity information is preserved (downstream dedup
     # needs connected components, not every edge) at O(b) output.
     buckets = (
@@ -235,7 +234,7 @@ def minhash_lsh_candidates(
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    return _bucket_pairs(buckets, star_threshold=64)
+    return _bucket_pairs(buckets, star_threshold=STAR_CAP)
 
 
 def _bucket_pair_elems(
@@ -295,7 +294,6 @@ def minhash_block_candidates(
     df: DataFrame,
     words_col: str = "ws",
     id_col: str = "doc_id",
-    max_bucket: int = 64,
 ) -> DataFrame:
     """Single-permutation MinHash blocking: candidate pairs (id_a < id_b)
     of docs whose word sets share the same MINIMUM md5-BE32 word hash.
@@ -311,7 +309,7 @@ def minhash_block_candidates(
 
     Plan: one doc-grain shuffle carrying a single long per doc (partial
     MIN combines map-side), one bucket-grain shuffle of bare ids;
-    buckets over ``max_bucket`` are dropped entirely (the mega-bucket
+    buckets over STAR_CAP ids are dropped entirely (the mega-bucket
     star guard, mirrored in the oracle HAVING exactly like
     minhash32_band_pairs).  md5-BE32 is the cross-engine-exact hash
     family (DuckDB ``md5_number_upper`` byte-swizzle twin), so the
@@ -327,7 +325,7 @@ def minhash_block_candidates(
     buckets = (
         keys.groupBy("__bkey")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= STAR_CAP))
     )
     # one bucket per doc ⇒ a pair can appear at most once: skip the
     # distinct shuffle _bucket_pairs would otherwise add
@@ -339,10 +337,9 @@ def jaccard_pairs(
     candidates: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs (the LSH verifier).
+    """Exact word-trigram Jaccard for candidate pairs (the LSH verifier).
 
     With `candidates=None` computes all pairs — ONLY for tests/oracles;
     production always feeds LSH candidates so the join is bucket-bounded.
@@ -368,7 +365,7 @@ def jaccard_pairs(
     measured win) — the trade is payload-size-dependent, not universal.
     """
     sh = (
-        shingle_rows(df, text_col, id_col, k, distinct=False)
+        shingle_rows(df, text_col, id_col, distinct=False)
         .groupBy("id")
         .agg(F.collect_set("__s").alias("sh"))
         .withColumn("n", F.size("sh"))
@@ -799,7 +796,7 @@ def minhash32_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
 
 
 def _minhash32_grouped(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id_col, __m0..__m31): the wide oracle-exact signature frame shared
     by minhash32_exact (long form) and minhash32_band_pairs (banding).
@@ -813,7 +810,7 @@ def _minhash32_grouped(
     same doc-grain shuffle bytes.
     """
     idq = "`" + id_col.replace("`", "``") + "`"
-    sh_rows = shingle_rows(df, text_col, id_col, k, distinct=False).selectExpr(
+    sh_rows = shingle_rows(df, text_col, id_col, distinct=False).selectExpr(
         f"id AS {idq}", "__s"
     )
     hashed = sh_rows.selectExpr(
@@ -829,12 +826,19 @@ def _minhash32_grouped(
     )
 
 
+# Thresholds each pairing below shares with its SQL twin in catalog_llm.
+NGRAM_MIN_SHARED = 3
+WINNOW_W = 4  # trigrams per winnowing window
+WINNOW_MIN_SHARED = 2
+CONTAINMENT_MIN_SHARED = 3
+MIN_CONTAINMENT = 0.5
+
+
 def ngram_overlap_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_shared: int = 3,
-    max_df: int = 64,
+    min_shared: int = NGRAM_MIN_SHARED,
 ) -> DataFrame:
     """Exact n-gram-overlap pairs (id_a < id_b, n_shared): document pairs
     sharing at least ``min_shared`` distinct RARE word trigrams, with the
@@ -843,12 +847,12 @@ def ngram_overlap_pairs(
     at shingle grain, complementing the probabilistic MinHash/SimHash
     candidate generators with a count that is exact by construction.
 
-    Grams with document frequency above ``max_df`` are dropped on BOTH
+    Grams with document frequency above STAR_CAP are dropped on BOTH
     sides (boilerplate/stop-grams — an IDF-style cut, mirrored in the
     oracle's HAVING): unlike the candidate generators, a star guard
     cannot apply here because the output is an exact COUNT, so the df
     cap is what bounds the quadratic term — each surviving gram expands
-    at most C(max_df,2) pairs, and the cap is also what makes the
+    at most C(STAR_CAP,2) pairs, and the cap is also what makes the
     result mean something (sharing 'the end of' says nothing; sharing
     three rare trigrams does).
 
@@ -867,17 +871,15 @@ def ngram_overlap_pairs(
     collect_set plans as ObjectHashAggregate, outside whole-stage
     codegen, while the extra distinct is a codegen'd HashAggregate.
     """
-    sh = shingle_rows(df, text_col, id_col, k=3, distinct=False).select(
+    sh = shingle_rows(df, text_col, id_col, distinct=False).select(
         F.col("id"), F.col("__s")
     )
     h32 = _md5_be32(F.col("__s"))
     hashed = sh.select("id", h32.alias("__h")).distinct()
-    return _shared_hash_pair_counts(hashed, min_shared, max_df)
+    return _shared_hash_pair_counts(hashed, min_shared)
 
 
-def _shared_hash_pair_counts(
-    hashed: DataFrame, min_shared: int, max_df: int
-) -> DataFrame:
+def _shared_hash_pair_counts(hashed: DataFrame, min_shared: int) -> DataFrame:
     """(id_a < id_b, n_shared) from DISTINCT (id, __h) rows: df-capped
     hash buckets → generator pair expansion → pair-grain count — the
     shared tail of ngram_overlap_pairs and winnowing32_overlap_pairs
@@ -885,7 +887,7 @@ def _shared_hash_pair_counts(
     buckets = (
         hashed.groupBy("__h")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= STAR_CAP))
     )
     pairs = _bucket_pairs(buckets, distinct=False)
     return (
@@ -899,13 +901,11 @@ def winnowing32_overlap_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int = 64,
+    min_shared: int = WINNOW_MIN_SHARED,
 ) -> DataFrame:
     """Winnowing-fingerprint overlap pairs (id_a < id_b, n_shared),
     oracle-exact: MOSS-style winnowing (Schleimer et al. 2003) selects
-    the MINIMUM gram hash of every sliding window of ``w`` consecutive
+    the MINIMUM gram hash of every sliding window of w = WINNOW_W consecutive
     word trigrams, guaranteeing any shared run of ≥ w+k−1 tokens
     produces a shared fingerprint while keeping only ~2/(w+1) of the
     gram volume — the sampled (cheaper) complement of
@@ -924,26 +924,25 @@ def winnowing32_overlap_pairs(
     """
     from pyspark.sql import Window
 
+    w = WINNOW_W
     # the shared clamped gram construction WITH positions: __ng = number
     # of gram positions per doc; windows = max(__ng - w + 1, 1)
     rows = shingle_rows(
-        df, text_col, id_col, k=3, distinct=False, with_pos=True
+        df, text_col, id_col, distinct=False, with_pos=True
     ).select("id", "__i", "__ng", _md5_be32(F.col("__s")).alias("__h"))
     win = Window.partitionBy("id").orderBy("__i").rowsBetween(0, w - 1)
     fps = rows.withColumn("__fp", F.min("__h").over(win)).filter(
         F.col("__i") < F.greatest(F.col("__ng") - (w - 1), F.lit(1))
     )
     hashed = fps.select("id", F.col("__fp").alias("__h")).distinct()
-    return _shared_hash_pair_counts(hashed, min_shared, max_df)
+    return _shared_hash_pair_counts(hashed, min_shared)
 
 
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_shared: int = 3,
-    min_containment: float = 0.5,
-    max_df: int = 64,
+    min_containment: float = MIN_CONTAINMENT,
 ) -> DataFrame:
     """Asymmetric containment pairs (id_a < id_b, n_shared, n_a, n_b,
     containment): document pairs where the SMALLER rare-trigram set is
@@ -955,21 +954,22 @@ def containment_pairs(
     but containment 1.0 (Broder 1997's containment coefficient; the
     substring-dedup motivation of Lee et al. 2022).
 
-    "Rare" = document frequency ≤ ``max_df``: boilerplate grams held
+    "Rare" = document frequency ≤ STAR_CAP: boilerplate grams held
     by more docs are dropped from BOTH the intersection and the
     denominators, so the score measures distinctive content, and —
     as in ngram_overlap_pairs — the df cap is what bounds the
     quadratic pair term (a star guard would corrupt the exact
     counts).  Grams with df = 1 stay in the denominators: unique
     content must dilute containment or every doc trivially contains
-    any doc it shares three grams with.
+    any doc it shares three grams with (a pair must share
+    CONTAINMENT_MIN_SHARED).
 
     Shape — ONE linear chain, no branch ever re-references an
     upstream frame (Catalyst re-executes shared subtrees; the
     CLAUDE.md rule): occurrence (gram-hash, id) rows → per-hash
-    ``dense_rank ≤ max_df+1`` cap (duplicate ids share a rank, so
+    ``dense_rank ≤ STAR_CAP+1`` cap (duplicate ids share a rank, so
     the cap counts DISTINCT holders) → bounded collect_set +
-    max(rank) ≤ max_df filter → explode the now-tiny rare arrays →
+    max(rank) ≤ STAR_CAP filter → explode the now-tiny rare arrays →
     per-doc rare-gram count via a count window over the doc →
     df ≥ 2 filter → bucket arrays of (id, n) structs per shared hash
     → generator pair expansion (the structs ride the expansion like
@@ -986,12 +986,12 @@ def containment_pairs(
     flood gate) concentrated unboundedly in one task.  Here nothing
     unbounded exists: Catalyst rewrites the ``dense_rank ≤ k``
     filter into a PARTIAL WindowGroupLimit that cuts each map
-    partition to its first max_df+1 distinct holders BEFORE the
+    partition to its first STAR_CAP+1 distinct holders BEFORE the
     gram-grain exchange (plan-asserted in test_plan_hygiene), so an
-    over-cap gram ships ≤ partitions × (max_df+1) distinct ids
+    over-cap gram ships ≤ partitions × (STAR_CAP+1) distinct ids
     instead of its full holder set, and the collect_set buffer holds
-    ≤ max_df+1 ids by construction.  max(rank) carries the over-cap
-    verdict — rank reaching max_df+1 means df > max_df — so exact
+    ≤ STAR_CAP+1 ids by construction.  max(rank) carries the over-cap
+    verdict — rank reaching STAR_CAP+1 means df > STAR_CAP — so exact
     dfs survive for every KEPT gram (value-identical to the old
     plan; the SQL oracle needs no change, pinned by parity tests).
 
@@ -1005,7 +1005,7 @@ def containment_pairs(
     """
     from pyspark.sql import Window
 
-    sh = shingle_rows(df, text_col, id_col, k=3, distinct=False).select(
+    sh = shingle_rows(df, text_col, id_col, distinct=False).select(
         F.col("id"), F.col("__s")
     )
     h32 = _md5_be32(F.col("__s"))
@@ -1013,13 +1013,13 @@ def containment_pairs(
     per_hash = (
         sh.select("id", h32.alias("__h"))
         .withColumn("__r", F.dense_rank().over(wcap))
-        .filter(F.col("__r") <= max_df + 1)
+        .filter(F.col("__r") <= STAR_CAP + 1)
         .groupBy("__h")
         .agg(
             F.collect_set("id").alias("ids"),
             F.max("__r").alias("__mx"),
         )
-        .filter(F.col("__mx") <= max_df)
+        .filter(F.col("__mx") <= STAR_CAP)
         .select("__h", "ids")
     )
     rare = per_hash.select(
@@ -1045,18 +1045,19 @@ def containment_pairs(
             cont.alias("containment"),
         )
         .filter(
-            (F.col("n_shared") >= min_shared)
+            (F.col("n_shared") >= CONTAINMENT_MIN_SHARED)
             & (F.col("containment") >= min_containment)
         )
     )
 
 
+# Bands of the oracle-exact 32-long minhash signature (4 rows each);
+# catalog_llm's SQL twin bands with the same constant.
+MINHASH32_BANDS = 8
+
+
 def minhash32_band_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 8,
-    max_bucket: int = 64,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Banded-MinHash candidate pairs (id_a < id_b), oracle-exact end to end.
 
@@ -1064,7 +1065,7 @@ def minhash32_band_pairs(
     xxhash64 has no DuckDB twin; simhash32_band_pairs certifies a banded
     SIMHASH pipeline.  This closes the remaining proof gap: the full
     MinHash+LSH candidate chain — md5-BE32 shingle hash, the (a·x+b) mod
-    2^31−1 family, 32/bands-row bands, mega-bucket guard, pair expansion —
+    2^31−1 family, 4-row bands, mega-bucket guard, pair expansion —
     from cross-engine-exact primitives, so signatures AND candidates are
     differentially checkable, not just counted.
 
@@ -1072,22 +1073,18 @@ def minhash32_band_pairs(
     (here the rows_per_band raw min values, no band-hash needed — grouping
     on 4 longs is equivalent to grouping on a hash of them, minus the
     collision risk), bucket-group + generator pair expansion
-    (_bucket_pairs), DISTINCT across bands.  Buckets over ``max_bucket``
+    (_bucket_pairs), DISTINCT across bands.  Buckets over STAR_CAP ids
     are dropped (mirrored in the oracle's HAVING) — identical mega-bucket
     semantics to simhash32_band_pairs.
     """
-    buckets = _minhash32_band_buckets(df, text_col, id_col, bands, max_bucket)
-    return _bucket_pairs(buckets)
+    return _bucket_pairs(_minhash32_band_buckets(df, text_col, id_col))
 
 
 def _minhash32_band_buckets(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bands: int = 8,
-    max_bucket: int | None = 64,
     carry_sig: bool = False,
-    k: int = 3,
 ) -> DataFrame:
     """Shared banded-bucket stage of the oracle-exact minhash family:
     signatures → per-band rows grouped on the rows_per_band RAW min
@@ -1099,10 +1096,9 @@ def _minhash32_band_buckets(
     downstream, and joining candidates back to a signature frame would
     re-execute the whole md5/shingle pipeline per reference (Catalyst
     has no common-subtree elimination)."""
-    if 32 % bands != 0:
-        raise ValueError(f"bands must divide 32, got {bands}")
+    bands = MINHASH32_BANDS
     rpb = 32 // bands
-    wide = _minhash32_grouped(df, text_col, id_col, k)
+    wide = _minhash32_grouped(df, text_col, id_col)
     # PARSED EXPR band explode (r12 build-cost lever): inline() yields
     # (band, s0..s{rpb-1}) columns directly — one parsed generator
     # instead of the Column-API array-of-structs explode plus a field-
@@ -1132,23 +1128,18 @@ def _minhash32_band_buckets(
         .agg(F.array_sort(F.collect_list(elem)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    return buckets
+    return buckets.filter(F.size("ids") <= STAR_CAP)
 
 
 def minhash_estimate_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bands: int = 8,
-    max_bucket: int = 64,
-    k: int = 3,
 ) -> DataFrame:
     """Sketch-accuracy audit: for every banded-MinHash candidate pair,
     the SIGNATURE-estimated Jaccard (matching minhash positions / 32 —
     the estimator whose expectation IS the true Jaccard) next to the
-    EXACT word-k-gram Jaccard, plus the absolute error.  This is the
+    EXACT word-trigram Jaccard, plus the absolute error.  This is the
     number that justifies trusting sketches at 100 TB: the verify pass
     can be budgeted (or skipped above a high estimate) only if the
     estimator's error is measured on the corpus at hand, not assumed.
@@ -1165,9 +1156,7 @@ def minhash_estimate_pairs(
     (a·x+b) mod 2^31−1 family, integer match counts, and dyadic /32
     division, so the whole report is oracle-hashable with no rounding.
     """
-    buckets = _minhash32_band_buckets(
-        df, text_col, id_col, bands, max_bucket, carry_sig=True, k=k
-    )
+    buckets = _minhash32_band_buckets(df, text_col, id_col, carry_sig=True)
     cand = (
         _bucket_pair_elems(buckets, "ids")
         .select(
@@ -1180,7 +1169,7 @@ def minhash_estimate_pairs(
         # is exactly the (id_a, id_b) DISTINCT of minhash32_band_pairs
     )
     sh = (
-        shingle_rows(df, text_col, id_col, k, distinct=False)
+        shingle_rows(df, text_col, id_col, distinct=False)
         .groupBy("id")
         .agg(F.collect_set("__s").alias("sh"))
         .withColumn("n", F.size("sh"))
@@ -1263,7 +1252,6 @@ def simhash32_band_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     band_bits: int = 16,
-    max_bucket: int = 64,
 ) -> DataFrame:
     """Banded-SimHash candidate pairs (id_a < id_b), oracle-exact end to end.
 
@@ -1279,7 +1267,7 @@ def simhash32_band_pairs(
     signature bits would silently never land in any band.  The registered
     catalog oracle (_simhash32_pairs_oracle) is pinned to band_bits=16.
 
-    max_bucket is the mega-bucket star guard (same 64 default as
+    STAR_CAP is the mega-bucket star guard (as in
     minhash_lsh_candidates): a bucket of k docs expands to k(k-1)/2 pairs,
     so one hot bucket — e.g. a boilerplate cluster whose members all share
     a signature — turns the banded join quadratic (measured: a 370-doc
@@ -1288,7 +1276,7 @@ def simhash32_band_pairs(
     are dropped from pair expansion; dedup them via an exact-hash
     representative pass instead (they're near-identical by construction).
     The guard is mirrored in the oracle SQL, so the capped pipeline stays
-    differentially certified.  max_bucket=None disables the guard.
+    differentially certified.
     """
     if 32 % band_bits != 0:
         raise ValueError(
@@ -1319,9 +1307,12 @@ def simhash32_band_pairs(
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    return _bucket_pairs(buckets)
+    return _bucket_pairs(buckets.filter(F.size("ids") <= STAR_CAP))
+
+
+# Words per fixed passage chunk: every passage report, rewrite stage and
+# their SQL twins chunk at this width.
+PASSAGE_WORDS = 20
 
 
 def _passage_chunks(
@@ -1329,10 +1320,9 @@ def _passage_chunks(
     text_col: str,
     id_col: str,
     group_col: str | None,
-    passage_words: int,
 ) -> DataFrame:
     """(id[, grp], ci, ct, nw): one row per non-overlapping
-    ``passage_words``-word chunk — 0-based chunk index ``ci``, the
+    20-word chunk — 0-based chunk index ``ci``, the
     chunk's reconstructed text ``ct`` (the exact string the passage
     hashes are computed over) and its word count ``nw``.  The single
     chunk-grain definition under _passage_inst (hash reports) and
@@ -1353,7 +1343,7 @@ def _passage_chunks(
     if group_col is not None:
         cols.append(F.col(group_col).alias("grp"))
     base = df.select(*cols, toks.alias("__t"), F.size(toks).alias("__n"))
-    n_chunks = F.ceil(F.col("__n") / F.lit(float(passage_words))).cast("long")
+    n_chunks = F.ceil(F.col("__n") / F.lit(float(PASSAGE_WORDS))).cast("long")
     keep = ["id", "grp"] if group_col is not None else ["id"]
     idx = base.select(
         *keep,
@@ -1362,7 +1352,7 @@ def _passage_chunks(
             F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
         ).alias("__i"),
     )
-    sl = F.slice(F.col("__t"), F.col("__i") * passage_words + 1, passage_words)
+    sl = F.slice(F.col("__t"), F.col("__i") * PASSAGE_WORDS + 1, PASSAGE_WORDS)
     return idx.select(
         *keep,
         F.col("__i").alias("ci"),
@@ -1376,15 +1366,14 @@ def _passage_inst(
     text_col: str,
     id_col: str,
     group_col: str,
-    passage_words: int,
 ) -> DataFrame:
     """(ph, grp, id, inst): per-document instance counts of each
-    non-overlapping ``passage_words``-word chunk's md5 — the shared
+    non-overlapping 20-word chunk's md5 — the shared
     chunk grain behind passage_dup_report (cross-doc dups via a hash
     window) and self_repetition_report (within-doc dups read straight
     off ``inst``).  Chunking is a generator explode (_passage_chunks;
     ci/nw prune away); counting is ONE shuffle on the hash."""
-    ch = _passage_chunks(df, text_col, id_col, group_col, passage_words)
+    ch = _passage_chunks(df, text_col, id_col, group_col)
     return (
         ch.select("id", "grp", F.md5(F.col("ct")).alias("ph"))
         .groupBy("ph", "grp", "id")
@@ -1396,12 +1385,11 @@ def remove_duplicate_passages(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    passage_words: int = 20,
 ) -> DataFrame:
     """Duplicated-span REMOVAL — the production rewrite stage of
     exact-substring training-data dedup (Lee et al. 2022, the second
     half the counting reports approximate): every non-overlapping
-    ``passage_words``-word chunk that appears anywhere else in the
+    20-word chunk that appears anywhere else in the
     corpus keeps only its FIRST instance in (doc, position) global
     order; each document is re-emitted with its non-keeper chunks
     deleted.  Returns one row per input document:
@@ -1433,7 +1421,7 @@ def remove_duplicate_passages(
     """
     from pyspark.sql import Window
 
-    ch = _passage_chunks(df, text_col, id_col, None, passage_words)
+    ch = _passage_chunks(df, text_col, id_col, None)
     w = Window.partitionBy(F.md5(F.col("ct"))).orderBy("id", "ci")
     flagged = ch.withColumn("__rn", F.row_number().over(w))
     removed = F.col("__rn") > 1
@@ -1459,23 +1447,21 @@ def remove_contaminated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    k: int = 3,
-    passage_words: int = 20,
 ) -> DataFrame:
     """Benchmark-decontamination REWRITE: every non-benchmark document
-    is re-emitted with the ``passage_words``-word chunks TOUCHED by a
-    benchmark word-k-gram deleted — the surgical production stage
+    is re-emitted with the 20-word chunks TOUCHED by a
+    benchmark word trigram deleted — the surgical production stage
     after `ngram_collision_report` (detect) flags overlap; dropping
     whole documents for one leaked sentence wastes data, so standard
     pipelines excise the span.  Returns one row per non-benchmark doc:
 
       (id, group, clean_text, n_chunks, n_removed, n_words_removed)
 
-    A k-gram starting at 0-based word ``w`` touches chunks
-    ``w // passage_words .. (w+k-1) // passage_words`` (a boundary-
+    A trigram starting at 0-based word ``w`` touches chunks
+    ``w // 20 .. (w+2) // 20`` (a boundary-
     spanning gram removes BOTH chunks — over-removal on the safe
     side).  Gram semantics are the house CLAMPED shingles
-    (shingle_rows == the oracle's clamped-trigram SQL): docs under k
+    (shingle_rows == the oracle's clamped-trigram SQL): docs under 3
     words match on their whole text.
 
     Scale shape: the bench gram set is distinct at bench scale and
@@ -1505,22 +1491,22 @@ def remove_contaminated_spans(
     # per-doc dedup would be a second shuffle the set-level distinct
     # immediately repeats
     bset = (
-        shingle_rows(bench, text_col, id_col, k=k, distinct=False)
+        shingle_rows(bench, text_col, id_col, distinct=False)
         .select("__s")
         .distinct()
     )
     grams = shingle_rows(
-        corpus, text_col, id_col, k=k, distinct=False, with_pos=True
+        corpus, text_col, id_col, distinct=False, with_pos=True
     )
-    lo = F.expr(f"CAST(__i DIV {passage_words} AS BIGINT)")
-    hi = F.expr(f"CAST((__i + {k - 1}) DIV {passage_words} AS BIGINT)")
+    lo = F.expr(f"CAST(__i DIV {PASSAGE_WORDS} AS BIGINT)")
+    hi = F.expr(f"CAST((__i + 2) DIV {PASSAGE_WORDS} AS BIGINT)")
     hits = (
         grams.join(F.broadcast(bset), "__s")
         .select("id", F.explode(F.sequence(lo, hi)).alias("ci"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    ch = _passage_chunks(corpus, text_col, id_col, group_col, passage_words)
+    ch = _passage_chunks(corpus, text_col, id_col, group_col)
     flagged = ch.join(hits, ["id", "ci"], "left")
     rm = F.col("__hit").isNotNull()
     return flagged.groupBy(
@@ -1546,18 +1532,15 @@ def boilerplate_phrases(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    passage_words: int = 20,
-    top_k: int = 5,
-    min_docs: int = 2,
 ) -> DataFrame:
-    """Top-``top_k`` boilerplate PHRASES per group: the actual 20-word
+    """Top-5 boilerplate PHRASES per group: the actual 20-word
     chunks repeated across the most documents within a source (cookie
     banners, license headers, templated navigation) — the curation
     view the hash-grain reports can't give, because it surfaces the
     TEXT a reviewer reads before writing a filter rule.  Returns
-    (group, rank, phrase, n_docs, n_inst) with rank 1..top_k by
-    (n_docs desc, n_inst desc, phrase asc); chunks in fewer than
-    ``min_docs`` documents never qualify.
+    (group, rank, phrase, n_docs, n_inst) with rank 1..5 by
+    (n_docs desc, n_inst desc, phrase asc); chunks in fewer than 2
+    documents never qualify.
 
     Shape: the shared _passage_chunks generator grain → an explicit
     two-phase aggregate ((group, chunk, doc) instance counts, then
@@ -1574,7 +1557,7 @@ def boilerplate_phrases(
     same class as the canonical-URL groupBy."""
     from pyspark.sql import Window
 
-    ch = _passage_chunks(df, text_col, id_col, group_col, passage_words)
+    ch = _passage_chunks(df, text_col, id_col, group_col)
     per = (
         ch.groupBy("grp", "ct", "id")
         .agg(F.count("*").alias("__c"))
@@ -1583,14 +1566,14 @@ def boilerplate_phrases(
             F.count("*").alias("n_docs"),
             F.sum("__c").alias("n_inst"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
     w = Window.partitionBy("grp").orderBy(
         F.desc("n_docs"), F.desc("n_inst"), F.asc("ct")
     )
     return (
         per.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 5)
         .select(
             F.col("grp").alias(group_col),
             "rank",
@@ -1606,13 +1589,12 @@ def cdc_chunks(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str | None = "source",
-    divisor: int = 16,
 ) -> DataFrame:
     """(id[, grp], ci, ph, nw): CONTENT-DEFINED chunks at word grain —
     the FastCDC/LBFS idea applied to text dedup: a chunk boundary
-    opens at every word whose md5-BE32 is ≡ 0 (mod ``divisor``), so
+    opens at every word whose md5-BE32 is ≡ 0 (mod 16), so
     boundaries are a property of the CONTENT, not the position.  Mean
-    chunk length ≈ ``divisor`` words.
+    chunk length ≈ 16 words.
 
     Why it exists next to the fixed 20-word passage family: fixed
     chunking is alignment-FRAGILE — one word inserted at the front of
@@ -1654,7 +1636,7 @@ def cdc_chunks(
         lower_trim(F.coalesce(F.col("__cdc_text"), F.lit(""))), WS_RE
     )
     words = src.select(*keep, F.posexplode(toks).alias("__i", "__w"))
-    bf = (_md5_be32(F.col("__w")) % divisor == 0).cast("long")
+    bf = (_md5_be32(F.col("__w")) % 16 == 0).cast("long")
     from pyspark.sql import Window
 
     w = (
@@ -1676,7 +1658,6 @@ def cdc_dedup_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    divisor: int = 16,
 ) -> DataFrame:
     """Per-group cross-document dedup report at CONTENT-DEFINED chunk
     grain (the insertion-robust twin of passage_dup_report): total
@@ -1691,7 +1672,7 @@ def cdc_dedup_report(
     only a map-side md5 per word."""
     from pyspark.sql import Window
 
-    ch = cdc_chunks(df, text_col, id_col, group_col, divisor)
+    ch = cdc_chunks(df, text_col, id_col, group_col)
     g = ch.groupBy("ph", "grp", "id").agg(
         F.count("*").alias("inst"), F.max("nw").alias("nw")
     )
@@ -1715,7 +1696,6 @@ def self_repetition_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    passage_words: int = 20,
 ) -> DataFrame:
     """WITHIN-document passage repetition report — the duplicate-
     paragraph signal of the Gopher repetition filters (Rae et al. 2021)
@@ -1736,7 +1716,7 @@ def self_repetition_report(
     already chunk-aggregated grain — far below corpus scale); no
     second reference to the chunk pipeline anywhere.
     """
-    inst = _passage_inst(df, text_col, id_col, group_col, passage_words)
+    inst = _passage_inst(df, text_col, id_col, group_col)
     rep = F.col("inst") >= 2
     dup_sum = F.coalesce(F.sum(F.when(rep, F.col("inst"))), F.lit(0))
     total = F.sum("inst")
@@ -1755,14 +1735,13 @@ def passage_dup_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    passage_words: int = 20,
 ) -> DataFrame:
     """Cross-document exact PASSAGE dedup report — the practical
     chunk-granular approximation of exact-substring training-data dedup
     (Lee et al. 2021, "Deduplicating Training Data Makes Language Models
     Better": repeated spans, not just whole-doc copies, drive
     memorization).  Documents split into non-overlapping
-    ``passage_words``-word chunks; a chunk whose md5 appears in >= 2
+    20-word chunks; a chunk whose md5 appears in >= 2
     DISTINCT documents is "duplicated".
 
     Per group: total passage instances, duplicated instances, and
@@ -1781,7 +1760,7 @@ def passage_dup_report(
     """
     from pyspark.sql import Window
 
-    inst = _passage_inst(df, text_col, id_col, group_col, passage_words)
+    inst = _passage_inst(df, text_col, id_col, group_col)
     nd = F.count("*").over(Window.partitionBy("ph"))
     flagged = inst.withColumn("nd", nd)
     dup = F.col("nd") >= 2
@@ -1799,7 +1778,6 @@ def source_overlap_matrix(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    passage_words: int = 20,
 ) -> DataFrame:
     """Cross-source duplication matrix (source_a <= source_b,
     n_shared_passages): how many distinct 20-word passage hashes two
@@ -1819,7 +1797,7 @@ def source_overlap_matrix(
     (no star guard needed — the mega-bucket rule applies to keys whose
     population grows with data; |sources| does not).
     """
-    inst = _passage_inst(df, text_col, id_col, group_col, passage_words)
+    inst = _passage_inst(df, text_col, id_col, group_col)
     g = inst.groupBy("ph", "grp").agg(F.sum("inst").alias("c"))
     per = g.groupBy("ph").agg(
         F.array_sort(F.collect_list(F.struct("grp", "c"))).alias("ss")

@@ -69,13 +69,14 @@ def docs_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def docs_as_ppm_media(documents: DataFrame, side: int = 8) -> DataFrame:
+def docs_as_ppm_media(documents: DataFrame) -> DataFrame:
     """Adapter: build REAL binary-PPM (P6) payloads from document text —
-    header + the first side*side*3 bytes of the (repeated) UTF-8 text as
+    an 8×8 header + the first 8*8*3 bytes of the (repeated) UTF-8 text as
     the RGB raster.  Entirely JVM-side (concat/repeat/substring on
     binary), so the decode path downstream (decode_ppm in
     extract_features) computes genuine pixel statistics on driver
     fixtures without any codec library."""
+    side = 8
     need = side * side * 3
     header = f"P6\n{side} {side}\n255\n"
     # repeat the text until its UTF-8 encoding covers the raster
@@ -93,16 +94,16 @@ def docs_as_ppm_media(documents: DataFrame, side: int = 8) -> DataFrame:
     )
 
 
-def docs_as_wav_media(documents: DataFrame, n_samples: int = 2048) -> DataFrame:
+def docs_as_wav_media(documents: DataFrame) -> DataFrame:
     """Adapter: build REAL PCM16 WAV payloads from document text — a
-    constant RIFF/fmt/data header (fixed sample count → fixed sizes,
-    precomputed driver-side) + the first n_samples*2 bytes of the
+    constant RIFF/fmt/data header (fixed 2048-sample count → fixed sizes,
+    precomputed driver-side) + the first 2048*2 bytes of the
     repeated UTF-8 text as the little-endian sample stream.  JVM-side
     binary concat, so audio_fingerprint downstream runs the genuine
     FFT kernel on driver fixtures with no codec library."""
     import struct
 
-    need = n_samples * 2
+    need = 2048 * 2
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
     header = (
         b"RIFF" + struct.pack("<I", 36 + need) + b"WAVE"
@@ -387,9 +388,9 @@ def ahash_kernel(img, side: int = 8) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_fingerprint_kernel(samples, n_frames: int = 8, n_bands: int = 8) -> int:
+def audio_fingerprint_kernel(samples, n_frames: int = 8) -> int:
     """Spectral fingerprint of PCM16 audio: split into n_frames windows,
-    FFT each, sum |spectrum| into n_bands log-spaced energy bands, set
+    FFT each, sum |spectrum| into 8 log-spaced energy bands, set
     bit (frame, band) when the band's energy beats the frame median —
     a 64-bit hash in the chromaprint/"robust audio hashing" family
     (public design: Haitsma & Kalker 2002).  Re-encodes and small edits
@@ -397,6 +398,7 @@ def audio_fingerprint_kernel(samples, n_frames: int = 8, n_bands: int = 8) -> in
     image hashes."""
     import numpy as np
 
+    n_bands = 8
     if n_frames * n_bands > 64:
         # bit (frame, band) packs into ONE long (see ahash_kernel)
         raise ValueError(
@@ -423,25 +425,15 @@ def audio_fingerprint_kernel(samples, n_frames: int = 8, n_bands: int = 8) -> in
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_fingerprint(
-    media: DataFrame, n_frames: int = 8, n_bands: int = 8
-) -> DataFrame:
+def audio_fingerprint(media: DataFrame) -> DataFrame:
     """Audio fingerprints over mapInPandas (Arrow batches): WAV payloads
-    decode (decode_wav) and hash; anything else gets NULL with
-    decoder='unsupported'.  Output schema matches image_phash, so
-    phash_neardup_pairs works on either modality's hashes.
-
-    Grid validation happens HERE, before mapInPandas: the per-row
-    `except Exception` below exists to absorb malformed PAYLOADS, and a
-    misconfigured grid raised inside the kernel would be swallowed into
-    silent all-NULL hashes instead of failing the job.
+    decode (decode_wav) and hash on the kernel's 8×8 grid; anything else
+    gets NULL with decoder='unsupported'.  Output schema matches
+    image_phash, so phash_neardup_pairs works on either modality's
+    hashes.
     """
     from waddleml_spark.session import ensure_shipped, fan_out
 
-    if n_frames * n_bands > 64 or n_frames < 1 or n_bands < 1:
-        raise ValueError(
-            f"n_frames*n_bands must be in 1..64 bits, got {n_frames * n_bands}"
-        )
     ensure_shipped(media.sparkSession)
     src = fan_out(media.select("media_id", "payload"))
 
@@ -453,9 +445,7 @@ def audio_fingerprint(
                 if p is not None and bytes(p[:4]) == b"RIFF":
                     try:
                         _rate, _ch, samples = decode_wav(p)
-                        dec, fp = "wav", audio_fingerprint_kernel(
-                            samples, n_frames=n_frames, n_bands=n_bands
-                        )
+                        dec, fp = "wav", audio_fingerprint_kernel(samples)
                     except Exception:  # malformed payload -> NULL row, see extract_features
                         dec, fp = "unsupported", None
                 ids.append(mid)
@@ -468,21 +458,15 @@ def audio_fingerprint(
     return src.mapInPandas(batches, schema=PHASH_SCHEMA)
 
 
-def image_phash(media: DataFrame, side: int = 8) -> DataFrame:
-    """Perceptual hash per image over mapInPandas (Arrow batches; the
-    payload is consumed inside the task and never re-shuffled).  Rows
-    whose payload isn't a decodable uncompressed image get phash NULL
-    with decoder='unsupported' — one bad payload never kills the stage.
-
-    Grid validation happens HERE, before mapInPandas: the per-row
-    `except Exception` below absorbs malformed PAYLOADS; a bad `side`
-    raised inside the kernel would otherwise surface as silent all-NULL
-    hashes with decoder='unsupported' instead of a config error.
+def image_phash(media: DataFrame) -> DataFrame:
+    """Perceptual hash (the kernel's 8×8 average hash) per image over
+    mapInPandas (Arrow batches; the payload is consumed inside the task
+    and never re-shuffled).  Rows whose payload isn't a decodable
+    uncompressed image get phash NULL with decoder='unsupported' — one
+    bad payload never kills the stage.
     """
     from waddleml_spark.session import ensure_shipped, fan_out
 
-    if side * side > 64 or side < 1:
-        raise ValueError(f"side*side must be in 1..64 bits, got {side * side}")
     ensure_shipped(media.sparkSession)
     src = fan_out(media.select("media_id", "payload"))
 
@@ -494,9 +478,9 @@ def image_phash(media: DataFrame, side: int = 8) -> DataFrame:
                 if p is not None:
                     try:
                         if p[:2] == b"P6":
-                            dec, ph = "ppm", ahash_kernel(decode_ppm(p), side=side)
+                            dec, ph = "ppm", ahash_kernel(decode_ppm(p))
                         elif p[:2] == b"BM":
-                            dec, ph = "bmp", ahash_kernel(decode_bmp(p), side=side)
+                            dec, ph = "bmp", ahash_kernel(decode_bmp(p))
                     except Exception:  # malformed payload -> NULL row, see extract_features
                         dec, ph = "unsupported", None
                 ids.append(mid)
@@ -513,7 +497,6 @@ def phash_neardup_pairs(
     phashes: DataFrame,
     max_dist: int = 10,
     band_bits: int = 16,
-    max_bucket: int = 64,
 ) -> DataFrame:
     """Image near-dup pairs by banded perceptual hash — the pigeonhole
     banding LSH of SimHash, on pixels instead of tokens: two hashes within `max_dist` bits collide on at least one
@@ -525,17 +508,18 @@ def phash_neardup_pairs(
     (ONE shuffle; a self-join here would re-evaluate the upstream
     Python decode+hash pipeline per plan reference — the old join shape
     ran the mapInPandas decode FOUR times per query) with the
-    mega-bucket guard at `max_bucket` (mirrored from the text LSH ops —
+    mega-bucket guard at STAR_CAP (mirrored from the text LSH ops —
     uniform images pile into one bucket otherwise; the guard is a WINDOW
     count over the same (band, bucket) partitioning, so over-cap rows
     drop BEFORE collect_list ever materializes a mega array, and the
     groupBy reuses the window's shuffle) → generator pair expansion
     carrying the hashes → distinct → exact hamming verify.  Only 8-byte
     hashes shuffle; payloads stay where they were decoded, and bucket
-    arrays are bounded at max_bucket structs.
+    arrays are bounded at STAR_CAP structs.
     """
     from pyspark.sql import Window
 
+    from waddleml_spark.llmops import STAR_CAP
     from waddleml_spark.llmops.dedup import band_rows
 
     src = phashes.filter(F.col("phash").isNotNull())
@@ -549,7 +533,7 @@ def phash_neardup_pairs(
     )
     w = Window.partitionBy("band", "bucket")
     bounded = keys.withColumn("__n", F.count("*").over(w)).filter(
-        F.col("__n") <= max_bucket
+        F.col("__n") <= STAR_CAP
     )
     buckets = (
         bounded.groupBy("band", "bucket")
@@ -596,11 +580,9 @@ def payload_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def chunk_fingerprints(
-    media: DataFrame, chunk_bytes: int = 32, max_chunks: int = 64
-) -> DataFrame:
-    """Content-defined frame fingerprints: hash each aligned chunk_bytes
-    slice of the payload (up to max_chunks).  Each fingerprint covers
+def chunk_fingerprints(media: DataFrame) -> DataFrame:
+    """Content-defined frame fingerprints: hash each aligned 32-byte
+    slice of the payload (up to 64 chunks).  Each fingerprint covers
     only its own bytes, not the whole payload, so payloads sharing
     aligned content (same video with trailing edits, re-muxed streams,
     doc re-encodes) share fingerprints.  All JVM-side (substring on
@@ -609,7 +591,8 @@ def chunk_fingerprints(
     """
     # coalesce INSIDE the least: octet_length(NULL) is NULL and Spark's
     # least() SKIPS nulls (least(NULL, 64) = 64), so a NULL payload
-    # would otherwise claim max_chunks phantom chunks
+    # would otherwise claim 64 phantom chunks
+    chunk_bytes, max_chunks = 32, 64
     n = F.least(
         F.ceil(
             F.coalesce(F.octet_length("payload"), F.lit(0)) / F.lit(chunk_bytes)
@@ -633,15 +616,9 @@ def chunk_fingerprints(
     )
 
 
-def frame_neardup_pairs(
-    media: DataFrame,
-    chunk_bytes: int = 32,
-    max_chunks: int = 64,
-    min_shared: int = 4,
-    max_bucket: int = 64,
-) -> DataFrame:
+def frame_neardup_pairs(media: DataFrame) -> DataFrame:
     """Media near-dup candidates by shared content chunks: media pairs
-    with ≥ min_shared identical chunk fingerprints.
+    with ≥ 4 identical chunk fingerprints.
 
     Plan shape: explode fingerprints → bucket-GROUP on the hash (each
     bucket holds only payloads containing that exact 32-byte slice —
@@ -650,30 +627,30 @@ def frame_neardup_pairs(
     (dedup._bucket_pairs, one co-occurrence row per shared bucket) →
     pair count ≥ threshold.  Returns (id_a, id_b, shared_chunks).
 
-    ``max_bucket`` is the mega-bucket guard (the CLAUDE.md rule the
+    STAR_CAP is the mega-bucket guard (the CLAUDE.md rule the
     earlier self-join shape violated — round-6 review find): a
     boilerplate payload copied N times puts N ids into EVERY one of its
-    chunk buckets, and the unguarded join emitted ~max_chunks·N²/2
+    chunk buckets, and the unguarded join emitted ~64·N²/2
     pair rows from one flood.  Buckets over the cap are dropped —
     honest recall loss on degenerate floods, exactly like the text
     pairings.  Bucket-group also keeps ONE reference to the digest
     frame, so the payload scans/hashes once with no persist needed.
     """
-    from waddleml_spark.llmops import dedup
+    from waddleml_spark.llmops import STAR_CAP, dedup
 
     fp = (
-        chunk_fingerprints(media, chunk_bytes, max_chunks)
+        chunk_fingerprints(media)
         .select(F.col("media_id").alias("id"), "chunk_sha")
         .distinct()
     )
     buckets = (
         fp.groupBy("chunk_sha")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= STAR_CAP))
     )
     return (
         dedup._bucket_pairs(buckets, distinct=False)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared_chunks"))
-        .filter(F.col("shared_chunks") >= min_shared)
+        .filter(F.col("shared_chunks") >= 4)
     )

@@ -143,12 +143,12 @@ def packing_report(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    seq_len: int = 2048,
 ) -> DataFrame:
-    """Per-sequence summary of the packing plan: how many documents START
-    in each sequence, their token mass, and how many straddle the next
-    cut.  Output is ~total_tokens/seq_len rows — tiny at any scale."""
-    plan = packed_sequences(df, text_col, id_col, seq_len)
+    """Per-sequence summary of the 2048-token packing plan: how many
+    documents START in each sequence, their token mass, and how many
+    straddle the next cut.  Output is ~total_tokens/2048 rows — tiny at
+    any scale."""
+    plan = packed_sequences(df, text_col, id_col)
     return plan.groupBy(F.col("first_seq").alias("seq_id")).agg(
         F.count("*").alias("docs_starting"),
         F.sum("n_tok").alias("toks_starting"),
@@ -163,10 +163,9 @@ def resample_to_mix(
     rates: dict[str, float],
     group_col: str = "source",
     id_col: str = "doc_id",
-    default_rate: float = 1.0,
-    salt: str = ":mix",
 ) -> DataFrame:
-    """Deterministically up/down-sample each group to its target rate.
+    """Deterministically up/down-sample each group to its target rate
+    (1.0 for a group ``rates`` does not name).
 
     rate r ⇒ each row is emitted floor(r) times plus one more with
     probability frac(r), decided by a salted hash of the id — the same
@@ -175,7 +174,7 @@ def resample_to_mix(
     `sample()`/rand() cannot give).  Emission is explode(array_repeat),
     all JVM-side; rate 0 drops the group entirely.
     """
-    rate_expr: Column = F.lit(float(default_rate))
+    rate_expr: Column = F.lit(1.0)
     for src, r in sorted(rates.items()):
         rate_expr = F.when(F.col(group_col) == src, float(r)).otherwise(rate_expr)
     base = F.floor(rate_expr).cast("int")
@@ -183,7 +182,7 @@ def resample_to_mix(
     # per-row threshold string: rates are column-dependent, so compare the
     # hash prefix against the hex threshold computed from the rate column
     # (same arithmetic both engines: round(p * 65536) rendered as 4-hex)
-    h4 = F.substring(order_key(F.col(id_col), salt), 1, HASH_FRAC_DIGITS)
+    h4 = F.substring(order_key(F.col(id_col), ":mix"), 1, HASH_FRAC_DIGITS)
     # least(..., 65535): a fractional rate ≥ 0.9999924 rounds to 65536 =
     # hex '10000', and lpad TRUNCATES over-length strings to '1000' —
     # collapsing a ~certain extra copy to a 1/16 chance (round-6 review
@@ -213,10 +212,8 @@ def chunk_tokens(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    chunk: int = 64,
-    overlap: int = 16,
 ) -> DataFrame:
-    """RAG-style token chunking: fixed-size windows with overlap.
+    """RAG-style token chunking: 64-token windows overlapping by 16.
 
     Chunk starts are 1, 1+stride, … while start ≤ max(n−overlap, 1)
     (stride = chunk − overlap), so every token is covered, consecutive
@@ -226,8 +223,7 @@ def chunk_tokens(
     shape that matters when chunking 100 TB for an embedding pipeline.
     Returns (id, chunk_idx, toks, n_in_chunk).
     """
-    if overlap >= chunk:
-        raise ValueError("overlap must be < chunk")
+    chunk, overlap = 64, 16
     stride = chunk - overlap
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
@@ -288,11 +284,14 @@ def weighted_sample(
     )
 
 
+N_SHARDS = 8  # training_shard_plan's default; its SQL twin reads it too
+
+
 def training_shard_plan(
     df: DataFrame,
     id_col: str = "doc_id",
     size_col: str = "n_chars",
-    n_shards: int = 8,
+    n_shards: int = N_SHARDS,
 ) -> DataFrame:
     """Deterministic shard + shuffle placement for a training export:
     (doc_id, shard, pos, cum_size) — every doc hashed to one of

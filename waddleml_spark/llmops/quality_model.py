@@ -175,12 +175,9 @@ def distill_report(
     )
 
 
-def fit_sample(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    fit_sample_rows: int = 25_000,
-) -> DataFrame:
-    """Deterministic bounded fit input (mirror of ivf_index's rule): the
+def fit_sample(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Deterministic bounded fit input of ~25 000 rows (mirror of
+    ivf_index's rule): the
     student fit is iterative — every L-BFGS iteration is a full pass
     over its input — so the input must be O(sample), not O(corpus);
     teacher labeling rides the same bound because only fit rows need
@@ -192,17 +189,16 @@ def fit_sample(
     small computed input never pays a full count."""
     from .packing import bernoulli_keep
 
-    probe = docs.limit(fit_sample_rows + 1).count()
-    if probe <= fit_sample_rows:
+    rows = 25_000
+    probe = docs.limit(rows + 1).count()
+    if probe <= rows:
         return docs
     n = docs.count()
-    p = min(1.0, 1.1 * fit_sample_rows / n)  # oversample to hold the target
+    p = min(1.0, 1.1 * rows / n)  # oversample to hold the target
     return docs.filter(bernoulli_keep(F.col(id_col), p, "quality-fit"))
 
 
-def learned_filter_report(
-    spark: SparkSession, sf_dir: str, fit_sample_rows: int = 25_000
-) -> DataFrame:
+def learned_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distill the lang-ID-confidence teacher into the linear surface-
     feature student — the two-class signal the fixture corpus actually
     carries (its text is template-English regardless of the lang column,
@@ -211,7 +207,5 @@ def learned_filter_report(
     the learned filter to the corpus remains a pure projection."""
     from waddleml_spark.session import read_table
 
-    docs = fit_sample(
-        read_table(spark, sf_dir, "documents"), fit_sample_rows=fit_sample_rows
-    )
+    docs = fit_sample(read_table(spark, sf_dir, "documents"))
     return distill_report(spark, docs, langid_teacher_labels(docs))

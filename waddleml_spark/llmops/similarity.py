@@ -36,11 +36,8 @@ def blocked_cosine_pairs(
     block_col: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    threshold: float = 0.3,
-    row_chunk: int = 1024,
-    fanout: int = 4,
 ):
-    """All within-block pairs (id_a < id_b) with cosine >= threshold —
+    """All within-block pairs (id_a < id_b) with cosine >= 0.3 —
     Arrow kernels over CHUNK-PAIRS, NO pair materialization in the JVM.
 
     Replaces the pair-grain interpreted-HOF dot (the round-4 review's
@@ -52,7 +49,8 @@ def blocked_cosine_pairs(
     Scale shape: a block's pair count grows QUADRATICALLY with its row
     count while the number of blocks stays fixed (one group per label =
     ten tasks forever — measured 11x wall at 10x data).  So each row is
-    assigned a deterministic sub-chunk c = xxhash64(id) % fanout and
+    assigned a deterministic sub-chunk c = xxhash64(id) % fanout
+    (fanout = 4) and
     replicated to every chunk-pair group {(min(c,j), max(c,j))}: each
     unordered row pair lands in EXACTLY ONE of the fanout*(fanout+1)/2
     groups per block, tasks spread across the cluster, and kernel memory
@@ -71,10 +69,12 @@ def blocked_cosine_pairs(
 
     100 TB shape: one shuffle on (block, chunk-pair), per-group
     O(n_ci * n_cj * d) vectorized flops, O(survivors) output;
-    ``row_chunk`` additionally bounds kernel memory on the probe axis.
+    1024-row probe chunks additionally bound kernel memory.
     """
     import numpy as np
     import pandas as pd
+
+    threshold, row_chunk, fanout = 0.3, 1024, 4
 
     # id_a/id_b carry the INPUT id column's type: the driver compare is
     # type-sensitive and testdata physical types drift between rounds
@@ -226,11 +226,10 @@ def cosine_topk(
 def cosine_topk_lookup(
     corpus: DataFrame,
     query_id: int,
-    k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Brute-force cosine top-k against a query vector identified by id,
+    """Brute-force cosine top-10 against a query vector identified by id,
     resolved IN-PLAN via a 1-row broadcast cross join (the oracle's
     ``FROM c, q`` shape) instead of a driver-side parameter fetch.
 
@@ -272,7 +271,7 @@ def cosine_topk_lookup(
         .crossJoin(F.broadcast(q))
         .selectExpr(f"`{id_col}`", f"{sim} AS cos_sim")
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -396,11 +395,11 @@ def ivf_index(
     corpus: DataFrame,
     n_cells: int | None = 16,
     vec_col: str = "embedding",
-    seed: int = 42,
     fit_sample_rows: int = 100_000,
     id_col: str | None = None,
 ):
-    """IVF (inverted-file) index: KMeans cells over the corpus.
+    """IVF (inverted-file) index: KMeans cells over the corpus (seed 42
+    for both the fit sample's hash trial and KMeans).
 
     Returns (model, corpus_with_cells) where each row gains `ivf_cell`.
 
@@ -432,6 +431,7 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    seed = 42
     df = corpus.withColumn("__vec", array_to_vector(as_double(F.col(vec_col))))
     fit_df = df.select("__vec")
     # early-stopping size probe: a computed input (filters/joins upstream)
@@ -485,12 +485,13 @@ def ivf_topk(
     return cosine_topk(cand, query_vec, k=k, vec_col=vec_col, id_col=id_col)
 
 
-def _lloyd_kmeans(X, n_codes: int, seed: int, iters: int = 15):
+def _lloyd_kmeans(X, n_codes: int, seed: int):
     """Deterministic Lloyd's k-means (k-means++ init from a fixed
-    RandomState) — driver-side only, over the bounded PQ fit sample.
-    Input rows must already be in a canonical order (the caller sorts):
-    collect() order is partition-layout-dependent and would otherwise
-    leak into the init draws and thus every downstream code."""
+    RandomState, at most 15 iterations) — driver-side only, over the
+    bounded PQ fit sample.  Input rows must already be in a canonical
+    order (the caller sorts): collect() order is partition-layout-
+    dependent and would otherwise leak into the init draws and thus
+    every downstream code."""
     import numpy as np
 
     n = len(X)
@@ -506,7 +507,7 @@ def _lloyd_kmeans(X, n_codes: int, seed: int, iters: int = 15):
             break
         centers[i] = X[rng.choice(n, p=d2 / tot)]
         d2 = np.minimum(d2, ((X - centers[i]) ** 2).sum(1))
-    for _ in range(iters):
+    for _ in range(15):
         dist = -2 * X @ centers.T + (centers**2).sum(1)[None, :]
         assign = dist.argmin(1)
         new = centers.copy()
@@ -529,12 +530,11 @@ def pq_train(
     n_codes: int = 16,
     vec_col: str = "embedding",
     id_col: str | None = None,
-    seed: int = 42,
     fit_sample_rows: int = 100_000,
-    iters: int = 15,
 ):
     """Product-quantization codebooks: split d dims into ``m_subspaces``
-    blocks, k-means each block to ``n_codes`` centroids.  Returns a
+    blocks, k-means each block to ``n_codes`` centroids (block j seeded
+    42 + j; the fit sample's hash trial seeded 42).  Returns a
     numpy array (m, n_codes, d/m) — a few KB, broadcastable anywhere.
 
     The scale step BEYOND IVF: a PQ code is m bytes-ish per vector
@@ -552,6 +552,7 @@ def pq_train(
     """
     import numpy as np
 
+    seed = 42
     # validate from ONE row before any corpus-scale action: a bad
     # m_subspaces or an empty corpus must fail in milliseconds, not
     # after a sample collect (and np.stack on [] raises an opaque
@@ -596,7 +597,7 @@ def pq_train(
     return np.stack(
         [
             _lloyd_kmeans(
-                X[:, j * dsub : (j + 1) * dsub], n_codes, seed + j, iters
+                X[:, j * dsub : (j + 1) * dsub], n_codes, seed + j
             )
             for j in range(m_subspaces)
         ]
@@ -788,11 +789,10 @@ def ann_topk_lsh(
     corpus: DataFrame,
     query_vec: list[float],
     hyperplanes: list[list[float]],
-    k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """ANN: probe only the query's LSH bucket, then exact cosine top-k
+    """ANN: probe only the query's LSH bucket, then exact cosine top-10
     inside it.  Recall < 1 by design; multi-probe = union of neighbor
     buckets (flip one bit) if needed."""
     bucketed = lsh_bucketize(corpus, hyperplanes, vec_col)
@@ -805,12 +805,10 @@ def ann_topk_lsh(
         if d >= 0:
             qb |= 1 << i
     cand = bucketed.filter(F.col("lsh_bucket") == qb)
-    return cosine_topk(cand, query_vec, k=k, vec_col=vec_col, id_col=id_col)
+    return cosine_topk(cand, query_vec, vec_col=vec_col, id_col=id_col)
 
 
-def covariance_matrix(
-    df: DataFrame, vec_col: str = "embedding", dim: int | None = None
-):
+def covariance_matrix(df: DataFrame, vec_col: str = "embedding"):
     """Distributed covariance of an embedding column → driver ndarray.
 
     The scale pattern for second-moment statistics: each Arrow batch
@@ -957,7 +955,6 @@ def pca_variance_report(
 def domain_mix_report(
     corpus: DataFrame,
     n_domains: int = 8,
-    alpha: float = 0.5,
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Semantic domain mix with temperature-smoothed sampling weights.
@@ -967,9 +964,9 @@ def domain_mix_report(
     corpus into semantic domains (KMeans cells, reusing ivf_index —
     one iterative fit, one assignment pass), then compute each
     domain's natural share p_i and the smoothed sampling share
-    q_i = p_i^alpha / sum p_j^alpha — alpha<1 upsamples tail domains,
-    alpha=1 keeps the natural mix.  Per domain: n_docs, natural_share,
-    smoothed_share, sample_rate = q_i/p_i (the per-row multiplier
+    q_i = p_i^alpha / sum p_j^alpha with alpha = 0.5 — alpha<1
+    upsamples tail domains, alpha=1 would keep the natural mix.  Per
+    domain: n_docs, natural_share, smoothed_share, sample_rate = q_i/p_i (the per-row multiplier
     resample_to_mix consumes downstream).
 
     Plan shape: the only corpus-scale work is the KMeans assignment
@@ -982,7 +979,7 @@ def domain_mix_report(
     _model, with_cells = ivf_index(corpus, n_cells=n_domains, vec_col=vec_col)
     counts = with_cells.groupBy("ivf_cell").agg(F.count("*").alias("n_docs"))
     return (
-        smoothed_shares(counts, "n_docs", alpha)
+        smoothed_shares(counts, "n_docs", 0.5)
         .select(
             F.col("ivf_cell").alias("domain"),
             "n_docs",

@@ -167,10 +167,9 @@ def ngram_collision_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    k: int = 3,
 ) -> DataFrame:
     """Benchmark-contamination check: for every non-benchmark document,
-    does it share ANY word k-gram with the benchmark set (`bench_pred`
+    does it share ANY word trigram with the benchmark set (`bench_pred`
     rows)?  Returns per-`group_col` (n_docs, n_contaminated).
 
     Scale shape: the benchmark shingle vocabulary is exploded, hashed
@@ -217,12 +216,12 @@ def ngram_collision_report(
         )
     )
     # explode_OUTER, not plain explode, for two reasons: shingle-less
-    # docs (< k tokens — empty starts array) must survive as a null row
+    # docs (< 3 tokens — empty starts array) must survive as a null row
     # so n_docs counts them, and InferFiltersFromGenerate clones an
     # inner explode's size()>0 filter below the fan_out exchange
     # (measured 2.6 s of the old 7 s) while outer generate is exempt.
     # The null __i row hashes to NULL, which never matches the join key.
-    starts, gram = nopartial_gram_exprs(k)
+    starts, gram = nopartial_gram_exprs(3)
     rows = base.select(
         "__id", "__grp", "__is_bench", "__t",
         F.explode_outer(starts).alias("__i"),
@@ -490,11 +489,10 @@ def shingle_novelty_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    k: int = 3,
 ) -> DataFrame:
     """Corpus-redundancy attribution: which groups CONTRIBUTE new
     content vs repeat content that already exists elsewhere?  Per
-    group, over per-doc-distinct word k-grams ("slots"):
+    group, over per-doc-distinct word trigrams ("slots"):
 
     - ``shingle_slots``      — (doc, shingle) pairs held by the group
     - ``distinct_shingles``  — distinct shingles appearing in the group
@@ -510,7 +508,7 @@ def shingle_novelty_report(
     same two BIGINTs on any engine), so it oracle-pairs exactly.
 
     Scale shape: codegen'd generator explode over start indices (empty
-    for docs under k tokens — nopartial_gram_exprs' pinned no-partials
+    for docs under 3 tokens — nopartial_gram_exprs' pinned no-partials
     semantics, NOT shingle_rows' clamp), per-occurrence rows into a
     (shingle, group) aggregate whose single countDistinct rewrites to a
     two-phase plan with map-side partial distinct; the corpus-wide
@@ -531,7 +529,7 @@ def shingle_novelty_report(
     rows == count(*) over per-doc-distinct rows — same values, and
     min(id) is duplicate-insensitive.
     """
-    starts, gram = nopartial_gram_exprs(k)
+    starts, gram = nopartial_gram_exprs(3)
     toks = word_tokens(F.col(text_col))
     sh = (
         df.select(
@@ -571,7 +569,6 @@ def dsir_scores(
     target_pred: Column,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """DSIR importance scores (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): per document, the
@@ -580,7 +577,7 @@ def dsir_scores(
     whole corpus — the standard cheap proxy for "does this doc look
     like the data I want more of".  score(doc) = Σ over its bigram
     occurrences of ln(p_target(bucket)/p_raw(bucket)), add-one
-    smoothed over ``n_buckets`` hashed feature buckets.
+    smoothed over n_buckets = 1024 hashed feature buckets.
 
     Returns (id, n_bigrams, importance) with importance floor-rounded
     to 6 digits — the bigram_lm_scores rule: ln may differ in the last
@@ -608,6 +605,8 @@ def dsir_scores(
     """
     from waddleml_spark.llmops.dedup import _md5_be32
     from . import round_floor
+
+    n_buckets = 1024
 
     rows = _bigram_rows(
         df, text_col, id_col, extra={"tgt": target_pred.cast("int")}

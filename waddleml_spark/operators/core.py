@@ -68,39 +68,24 @@ def search_filter(df: DataFrame, cols: Sequence[str], query: str) -> DataFrame:
     return df.filter(search_haystack(*cols).contains(query.lower()))
 
 
-def last_per_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    keep_ties: bool = True,
-    descending: bool = True,
-) -> DataFrame:
-    """Last (max-order_col) row per group — the reference's flagship shape.
+def last_per_group(df: DataFrame, group_cols: Sequence[str], order_col: str) -> DataFrame:
+    """Last (max-order_col) row per group, ties kept — the reference's
+    flagship shape.
 
     Ref J2/W1 (waddle/_dashboard_api.py:227): a correlated scalar subquery
     `step = (SELECT MAX(step) ...)` selecting each run's final metric value.
-    Window rank replaces the subquery; `keep_ties=True` uses rank() to keep
-    all max rows (exact parity with the ref's equality-on-max semantics),
-    row_number() otherwise.
+    Window rank() replaces the subquery and keeps all max rows (exact
+    parity with the ref's equality-on-max semantics).
 
     Scale: one shuffle on group_cols; with the fact table bucketed on the
     leading group col this is shuffle-free.  AQE splits skewed groups.
     """
-    order = F.col(order_col).desc() if descending else F.col(order_col).asc()
-    w = Window.partitionBy(*group_cols).orderBy(order)
-    fn = F.rank() if keep_ties else F.row_number()
-    return df.withColumn("__rk", fn.over(w)).filter(F.col("__rk") == 1).drop("__rk")
+    w = Window.partitionBy(*group_cols).orderBy(F.col(order_col).desc())
+    return df.withColumn("__rk", F.rank().over(w)).filter(F.col("__rk") == 1).drop("__rk")
 
 
-def distinct_values(df: DataFrame, col_name: str, exclude_prefix: str | None = None) -> DataFrame:
-    """DISTINCT key discovery, optionally excluding a namespace prefix.
-
-    Ref A3+P6 (waddle/_dashboard_api.py:117-120,211-213): distinct metric
-    keys with `key NOT LIKE 'system/%'`.  The prefix filter is a pushed
-    StringStartsWith predicate.
-    """
-    if exclude_prefix is not None:
-        df = df.filter(~F.col(col_name).startswith(exclude_prefix))
+def distinct_values(df: DataFrame, col_name: str) -> DataFrame:
+    """DISTINCT key discovery, sorted (ref A3, waddle/_dashboard_api.py:117-120)."""
     return df.select(col_name).distinct().orderBy(col_name)
 
 
@@ -254,7 +239,6 @@ def lttb_downsample(
     order_col: str,
     value_col: str,
     target_points: int = 1000,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Largest-Triangle-Three-Buckets chart downsampling, parallel variant.
 
@@ -301,7 +285,7 @@ def lttb_downsample(
         " END"
     )
     d = j.selectExpr("*", f"{bucket} AS __b").drop("__lo", "__hi")
-    p = 10 ** int(round_digits)
+    p = 10**6  # bucket means floor-rounded to 6 digits
     rr = lambda e: f"floor(({e}) * {p} + 0.5D) / {p}"  # noqa: E731
     means = d.groupBy(*group_cols, "__b").agg(
         F.expr(f"{rr(f'avg({x})')} AS __mx"),

@@ -27,18 +27,17 @@ def bucket_sketches(
     df: DataFrame,
     bucket_col,
     key_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """One HLL sketch of key_col per bucket: (bucket, sketch, estimate).
 
-    lg_k=12 → ~2 KB per sketch, ~1.6% standard error — the storage cost
+    lg_k 12 → ~2 KB per sketch, ~1.6% standard error — the storage cost
     is per BUCKET, independent of cardinality.  This is the
     materialization step; keep the binary `sketch` column for later
     merging and the `estimate` for direct display.
     """
     return (
         df.groupBy(bucket_col)
-        .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sketch"))
+        .agg(F.hll_sketch_agg(key_col, F.lit(12)).alias("sketch"))
         .withColumn("estimate", F.hll_sketch_estimate("sketch"))
     )
 
@@ -59,22 +58,22 @@ def merge_sketches(sketches: DataFrame, group_cols=None) -> DataFrame:
 
 # --- count-min sketch (frequency estimation) --------------------------------
 
+CMS_SEED = 42  # the build and the probe hash with this one seed
 
-def _cms_positions(value, width: int, depth: int, seed: int):
+
+def _cms_positions(value, width: int, depth: int):
     """depth bucket positions for ``value`` — the ONE shared build/probe
     hash expression (functions.scalars.hash_positions, also used by
     llmops.bloom), so the pairing rule holds by construction."""
     from waddleml_spark.functions.scalars import hash_positions
 
-    return hash_positions(value, width, depth, seed)
+    return hash_positions(value, width, depth, CMS_SEED)
 
 
 def cms_build(
     df: DataFrame,
     value,
     width: int = 1 << 14,
-    depth: int = 4,
-    seed: int = 42,
 ):
     """Count-min sketch over every value occurrence: a (depth × width)
     int64 matrix (512 KB at the defaults) answering "about how often did
@@ -97,7 +96,8 @@ def cms_build(
 
     spark = df.sparkSession
     ensure_shipped(spark)
-    pos = df.select(_cms_positions(value, width, depth, seed).alias("__pos"))
+    depth = 4
+    pos = df.select(_cms_positions(value, width, depth).alias("__pos"))
     schema = T.StructType([T.StructField("cms", T.BinaryType())])
 
     def pack(batches):
@@ -123,7 +123,6 @@ def cms_estimates(
     df: DataFrame,
     value,
     cms,
-    seed: int = 42,
     est_col: str = "cms_est",
 ) -> DataFrame:
     """Append the count-min estimate (min over the depth rows) for each
@@ -142,7 +141,7 @@ def cms_estimates(
     spark = df.sparkSession
     ensure_shipped(spark)
     bcms = spark.sparkContext.broadcast(cms.tobytes())
-    src = df.withColumn("__pos", _cms_positions(value, width, depth, seed))
+    src = df.withColumn("__pos", _cms_positions(value, width, depth))
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(est_col, T.LongType())]
     )

@@ -31,15 +31,10 @@ def summarize(df) -> dict:
     }
 
 
-def main(sf_dir: str = "/root/testdata/sf0.01", out: str = "PLANS.md") -> None:
+def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     from waddleml_spark import catalog
-    from waddleml_spark.session import get_spark
+    from waddleml_spark.session import command_spark
 
-    spark = get_spark(app_name="plan-report", master="local[4]", shuffle_partitions=4)
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
-    except Exception:
-        pass  # Spark Connect: no SparkContext; log level is server-side
     lines = [
         "# PLANS — physical-plan summary per catalog query",
         "",
@@ -50,21 +45,21 @@ def main(sf_dir: str = "/root/testdata/sf0.01", out: str = "PLANS.md") -> None:
         "| query | exch | joins | top-k | wgl | pushed filters |",
         "|---|---|---|---|---|---|",
     ]
-    for name in sorted(catalog.QUERIES):
-        try:
-            s = summarize(catalog.QUERIES[name](spark, sf_dir))
-            pushed = s["pushed"][:90] + ("…" if len(s["pushed"]) > 90 else "")
-            lines.append(
-                f"| {name} | {s['exchanges']} | {s['joins']} | "
-                f"{'✓' if s['top_k'] else ''} | {'✓' if s['window_limit'] else ''} | "
-                f"`{pushed}` |"
-            )
-        except Exception as ex:  # rows-only ops needing runtime state etc.
-            lines.append(f"| {name} | — | — | | | ({type(ex).__name__}) |")
-    with open(out, "w") as f:
+    with command_spark("plan-report") as spark:
+        for name in sorted(catalog.QUERIES):
+            try:
+                s = summarize(catalog.QUERIES[name](spark, sf_dir))
+                pushed = s["pushed"][:90] + ("…" if len(s["pushed"]) > 90 else "")
+                lines.append(
+                    f"| {name} | {s['exchanges']} | {s['joins']} | "
+                    f"{'✓' if s['top_k'] else ''} | {'✓' if s['window_limit'] else ''} | "
+                    f"`{pushed}` |"
+                )
+            except Exception as ex:  # rows-only ops needing runtime state etc.
+                lines.append(f"| {name} | — | — | | | ({type(ex).__name__}) |")
+    with open("PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(catalog.QUERIES)} queries)")
-    spark.stop()
+    print(f"wrote PLANS.md ({len(catalog.QUERIES)} queries)")
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ factory only sets what is semantically required plus local-mode ergonomics.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import TYPE_CHECKING
 from weakref import WeakKeyDictionary
 
@@ -86,6 +87,29 @@ def get_spark(
     return builder.getOrCreate()
 
 
+@contextmanager
+def command_spark(app_name: str):
+    """A local SparkSession for one command (a CLI catalog command, the
+    plan report).  A session the command creates logs at ERROR and is
+    stopped on exit; embedded in a host process (tests, notebooks), the
+    active session is the host's, so its log level and its life are left
+    alone."""
+    from pyspark.sql import SparkSession
+
+    preexisting = SparkSession.getActiveSession() is not None
+    spark = get_spark(app_name=app_name, master="local[2]", shuffle_partitions=2)
+    if not preexisting:
+        try:
+            spark.sparkContext.setLogLevel("ERROR")
+        except Exception:
+            pass  # Spark Connect: no SparkContext; log level is server-side
+    try:
+        yield spark
+    finally:
+        if not preexisting:
+            spark.stop()
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship the waddleml_spark package to executors (addPyFile zip).
 
@@ -129,8 +153,8 @@ def ensure_shipped(spark: SparkSession) -> None:
 _FANOUT_MEMO: "WeakKeyDictionary" = WeakKeyDictionary()
 
 
-def reset_fan_out_memo(spark=None) -> None:
-    """Drop fan_out's partition-count memo (for one session, or all).
+def reset_fan_out_memo() -> None:
+    """Drop fan_out's partition-count memo for every session.
 
     The memo keys on the ANALYZED plan's semanticHash, which never
     changes when a table merely GAINS FILES — so a snapsink target or an
@@ -139,11 +163,8 @@ def reset_fan_out_memo(spark=None) -> None:
     under-parallelize.  Write paths (snaptable publish, store appends)
     call this after committing; it costs one dict clear.
     """
-    if spark is None:
-        for memo in _FANOUT_MEMO.values():
-            memo.clear()
-    else:
-        _FANOUT_MEMO.get(spark, {}).clear()
+    for memo in _FANOUT_MEMO.values():
+        memo.clear()
 
 
 def fan_out(df, min_partitions: int | None = None):

@@ -2,5 +2,5 @@
 
     bucketed.py   bucketed-table layout for shuffle-free co-located joins
     zorder.py     Z-order (Morton-curve) multi-column layout
-    snaptable.py  the one table format: versioned snapshot commits
+    snaptable.py  the snapshot table format: versioned snapshot commits
 """

@@ -29,9 +29,9 @@ def write_bucketed(
     n_buckets: int = 32,
     sort_by: list[str] | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist `df` as a bucketed (+optionally sorted) parquet table.
+    """Persist `df` as a bucketed (+optionally sorted) parquet table,
+    replacing any table of that name.
 
     `sort_by` additionally sorts within each bucket file — that gives
     sort-merge joins their sort for free AND parquet min/max stats that
@@ -49,7 +49,7 @@ def write_bucketed(
     w = (
         df.repartition(n_buckets, *[F.col(k) for k in keys])
         .write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .bucketBy(n_buckets, *keys)
     )
     if sort_by:
@@ -73,12 +73,11 @@ FACT_KEYS: dict[str, tuple[list[str], list[str]]] = {
 def bucket_facts(
     spark: SparkSession,
     sf_dir: str,
-    tables: tuple[str, ...] = ("lineitem", "orders"),
     n_buckets: int = 32,
     prefix: str = "wb_",
 ) -> dict[str, str]:
-    """ONE call from plain parquet to the co-located layout: write each
-    fact table bucketed (and sorted) by its join key per FACT_KEYS,
+    """ONE call from plain parquet to the co-located layout: write
+    lineitem and orders bucketed (and sorted) by its join key per FACT_KEYS,
     returning {table_name: catalog_table_name} for read_bucketed.
 
     This is the ingest-side shuffle a 100 TB deployment pays once per
@@ -86,11 +85,11 @@ def bucket_facts(
     with ZERO Exchange (SCALING.md 100× section, r8 history row: revenue
     join 5.34 s → 0.90 s at the 100x replica, plan-asserted exchange-
     free, quiet-window measurement).  Bucket
-    counts must match across tables meant to co-join — this writes all
-    requested tables with the same n_buckets.
+    counts must match across tables meant to co-join — this writes both
+    tables with the same n_buckets.
     """
     out: dict[str, str] = {}
-    for name in tables:
+    for name in ("lineitem", "orders"):
         keys, sort_by = FACT_KEYS[name]
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         cat_name = f"{prefix}{name}"

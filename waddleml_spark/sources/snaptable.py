@@ -1,6 +1,8 @@
 """SnapTable — a minimal self-contained snapshot table format.
 
-The package's one table format: ACID-ish versioned commits, time travel
+The package's snapshot table format, written by the streaming sinks
+and the corpus-layout paths (the tracker store's tables are still bare
+Parquet part directories): ACID-ish versioned commits, time travel
 and manifest-level file pruning, built from nothing but parquet data
 files plus JSON manifests, the public design shared by Delta Lake's
 transaction log and Iceberg's manifests.  This module's ``read`` and

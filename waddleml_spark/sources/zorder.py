@@ -91,7 +91,6 @@ def zorder_layout(
     cols: list[str],
     n_files: int = 16,
     bits: int = 12,
-    bounds: dict[str, tuple[float, float]] | None = None,
 ) -> DataFrame:
     """Rows re-laid along the Morton curve: range-partitioned into
     ``n_files`` curve segments and sorted within each, so every output
@@ -99,12 +98,8 @@ def zorder_layout(
     result straight to a writer — e.g.
     ``snaptable.write(zorder_layout(df, ["a", "b"]), table)`` — and
     footer-stats pruning skips files on predicates over any of them.
-
-    Pass precomputed ``bounds`` to skip the min/max pass (e.g. when the
-    caller just profiled the table, or bounds are known contractually).
     """
-    b = bounds or column_bounds(df, cols)
-    keyed = df.withColumn("__z", morton_key(cols, b, bits))
+    keyed = df.withColumn("__z", morton_key(cols, column_bounds(df, cols), bits))
     return (
         keyed.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")

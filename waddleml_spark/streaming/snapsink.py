@@ -39,6 +39,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from waddleml_spark.llmops import STAR_CAP
 from waddleml_spark.sources import snaptable
 
 
@@ -92,8 +93,6 @@ def neardup_snapshot_sink(
     text_col: str = "text",
     id_col: str = "doc_id",
     stream_id: str = "default",
-    band_bits: int = 8,
-    max_bucket: int = 64,
     jaccard_threshold: float = 0.8,
 ):
     """foreachBatch function: streaming NEAR-dup ingest, the streaming
@@ -106,11 +105,11 @@ def neardup_snapshot_sink(
     ``jaccard_threshold`` before a drop.  Survivors commit as the next
     snapshot version.
 
-    band_bits=8 gives 4 bands: by pigeonhole every pair within hamming
+    8-bit bands give 4 bands: by pigeonhole every pair within hamming
     distance 3 of the 32-bit signature shares a clean band — the right
     recall default for one-edit near-dups (16-bit bands measured missing
     a 3-bit-distant pair).  The mega-bucket star guard caps snapshot
-    buckets at ``max_bucket``; capped buckets fall back to verifying
+    buckets at STAR_CAP; capped buckets fall back to verifying
     against ONE representative (min id) per bucket, so the dominant
     boilerplate cluster cannot grow unboundedly through the guard's
     blind spot (recall trade: a capped bucket is checked via its
@@ -125,6 +124,8 @@ def neardup_snapshot_sink(
     At large snapshots, persist the signature column in the table
     instead of recomputing per batch."""
     from waddleml_spark.llmops import dedup
+
+    band_bits = 8
 
     def _drop_verified(frame, cand):
         """Anti-join frame by the id_a side of Jaccard-verified pairs."""
@@ -148,7 +149,7 @@ def neardup_snapshot_sink(
         batch = dedup.exact_dedup_keep(df, text_col=text_col, id_col=id_col)
         in_batch = dedup.simhash32_band_pairs(
             batch, text_col=text_col, id_col=id_col,
-            band_bits=band_bits, max_bucket=max_bucket,
+            band_bits=band_bits,
         ).select("id_a", "id_b")
         # drop the HIGHER id of each verified in-batch pair
         batch = _drop_verified(
@@ -185,7 +186,7 @@ def neardup_snapshot_sink(
                 .withColumn("__min", F.min("id").over(w))
             )
             snap_keys = s_annot.filter(
-                (F.col("__n") <= max_bucket) | (F.col("id") == F.col("__min"))
+                (F.col("__n") <= STAR_CAP) | (F.col("id") == F.col("__min"))
             ).select(F.col("id").alias("snap_id"), "band", "bucket")
             cand = (
                 b_keys.join(snap_keys, ["band", "bucket"])

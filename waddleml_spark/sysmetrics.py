@@ -1,6 +1,6 @@
 """Background system-metrics sampler (ref: waddle/_sysmetrics.py:13-95).
 
-Daemon thread sampling psutil/pynvml every `interval` seconds, writing
+Daemon thread sampling psutil/pynvml every 5 seconds, writing
 `system/`-prefixed metrics through the run's normal (buffered) log path.
 Graceful no-op when psutil is missing — the thread never starts, matching
 the reference's degrade behavior (tests/test_sysmetrics.py:69-85).
@@ -46,9 +46,8 @@ class SystemMonitor:
     """5 s-interval sampler thread with its own monotonic step counter
     (independent of the run's user-metric steps, like the ref)."""
 
-    def __init__(self, run: "Run", interval: float = 5.0):
+    def __init__(self, run: "Run"):
         self.run = run
-        self.interval = interval
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
         self._step = 0
@@ -67,7 +66,7 @@ class SystemMonitor:
             if metrics:
                 self.run.log_system(metrics, self._step)
                 self._step += 1
-            self._stop.wait(self.interval)
+            self._stop.wait(5.0)
 
     def stop(self) -> None:
         self._stop.set()

@@ -65,10 +65,10 @@ def normalize_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
-def compare(spark_df, con, sql, name="query", float_rel=0.0):
+def compare(spark_df, con, sql, name="query"):
     """Return (ok, message).
 
-    Defaults to EXACT float equality: the driver hashes values, so catalog
+    EXACT float equality: the driver hashes values, so catalog
     queries must produce bit-identical doubles (pre-round with the shared
     floor-formula helpers; keep arithmetic order identical on both sides).
     """
@@ -86,25 +86,7 @@ def compare(spark_df, con, sql, name="query", float_rel=0.0):
     _, sn = normalize_rows(s_cols, s_rows)
     _, on = normalize_rows(o_cols, o_rows)
     for i, (a, b) in enumerate(zip(sn, on)):
-        if not _row_eq(a, b, float_rel):
+        if a != b:
             return False, f"{name}: row {i} differs\n  spark : {a}\n  oracle: {b}"
     return True, f"{name}: OK ({len(s_rows)} rows)"
 
-
-def _row_eq(a, b, rel):
-    if len(a) != len(b):
-        return False
-    for x, y in zip(a, b):
-        if isinstance(x, float) and isinstance(y, float):
-            if x == y:
-                continue
-            if rel and math.isclose(x, y, rel_tol=rel, abs_tol=1e-12):
-                continue
-            return False
-        if isinstance(x, tuple) and isinstance(y, tuple):
-            if not _row_eq(x, y, rel):
-                return False
-            continue
-        if x != y:
-            return False
-    return True
